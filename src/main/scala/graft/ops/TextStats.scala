@@ -1,13 +1,23 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
 import org.apache.spark.sql.functions._
 import graft.analysis.{functions => ga}
 
 /** Text-analysis operators for training-data pipelines: language ID
   * (stopword heuristic), quality scoring, token counting, and document
-  * fingerprinting. All are pure per-row column expressions (no shuffle,
-  * fully codegen) — they stream over 100 TB at scan speed.
+  * fingerprinting. All are pure per-row column expressions (no shuffle)
+  * and none is a higher-order function: the bigram and stopword counts are
+  * codegen'd kernels over the `graft_tokenize` array (textStatsExpressions),
+  * so a projection of these signals plans as ONE whole-stage-codegen
+  * `Project` and subexpression elimination tokenizes each row once — they
+  * stream at scan speed (PlanSpec pins both).
+  *
+  * NULL text: results follow `size(NULL)`, which is −1 under legacy
+  * `sizeOfNull` (ANSI off) and NULL with ANSI on:
+  *   - `topBigramFraction`: NULL with ANSI on, 0.0 with ANSI off;
+  *   - `stopwordRatio`: NULL with ANSI on, 1.0 with ANSI off;
+  *   - `langId`: "fr" in both modes (every ratio ties; see `langId`).
   */
 object TextStats {
 
@@ -20,24 +30,36 @@ object TextStats {
 
   private def toks(textCol: Column): Column = ga.tokenize(textCol)
 
-  /** Fraction of tokens that are in `set` (0 for empty docs). */
+  private def stopwordCount(t: Column, set: Seq[String]): Column =
+    GraftBridge.column(StopwordCount(GraftBridge.expression(t), set))
+
+  /** Fraction of tokens that are in `set` (0 for empty docs). Entries are
+    * matched exactly, so mixed-case entries never match the lowercased
+    * tokens. A NULL doc counts `size(NULL)` hits, so its ratio is NULL
+    * with ANSI on and −1 / −1 = 1.0 with ANSI off. The empty-doc guard
+    * picks the divisor (0 / 1 = 0.0) rather than a CASE branch, so the
+    * kernel is always evaluated and subexpression elimination shares its
+    * token array with every other signal of the projection.
+    */
   def stopwordRatio(textCol: Column, set: Seq[String]): Column = {
     val t = toks(textCol)
-    when(size(t) === 0, lit(0.0)).otherwise(
-      size(filter(t, x => x.isin(set.map(lit(_)): _*))).cast("double") / size(t))
+    val n = size(t)
+    val hits = coalesce(stopwordCount(t, set), n)
+    hits.cast("double") / when(n === 0, lit(1)).otherwise(n)
   }
 
   /** Language-ID heuristic: argmax of per-language stopword ratios with a
     * minimum evidence floor; deterministic tie-break by language code.
-    * Below the floor → "und" (undetermined).
+    * Below the floor → "und" (undetermined). NULL text → "fr".
     */
   def langId(textCol: Column, floor: Double = 0.05): Column = {
     val scored = stopwords.toSeq.sortBy(_._1).map { case (lang, set) =>
       struct(stopwordRatio(textCol, set).as("ratio"), lit(lang).as("lang"))
     }
-    // array_max on struct compares field-by-field: (ratio, lang); equal
-    // ratios pick the lexicographically-largest lang — invert via sort to
-    // keep smallest-lang determinism: sort desc by ratio, asc by lang.
+    // The descending sort compares (ratio, lang) field by field, so equal
+    // ratios pick the LARGEST language code (fr > es > en > de), as the
+    // DuckDB oracle does. NULL text ties every ratio (all 1.0 with ANSI
+    // off, all NULL with ANSI on, where NULL < floor is NULL) → "fr".
     val best = sort_array(array(scored: _*), asc = false)(0)
     when(best.getField("ratio") < floor, lit("und"))
       .otherwise(best.getField("lang"))
@@ -85,27 +107,16 @@ object TextStats {
   /** Fraction of the document's 2-grams occupied by its single most
     * frequent 2-gram (0 when fewer than two tokens) — the "top n-gram
     * fraction" repetition rule for flagging templated/looping text.
-    * Pure column expression: sort the row's bigrams, fold once counting
-    * the longest equal run (O(n log n) per row, fully codegen, no
-    * shuffle) — streams at scan speed like the other quality gates.
+    * One codegen'd pass over the token pairs (O(n log n) per row, no
+    * shuffle, no bigram strings) — streams at scan speed like the other
+    * quality gates. The kernel yields 0.0 below two tokens itself; the
+    * `size` guard only decides NULL text: NULL with ANSI on, 0.0 with
+    * ANSI off (`size(NULL)` = −1 < 2).
     */
   def topBigramFraction(textCol: Column): Column = {
     val t = toks(textCol)
-    val n = size(t)
-    val bg = transform(sequence(lit(1), n - 1),
-      i => concat(element_at(t, i), lit(" "), element_at(t, i + 1)))
-    val zero = struct(lit("").as("prev"), lit(0).as("run"), lit(0).as("best"))
-    val folded = aggregate(
-      sort_array(bg),
-      zero,
-      (acc, x) => {
-        val run = when(x === acc.getField("prev"), acc.getField("run") + 1)
-          .otherwise(lit(1))
-        struct(x.as("prev"), run.as("run"),
-          greatest(acc.getField("best"), run).as("best"))
-      },
-      acc => acc.getField("best"))
-    when(n < 2, lit(0.0)).otherwise(folded.cast("double") / (n - 1))
+    val kernel = GraftBridge.column(TopBigramFraction(GraftBridge.expression(t)))
+    coalesce(kernel, when(size(t) < 2, lit(0.0)))
   }
 
   /** Normalized content fingerprint: md5 of the analyzed token stream —

@@ -117,7 +117,8 @@ object Phrase {
         val ms = segMatches(it, distinctTerms, slotsSeq)
         if (ms.isEmpty) Iterator.empty
         else {
-          val nm = bc.value(seg)
+          val nm = bc.value.getOrElse(seg, null)
+          require(nm != null, s"seg $seg missing from the broadcast norms")
           val docs = SegNorms.docsOf(nm)
           ms.iterator.map { case (d, ptf) =>
             (d, ptf, SegNorms.doclenAt(nm, docs, d).toLong)

@@ -142,6 +142,24 @@ class PhraseSpec extends AnyFunSuite {
     store.dropAll()
   }
 
+  test("a segment missing from the broadcast norms fails with a named error") {
+    import spark.implicits._
+    val df = Seq((0L, "a b c"), (1L, "a b")).toDF("doc_id", "text")
+      .withColumn("url", concat(lit("doc://"), col("doc_id")))
+      .withColumn("lang", lit("en"))
+    val store = new IndexStore(Files.createTempDirectory("graft-nonorms-").toString)
+    IndexBuilder.build(spark, df, store,
+      IndexBuilder.Config(segSize = 4, blockSize = 4, positions = true))
+    val idx = store.open(spark)
+    val noNorms = spark.sparkContext.broadcast(Map.empty[Int, graft.index.SegNorms])
+    val e = intercept[Exception](
+      Phrase.matchesWithDlPlan(idx, IndexedSeq("a", "b"), noNorms).collect())
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(c => c.isInstanceOf[IllegalArgumentException] &&
+      c.getMessage.contains("seg 0 missing from the broadcast norms")), e)
+    store.dropAll()
+  }
+
   test("non-positional index refuses phrase queries with a clear message") {
     import spark.implicits._
     val df = Seq((0L, "a b c")).toDF("doc_id", "text")

@@ -44,6 +44,28 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("*("), s"whole-stage codegen markers missing:\n$p")
   }
 
+  test("text-stats projection: one whole-stage-codegen Project, one tokenize per row") {
+    import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+    import graft.ops.TextStats
+    val t = col("text")
+    // the q_repetition + q_lang_id + q_quality_score signals in one projection
+    val df = spark.read.parquet(s"$sf/documents.parquet").select(col("doc_id"),
+      round(TextStats.topBigramFraction(t), 6), round(TextStats.dupTokenRatio(t), 6),
+      TextStats.langId(t), TextStats.qualityScore(t))
+    val exec = df.queryExecution.executedPlan
+    val interpreted = exec.flatMap(_.expressions.flatMap(_.collect {
+      case e: CodegenFallback => e
+      case e: HigherOrderFunction => e
+    }))
+    assert(interpreted.isEmpty, s"interpreted expressions left: $interpreted")
+    val p = plan(df)
+    assert("\\*\\(\\d+\\) Project".r.findFirstIn(p).nonEmpty, s"Project left codegen:\n$p")
+    val code = df.queryExecution.debug.codegenToSeq().map(_._2).mkString("\n")
+    assert("tokenizeUtf8\\(".r.findAllIn(code).size == 1,
+      "subexpression elimination must tokenize each row once")
+  }
+
   test("top-k plans as TakeOrderedAndProject, not global sort") {
     val p = plan(spark.read.parquet(s"$sf/documents.parquet")
       .orderBy(col("n_chars").desc).limit(10))
