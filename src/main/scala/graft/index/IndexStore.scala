@@ -288,32 +288,26 @@ final class IndexStore(val root: String) {
   def slicePath(table: String, sliceId: Int): String =
     s"$root/$table/slice=$sliceId"
 
-  private def committedPaths(table: String): Seq[String] =
-    committedSlices.map(s => slicePath(table, s.sliceId))
-
-  private def readTable(spark: SparkSession, table: String): DataFrame = {
-    val paths = committedPaths(table)
-    require(paths.nonEmpty, s"index at $root has no committed slices")
-    spark.read.parquet(paths: _*)
-  }
-
   def open(spark: SparkSession): OpenIndex = {
     import spark.implicits._
-    val postings = readTable(spark, "postings").as[PostingBlock]
+    // ONE manifest read pins every table to the same committed slice set
+    val slices = committedSlices
+    require(slices.nonEmpty, s"index at $root has no committed slices")
+    def readTable(table: String): DataFrame =
+      spark.read.parquet(slices.map(s => slicePath(table, s.sliceId)): _*)
+    val postings = readTable("postings").as[PostingBlock]
     // norms and term stats are tiny relative to postings (one row per seg /
     // per distinct term); cache them so per-query idf lookups and the
     // seg-cogroup probe side don't re-scan parquet on every search
-    val norms = readTable(spark, "norms").as[SegNorms].cache()
+    val norms = readTable("norms").as[SegNorms].cache()
     // per-slice partial term stats merge to global df/cf (slices partition
     // docs, so per-term partials are additive)
-    val terms = readTable(spark, "terms")
+    val terms = readTable("terms")
       .groupBy("term")
       .agg(sum("df").as("df"), sum("cf").as("cf"))
       .as[TermStat]
       .cache()
-    val docs = readTable(spark, "docs")
-    val slices = committedSlices
-    OpenIndex(this, postings, norms, terms, docs, slices)
+    OpenIndex(this, postings, norms, terms, readTable("docs"), slices)
   }
 
   // ---- settings / mappings management surface (the reference's
@@ -368,12 +362,6 @@ final class IndexStore(val root: String) {
   def setMappings(mappings: Map[String, String]): Unit = writeKv("mappings", mappings)
   def mappings: Map[String, String] = readKv("mappings")
 
-  /** Corpus stats derived from committed slice metrics + docs table. */
-  def stats(spark: SparkSession): IndexStats = {
-    // distinct: per-slice partial term rows merge to one global term each
-    val nTerms = readTable(spark, "terms").select("term").distinct().count()
-    IndexStats.fromDocs(readTable(spark, "docs"), nTerms)
-  }
 }
 
 case class OpenIndex(
@@ -383,7 +371,10 @@ case class OpenIndex(
     terms: Dataset[TermStat],
     docs: DataFrame,
     slices: Seq[SliceMeta]) {
-  lazy val stats: IndexStats = store.stats(docs.sparkSession)
+  /** Corpus stats of THIS snapshot: derived from its own pinned tables,
+    * never from the store's manifest, which may have moved on since.
+    */
+  lazy val stats: IndexStats = IndexStats.fromDocs(docs, terms.count())
 
   /** Norms broadcast for the low-latency query path: collected once per
     * open index when the segment count is modest (norms are ~5 bytes/doc;

@@ -5,27 +5,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.analysis.Analyzer
 import graft.index._
 
-/** In-memory single-node serving tier over a built index.
-  *
-  * Spark is the BUILD engine; serving interactive queries through Spark
-  * jobs pays ~100 ms of scheduling per search. A real deployment of this
-  * engine serves the way the reference's OpenSearch does: each shard
-  * server holds its slice of the postings in memory and answers locally.
-  * `ServingIndex` is that shard server in miniature — it loads one
-  * store's compressed postings/norms/terms (one Spark collect at open)
-  * and then answers top-k queries in pure JVM time through the SAME
-  * `Wand.segTopK` kernel the distributed path runs, so results are
-  * bit-identical to both the distributed WAND and the brute-force oracle.
-  *
-  * Scale contract: `maxBytes` budgets the DECODED postings footprint. A
-  * slice that fits is fully pre-decoded (allocation-free queries); a
-  * larger slice serves through a bounded decoded-block cache — partial
-  * pre-decode, same bit-identical results. At web scale the corpus is
-  * document-sharded across serving nodes exactly like the distributed
-  * path's segments — each node opens the slice the build wrote for it,
-  * and a router merges per-node top-ks (the TakeOrdered merge, over RPC
-  * instead of a Spark stage).
-  */
 /** Decoded-postings storage policy for a serving node. Both policies
   * answer through the same kernel, so results are bit-identical; they
   * differ only in RAM-vs-CPU trade.
@@ -58,7 +37,7 @@ private[query] final class FullDecodeCache(blocks: Array[PostingBlock])
   * FIFO insertion order had). Bit-identity is unconditional — eviction
   * only changes WHERE the decode happens.
   */
-private[query] final class ClockDecodeCache(budget: Long) extends BlockCache {
+private[query] final class ClockDecodeCache(val budget: Long) extends BlockCache {
   private val c = new ClockCache[(Array[Long], Array[Long])](
     budget, TermPostings.decodeBlock, (b, _) => Serving.decodedBytes(b))
   def get(b: PostingBlock): (Array[Long], Array[Long]) = c.get(b)
@@ -69,7 +48,7 @@ private[query] final class ClockDecodeCache(budget: Long) extends BlockCache {
   * the postings decode cache and the phrase positions cache.
   */
 private[query] final class ClockCache[V <: AnyRef](
-    budget: Long,
+    val budget: Long,
     decode: PostingBlock => V,
     sizeOf: (PostingBlock, V) => Long) {
   private final class Entry(val decoded: V, val size: Long) {
@@ -108,30 +87,119 @@ private[query] final class ClockCache[V <: AnyRef](
   def loadedBytes: Long = bytes.get()
 }
 
+/** What one serving shard holds — a document shard of an open index, an
+  * exported shard directory, or one committed slice of a `ServingNode`.
+  * Every open builds it the same way (`ShardPayload.apply`) from the
+  * rows it read; only where the rows come from differs.
+  */
+private[query] final class ShardPayload(
+    val blocks: Array[PostingBlock],
+    val byTerm: java.util.HashMap[String, Array[PostingBlock]],
+    /** seg → (ascending docIds, doclens) */
+    val norms: java.util.HashMap[Integer, (Array[Long], Array[Int])],
+    val nDocs: Long,
+    /** Σ doclen — the exact per-doc token counts scoring uses, so stats
+      * merged from payloads are bit-identical to `IndexStats.fromDocs`
+      */
+    val tokens: Long,
+    /** estimated decoded-postings heap (`Serving.decodedBytes`) */
+    val decodedBytes: Long,
+    /** compressed positions kept on-heap (`Serving.positionBytes`) */
+    val positionBytes: Long,
+    /** fetch-phase doc store, null when opened without docs */
+    val docs: java.util.HashMap[Long, DocMeta])
+
+private[query] object ShardPayload {
+  def apply(blocks: Array[PostingBlock], normRows: Array[SegNorms],
+      docRows: Array[DocMeta]): ShardPayload = {
+    val norms = new java.util.HashMap[Integer, (Array[Long], Array[Int])]()
+    var nDocs, tokens = 0L
+    normRows.foreach { n =>
+      val ls = Array.tabulate(n.n)(i => VByte.unpackIntAt(n.doclens, i))
+      norms.put(n.seg, (SegNorms.docsOf(n), ls))
+      nDocs += n.n
+      ls.foreach(tokens += _)
+    }
+    // a segment scored without its norms has no doclens: a partial index
+    // or export must fail the open, not the first query that touches it
+    blocks.iterator.map(_.seg).distinct.foreach(seg =>
+      require(norms.containsKey(seg), s"seg $seg has postings but no norms"))
+    val byTerm = new java.util.HashMap[String, Array[PostingBlock]]()
+    blocks.groupBy(_.term).foreach { case (t, bs) => byTerm.put(t, bs) }
+    val docs =
+      if (docRows == null) null
+      else {
+        val m = new java.util.HashMap[Long, DocMeta](docRows.length * 2)
+        docRows.foreach(d => m.put(d.doc_id, d))
+        m
+      }
+    new ShardPayload(blocks, byTerm, norms, nDocs, tokens,
+      blocks.iterator.map(Serving.decodedBytes).sum,
+      blocks.iterator.map(Serving.positionBytes).sum, docs)
+  }
+}
+
+/** The caches and budget accounting a set of payloads serves with under
+  * one budget (`Serving.budget`): `caches` aligns with `payloads`.
+  */
+private[query] final class Budget(
+    val payloads: IndexedSeq[ShardPayload],
+    val caches: IndexedSeq[BlockCache],
+    val posCache: Option[ClockCache[Serving.DecodedPositions]],
+    val report: Serving.OpenReport) {
+  def cacheOf(p: ShardPayload): Option[BlockCache] = {
+    val i = payloads.indexWhere(_ eq p)
+    if (i < 0) None else Some(caches(i))
+  }
+  def clock: Option[ClockDecodeCache] =
+    caches.collectFirst { case c: ClockDecodeCache => c }
+}
+
+/** In-memory single-node serving tier over a built index.
+  *
+  * Spark is the BUILD engine; serving interactive queries through Spark
+  * jobs pays ~100 ms of scheduling per search. A real deployment of this
+  * engine serves the way the reference's OpenSearch does: each shard
+  * server holds its slice of the postings in memory and answers locally.
+  * `ServingIndex` is that shard server in miniature — it loads one
+  * store's compressed postings/norms/terms (one Spark collect at open)
+  * and then answers top-k queries in pure JVM time through the SAME
+  * `Wand.segTopK` kernel the distributed path runs, so results are
+  * bit-identical to both the distributed WAND and the brute-force oracle.
+  *
+  * Scale contract: `maxBytes` budgets the DECODED postings footprint. A
+  * slice that fits is fully pre-decoded (allocation-free queries); a
+  * larger slice serves through a bounded decoded-block cache — partial
+  * pre-decode, same bit-identical results. At web scale the corpus is
+  * document-sharded across serving nodes exactly like the distributed
+  * path's segments — each node opens the slice the build wrote for it,
+  * and a router merges per-node top-ks (the TakeOrdered merge, over RPC
+  * instead of a Spark stage).
+  */
 final class ServingIndex private[query] (
-    postingsByTerm: java.util.HashMap[String, Array[PostingBlock]],
+    payload: ShardPayload,
     cache: BlockCache,
-    normsBySeg: java.util.HashMap[Integer, (Array[Long], Array[Int])],
     termDf: java.util.HashMap[String, Long],
     val stats: IndexStats,
-    /** Compressed positional payload retained on-heap by a positional
-      * slice — real serving footprint, counted against the open budget.
-      */
-    val retainedPositionBytes: Long = 0L,
     /** Decoded-positions cache for hot phrase traffic, sized to the
       * HEADROOM the open budget left after the pre-decoded postings and
       * the retained compressed positions — absent when the budget is
       * already tight (phrase queries then decode per query, the classic
       * positional trade). Bit-identity unconditional.
       */
-    posCache: Option[ClockCache[Serving.DecodedPositions]] = None,
+    posCache: Option[ClockCache[Serving.DecodedPositions]],
     /** Budget accounting at open time — `overBudget` means the
       * unevictable compressed positions plus the decode-cache floor
       * exceed `maxBytes`: the node still serves bit-identically, but the
       * operator's heap sizing must use `retainedPositionBytes +
       * cacheBudgetBytes`, not `maxBytes`.
       */
-    val openReport: Serving.OpenReport = Serving.OpenReport(0, 0, 0, 0, false, false)) {
+    val openReport: Serving.OpenReport) {
+
+  /** Compressed positional payload retained on-heap by a positional
+    * slice — real serving footprint, counted against the open budget.
+    */
+  val retainedPositionBytes: Long = payload.positionBytes
 
   def loadedBytes: Long =
     cache.loadedBytes + retainedPositionBytes +
@@ -162,7 +230,7 @@ final class ServingIndex private[query] (
     // group the query terms' blocks by segment (document shard)
     val bySeg = new java.util.HashMap[Integer, java.util.ArrayList[PostingBlock]]()
     present.foreach { t =>
-      val bs = postingsByTerm.get(t)
+      val bs = payload.byTerm.get(t)
       if (bs != null) bs.foreach { b =>
         bySeg.computeIfAbsent(b.seg, _ => new java.util.ArrayList[PostingBlock]())
           .add(b)
@@ -176,7 +244,7 @@ final class ServingIndex private[query] (
     val heap = new TopKHeap(k)
     bySeg.forEach { (seg, blocks) =>
       val arr = blocks.toArray(new Array[PostingBlock](blocks.size()))
-      val (nDocs, nLens) = normsBySeg.get(seg)
+      val (nDocs, nLens) = payload.norms.get(seg)
       def doclen(docId: Long): Long = {
         val i = java.util.Arrays.binarySearch(nDocs, docId)
         require(i >= 0, s"docId $docId missing from norms of seg $seg")
@@ -206,12 +274,12 @@ final class ServingIndex private[query] (
     val slots = Analyzer.tokenize(phrase)
     if (slots.isEmpty) return Array.empty
     val distinctTerms = slots.distinct
-    if (distinctTerms.exists(t => !postingsByTerm.containsKey(t))) return Array.empty
+    if (distinctTerms.exists(t => !payload.byTerm.containsKey(t))) return Array.empty
 
     // group the phrase terms' blocks by segment
     val bySeg = new java.util.HashMap[Integer, java.util.ArrayList[PostingBlock]]()
     distinctTerms.foreach { t =>
-      postingsByTerm.get(t).foreach { b =>
+      payload.byTerm.get(t).foreach { b =>
         bySeg.computeIfAbsent(b.seg, _ => new java.util.ArrayList[PostingBlock]()).add(b)
       }
     }
@@ -241,7 +309,7 @@ final class ServingIndex private[query] (
           }
           null
         }
-        val (nDocs, nLens) = normsBySeg.get(seg)
+        val (nDocs, nLens) = payload.norms.get(seg)
         val rarest = distinctTerms.minBy(t => termBlocks(t).iterator.map(_._2.size).sum)
         termBlocks(rarest).foreach { case (_, rm) =>
           rm.forEach { (doc, _) =>
@@ -268,36 +336,17 @@ final class ServingIndex private[query] (
     Serving.scorePhraseMatches(phraseMatches(phrase), stats, k)
 
   // ---- hit materialization: the reference's `hits.hits[]._source + _score`
-  // response shape, answered from the serving node's doc store ----
-  private var docStore: java.util.HashMap[Long, DocMeta] = _
-
-  /** Load the doc-metadata store for `_source` materialization (optional —
-    * id-only responses don't need it). Same budget philosophy: at scale
-    * the doc store is the serving shard's own slice.
-    */
-  private[query] def loadDocs(docs: Array[DocMeta]): Unit = {
-    val m = new java.util.HashMap[Long, DocMeta](docs.length * 2)
-    docs.foreach(d => m.put(d.doc_id, d))
-    docStore = m
-  }
-
-  /** Inject a PREBUILT doc store (shared, immutable by convention) — the
-    * layered `ServingNode` caches one HashMap per slice and re-injects it
-    * into each tick's fresh wrapper, so refresh never rebuilds the doc
-    * maps of untouched slices (`loadDocs` is O(docs) per call).
-    */
-  private[query] def setDocStore(m: java.util.HashMap[Long, DocMeta]): Unit =
-    docStore = m
-
-  private[query] def hasDocs: Boolean = docStore != null
+  // response shape, answered from the shard's own doc store (optional —
+  // id-only responses don't need it; at scale it is the shard's slice) ----
+  private[query] def hasDocs: Boolean = payload.docs != null
   private[query] def docOf(id: Long): DocMeta =
-    if (docStore == null) null else docStore.get(id)
+    if (payload.docs == null) null else payload.docs.get(id)
 
   /** Scored hits with stored fields (requires `withDocs` at open). */
   def topKHits(query: String, k: Int): Array[Serving.Hit] = {
-    require(docStore != null, "serving index opened without docs; use withDocs = true")
+    require(payload.docs != null, "serving index opened without docs; use withDocs = true")
     topK(query, k).map { case (id, score) =>
-      val d = docStore.get(id)
+      val d = payload.docs.get(id)
       require(d != null, s"docId $id missing from the serving doc store")
       Serving.Hit(id, d.url, d.lang, d.doclen, score)
     }
@@ -391,71 +440,79 @@ object Serving {
   def open(spark: SparkSession, store: IndexStore, maxBytes: Long): ServingIndex =
     open(store.open(spark), maxBytes)
 
-  def open(idx: OpenIndex, maxBytes: Long, withDocs: Boolean = false): ServingIndex = {
-    val si = assemble(idx.postings.collect(), collectNorms(idx), collectDf(idx),
-      idx.stats, maxBytes)
-    if (withDocs) si.loadDocs(collectDocs(idx))
-    si
-  }
+  def open(idx: OpenIndex, maxBytes: Long, withDocs: Boolean = false): ServingIndex =
+    assemble(ShardPayload(idx.postings.collect(), idx.norms.collect(),
+      if (withDocs) collectDocs(idx) else null), collectDf(idx), idx.stats, maxBytes)
 
-  /** Assemble one serving shard from its blocks + norms and the GLOBAL
-    * term stats — BM25 idf must use corpus-wide df/N/avgdl in every
-    * layout, exactly as the distributed path resolves stats driver-side.
+  /** The one budget policy of every open. When the payloads' decoded
+    * postings plus their retained compressed positions fit `maxBytes`,
+    * each payload is fully pre-decoded and the leftover headroom funds one
+    * hot-phrase positions cache; otherwise they all share one bounded
+    * CLOCK decode cache. `prior` is the budget the same payloads (or some
+    * of them) served with before — a refreshing `ServingNode` passes it so
+    * that an unchanged payload keeps its pre-decodes, the shared CLOCK
+    * cache survives unless its budget shrinks, and the positions cache
+    * survives unless the headroom shrinks below its budget.
     */
-  private[query] def assemble(
-      blocks: Array[PostingBlock],
-      norms: java.util.HashMap[Integer, (Array[Long], Array[Int])],
-      df: java.util.HashMap[String, Long],
-      stats: IndexStats,
-      maxBytes: Long): ServingIndex = {
-    val byTerm = new java.util.HashMap[String, Array[PostingBlock]]()
-    blocks.groupBy(_.term).foreach { case (t, bs) => byTerm.put(t, bs) }
-    val estDecoded = blocks.iterator.map(decodedBytes).sum
+  private[query] def budget(payloads: IndexedSeq[ShardPayload], maxBytes: Long,
+      prior: Option[Budget] = None): Budget = {
+    val estDecoded = payloads.iterator.map(_.decodedBytes).sum
     // the retained compressed positions are footprint the budget must see:
     // they occupy heap for the life of the node whether or not a phrase
     // ever arrives, so the decoded-block budget shrinks by that amount
-    // (floored so a positions-heavy slice still gets a working cache)
-    val posBytes = blocks.iterator.map(positionBytes).sum
+    // (floored so a positions-heavy payload still gets a working cache)
+    val posBytes = payloads.iterator.map(_.positionBytes).sum
     val fits = estDecoded + posBytes <= maxBytes
-    val cacheBudget = if (fits) estDecoded else math.max(maxBytes - posBytes, maxBytes / 16)
-    val cache: BlockCache =
-      if (fits) new FullDecodeCache(blocks)
-      else new ClockDecodeCache(cacheBudget)
+    val clock =
+      if (fits) None
+      else {
+        val b = math.max(maxBytes - posBytes, maxBytes / 16)
+        Some(prior.flatMap(_.clock).filter(_.budget <= b).getOrElse(new ClockDecodeCache(b)))
+      }
+    val caches: IndexedSeq[BlockCache] = clock match {
+      case Some(c) => payloads.map(_ => c)
+      case None => payloads.map(p => prior.flatMap(_.cacheOf(p)) match {
+        case Some(f: FullDecodeCache) => f
+        case _ => new FullDecodeCache(p.blocks)
+      })
+    }
     // hot-phrase decoded-positions cache: only the headroom the budget
     // leaves after pre-decoded postings + retained compressed positions —
-    // a tight budget means phrase queries decode per query as before
+    // a tight budget means phrase queries decode per query
     val headroom = maxBytes - estDecoded - posBytes
     val posCache =
       if (posBytes > 0 && fits && headroom > 0)
-        Some(new ClockCache[Serving.DecodedPositions](
-          headroom, decodePositionsOf, (_, v) => decodedPositionBytes(v)))
+        prior.flatMap(_.posCache).filter(_.budget <= headroom).orElse(Some(
+          new ClockCache[DecodedPositions](
+            headroom, decodePositionsOf, (_, v) => decodedPositionBytes(v))))
       else None
     // honest budget accounting: the compressed positions are unevictable,
     // so when they alone eat (almost) the whole budget the floor footprint
     // posBytes + cache-floor EXCEEDS maxBytes — flag it rather than let a
     // degraded node silently run past the heap the operator sized for
-    val report = Serving.OpenReport(
+    val cacheBudget = clock.fold(estDecoded)(_.budget)
+    new Budget(payloads, caches, posCache, OpenReport(
       maxBytes = maxBytes,
       estDecodedBytes = estDecoded,
       retainedPositionBytes = posBytes,
       cacheBudgetBytes = cacheBudget,
       bounded = !fits,
-      overBudget = posBytes + cacheBudget > maxBytes)
-    new ServingIndex(byTerm, cache, norms, df, stats, posBytes, posCache, report)
+      overBudget = posBytes + cacheBudget > maxBytes))
   }
 
-  private def collectNorms(idx: OpenIndex): java.util.HashMap[Integer, (Array[Long], Array[Int])] =
-    normsMapOf(idx.norms.collect())
+  /** The serving shards of a budget, all scoring with the GLOBAL term
+    * stats — BM25 idf must use corpus-wide df/N/avgdl in every layout,
+    * exactly as the distributed path resolves stats driver-side.
+    */
+  private[query] def shards(b: Budget, df: java.util.HashMap[String, Long],
+      stats: IndexStats): IndexedSeq[ServingIndex] =
+    b.payloads.indices.map(i =>
+      new ServingIndex(b.payloads(i), b.caches(i), df, stats, b.posCache, b.report))
 
-  private[query] def normsMapOf(rows: Array[SegNorms]): java.util.HashMap[Integer, (Array[Long], Array[Int])] = {
-    val norms = new java.util.HashMap[Integer, (Array[Long], Array[Int])]()
-    rows.foreach { n =>
-      val ds = SegNorms.docsOf(n)
-      val ls = Array.tabulate(n.n)(i => VByte.unpackIntAt(n.doclens, i))
-      norms.put(n.seg, (ds, ls))
-    }
-    norms
-  }
+  /** One serving shard with a budget of its own. */
+  private[query] def assemble(p: ShardPayload, df: java.util.HashMap[String, Long],
+      stats: IndexStats, maxBytes: Long): ServingIndex =
+    shards(budget(IndexedSeq(p), maxBytes), df, stats).head
 
   /** Open ONE shard of a document-sharded cluster, materializing ONLY that
     * shard's blocks and norms (`seg mod nShards == shardId`, pushed into
@@ -471,9 +528,9 @@ object Serving {
     require(nShards >= 1 && shardId >= 0 && shardId < nShards,
       s"shardId $shardId out of range for $nShards shards")
     import org.apache.spark.sql.functions.{col, lit, pmod}
-    val sBlocks = idx.postings.filter(pmod(col("seg"), lit(nShards)) === shardId).collect()
-    val sNorms = normsMapOf(idx.norms.filter(pmod(col("seg"), lit(nShards)) === shardId).collect())
-    assemble(sBlocks, sNorms, collectDf(idx), idx.stats, maxBytes)
+    val mine = pmod(col("seg"), lit(nShards)) === shardId
+    assemble(ShardPayload(idx.postings.filter(mine).collect(), idx.norms.filter(mine).collect(),
+      null), collectDf(idx), idx.stats, maxBytes)
   }
 
   /** Assemble a router over shards opened individually (e.g. via
@@ -482,7 +539,7 @@ object Serving {
     * global stats — both true by construction for the open paths here.
     */
   def clusterOf(shards: IndexedSeq[ServingIndex]): ServingCluster =
-    new ServingCluster(shards, null)
+    new ServingCluster(shards)
 
   private def collectDf(idx: OpenIndex): java.util.HashMap[String, Long] = {
     val df = new java.util.HashMap[String, Long]()
@@ -513,26 +570,27 @@ object Serving {
   def openSharded(idx: OpenIndex, nShards: Int, maxBytesPerShard: Long,
       withDocs: Boolean = false): ServingCluster = {
     require(nShards >= 1, "need at least one shard")
-    val blocks = idx.postings.collect()
-    val norms = collectNorms(idx)
+    def shardOf(seg: Int) = math.floorMod(seg, nShards)
+    val blocks = idx.postings.collect().groupBy(b => shardOf(b.seg))
+    val normRows = idx.norms.collect()
+    // a document's _source lives on the shard that owns its segment;
+    // segments are contiguous docID ranges, so a document's segment is
+    // the last one whose first document is at or below it
+    val docs = if (!withDocs) Map.empty[Int, Array[DocMeta]] else {
+      val segs = normRows.sortBy(_.firstDoc)
+      val firsts = segs.map(_.firstDoc)
+      collectDocs(idx).groupBy { d =>
+        val i = java.util.Arrays.binarySearch(firsts, d.doc_id)
+        shardOf(segs(if (i >= 0) i else -i - 2).seg)
+      }
+    }
+    val norms = normRows.groupBy(n => shardOf(n.seg))
     val df = collectDf(idx)
     val stats = idx.stats
-    val shards = (0 until nShards).map { s =>
-      val sBlocks = blocks.filter(b => math.floorMod(b.seg, nShards) == s)
-      val sNorms = new java.util.HashMap[Integer, (Array[Long], Array[Int])]()
-      norms.forEach { (seg, v) =>
-        if (math.floorMod(seg, nShards) == s) sNorms.put(seg, v)
-      }
-      assemble(sBlocks, sNorms, df, stats, maxBytesPerShard)
-    }
-    // hit materialization is the router's fetch phase (like the
-    // reference's _source lookup after the query phase)
-    val docs = if (withDocs) {
-      val m = new java.util.HashMap[Long, DocMeta]()
-      collectDocs(idx).foreach(d => m.put(d.doc_id, d))
-      m
-    } else null
-    new ServingCluster(shards.toIndexedSeq, docs)
+    clusterOf((0 until nShards).map { s =>
+      assemble(ShardPayload(blocks.getOrElse(s, Array.empty), norms.getOrElse(s, Array.empty),
+        if (withDocs) docs.getOrElse(s, Array.empty) else null), df, stats, maxBytesPerShard)
+    })
   }
 }
 
@@ -541,9 +599,7 @@ object Serving {
   * live on exactly one shard), so the merge is the same TopKHeap the
   * single-node path uses per segment.
   */
-final class ServingCluster private[query] (
-    val shards: IndexedSeq[ServingIndex],
-    docStore: java.util.HashMap[Long, DocMeta]) {
+final class ServingCluster private[query] (val shards: IndexedSeq[ServingIndex]) {
 
   /** Total decoded/retained footprint, counting each cache ONCE — the
     * layered `ServingNode`'s shards share one bounded decode cache (or
@@ -586,20 +642,16 @@ final class ServingCluster private[query] (
     Serving.scorePhraseMatches(matches, shards.head.stats, k)
   }
 
-  /** Fetch phase: the router materializes stored fields either from its
-    * own doc store (in-process form) or by asking the shard that holds
-    * the document (per-shard doc stores — the deployment form, where
-    * `_source` lives next to the postings it scores). Documents live on
-    * exactly one shard, so the first shard that knows the id answers.
+  /** Fetch phase: the router asks the shard that holds each document —
+    * `_source` lives next to the postings it scores, and documents live
+    * on exactly one shard, so the first shard that knows the id answers.
     */
   def topKHits(query: String, k: Int): Array[Serving.Hit] = {
-    val shardDocs = docStore == null && shards.forall(_.hasDocs)
-    require(docStore != null || shardDocs,
-      "cluster opened without docs; use withDocs = true")
+    require(shards.forall(_.hasDocs), "cluster opened without docs; use withDocs = true")
     topK(query, k).map { case (id, score) =>
-      val d =
-        if (docStore != null) docStore.get(id)
-        else shards.iterator.map(_.docOf(id)).collectFirst { case m if m != null => m }.orNull
+      var d: DocMeta = null
+      var i = 0
+      while (d == null && i < shards.length) { d = shards(i).docOf(id); i += 1 }
       require(d != null, s"docId $id missing from the doc store")
       Serving.Hit(id, d.url, d.lang, d.doclen, score)
     }

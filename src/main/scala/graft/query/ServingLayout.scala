@@ -1,5 +1,8 @@
 package graft.query
 
+import scala.reflect.ClassTag
+import scala.reflect.runtime.universe.TypeTag
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -69,22 +72,22 @@ object ServingLayout {
       .map(_.group(1).toInt)
       .getOrElse(throw new IllegalStateException(s"no nShards in $outDir/stats.json"))
 
-  /** Open one shard from the export: the node reads ONLY its own
-    * directory (`shard=<id>` — directory-level pruning, not a filter over
-    * the full index) plus the small global stats. Bit-identical to
-    * `Serving.openSharded`'s in-process shards: same seg assignment, same
-    * global stats, same kernel.
+  /** One table's rows, read with the encoder's schema, NOT parquet footer
+    * inference: a schema discovery pass is a whole extra Spark job per
+    * table per open, and the serving tables' schemas are fixed by
+    * construction. A missing path throws.
     */
-  // a shard that owns zero segments (fewer segments than shards) has no
-  // directory — it opens empty and the router merge is unaffected. The
-  // schema comes from the encoder, NOT parquet footer inference: a schema
-  // discovery pass over the shard files is a whole extra Spark job per
-  // table per open, and the export's schemas are fixed by construction.
-  private def readOr[T <: Product : scala.reflect.runtime.universe.TypeTag : scala.reflect.ClassTag](
-      spark: SparkSession, path: String): Array[T] = {
+  private[query] def readRows[T <: Product : TypeTag](spark: SparkSession, path: String): Array[T] = {
     val enc = org.apache.spark.sql.Encoders.product[T]
-    if (!graft.ingest.Fs.exists(path)) Array.empty[T]
-    else spark.read.schema(enc.schema).parquet(path).as[T](enc).collect()
+    spark.read.schema(enc.schema).parquet(path).as[T](enc).collect()
+  }
+
+  // a shard that owns zero segments (fewer segments than shards) has no
+  // directory — it opens empty and the router merge is unaffected
+  private def readShard[T <: Product : TypeTag : ClassTag](
+      spark: SparkSession, outDir: String, table: String, shardId: Int): Array[T] = {
+    val path = s"$outDir/$table/shard=$shardId"
+    if (graft.ingest.Fs.exists(path)) readRows[T](spark, path) else Array.empty[T]
   }
 
   /** The small GLOBAL sides of an export (merged term df + corpus stats)
@@ -99,7 +102,7 @@ object ServingLayout {
     require(graft.ingest.Fs.exists(s"$outDir/terms"),
       s"no global terms table at $outDir/terms — incomplete export")
     val df = new java.util.HashMap[String, Long]()
-    readOr[TermStat](spark, s"$outDir/terms").foreach(t => df.put(t.term, t.df))
+    readRows[TermStat](spark, s"$outDir/terms").foreach(t => df.put(t.term, t.df))
     df
   }
 
@@ -111,6 +114,13 @@ object ServingLayout {
       num("nTerms").toLong, num("totalTokens").toLong)
   }
 
+  /** Open one shard from the export: the node reads ONLY its own
+    * directory (`shard=<id>` — directory-level pruning, not a filter over
+    * the full index) plus the small global stats. Bit-identical to
+    * `Serving.openSharded`'s in-process shards: same seg assignment, same
+    * global stats, same kernel. With `withDocs` the node materializes
+    * `_source` only for the documents whose postings it scores.
+    */
   def openExportedShard(
       spark: SparkSession, outDir: String, shardId: Int, maxBytes: Long,
       withDocs: Boolean = false): ServingIndex = {
@@ -123,15 +133,12 @@ object ServingLayout {
   private def openExportedShardWith(
       spark: SparkSession, outDir: String, shardId: Int, maxBytes: Long,
       withDocs: Boolean, df: java.util.HashMap[String, Long],
-      stats: IndexStats): ServingIndex = {
-    val blocks = readOr[PostingBlock](spark, s"$outDir/postings/shard=$shardId")
-    val norms = Serving.normsMapOf(readOr[SegNorms](spark, s"$outDir/norms/shard=$shardId"))
-    val si = Serving.assemble(blocks, norms, df, stats, maxBytes)
-    // per-shard fetch store: this node materializes _source only for the
-    // documents whose postings it scores
-    if (withDocs) si.loadDocs(readOr[DocMeta](spark, s"$outDir/docs/shard=$shardId"))
-    si
-  }
+      stats: IndexStats): ServingIndex =
+    Serving.assemble(ShardPayload(
+      readShard[PostingBlock](spark, outDir, "postings", shardId),
+      readShard[SegNorms](spark, outDir, "norms", shardId),
+      if (withDocs) readShard[DocMeta](spark, outDir, "docs", shardId) else null),
+      df, stats, maxBytes)
 
   /** All shards of an export opened in one process, routed — the
     * integration-test form of the per-node deployment (each shard open
@@ -169,6 +176,7 @@ object ServingLayout {
     } finally pool.shutdownNow()
   }
 }
+
 /** A serving node that follows a LIVE index: continuous indexing
   * (`StreamIngest.indexStream`) appends slices to the store, and the
   * node re-opens when — and only when — the committed slice set changes,
@@ -202,50 +210,28 @@ final class ServingNode(
     store: IndexStore,
     maxBytes: Long,
     withDocs: Boolean = false) {
-  import spark.implicits._
 
-  // ---- per-slice immutable payloads (slice files never change once
-  // committed, so none of this reloads or re-decodes for a cached id;
-  // a merge/compaction drops the old ids and loads the merged one) ----
-  private val sliceBlocks =
-    scala.collection.mutable.Map.empty[Int, Array[PostingBlock]]
-  private val sliceByTerm =
-    scala.collection.mutable.Map.empty[Int, java.util.HashMap[String, Array[PostingBlock]]]
-  private val sliceCache = scala.collection.mutable.Map.empty[Int, BlockCache]
-  private val sliceNorms = scala.collection.mutable
-    .Map.empty[Int, java.util.HashMap[Integer, (Array[Long], Array[Int])]]
-  private val sliceTerms = scala.collection.mutable.Map.empty[Int, Array[TermStat]]
-  private val sliceCounts = scala.collection.mutable.Map.empty[Int, (Long, Long)]
-  private val sliceDocs =
-    scala.collection.mutable.Map.empty[Int, java.util.HashMap[Long, DocMeta]]
-  private val sliceDecEst = scala.collection.mutable.Map.empty[Int, Long]
-  private val slicePosBytes = scala.collection.mutable.Map.empty[Int, Long]
-  // content identity of each cached slice — the FULL SliceMeta, not the
-  // id: a fixed-id rebuild (which the dead-list revive legitimizes)
-  // recommits an existing id with NEW content, and keying the caches on
-  // id alone would silently serve the stale payload forever
-  private val sliceMetaOf = scala.collection.mutable.Map.empty[Int, SliceMeta]
+  /** One committed slice as the node holds it. Slice files never change
+    * once committed, so nothing here reloads or re-decodes while the
+    * manifest keeps listing the same `meta` — the FULL SliceMeta, not the
+    * id: a fixed-id rebuild (which the dead-list revive legitimizes)
+    * recommits an existing id with NEW content, and keying on the id
+    * alone would silently serve the stale payload forever. `terms` are
+    * the slice's partial df rows, applied to and retired from the global
+    * df as the slice comes and goes.
+    */
+  private final class Slice(val meta: SliceMeta, val payload: ShardPayload,
+      val terms: Array[TermStat])
 
-  // ---- global side state, cloned + delta'd per tick. The served
-  // wrappers hold last tick's df map by reference, so it is NEVER
-  // mutated in place — the next tick clones it (O(vocab) pointer
-  // copies), subtracts dropped slices' partials and adds loaded ones. ----
+  private var slices = Map.empty[Int, Slice]
+
+  // The served wrappers hold last tick's df map by reference, so it is
+  // NEVER mutated in place — the next tick clones it (O(vocab) pointer
+  // copies), subtracts retired slices' partials and adds loaded ones.
   private var globalDf: java.util.HashMap[String, Long] = null
 
-  // ---- decoded-postings budget state. Mirrors `Serving.assemble`'s
-  // policy at node scope: when every slice's decoded postings + retained
-  // positions fit `maxBytes`, each slice pre-decodes fully at load (the
-  // allocation-free mt mode) and the leftover headroom funds ONE shared
-  // hot-phrase positions cache; otherwise all slices share ONE bounded
-  // CLOCK decode cache (entries keyed by block identity, so a dropped
-  // slice's entries age out by eviction). Mode transitions rebuild the
-  // affected caches — rare (the budget boundary is crossed once as the
-  // index grows) and flagged by lastReusedDecodes dropping to 0. ----
-  private var fitsMode: Boolean = true
-  private var sharedClock: ClockDecodeCache = null
-  private var sharedClockBudget: Long = -1L
-  private var sharedPosCache: Option[ClockCache[Serving.DecodedPositions]] = None
-  private var posCacheBudget: Long = -1L
+  // the budget the current index serves with: the next tick's `prior`
+  private var budget: Option[Budget] = None
 
   /** Refresh observability: slices loaded / dropped on the last (re)open,
     * and decoded blocks carried over (blocks of retained slices whose
@@ -258,202 +244,70 @@ final class ServingNode(
 
   @volatile private var state: (Seq[SliceMeta], ServingCluster) = load()
 
+  private def read(meta: SliceMeta): Slice = {
+    def rows[T <: Product : TypeTag](table: String): Array[T] =
+      ServingLayout.readRows[T](spark, store.slicePath(table, meta.sliceId))
+    new Slice(meta, ShardPayload(rows[PostingBlock]("postings"), rows[SegNorms]("norms"),
+      if (withDocs) rows[DocMeta]("docs") else null), rows[TermStat]("terms"))
+  }
+
   private def load(): (Seq[SliceMeta], ServingCluster) = {
     // ONE manifest snapshot drives every read below — blocks, norms,
     // terms, stats, and docs all come from the same committed slice set,
     // so a concurrent append/merge can never mix old blocks with new
     // corpus stats (which would break score identity)
-    val slices = store.committedSlices
-    require(slices.nonEmpty, s"nothing committed at ${store.root}")
-    val ids = slices.map(_.sliceId).toSet
-    val metaById = slices.map(s => s.sliceId -> s).toMap
-    // an id cached under a DIFFERENT meta was recommitted with new
-    // content: reload it like a new slice, and retire its old partials
-    // from the global merge like a dropped one
-    val changed = sliceBlocks.keySet.toSet
-      .intersect(ids).filter(id => sliceMetaOf(id) != metaById(id))
-    val newIds = ((ids -- sliceBlocks.keySet) ++ changed).toSeq.sorted
-    val dropped = sliceBlocks.keySet.toSet -- ids
-    val sortedIds = ids.toSeq.sorted
+    val metas = store.committedSlices
+    require(metas.nonEmpty, s"nothing committed at ${store.root}")
 
-    // ---- READ + DECODE phase: only the delta slices. Everything lands
-    // in locals; caches and counters commit at the end, so a failure
-    // anywhere (transient FS error, or — only if the deployment's vacuum
-    // grace window is shorter than a refresh — a reclaimed superseded
-    // slice) leaves the node exactly as it was. Merges themselves never
-    // delete files: superseded slices sit on the manifest dead-list
-    // until `IndexStore.vacuum`'s grace window passes. ----
-    val loaded = newIds.map { id =>
-      val blocks =
-        spark.read.parquet(store.slicePath("postings", id)).as[PostingBlock].collect()
-      val norms = Serving.normsMapOf(
-        spark.read.parquet(store.slicePath("norms", id)).as[SegNorms].collect())
-      val terms =
-        spark.read.parquet(store.slicePath("terms", id)).as[TermStat].collect()
-      val docs =
-        if (!withDocs) null
-        else {
-          val metas = spark.read.parquet(store.slicePath("docs", id))
-            .select(col("doc_id"), col("url"),
-              col("doclen").cast("int").as("doclen"), col("lang"))
-            .as[DocMeta].collect()
-          val m = new java.util.HashMap[Long, DocMeta](metas.length * 2)
-          metas.foreach(d => m.put(d.doc_id, d))
-          m
-        }
-      val byTerm = new java.util.HashMap[String, Array[PostingBlock]]()
-      blocks.groupBy(_.term).foreach { case (t, bs) => byTerm.put(t, bs) }
-      // (nDocs, totalTokens) from the decoded doclens — the exact per-doc
-      // token counts scoring uses, so the merged avgdl is bit-identical
-      // to IndexStats.fromDocs over the same snapshot
-      var n = 0L
-      var tok = 0L
-      norms.forEach { (_, v) =>
-        n += v._1.length
-        var i = 0
-        while (i < v._2.length) { tok += v._2(i); i += 1 }
-      }
-      (id, blocks, byTerm, norms, terms, (n, tok), docs,
-        blocks.iterator.map(Serving.decodedBytes).sum,
-        blocks.iterator.map(Serving.positionBytes).sum)
-    }
-    val loadedById = loaded.iterator.map(l => l._1 -> l).toMap
-    def blocksOf(id: Int) = loadedById.get(id).map(_._2).getOrElse(sliceBlocks(id))
-    def byTermOf(id: Int) = loadedById.get(id).map(_._3).getOrElse(sliceByTerm(id))
-    def normsOf(id: Int) = loadedById.get(id).map(_._4).getOrElse(sliceNorms(id))
-    def cntOf(id: Int) = loadedById.get(id).map(_._6).getOrElse(sliceCounts(id))
-    def docsOf(id: Int) = loadedById.get(id).map(_._7).getOrElse(sliceDocs(id))
-    def decEstOf(id: Int) = loadedById.get(id).map(_._8).getOrElse(sliceDecEst(id))
-    def posOf(id: Int) = loadedById.get(id).map(_._9).getOrElse(slicePosBytes(id))
+    // READ only the new or recommitted slices. Everything lands in
+    // locals and commits at the end, so a failure anywhere (transient FS
+    // error, or — only if the deployment's vacuum grace window is
+    // shorter than a refresh — a reclaimed superseded slice) leaves the
+    // node exactly as it was. Merges themselves never delete files:
+    // superseded slices sit on the manifest dead-list until
+    // `IndexStore.vacuum`'s grace window passes.
+    val (kept, fresh) = metas.partition(m => slices.get(m.sliceId).exists(_.meta == m))
+    val loaded = fresh.map(read)
+    val next = (kept.map(m => slices(m.sliceId)) ++ loaded).sortBy(_.meta.sliceId).toIndexedSeq
+    val retired = slices.values.filterNot(s => kept.contains(s.meta))
 
-    // ---- budget plan over the NEW slice set ----
-    val totDec = sortedIds.iterator.map(decEstOf).sum
-    val totPos = sortedIds.iterator.map(posOf).sum
-    val fits = totDec + totPos <= maxBytes
-    val newCaches = scala.collection.mutable.Map.empty[Int, BlockCache]
-    val carried = scala.collection.mutable.Set.empty[Int]
-    var clock = sharedClock
-    var clockBudget = sharedClockBudget
-    if (fits) {
-      clock = null; clockBudget = -1L
-      sortedIds.foreach { id =>
-        sliceCache.get(id) match {
-          // only an UNCHANGED cached slice carries its pre-decodes — a
-          // recommitted id's old cache holds the stale blocks
-          case Some(f: FullDecodeCache) if fitsMode && !loadedById.contains(id) =>
-            newCaches(id) = f; carried += id // pre-decodes survive untouched
-          case _ =>
-            newCaches(id) = new FullDecodeCache(blocksOf(id)) // decode now
-        }
-      }
-    } else {
-      val budget = math.max(maxBytes - totPos, maxBytes / 16)
-      if (clock == null || budget < clockBudget) {
-        // first bounded tick, or the unevictable positions grew into the
-        // cache's budget: a fresh (smaller) cache re-decodes lazily
-        clock = new ClockDecodeCache(budget); clockBudget = budget
-      } else if (!fitsMode) {
-        // same shared cache keeps serving — retained decodes stay hot
-        carried ++= ids.filterNot(newIds.contains)
-      }
-      sortedIds.foreach(id => newCaches(id) = clock)
-    }
-
-    // ---- global df: clone + delta. Subtract dropped partials FIRST
-    // (a merge both drops and adds the same terms), removing exact-zero
-    // entries — topK gates query terms on containsKey, so a dead term
-    // must disappear, not linger at df=0. java.util.HashMap unboxes a
-    // missing get to 0L in Scala, which is exactly the additive identity
-    // the adds need. ----
+    // global df: clone + delta. Subtract retired partials FIRST (a merge
+    // both drops and adds the same terms), removing exact-zero entries —
+    // topK gates query terms on containsKey, so a dead term must
+    // disappear, not linger at df=0. java.util.HashMap unboxes a missing
+    // get to 0L in Scala, which is exactly the additive identity the adds
+    // need.
     val df =
       if (globalDf == null) new java.util.HashMap[String, Long]()
       else new java.util.HashMap[String, Long](globalDf)
-    // dropped AND changed ids leave with their OLD cached partials — read
-    // from sliceTerms directly, never through the loaded-else-cache view
-    // (for a changed id that view yields the NEWLY-loaded partials, which
-    // would corrupt the subtraction); changed ids then re-enter with
-    // their new partials in the adds below
-    (dropped ++ changed).foreach { id =>
-      sliceTerms(id).foreach { t =>
-        val left = df.get(t.term) - t.df
-        if (left <= 0L) df.remove(t.term) else df.put(t.term, left)
-      }
-    }
-    loaded.foreach(l => l._5.foreach(t => df.put(t.term, df.get(t.term) + t.df)))
+    retired.foreach(_.terms.foreach { t =>
+      val left = df.get(t.term) - t.df
+      if (left <= 0L) df.remove(t.term) else df.put(t.term, left)
+    })
+    loaded.foreach(_.terms.foreach(t => df.put(t.term, df.get(t.term) + t.df)))
 
-    // ---- corpus stats from cached per-slice counts (same arithmetic as
-    // IndexStats.fromDocs over this snapshot's docs) ----
-    var nDocs = 0L
-    var totTokens = 0L
-    sortedIds.foreach { id =>
-      val (a, b) = cntOf(id); nDocs += a; totTokens += b
-    }
+    // corpus stats from the payloads' counts (same arithmetic as
+    // IndexStats.fromDocs over this snapshot's docs)
+    val nDocs = next.iterator.map(_.payload.nDocs).sum
+    val tokens = next.iterator.map(_.payload.tokens).sum
     val stats = IndexStats(nDocs,
-      if (nDocs == 0) 0.0 else totTokens.toDouble / nDocs, df.size().toLong, totTokens)
+      if (nDocs == 0) 0.0 else tokens.toDouble / nDocs, df.size().toLong, tokens)
 
-    // ---- shared hot-phrase positions cache from the budget headroom
-    // (fits mode only, like the flat open). Keyed by block identity, so
-    // keeping it across ticks preserves hot decodes; recreate only when
-    // the headroom SHRANK below its budget (it must never overrun). ----
-    var posC = sharedPosCache
-    var posB = posCacheBudget
-    val headroom = maxBytes - totDec - totPos
-    if (fits && totPos > 0 && headroom > 0) {
-      if (posC.isEmpty || headroom < posB) {
-        posC = Some(new ClockCache[Serving.DecodedPositions](
-          headroom, Serving.decodePositionsOf, (_, v) => Serving.decodedPositionBytes(v)))
-        posB = headroom
-      }
-    } else { posC = None; posB = -1L }
-
-    // ---- node-level budget accounting, stamped on every wrapper ----
-    val cacheBudget = if (fits) totDec else clockBudget
-    val report = Serving.OpenReport(
-      maxBytes = maxBytes,
-      estDecodedBytes = totDec,
-      retainedPositionBytes = totPos,
-      cacheBudgetBytes = cacheBudget,
-      bounded = !fits,
-      overBudget = totPos + cacheBudget > maxBytes)
-
-    // ---- wrappers + router: O(nSlices) object constructions sharing
-    // the cached payloads; no decode, no rebuild. The cluster's
-    // loadedBytes identity-dedups the shared caches, so footprint
-    // accounting stays honest even though every wrapper references the
-    // same bounded decode cache / positions cache. ----
-    val shards = sortedIds.map { id =>
-      val si = new ServingIndex(byTermOf(id), newCaches(id), normsOf(id),
-        df, stats, posOf(id), posC, report)
-      if (withDocs) si.setDocStore(docsOf(id))
-      si
-    }.toIndexedSeq
-    val cluster = Serving.clusterOf(shards)
+    // one budget over every slice: shared caches, and a router whose
+    // loadedBytes counts each shared cache once
+    val b = Serving.budget(next.map(_.payload), maxBytes, budget)
+    val cluster = Serving.clusterOf(Serving.shards(b, df, stats))
 
     // ---- COMMIT — everything above succeeded ----
-    loaded.foreach { case (id, blocks, byTerm, norms, terms, cnt, docs, dec, pos) =>
-      sliceBlocks(id) = blocks; sliceByTerm(id) = byTerm; sliceNorms(id) = norms
-      sliceTerms(id) = terms; sliceCounts(id) = cnt
-      if (withDocs) sliceDocs(id) = docs
-      sliceDecEst(id) = dec; slicePosBytes(id) = pos
-    }
-    dropped.foreach { id =>
-      sliceBlocks.remove(id); sliceByTerm.remove(id); sliceNorms.remove(id)
-      sliceTerms.remove(id); sliceCounts.remove(id); sliceDocs.remove(id)
-      sliceDecEst.remove(id); slicePosBytes.remove(id); sliceCache.remove(id)
-    }
-    newCaches.foreach { case (id, c) => sliceCache(id) = c }
-    sliceMetaOf.clear()
-    slices.foreach(s => sliceMetaOf(s.sliceId) = s)
+    lastReusedDecodes = next.indices.iterator
+      .filter(i => budget.flatMap(_.cacheOf(next(i).payload)).exists(_ eq b.caches(i)))
+      .map(i => next(i).payload.blocks.length).sum
+    lastLoadedSlices = loaded.size
+    lastDroppedSlices = (slices.keySet -- metas.map(_.sliceId)).size
+    slices = next.iterator.map(s => s.meta.sliceId -> s).toMap
     globalDf = df
-    fitsMode = fits
-    sharedClock = clock
-    sharedClockBudget = clockBudget
-    sharedPosCache = posC
-    posCacheBudget = posB
-    lastLoadedSlices = newIds.size
-    lastDroppedSlices = dropped.size
-    lastReusedDecodes = carried.iterator.map(id => blocksOf(id).length).sum
-    (slices, cluster)
+    budget = Some(b)
+    (metas, cluster)
   }
 
   /** The index serving new queries right now (stable reference — hold it
