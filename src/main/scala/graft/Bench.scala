@@ -171,7 +171,7 @@ object Bench {
       if (qpsOk.size >= 2) (medianOf(qpsOk.toSeq), false)
       else (medianOf(qpsRuns.toSeq), true)
 
-    // ---- phase 2c: single-node serving tier (same segTopK kernel loaded
+    // ---- phase 2c: single-node serving tier (same segTopKWith kernel loaded
     // in memory, no Spark job per query — how a shard server would run),
     // plus the document-sharded cluster (4 shards + router k-merge) and
     // the phrase path over the positional index.
@@ -409,7 +409,7 @@ object Bench {
     val efficiency = (dps4N / dpsN) / (n4Cores.toDouble / nCores)
     // absolute throughput at full width (the wall-clock number) —
     // best-of-2: a single fresh-session build sits well below the JVM's
-    // steady state (OrderProbe: third 2M build runs ~3× the first)
+    // steady state (a third 2M build was measured at ~3× the first)
     val dpsFull = math.max(buildThroughput(cpus, benchDocs), buildThroughput(cpus, benchDocs))
     def arr(xs: Seq[Double]): String = xs.map(fmt).mkString("[", ",", "]")
 

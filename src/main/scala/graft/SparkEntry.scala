@@ -216,7 +216,7 @@ object SparkEntry {
     "q_bm25_head_top100" -> ((s, d) => bm25(s, d, "the data web", 100)),
     "q_bm25_rare_top10" -> ((s, d) => bm25(s, d, "dup", 10)),
 
-    // single-node serving tier: same segTopK kernel, no Spark job per
+    // single-node serving tier: same segTopKWith kernel, no Spark job per
     // query — must be bit-identical to the distributed WAND gate above
     "q_bm25_serving_top10" -> ((s, d) =>
       servingFor(s, d).topKDF(s, "spark index dup", 10)

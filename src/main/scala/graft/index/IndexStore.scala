@@ -371,33 +371,31 @@ case class OpenIndex(
     terms: Dataset[TermStat],
     docs: DataFrame,
     slices: Seq[SliceMeta]) {
-  /** Corpus stats of THIS snapshot: derived from its own pinned tables,
-    * never from the store's manifest, which may have moved on since.
+  /** Corpus stats of THIS snapshot, from its own pinned norms (never the
+    * store's manifest, which may have moved on since): one job over the
+    * norms, plus the term count.
     */
-  lazy val stats: IndexStats = IndexStats.fromDocs(docs, terms.count())
+  lazy val stats: IndexStats = IndexStats.fromNorms(norms, terms.count())
+
+  /** Driver-side term→df lookup for the low-latency query path: resolves
+    * query-term stats without a per-query Spark job (one cached collect at
+    * first use). Bounded: past 2^20 terms (web-scale vocabularies don't
+    * fit driver memory) queries fall back to the filtered-collect path,
+    * which row-group stats keep cheap on the compacted terms table.
+    */
+  lazy val termsLocal: Option[Map[String, Long]] =
+    if (terms.count() <= (1L << 20))
+      Some(terms.collect().map(t => t.term -> t.df).toMap)
+    else None
 
   /** Norms broadcast for the low-latency query path: collected once per
     * open index when the segment count is modest (norms are ~5 bytes/doc;
     * 4096 segs of 64Ki docs ≈ 1.3 GB corpus-side but only the doclen
-    * payload travels). Indexes beyond the threshold fall back to the
-    * cogroup path — at 10^12 docs the norms table is executor-side state,
-    * not driver-broadcastable.
+    * payload travels). Past `graft.query.broadcastNormsMaxSegs` segments
+    * (default 4096) it is None and `Segments.perSegment` cogroups the
+    * norms by segment instead — at 10^12 docs the norms table is
+    * executor-side state, not driver-broadcastable.
     */
-  /** Driver-side term→df lookup for the low-latency query path: resolves
-    * query-term stats without a per-query Spark job (one cached collect at
-    * first use). Bounded: past the threshold (web-scale vocabularies don't
-    * fit driver memory) queries fall back to the filtered-collect path,
-    * which row-group stats keep cheap on the compacted terms table.
-    */
-  lazy val termsLocal: Option[Map[String, Long]] = {
-    val spark = docs.sparkSession
-    val maxTerms = spark.conf.getOption("graft.query.localTermsMaxCount")
-      .map(_.toLong).getOrElse(1L << 20)
-    if (terms.count() <= maxTerms)
-      Some(terms.collect().map(t => t.term -> t.df).toMap)
-    else None
-  }
-
   lazy val normsBroadcast: Option[org.apache.spark.broadcast.Broadcast[Map[Int, SegNorms]]] = {
     val spark = docs.sparkSession
     val maxSegs = spark.conf.getOption("graft.query.broadcastNormsMaxSegs")

@@ -70,10 +70,44 @@ case class TermStat(term: String, df: Long, cf: Long)
 case class IndexStats(nDocs: Long, avgdl: Double, nTerms: Long, totalTokens: Long)
 
 object IndexStats {
-  /** Corpus stats from a docs table — ONE null-safe aggregate (the sum of
+  /** Corpus stats from a snapshot's norms rows: nDocs = Σ n and
+    * totalTokens = Σ doclen. The one derivation every stats path uses (an
+    * open index, every serving open, the shard export), so no path can
+    * score with stats another path would not. Norms are written from the
+    * docs table's doclens and merges copy them, so the values equal
+    * `fromDocs` over the same snapshot.
+    */
+  def fromNorms(rows: IterableOnce[SegNorms], nTerms: Long): IndexStats = {
+    var n, tok = 0L
+    rows.iterator.foreach { r =>
+      n += r.n
+      var i = 0
+      while (i < r.n) { tok += VByte.unpackIntAt(r.doclens, i); i += 1 }
+    }
+    merge(Iterator.single(IndexStats(n, 0.0, 0L, tok)), nTerms)
+  }
+
+  /** `fromNorms` over a norms table: each partition folds its rows on an
+    * executor, and the driver merges one partial per partition.
+    */
+  def fromNorms(norms: org.apache.spark.sql.Dataset[SegNorms], nTerms: Long): IndexStats =
+    merge(norms.mapPartitions(it => Iterator.single(fromNorms(it, 0L)))(
+      org.apache.spark.sql.Encoders.product[IndexStats]).collect(), nTerms)
+
+  /** Stats of the union of disjoint parts (norms partitions, or a serving
+    * node's slices): their nDocs and totalTokens add. An empty union has
+    * avgdl 0, not NaN.
+    */
+  def merge(parts: IterableOnce[IndexStats], nTerms: Long): IndexStats = {
+    var n, tok = 0L
+    parts.iterator.foreach { p => n += p.nDocs; tok += p.totalTokens }
+    IndexStats(n, if (n == 0) 0.0 else tok.toDouble / n, nTerms, tok)
+  }
+
+  /** Corpus stats from a docs table, one null-safe aggregate (the sum of
     * doclen over zero rows is SQL null, so an empty snapshot must not
-    * NPE). Single source of truth for every stats path (store-fresh and
-    * snapshot-pinned), so serving scores can't drift from `store.stats`.
+    * NPE). No query path uses it: it is the independent reference the
+    * norms-derived stats are tested against.
     */
   def fromDocs(docs: org.apache.spark.sql.DataFrame, nTerms: Long): IndexStats = {
     import org.apache.spark.sql.functions.{coalesce, count, lit, sum}

@@ -97,11 +97,6 @@ private[query] final class ShardPayload(
     val byTerm: java.util.HashMap[String, Array[PostingBlock]],
     /** seg → (ascending docIds, doclens) */
     val norms: java.util.HashMap[Integer, (Array[Long], Array[Int])],
-    val nDocs: Long,
-    /** Σ doclen — the exact per-doc token counts scoring uses, so stats
-      * merged from payloads are bit-identical to `IndexStats.fromDocs`
-      */
-    val tokens: Long,
     /** estimated decoded-postings heap (`Serving.decodedBytes`) */
     val decodedBytes: Long,
     /** compressed positions kept on-heap (`Serving.positionBytes`) */
@@ -113,13 +108,8 @@ private[query] object ShardPayload {
   def apply(blocks: Array[PostingBlock], normRows: Array[SegNorms],
       docRows: Array[DocMeta]): ShardPayload = {
     val norms = new java.util.HashMap[Integer, (Array[Long], Array[Int])]()
-    var nDocs, tokens = 0L
-    normRows.foreach { n =>
-      val ls = Array.tabulate(n.n)(i => VByte.unpackIntAt(n.doclens, i))
-      norms.put(n.seg, (SegNorms.docsOf(n), ls))
-      nDocs += n.n
-      ls.foreach(tokens += _)
-    }
+    normRows.foreach(n => norms.put(n.seg,
+      (SegNorms.docsOf(n), Array.tabulate(n.n)(i => VByte.unpackIntAt(n.doclens, i)))))
     // a segment scored without its norms has no doclens: a partial index
     // or export must fail the open, not the first query that touches it
     blocks.iterator.map(_.seg).distinct.foreach(seg =>
@@ -133,7 +123,7 @@ private[query] object ShardPayload {
         docRows.foreach(d => m.put(d.doc_id, d))
         m
       }
-    new ShardPayload(blocks, byTerm, norms, nDocs, tokens,
+    new ShardPayload(blocks, byTerm, norms,
       blocks.iterator.map(Serving.decodedBytes).sum,
       blocks.iterator.map(Serving.positionBytes).sum, docs)
   }
@@ -164,7 +154,7 @@ private[query] final class Budget(
   * `ServingIndex` is that shard server in miniature — it loads one
   * store's compressed postings/norms/terms (one Spark collect at open)
   * and then answers top-k queries in pure JVM time through the SAME
-  * `Wand.segTopK` kernel the distributed path runs, so results are
+  * `Wand.segTopKWith` kernel the distributed path runs, so results are
   * bit-identical to both the distributed WAND and the brute-force oracle.
   *
   * Scale contract: `maxBytes` budgets the DECODED postings footprint. A
@@ -440,9 +430,13 @@ object Serving {
   def open(spark: SparkSession, store: IndexStore, maxBytes: Long): ServingIndex =
     open(store.open(spark), maxBytes)
 
-  def open(idx: OpenIndex, maxBytes: Long, withDocs: Boolean = false): ServingIndex =
-    assemble(ShardPayload(idx.postings.collect(), idx.norms.collect(),
-      if (withDocs) collectDocs(idx) else null), collectDf(idx), idx.stats, maxBytes)
+  def open(idx: OpenIndex, maxBytes: Long, withDocs: Boolean = false): ServingIndex = {
+    val normRows = idx.norms.collect()
+    val df = collectDf(idx)
+    assemble(ShardPayload(idx.postings.collect(), normRows,
+      if (withDocs) collectDocs(idx) else null),
+      df, IndexStats.fromNorms(normRows, df.size), maxBytes)
+  }
 
   /** The one budget policy of every open. When the payloads' decoded
     * postings plus their retained compressed positions fit `maxBytes`,
@@ -586,7 +580,7 @@ object Serving {
     }
     val norms = normRows.groupBy(n => shardOf(n.seg))
     val df = collectDf(idx)
-    val stats = idx.stats
+    val stats = IndexStats.fromNorms(normRows, df.size)
     clusterOf((0 until nShards).map { s =>
       assemble(ShardPayload(blocks.getOrElse(s, Array.empty), norms.getOrElse(s, Array.empty),
         if (withDocs) docs.getOrElse(s, Array.empty) else null), df, stats, maxBytesPerShard)

@@ -3,7 +3,7 @@ package graft.query
 import scala.reflect.ClassTag
 import scala.reflect.runtime.universe.TypeTag
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.index._
@@ -43,7 +43,8 @@ object ServingLayout {
     val shardCol = pmod(col("seg"), lit(nShards)).as("shard")
     readSub("postings").withColumn("shard", shardCol)
       .write.partitionBy("shard").mode("overwrite").parquet(s"$outDir/postings")
-    readSub("norms").withColumn("shard", shardCol)
+    val norms = readSub("norms")
+    norms.withColumn("shard", shardCol)
       .write.partitionBy("shard").mode("overwrite").parquet(s"$outDir/norms")
     // global term stats: merged df/cf (small — one row per distinct term)
     val terms = readSub("terms").groupBy("term")
@@ -53,12 +54,12 @@ object ServingLayout {
     // a document's _source lives on the shard that owns its segment
     val segSize = store.settings.getOrElse("build.segSize",
       throw new IllegalStateException(s"no build.segSize recorded at ${store.root}")).toLong
-    val docs = readSub("docs")
-    docs
+    readSub("docs")
       .select(col("doc_id"), col("url"), col("doclen").cast("int").as("doclen"), col("lang"))
       .withColumn("shard", pmod(expr(s"doc_id DIV ${segSize}L").cast("int"), lit(nShards)))
       .write.partitionBy("shard").mode("overwrite").parquet(s"$outDir/docs")
-    val st = IndexStats.fromDocs(docs, spark.read.parquet(s"$outDir/terms").count())
+    val st = IndexStats.fromNorms(norms.as[SegNorms](Encoders.product[SegNorms]),
+      spark.read.parquet(s"$outDir/terms").count())
     // through the Hadoop FS layer, like the parquet it sits beside — the
     // export must work wherever the data tables live
     graft.ingest.Fs.writeString(s"$outDir/stats.json",
@@ -78,7 +79,7 @@ object ServingLayout {
     * construction. A missing path throws.
     */
   private[query] def readRows[T <: Product : TypeTag](spark: SparkSession, path: String): Array[T] = {
-    val enc = org.apache.spark.sql.Encoders.product[T]
+    val enc = Encoders.product[T]
     spark.read.schema(enc.schema).parquet(path).as[T](enc).collect()
   }
 
@@ -218,10 +219,11 @@ final class ServingNode(
     * recommits an existing id with NEW content, and keying on the id
     * alone would silently serve the stale payload forever. `terms` are
     * the slice's partial df rows, applied to and retired from the global
-    * df as the slice comes and goes.
+    * df as the slice comes and goes; `stats` are its norms' doc and token
+    * counts, merged into the global stats the same way.
     */
   private final class Slice(val meta: SliceMeta, val payload: ShardPayload,
-      val terms: Array[TermStat])
+      val terms: Array[TermStat], val stats: IndexStats)
 
   private var slices = Map.empty[Int, Slice]
 
@@ -247,8 +249,10 @@ final class ServingNode(
   private def read(meta: SliceMeta): Slice = {
     def rows[T <: Product : TypeTag](table: String): Array[T] =
       ServingLayout.readRows[T](spark, store.slicePath(table, meta.sliceId))
-    new Slice(meta, ShardPayload(rows[PostingBlock]("postings"), rows[SegNorms]("norms"),
-      if (withDocs) rows[DocMeta]("docs") else null), rows[TermStat]("terms"))
+    val norms = rows[SegNorms]("norms")
+    new Slice(meta, ShardPayload(rows[PostingBlock]("postings"), norms,
+      if (withDocs) rows[DocMeta]("docs") else null), rows[TermStat]("terms"),
+      IndexStats.fromNorms(norms, 0L))
   }
 
   private def load(): (Seq[SliceMeta], ServingCluster) = {
@@ -286,12 +290,9 @@ final class ServingNode(
     })
     loaded.foreach(_.terms.foreach(t => df.put(t.term, df.get(t.term) + t.df)))
 
-    // corpus stats from the payloads' counts (same arithmetic as
-    // IndexStats.fromDocs over this snapshot's docs)
-    val nDocs = next.iterator.map(_.payload.nDocs).sum
-    val tokens = next.iterator.map(_.payload.tokens).sum
-    val stats = IndexStats(nDocs,
-      if (nDocs == 0) 0.0 else tokens.toDouble / nDocs, df.size().toLong, tokens)
+    // corpus stats: the slices' own norms stats add up, as slices
+    // partition the documents
+    val stats = IndexStats.merge(next.iterator.map(_.stats), df.size().toLong)
 
     // one budget over every slice: shared caches, and a router whose
     // loadedBytes counts each shared cache once

@@ -11,11 +11,11 @@ import graft.index._
   *
   * Distribution model: postings are document-partitioned by segment, so
   * each segment's WAND runs independently in an executor task
-  * (flatMapGroups over the seg-cogrouped postings + norms), emits a local
-  * top-k, and the global answer is a tiny TakeOrderedAndProject merge —
-  * the standard document-sharded search architecture, which scales to
-  * arbitrarily many segments with no shuffle of posting payloads beyond
-  * the q query terms' blocks.
+  * (`Segments.perSegment`: the segment's blocks with its norms row),
+  * emits a local top-k, and the global answer is a tiny
+  * TakeOrderedAndProject merge — the standard document-sharded search
+  * architecture, which scales to arbitrarily many segments with no
+  * shuffle of posting payloads beyond the q query terms' blocks.
   *
   * Determinism: a document's score folds its per-term contributions in
   * ascending term order, so the double-precision sum is bit-identical to
@@ -62,46 +62,12 @@ object Wand {
       .filter(col("term").isin(terms: _*))
       .withColumn("positions", lit(null).cast("binary"))
       .as[PostingBlock]
-    val hits = index.normsBroadcast match {
-      case Some(bc) =>
-        // low-latency path: one shuffle (blocks by seg); norms via broadcast
-        qBlocks
-          .groupByKey(_.seg)
-          .flatMapGroups { (seg: Int, blocks: Iterator[PostingBlock]) =>
-            val blockArr = blocks.toArray
-            if (blockArr.isEmpty) Iterator.empty
-            else segTopK(blockArr, Array(bc.value(seg)), idfs, avgdl, k).iterator
-          }
-          .toDF("doc_id", "score")
-      case None =>
-        // scale path: norms too large to broadcast — cogroup by segment
-        qBlocks
-          .groupByKey(_.seg)
-          .cogroup(index.norms.groupByKey(_.seg)) { (seg, blocks, norms) =>
-            val blockArr = blocks.toArray
-            if (blockArr.isEmpty) Iterator.empty
-            else segTopK(blockArr, norms.toArray, idfs, avgdl, k).iterator
-          }
-          .toDF("doc_id", "score")
-    }
-
-    hits.orderBy(col("score").desc, col("doc_id").asc).limit(k)
-  }
-
-  /** Block-max WAND within one segment; returns local top-k. */
-  private[query] def segTopK(
-      blocks: Array[PostingBlock],
-      norms: Array[SegNorms],
-      idfs: Map[String, Double],
-      avgdl: Double,
-      k: Int): Array[(Long, Double)] = {
-
-    // doclen lookup: binary search over the seg's sorted docIDs
-    require(norms.length == 1, s"expected 1 norms row per seg, got ${norms.length}")
-    val nm = norms(0)
-    val normDocs = SegNorms.docsOf(nm)
-    def doclen(docId: Long): Long = SegNorms.doclenAt(nm, normDocs, docId).toLong
-    segTopKWith(blocks, doclen, idfs, avgdl, k, TermPostings.decodeBlock)
+    Segments.perSegment(index, qBlocks) { (blocks, nm) =>
+      val normDocs = SegNorms.docsOf(nm)
+      segTopKWith(blocks, d => SegNorms.doclenAt(nm, normDocs, d).toLong, idfs, avgdl, k,
+        TermPostings.decodeBlock).iterator
+    }.toDF("doc_id", "score")
+      .orderBy(col("score").desc, col("doc_id").asc).limit(k)
   }
 
   /** Kernel form with pluggable doclen lookup + block decoder — the

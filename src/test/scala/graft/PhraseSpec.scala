@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.analysis.Analyzer
 import graft.index.{BM25, IndexBuilder, IndexStore, TermPostings}
-import graft.query.Phrase
+import graft.query.{Phrase, Segments}
 
 /** Phrase queries over the positional index: bit-exact against a
   * brute-force Scala oracle (tokenize + adjacency count + the same BM25
@@ -83,13 +83,24 @@ class PhraseSpec extends AnyFunSuite {
     IndexBuilder.build(spark, df, store,
       IndexBuilder.Config(segSize = 64, blockSize = 16, slices = 2, positions = true))
     val idx = store.open(spark)
+    // the same store opened where the norms cogroup by segment instead of
+    // broadcasting: the scale path must score identically
+    val sCogroup = spark.newSession()
+    sCogroup.conf.set("graft.query.broadcastNormsMaxSegs", "0")
+    val idxCogroup = store.open(sCogroup)
+    assert(idx.normsBroadcast.isDefined && idxCogroup.normsBroadcast.isEmpty)
     for (phrase <- Seq("fox fox", "red blue red", "blue green", "dog run fox",
         "fox fox fox", "nosuchword fox", "zzz qqq")) {
       val got = Phrase.topK(spark, idx, phrase, 10)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       val want = bruteTopK(corpus, phrase, 10)
       assert(got == want, s"phrase='$phrase'\ngot =$got\nwant=$want")
+      val scale = Phrase.topK(sCogroup, idxCogroup, phrase, 10)
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      assert(scale == got, s"cogroup path, phrase='$phrase'")
     }
+    // "blue green" matches in several segments on both paths
+    assert(bruteTopK(corpus, "blue green", 10).map(_._1 / 64).distinct.size > 1)
     // the overlap-counting contract, explicitly
     val ff = Phrase.topK(spark, idx, "fox fox", 10).collect()
       .map(r => r.getLong(0)).toSeq
@@ -142,22 +153,37 @@ class PhraseSpec extends AnyFunSuite {
     store.dropAll()
   }
 
-  test("a segment missing from the broadcast norms fails with a named error") {
+  /** A 2-segment positional index whose norms lack segment 0, opened in
+    * `session`; `perSegment` over its postings must name the segment.
+    */
+  private def assertMissingNormsNamed(session: org.apache.spark.sql.SparkSession,
+      broadcast: Boolean): Unit = {
     import spark.implicits._
-    val df = Seq((0L, "a b c"), (1L, "a b")).toDF("doc_id", "text")
+    val df = Seq((0L, "a b c"), (1L, "a b"), (4L, "a c"), (5L, "b")).toDF("doc_id", "text")
       .withColumn("url", concat(lit("doc://"), col("doc_id")))
       .withColumn("lang", lit("en"))
     val store = new IndexStore(Files.createTempDirectory("graft-nonorms-").toString)
     IndexBuilder.build(spark, df, store,
       IndexBuilder.Config(segSize = 4, blockSize = 4, positions = true))
-    val idx = store.open(spark)
-    val noNorms = spark.sparkContext.broadcast(Map.empty[Int, graft.index.SegNorms])
+    val full = store.open(session)
+    val idx = full.copy(norms = full.norms.filter(_.seg != 0))
+    assert(idx.normsBroadcast.isDefined == broadcast)
     val e = intercept[Exception](
-      Phrase.matchesWithDlPlan(idx, IndexedSeq("a", "b"), noNorms).collect())
+      Segments.perSegment(idx, idx.postings)((_, n) => Iterator(n.seg)).collect())
     val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
     assert(causes.exists(c => c.isInstanceOf[IllegalArgumentException] &&
-      c.getMessage.contains("seg 0 missing from the broadcast norms")), e)
+      c.getMessage.contains("seg 0 has postings but no norms")), e)
     store.dropAll()
+  }
+
+  test("a segment missing from the broadcast norms fails with a named error") {
+    assertMissingNormsNamed(spark, broadcast = true)
+  }
+
+  test("a segment missing from the cogrouped norms fails with a named error") {
+    val sCogroup = spark.newSession()
+    sCogroup.conf.set("graft.query.broadcastNormsMaxSegs", "0") // force cogroup
+    assertMissingNormsNamed(sCogroup, broadcast = false)
   }
 
   test("non-positional index refuses phrase queries with a clear message") {

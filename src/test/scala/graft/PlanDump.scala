@@ -70,14 +70,15 @@ object PlanDump {
       mhOut)
     mhCached.foreach(_.unpersist())
 
-    dump("Exact phrase matching (positional index, unscored match plan)",
+    dump("Exact phrase matching (positional index, match plan)",
       "Only the phrase terms' blocks travel (term IN-filter pushed to the " +
         "postings scan); adjacency matching is segment-local " +
-        "(flatMapGroups per seg). The public topK persists this, resolves " +
-        "the global phrase df, broadcasts the match set against the docs " +
-        "table for doclens, and TakeOrdered-merges.",
-      graft.query.Phrase.matchesPlan(idx, graft.analysis.Analyzer
-        .tokenize("the web").toIndexedSeq).toDF("doc_id", "ptf"))
+        "(flatMapGroups per seg), and each segment resolves its matches' " +
+        "doclens from its own norms row — no docs-table join. The public " +
+        "topK persists this, counts the global phrase df, scores and " +
+        "TakeOrdered-merges.",
+      graft.query.Phrase.matches(idx, graft.analysis.Analyzer
+        .tokenize("the web").toIndexedSeq).toDF("doc_id", "ptf", "doclen"))
 
     val (ppOut, ppCached, _) = graft.ops.Dedup.sharedPassagePairsPlan(
       spark.read.parquet(s"$sf/documents.parquet"), "doc_id", "text",
