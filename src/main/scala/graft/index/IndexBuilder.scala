@@ -1,37 +1,34 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.analysis.{functions => ga}
+import org.apache.spark.storage.StorageLevel
 
 /** Inverted-index builder (the Spark-native analogue of the reference's
   * `/_bulk` ingestion path, reference file_processor.py:415-471, whose
   * tokenize/postings work Lucene performed server-side — here implemented
   * natively, SURVEY.md §2 A5/A6).
   *
-  * Plan shape (one slice) — exactly ONE wide shuffle:
+  * A segment is a docID range (`seg = docId / segSize`), so a slice is
+  * built segment by segment, as Lucene's DocumentsWriterPerThread flushes
+  * a segment of its own. Plan shape (one slice):
   * {{{
   *   scan(docs)                        -- column pruning drops html etc.
-  *     -> per-doc tf flatMap           -- tokenize + per-doc hash count:
-  *                                        tf(term,doc) is per-ROW work, a
-  *                                        doc's tokens never cross rows,
-  *                                        so no (term,docId) shuffle exists
-  *     -> groupByKey((term, seg))      [the one shuffle: bounded groups]
-  *     -> encode blocks -> write postings
-  *   terms(df, cf)  <- postings parquet (columnar agg of n/tfSum — no
-  *                     second pass over raw text)
-  *   docs/norms     <- token_count scan (doclen only, no token arrays)
+  *     -> repartition(seg)             [the one wide shuffle: documents]
+  *     -> sortWithinPartitions(doc_id)
+  *     -> SegmentInverter              -- tokenize each doc once; emit the
+  *                                        segment's blocks, its norms row
+  *                                        and its doc rows
+  *     -> persist (MEMORY_AND_DISK)
+  *          -> sortWithinPartitions(term, seg, blk) -> write postings
+  *          -> write norms, write docs
+  *   terms(df, cf)  <- postings parquet (columnar agg of n/tfSum)
   * }}}
-  * Earlier shape ran tf as a global groupBy(term, docId): a ~28M-entry
-  * hash aggregate that was memory-bound and stopped scaling past 8 cores;
-  * the per-doc map (≤ a few hundred entries, cache-resident) scales
-  * linearly and feeds the shuffle 2× less data.
-  *
-  * Skew: head terms (df ≈ N/2 in web text) would make `groupBy(term)`
-  * explode; the seg dimension (seg = docId / segSize) is a deterministic
-  * salt that bounds every (term, seg) group at segSize postings, and the
-  * per-term partials (df, cf) merge additively — exactly Spark's
-  * partial+final aggregation model.
+  * Only documents cross the shuffle, never postings, and a segment is
+  * written whole by one task: a postings file is term-sorted (row-group
+  * min/max stats prune term lookups) and no segment spans two files of a
+  * slice. The inverter holds one segment's state at a time, and a segment
+  * is a fixed docID range, so head terms cannot skew the build.
   *
   * Resume: the corpus is processed in docID slices; each slice commits its
   * files plus a manifest entry (lineage + row/byte metrics) atomically.
@@ -46,8 +43,8 @@ object IndexBuilder {
       slices: Int = 1,
       codec: String = "pfor", // "pfor" (PForDelta, default) or "vbyte"
       positions: Boolean = false) // index token positions (phrase queries);
-                                  // ~doclen extra ints/doc through the one
-                                  // shuffle — Lucene's IndexOptions trade
+                                  // ~doclen extra ints/doc in the postings
+                                  // — Lucene's IndexOptions trade
 
   case class BuildReport(
       slicesBuilt: Int,
@@ -55,15 +52,6 @@ object IndexBuilder {
       docs: Long,
       postings: Long,
       elapsedMs: Long)
-
-  private val verbose = sys.env.contains("GRAFT_BUILD_VERBOSE")
-  private def phase[T](label: String)(f: => T): T = {
-    val t0 = System.nanoTime()
-    val r = f
-    if (verbose)
-      println(f"[build] $label ${(System.nanoTime() - t0) / 1e9}%.1fs")
-    r
-  }
 
   /** Build an index over `docs(doc_id, url, text, lang)` into `store`.
     * `fresh=true` drops any existing index first; otherwise committed
@@ -78,7 +66,6 @@ object IndexBuilder {
       failAfterSlice: Int = Int.MaxValue,
       manifestProps: Map[String, String] = Map.empty,
       earlyProps: Map[String, String] = Map.empty): BuildReport = {
-    import spark.implicits._
     val t0 = System.nanoTime()
     if (fresh) store.dropAll()
     val done = store.committedSlices.map(_.sliceId).toSet
@@ -103,11 +90,9 @@ object IndexBuilder {
           "(or rebuild fresh)")
     }
     val base = normalize(docs)
-    // one stats pass: docID bounds + count (token_count no longer needed
-    // here — impact metadata is stats-independent, so the build never
-    // bakes in avgdl)
-    val bounds = phase("stats")(base.agg(
-      min("doc_id"), max("doc_id"), count("*")).head())
+    // one stats pass: docID bounds + count (impact metadata is
+    // stats-independent, so the build never bakes in avgdl)
+    val bounds = base.agg(min("doc_id"), max("doc_id"), count("*")).head()
     val (minId, maxId, nDocs) = (bounds.getLong(0), bounds.getLong(1), bounds.getLong(2))
 
     val segSize = cfg.segSize.toLong
@@ -186,9 +171,7 @@ object IndexBuilder {
     BuildReport(built, skipped, nDocs, totalPostings, (System.nanoTime() - t0) / 1000000)
   }
 
-  /** Pass 1 projection: doc metadata columns (token_count is a codegen
-    * Expression — no array materialization for the doclen pass).
-    */
+  /** The build's input columns, in `SegmentInverter.Doc` order. */
   private def normalize(docs: DataFrame): DataFrame =
     docs.select(
       col("doc_id").cast("long").as("doc_id"),
@@ -222,8 +205,7 @@ object IndexBuilder {
     val segSize = cfg.segSize.toLong
 
     val base = normalize(newDocs)
-    val bounds = phase("append-stats")(base.agg(
-      min("doc_id"), max("doc_id"), count("*")).head())
+    val bounds = base.agg(min("doc_id"), max("doc_id"), count("*")).head()
     require(bounds.getLong(2) > 0, "append of an empty batch")
     val (minId, maxId) = (bounds.getLong(0), bounds.getLong(1))
     val segLo = (minId / segSize).toInt
@@ -264,6 +246,12 @@ object IndexBuilder {
     (store.committedSlices.map(_.segHi).max + 1L) * s("build.segSize").toLong
   }
 
+  /** Build one slice: its documents are hash-partitioned by segment and
+    * sorted by docID (the build's only document-sized shuffle), then one
+    * `SegmentInverter` per partition emits every segment's blocks, norms
+    * row and doc rows in a single pass. The pass is persisted once and
+    * written three ways; `terms` aggregates the written postings.
+    */
   private def buildSlice(
       spark: SparkSession,
       slice: DataFrame,
@@ -273,207 +261,190 @@ object IndexBuilder {
       segLo: Int,
       segHi: Int): SliceMeta = {
     import spark.implicits._
-    val segSize = cfg.segSize.toLong
-    val blockSize = cfg.blockSize
-    val codec = Codecs.of(cfg.codec)
-
-    // per-doc term frequencies (and, when cfg.positions, the term's token
-    // indexes): pure per-row work (a doc's tokens never cross rows),
-    // emitted directly — no (term, docId) shuffle exists.
-    val withPositions = cfg.positions
-    val tfRows = slice
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions { iter =>
-        iter.flatMap { case (docId, text) =>
-          val toks = graft.analysis.Analyzer.tokenize(text)
-          val m = new java.util.HashMap[String, Int](toks.length * 2)
-          val posM = if (withPositions)
-            new java.util.HashMap[String, scala.collection.mutable.ArrayBuilder.ofInt](toks.length * 2)
-          else null
-          var i = 0
-          while (i < toks.length) {
-            val prev = m.getOrDefault(toks(i), 0)
-            m.put(toks(i), prev + 1)
-            if (withPositions) {
-              var b = posM.get(toks(i))
-              if (b == null) { b = new scala.collection.mutable.ArrayBuilder.ofInt; posM.put(toks(i), b) }
-              b += i
-            }
-            i += 1
-          }
-          val seg = (docId / segSize).toInt
-          val dl = toks.length
-          val out = new Array[(String, Long, Int, Int, Int, Array[Int])](m.size())
-          val it = m.entrySet().iterator()
-          var j = 0
-          while (it.hasNext) {
-            val e = it.next()
-            val ps = if (withPositions) posM.get(e.getKey).result() else null
-            out(j) = (e.getKey, docId, e.getValue, dl, seg, ps)
-            j += 1
-          }
-          out
-        }
-      }
-
-    // blocks per (term, seg): THE one shuffle. Hash-repartition colocates a
-    // (term, seg) group; the Tungsten sort orders runs by (term, seg, doc)
-    // so block building is a streaming pass — no per-group hashmap, no
-    // MapGroupsExec buffering (measured ~2× over groupByKey+flatMapGroups).
-    val blocks = tfRows
-      .toDF("term", "doc_id", "tf", "doclen", "seg", "pos")
-      .repartition(col("term"), col("seg"))
-      .sortWithinPartitions(col("term"), col("seg"), col("doc_id"))
-      .as[(String, Long, Int, Int, Int, Array[Int])]
-      .mapPartitions { it =>
-        new Iterator[PostingBlock] {
-          private var curTerm: String = null
-          private var curSeg = Int.MinValue
-          private var blk = 0
-          private val ds = new Array[Long](blockSize)
-          private val fs = new Array[Long](blockSize)
-          private val dls = new Array[Int](blockSize)
-          private val pss = new Array[Array[Int]](blockSize)
-          private var n = 0
-          private var pending: PostingBlock = null
-          private var done = false
-
-          private def emit(): PostingBlock = {
-            // impact metadata: (maxTf, minDl) instead of a baked-in
-            // tfNorm, so block-max bounds stay sound under the stats the
-            // QUERY sees — required for live appends shifting avgdl
-            var maxTf = 0L
-            var minDl = Int.MaxValue
-            var tfSum = 0L
-            var i = 0
-            while (i < n) {
-              if (fs(i) > maxTf) maxTf = fs(i)
-              if (dls(i) < minDl) minDl = dls(i)
-              tfSum += fs(i)
-              i += 1
-            }
-            val docsArr = java.util.Arrays.copyOf(ds, n)
-            // positional payload: per-doc ascending token indexes as gap
-            // lists, concatenated in docID order (tf gives the splits)
-            val posBytes =
-              if (!withPositions) null
-              else {
-                val gaps = new Array[Long](tfSum.toInt)
-                var g = 0
-                i = 0
-                while (i < n) {
-                  val ps = pss(i)
-                  var prev = 0
-                  var j = 0
-                  while (j < ps.length) { gaps(g) = (ps(j) - prev).toLong; prev = ps(j); g += 1; j += 1 }
-                  i += 1
-                }
-                // always VByte: the stream length is Σtf (unbounded per
-                // block — PFor's 255-value cap doesn't fit), and position
-                // gaps are small ints where VByte is already ~1 byte each
-                VByte.encode(gaps)
-              }
-            val b = PostingBlock(curTerm, curSeg, blk, n, docsArr(0), docsArr(n - 1),
-              maxTf, minDl, tfSum, codec,
-              Codecs.encode(codec, VByte.deltasFrom(docsArr(0), docsArr)),
-              Codecs.encode(codec, java.util.Arrays.copyOf(fs, n)),
-              posBytes)
-            blk += 1
-            n = 0
-            b
-          }
-
-          private def advance(): Unit = {
-            while (pending == null && !done) {
-              if (it.hasNext) {
-                val (term, d, f, dl, seg, ps) = it.next()
-                if (term != curTerm || seg != curSeg) {
-                  if (n > 0) pending = emit()
-                  curTerm = term; curSeg = seg; blk = 0
-                } else if (n == blockSize) {
-                  pending = emit()
-                }
-                ds(n) = d; fs(n) = f; dls(n) = dl; pss(n) = ps; n += 1
-              } else {
-                done = true
-                if (n > 0) pending = emit()
-              }
-            }
-          }
-
-          override def hasNext: Boolean = { advance(); pending != null }
-          override def next(): PostingBlock = {
-            advance()
-            val b = pending; pending = null; b
-          }
-        }
-      }
-
-    // blocks leave the sort-stream already term-sorted within each hash
-    // partition, so per-file row-group min/max stats prune term lookups.
-    // No repartitionByRange here: range partitioning SAMPLES its input,
-    // which would re-execute the whole tokenize pipeline a second time.
-    // The globally term-sorted layout is compaction's job (IndexStore
-    // .compact, the forcemerge analogue).
+    val inverted = slice
+      .repartition(expr(s"doc_id DIV ${cfg.segSize}L"))
+      .sortWithinPartitions(col("doc_id"))
+      .as[SegmentInverter.Doc]
+      .mapPartitions(docs => new SegmentInverter(docs, cfg))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val postingsPath = store.slicePath("postings", sliceId)
-    // Observation rides the write job: block/posting counts with no extra pass
-    val pObs = org.apache.spark.sql.Observation()
-    phase("postings")(blocks.toDF()
-      .observe(pObs, sum("n").as("postings"), count(lit(1)).as("blocks"))
-      .write.mode("overwrite").parquet(postingsPath))
+    // Observations ride the writes: manifest counts with no extra pass
+    val pObs = Observation()
+    val dObs = Observation()
+    try {
+      // a local sort, no Exchange: each file stays term-sorted for
+      // row-group pruning of term lookups
+      inverted.where(col("block").isNotNull).select("block.*")
+        .sortWithinPartitions(col("term"), col("seg"), col("blk"))
+        .observe(pObs, sum("n").as("postings"), count(lit(1)).as("blocks"))
+        .write.mode("overwrite").parquet(postingsPath)
+      inverted.where(col("norms").isNotNull).select("norms.*")
+        .write.mode("overwrite").parquet(store.slicePath("norms", sliceId))
+      inverted.where(col("doc").isNotNull).select("doc.*")
+        .observe(dObs, count(lit(1)).as("docs"))
+        .write.mode("overwrite").parquet(store.slicePath("docs", sliceId))
+    } finally inverted.unpersist()
 
     // per-term partials from the written postings (columnar agg over
     // n/tfSum — never re-tokenizes the corpus)
-    phase("terms")(spark.read.parquet(postingsPath)
+    spark.read.parquet(postingsPath)
       .groupBy("term")
       .agg(sum("n").as("df"), sum("tfSum").as("cf"))
-      .write.mode("overwrite").parquet(store.slicePath("terms", sliceId)))
+      .write.mode("overwrite").parquet(store.slicePath("terms", sliceId))
 
-    // doc metadata: doclen via the counting kernel (no token arrays)
-    val docMeta = slice.select(col("doc_id"), col("url"),
-      ga.token_count(col("text")).as("doclen"), col("lang"))
-    // source order is already docID-clustered per input split; avoid a
-    // range shuffle (sampling would re-run the scan) and write directly
-    val dObs = org.apache.spark.sql.Observation()
-    phase("docs")(docMeta
-      .observe(dObs, count(lit(1)).as("docs"))
-      .write.mode("overwrite").parquet(store.slicePath("docs", sliceId)))
-
-    // norms from the written docs table (columnar scan, not raw text)
-    phase("norms")(spark.read.parquet(store.slicePath("docs", sliceId))
-      .select(col("doc_id"), col("doclen"), (col("doc_id") / segSize).cast("int").as("seg"))
-      .as[(Long, Int, Int)]
-      .groupByKey(_._3)
-      .mapGroups { (seg: Int, rows: Iterator[(Long, Int, Int)]) =>
-        val entries = rows.map { case (d, dl, _) => (d, dl) }.toArray
-        java.util.Arrays.sort(entries, Ordering.by((e: (Long, Int)) => e._1))
-        val ds = entries.map(_._1)
-        SegNorms(seg, entries.length, ds(0),
-          VByte.encode(VByte.deltasFrom(ds(0), ds)),
-          VByte.packInts(entries.map(_._2)))
-      }
-      .write.mode("overwrite").parquet(store.slicePath("norms", sliceId)))
-
-    // slice metrics for the manifest (lineage + row/byte counts) come from
-    // the Observations attached to the writes — zero extra Spark jobs
-    val nDocs = dObs.get("docs").asInstanceOf[Long]
     val pMetrics = pObs.get
     val nPostings = Option(pMetrics("postings")).map(_.asInstanceOf[Long]).getOrElse(0L)
-    val nBlocks = pMetrics("blocks").asInstanceOf[Long]
-    val bytes = dirBytes(postingsPath)
-    SliceMeta(sliceId, segLo, segHi, nDocs, nPostings, nBlocks, bytes,
+    SliceMeta(sliceId, segLo, segHi, dObs.get("docs").asInstanceOf[Long], nPostings,
+      pMetrics("blocks").asInstanceOf[Long], store.postingBytes(sliceId),
       System.currentTimeMillis())
   }
+}
 
-  private def dirBytes(path: String): Long = {
-    val f = new java.io.File(path)
-    if (!f.exists()) 0L
-    else {
-      def walk(x: java.io.File): Long =
-        if (x.isFile) x.length()
-        else Option(x.listFiles()).map(_.map(walk).sum).getOrElse(0L)
-      walk(f)
+/** One row of a segment's inversion; exactly one field is set. */
+private[index] case class Inverted(block: PostingBlock, norms: SegNorms, doc: DocMeta)
+
+/** Inverts documents sorted by docID, one segment at a time: each document
+  * is tokenized once, and yields its `DocMeta` row at once and its
+  * postings into its terms' open blocks. Docs reach a term in docID order,
+  * so a term's block is emitted as soon as it holds `blockSize` postings
+  * and the next one arrives; at the segment's end every partial block is
+  * flushed, then the segment's `SegNorms` row. Blocks equal those of
+  * grouping the segment's postings by term, sorting by docID and chunking
+  * by `blockSize`.
+  *
+  * Memory is bounded by ONE segment's open blocks — at most `blockSize`
+  * postings (with their positions) per distinct term of the segment — plus
+  * the segment's docIDs and doclens for its norms row (≤ `segSize` each),
+  * never by a segment's full posting lists.
+  */
+private[index] final class SegmentInverter(
+    docs: Iterator[SegmentInverter.Doc],
+    cfg: IndexBuilder.Config) extends Iterator[Inverted] {
+  import SegmentInverter.OpenBlock
+
+  private val segSize = cfg.segSize.toLong
+  private val codec = Codecs.of(cfg.codec)
+  private val out = new java.util.ArrayDeque[Inverted]()
+  private val open = new java.util.HashMap[String, OpenBlock]()
+  private val segDocs = new scala.collection.mutable.ArrayBuilder.ofLong
+  private val segLens = new scala.collection.mutable.ArrayBuilder.ofInt
+  private var seg = 0
+  private var ord = -1 // ordinal of the current doc within its segment
+
+  override def hasNext: Boolean = { fill(); !out.isEmpty }
+  override def next(): Inverted = {
+    fill()
+    if (out.isEmpty) throw new NoSuchElementException("inverter exhausted")
+    out.poll()
+  }
+
+  private def fill(): Unit = {
+    while (out.isEmpty && docs.hasNext) add(docs.next())
+    if (out.isEmpty && ord >= 0) finishSegment()
+  }
+
+  private def add(d: SegmentInverter.Doc): Unit = {
+    val s = (d.doc_id / segSize).toInt
+    if (ord >= 0 && s != seg) finishSegment()
+    seg = s
+    ord += 1
+    val toks = graft.analysis.Analyzer.tokenize(d.text)
+    val dl = toks.length
+    var i = 0
+    while (i < toks.length) {
+      var b = open.get(toks(i))
+      if (b == null) { b = new OpenBlock(toks(i), cfg.positions); open.put(toks(i), b) }
+      if (b.lastOrd != ord) {
+        if (b.n == cfg.blockSize) out.add(Inverted(b.emit(seg, codec), null, null))
+        b.start(ord, d.doc_id, dl)
+      }
+      b.hit(i)
+      i += 1
+    }
+    segDocs += d.doc_id
+    segLens += dl
+    out.add(Inverted(null, null, DocMeta(d.doc_id, d.url, dl, d.lang)))
+  }
+
+  private def finishSegment(): Unit = {
+    val it = open.values().iterator()
+    while (it.hasNext) {
+      val b = it.next()
+      out.add(Inverted(b.emit(seg, codec), null, null))
+    }
+    open.clear()
+    val ds = segDocs.result()
+    out.add(Inverted(null, SegNorms(seg, ds.length, ds(0),
+      VByte.encode(VByte.deltasFrom(ds(0), ds)), VByte.packInts(segLens.result())), null))
+    segDocs.clear()
+    segLens.clear()
+    ord = -1
+  }
+}
+
+private[index] object SegmentInverter {
+  /** A source document, as `IndexBuilder.normalize` projects it. */
+  case class Doc(doc_id: Long, url: String, text: String, lang: String)
+
+  /** A term's open block in the current segment: its postings since the
+    * last emitted block, with each doc's positions as a gap list (gaps
+    * restart at each doc, as `TermPostings.decodePositions` reads them).
+    */
+  final class OpenBlock(term: String, withPositions: Boolean) {
+    var lastOrd = -1
+    var n = 0
+    private var blk = 0
+    private var docs = new Array[Long](4)
+    private var tfs = new Array[Long](4)
+    private var minDl = Int.MaxValue
+    private var gaps = if (withPositions) new Array[Long](4) else null
+    private var nGaps = 0
+    private var prevPos = 0
+
+    def start(ord: Int, docId: Long, dl: Int): Unit = {
+      if (n == docs.length) {
+        docs = java.util.Arrays.copyOf(docs, n * 2)
+        tfs = java.util.Arrays.copyOf(tfs, n * 2)
+      }
+      lastOrd = ord
+      docs(n) = docId
+      tfs(n) = 0
+      if (dl < minDl) minDl = dl
+      prevPos = 0
+      n += 1
+    }
+
+    def hit(pos: Int): Unit = {
+      tfs(n - 1) += 1
+      if (withPositions) {
+        if (nGaps == gaps.length) gaps = java.util.Arrays.copyOf(gaps, nGaps * 2)
+        gaps(nGaps) = (pos - prevPos).toLong
+        prevPos = pos
+        nGaps += 1
+      }
+    }
+
+    /** Encode the open postings as block `blk` and start an empty one.
+      * Impact metadata is (maxTf, minDl), not a baked-in tfNorm, so
+      * block-max bounds stay sound under the stats the QUERY sees.
+      */
+    def emit(seg: Int, codec: Byte): PostingBlock = {
+      var maxTf, tfSum = 0L
+      var i = 0
+      while (i < n) { maxTf = math.max(maxTf, tfs(i)); tfSum += tfs(i); i += 1 }
+      val ds = java.util.Arrays.copyOf(docs, n)
+      // positions are always VByte: the stream length is Σtf (unbounded
+      // per block — PFor's 255-value cap doesn't fit), and position gaps
+      // are small ints where VByte is already ~1 byte each
+      val b = PostingBlock(term, seg, blk, n, ds(0), ds(n - 1), maxTf, minDl, tfSum, codec,
+        Codecs.encode(codec, VByte.deltasFrom(ds(0), ds)),
+        Codecs.encode(codec, java.util.Arrays.copyOf(tfs, n)),
+        if (withPositions) VByte.encode(java.util.Arrays.copyOf(gaps, nGaps)) else null)
+      blk += 1
+      n = 0
+      minDl = Int.MaxValue
+      nGaps = 0
+      b
     }
   }
 }

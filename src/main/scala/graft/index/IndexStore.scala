@@ -116,12 +116,10 @@ final class IndexStore(val root: String) {
   }
 
   /** Segment-merge compaction — the `_forcemerge` analogue (reference
-    * opensearch_base_manager.py:379-387): rewrite all committed slices as
-    * one snapshot with postings globally sorted by (term, seg, blk), so a
-    * term's blocks are contiguous across the whole index and row-group
-    * min/max stats prune term lookups maximally. Slice contents are
-    * disjoint in (term, seg) — docID slices partition segments — so this
-    * is a re-layout, not a re-block. Commit is atomic via manifest rename;
+    * opensearch_base_manager.py:379-387): all committed slices become one
+    * snapshot, so a term lookup opens one slice instead of N. Slices
+    * partition docID segments, so this is a file union (see
+    * `mergeSlices`), not a re-block. Commit is atomic via manifest rename;
     * old slice files are NOT deleted here (concurrent readers hold
     * pre-compaction snapshots — see `mergeSlices`): they land on the
     * manifest dead-list, and callers reclaim the disk with
@@ -135,9 +133,13 @@ final class IndexStore(val root: String) {
     * primitive a continuously-indexed corpus needs (every micro-batch
     * append lands a fresh slice; unmerged, a term query touches N× more
     * files and serving holds N× more block objects). Slices partition
-    * docID segments, so any subset's (term, seg) contents are disjoint and
-    * the merge is a pure re-layout — blocks are never re-encoded, norms
-    * never recomputed. Commit is atomic (manifest rename).
+    * docID segments, so any subset's postings, norms and docs are
+    * disjoint: the merged slice's files are the union of theirs, copied
+    * as they are (each file keeps its sort order and its segments), and
+    * only the per-term `terms` partials re-aggregate.
+    * Blocks are never re-encoded, norms never recomputed, and the merged
+    * counts are the sums of the slices' manifest counts. Commit is atomic
+    * (manifest rename).
     *
     * Superseded slice FILES are NOT deleted here: a concurrent reader —
     * a distributed-path `OpenIndex` whose lazy Datasets still point at the
@@ -149,7 +151,6 @@ final class IndexStore(val root: String) {
     * them once every snapshot older than the grace window has drained.
     */
   def mergeSlices(spark: SparkSession, sliceIds: Seq[Int]): SliceMeta = {
-    import org.apache.spark.sql.functions.{col, count => cnt, lit, sum => fsum}
     val all = committedSlices
     require(all.nonEmpty, s"nothing to compact at $root")
     val idSet = sliceIds.toSet
@@ -157,38 +158,17 @@ final class IndexStore(val root: String) {
     require(old.map(_.sliceId).toSet == idSet,
       s"mergeSlices: not all of $sliceIds are committed at $root")
     val newId = all.map(_.sliceId).max + 1
-    def readSub(table: String): DataFrame =
-      spark.read.parquet(old.map(s => slicePath(table, s.sliceId)): _*)
 
-    readSub("postings")
-      .repartitionByRange(col("term"), col("seg"))
-      .sortWithinPartitions(col("term"), col("seg"), col("blk"))
-      .write.mode("overwrite").parquet(slicePath("postings", newId))
-    readSub("terms")
+    Seq("postings", "norms", "docs").foreach(unionFiles(_, old.map(_.sliceId), newId))
+    spark.read.parquet(old.map(s => slicePath("terms", s.sliceId)): _*)
       .groupBy("term")
-      .agg(fsum("df").as("df"), fsum("cf").as("cf"))
+      .agg(sum("df").as("df"), sum("cf").as("cf"))
       .write.mode("overwrite").parquet(slicePath("terms", newId))
-    readSub("norms")
-      .write.mode("overwrite").parquet(slicePath("norms", newId))
-    readSub("docs")
-      .repartitionByRange(col("doc_id"))
-      .sortWithinPartitions(col("doc_id"))
-      .write.mode("overwrite").parquet(slicePath("docs", newId))
 
-    val nDocs = spark.read.parquet(slicePath("docs", newId)).count()
-    val agg = spark.read.parquet(slicePath("postings", newId))
-      .agg(fsum("n"), cnt(lit(1))).head()
-    // real on-disk posting bytes (like the builder's dirBytes) — a zero
-    // here would let any compacted index slip past serving memory budgets
-    val postingBytes = {
-      val p = Paths.get(slicePath("postings", newId))
-      if (!Files.exists(p)) 0L
-      else Files.walk(p).iterator().asScala.filter(Files.isRegularFile(_)).map(Files.size).sum
-    }
     val now = System.currentTimeMillis()
     val meta = SliceMeta(newId, old.map(_.segLo).min, old.map(_.segHi).max,
-      nDocs, agg.getLong(0), agg.getLong(1),
-      postingBytes, now)
+      old.map(_.docs).sum, old.map(_.postings).sum, old.map(_.blocks).sum,
+      postingBytes(newId), now)
     // supersede + dead-list in ONE atomic commit; files stay on disk for
     // in-flight readers until vacuum's grace window passes
     commitReplaceSlices(
@@ -196,6 +176,37 @@ final class IndexStore(val root: String) {
       old.map(s => s"$DeadPrefix${s.sliceId}" -> now.toString).toMap)
     meta
   }
+
+  /** Copy the data files of `table` in slices `from` into slice `to`'s
+    * directory, cleared first (a crashed merge leaves an orphan). Names
+    * gain their source slice id, so two slices' parts never collide;
+    * Spark's hidden files (`_SUCCESS`, `.crc`) are not data and stay.
+    */
+  private def unionFiles(table: String, from: Seq[Int], to: Int): Unit = {
+    val dst = Paths.get(slicePath(table, to))
+    deleteTree(dst)
+    Files.createDirectories(dst)
+    for {
+      id <- from
+      f <- scala.util.Using.resource(Files.list(Paths.get(slicePath(table, id))))(
+        _.iterator().asScala.toList)
+      name = f.getFileName.toString
+      if !name.startsWith("_") && !name.startsWith(".")
+    } Files.copy(f, dst.resolve(s"s$id-$name"))
+  }
+
+  /** Real on-disk posting bytes of a slice — a zero here would let any
+    * index slip past serving memory budgets.
+    */
+  private[index] def postingBytes(sliceId: Int): Long = {
+    val p = Paths.get(slicePath("postings", sliceId))
+    if (!Files.exists(p)) 0L
+    else Files.walk(p).iterator().asScala.filter(Files.isRegularFile(_)).map(Files.size).sum
+  }
+
+  private def deleteTree(p: Path): Unit =
+    if (Files.exists(p))
+      Files.walk(p).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
 
   private val DeadPrefix = "dead."
 
@@ -279,11 +290,7 @@ final class IndexStore(val root: String) {
     merged.toSeq
   }
 
-  def dropAll(): Unit = {
-    if (Files.exists(rootPath)) {
-      Files.walk(rootPath).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-    }
-  }
+  def dropAll(): Unit = deleteTree(rootPath)
 
   def slicePath(table: String, sliceId: Int): String =
     s"$root/$table/slice=$sliceId"

@@ -10,9 +10,9 @@ package graft.index
   * (`seg = docId / segSize`). Within a (term, seg) pair, postings are
   * sorted by docID, chunked into blocks of `blockSize`, delta+VByte
   * compressed, and carry block-max BM25 tf-normalization metadata for
-  * block-max WAND. The seg dimension doubles as the skew salt for the
-  * postings aggregation: a head term touching half the corpus still
-  * forms groups bounded by segSize.
+  * block-max WAND. A segment is also the build's unit of work: one task
+  * inverts all of a segment's documents (`SegmentInverter`), so its state
+  * is bounded by segSize documents however skewed the terms are.
   */
 case class PostingBlock(
     term: String,

@@ -1,0 +1,76 @@
+package graft
+
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicLong
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.functions._
+
+import graft.index.{IndexBuilder, IndexStore}
+
+/** The build shuffles documents, not postings, and writes each segment
+  * whole into one term-sorted postings file of its slice.
+  */
+class BuildLayoutSpec extends AnyFunSuite {
+  private lazy val spark = TestSpark.spark
+
+  test("the build shuffles documents: records below half the postings, term-sorted files, " +
+    "no segment in two files of a slice") {
+    val docs = Corpus.pages(spark, 1000)
+      .withColumn("doc_id", regexp_extract(col("url"), "/p/(\\d+)$", 1).cast("long"))
+      .select("doc_id", "url", "text", "lang")
+      .cache()
+    docs.count()
+    val store = new IndexStore(Files.createTempDirectory("graft-layout-").toString)
+
+    val records = new AtomicLong()
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null)
+          records.addAndGet(e.taskMetrics.shuffleWriteMetrics.recordsWritten)
+    }
+    ListenerDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val report =
+      try {
+        val r = IndexBuilder.build(spark, docs, store,
+          IndexBuilder.Config(segSize = 128, blockSize = 16, slices = 2, positions = true))
+        ListenerDrain(spark.sparkContext)
+        r
+      } finally spark.sparkContext.removeSparkListener(listener)
+    info(s"shuffle records ${records.get} for ${report.postings} postings")
+    assert(report.docs == 1000 && report.postings > 0)
+    assert(records.get < report.postings / 2,
+      s"build shuffled ${records.get} records for ${report.postings} postings")
+
+    val slices = store.committedSlices
+    assert(slices.size == 2)
+    for (s <- slices) {
+      val dir = Paths.get(store.slicePath("postings", s.sliceId))
+      val files = Files.list(dir).iterator().asScala.map(_.toString)
+        .filter(_.endsWith(".parquet")).toSeq
+      val segsPerFile = files.map { f =>
+        val rows = spark.read.parquet(f).select("term", "seg", "blk").collect()
+          .map(r => (r.getString(0).getBytes(UTF_8), r.getInt(1), r.getInt(2)))
+        // Parquet row-group stats order strings by unsigned bytes
+        for (Seq(a, b) <- rows.toSeq.sliding(2)) {
+          val c = java.util.Arrays.compareUnsigned(a._1, b._1)
+          assert(c < 0 || (c == 0 && Ordering[(Int, Int)].lt((a._2, a._3), (b._2, b._3))),
+            s"$f is not sorted by (term, seg, blk)")
+        }
+        rows.map(_._2).toSet
+      }
+      val segs = segsPerFile.flatten
+      assert(segs.size == segs.distinct.size,
+        s"slice ${s.sliceId}: a segment spans two postings files: $segsPerFile")
+      assert(segs.toSet == (s.segLo to s.segHi).toSet)
+    }
+    docs.unpersist()
+    store.dropAll()
+  }
+}

@@ -36,7 +36,7 @@ class LifecycleSpec extends AnyFunSuite {
       val oracle = OracleScorer.topK(spark, docs, q, 20)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       assert(wand == oracle, s"post-compaction rank identity broke for '$q'")
-      // serving tier over the compacted (globally re-sorted) layout too
+      // serving tier over the compacted (file-union) layout too
       assert(serving.topK(q, 20).toSeq == oracle,
         s"post-compaction serving identity broke for '$q'")
     }
