@@ -14,7 +14,7 @@ import org.apache.spark.storage.StorageLevel
   * a segment of its own. Plan shape (one slice):
   * {{{
   *   scan(docs)                        -- column pruning drops html etc.
-  *     -> repartition(seg)             [the one wide shuffle: documents]
+  *     -> repartitionById(seg mod P)   [the one wide shuffle: documents]
   *     -> sortWithinPartitions(doc_id)
   *     -> SegmentInverter              -- tokenize each doc once; emit the
   *                                        segment's blocks, its norms row
@@ -246,11 +246,18 @@ object IndexBuilder {
     (store.committedSlices.map(_.segHi).max + 1L) * s("build.segSize").toLong
   }
 
-  /** Build one slice: its documents are hash-partitioned by segment and
+  /** Build one slice: its documents are partitioned by segment and
     * sorted by docID (the build's only document-sized shuffle), then one
     * `SegmentInverter` per partition emits every segment's blocks, norms
     * row and doc rows in a single pass. The pass is persisted once and
     * written three ways; `terms` aggregates the written postings.
+    *
+    * Segment `segLo + i` goes to partition `i mod P`, with P the smaller
+    * of the slice's segment count and `spark.sql.shuffle.partitions`: each
+    * segment gets a task of its own when the slice has no more segments
+    * than partitions, and a task inverts several segments in turn only
+    * past that. The partition count is explicit, so AQE does not coalesce
+    * segments back together.
     */
   private def buildSlice(
       spark: SparkSession,
@@ -261,8 +268,12 @@ object IndexBuilder {
       segLo: Int,
       segHi: Int): SliceMeta = {
     import spark.implicits._
+    // a trailing slice past the corpus's last segment has segHi < segLo
+    val parts = math.max(1,
+      math.min(segHi - segLo + 1, spark.conf.get("spark.sql.shuffle.partitions").toInt))
     val inverted = slice
-      .repartition(expr(s"doc_id DIV ${cfg.segSize}L"))
+      .repartitionById(parts,
+        pmod(expr(s"doc_id DIV ${cfg.segSize}L") - segLo, lit(parts)).cast("int"))
       .sortWithinPartitions(col("doc_id"))
       .as[SegmentInverter.Doc]
       .mapPartitions(docs => new SegmentInverter(docs, cfg))

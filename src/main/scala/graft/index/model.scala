@@ -49,19 +49,23 @@ case class SegNorms(
     doclens: Array[Byte])  // fixed 4-byte LE ints, aligned with docIDs
 
 object SegNorms {
-  /** Decoded ascending docIDs of a norms row — the one decode every
-    * doclen consumer (WAND, serving, phrase) shares.
+  /** The one decoded form every doclen consumer (WAND, phrase, serving)
+    * reads a norms row through.
     */
-  def docsOf(n: SegNorms): Array[Long] =
-    VByte.undeltas(n.firstDoc, VByte.decode(n.docDeltas, n.n))
+  def decode(n: SegNorms): DecodedNorms =
+    new DecodedNorms(n.seg, VByte.undeltas(n.firstDoc, VByte.decode(n.docDeltas, n.n)),
+      Array.tabulate(n.n)(i => VByte.unpackIntAt(n.doclens, i)))
+}
 
-  /** doclen of `docId` via binary search over `docsOf(n)`; a missing doc
-    * is an index-corruption invariant violation, not a soft miss.
+/** A segment's norms decoded once: ascending docIDs and their doclens. */
+final class DecodedNorms(val seg: Int, docs: Array[Long], lens: Array[Int]) {
+  /** doclen of `docId` by binary search; a missing doc is an
+    * index-corruption invariant violation, not a soft miss.
     */
-  def doclenAt(n: SegNorms, docs: Array[Long], docId: Long): Int = {
+  def doclen(docId: Long): Long = {
     val i = java.util.Arrays.binarySearch(docs, docId)
-    require(i >= 0, s"docId $docId missing from norms of seg ${n.seg}")
-    VByte.unpackIntAt(n.doclens, i)
+    require(i >= 0, s"docId $docId missing from norms of seg $seg")
+    lens(i).toLong
   }
 }
 

@@ -1,10 +1,16 @@
 package graft.query
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.analysis.Analyzer
 import graft.index._
+
+/** One segment's phrase answer (`Phrase.segTopK`): how many of its
+  * documents match, and the matches that can still reach the global
+  * top-k, as aligned docIDs and tfNorms.
+  */
+private[graft] case class PhrasePart(count: Long, docs: Array[Long], tfNorms: Array[Double])
 
 /** Exact phrase search over a positional index (built with
   * `IndexBuilder.Config(positions = true)`).
@@ -15,16 +21,25 @@ import graft.index._
   * phrase scores as a pseudo-term through the same BM25 kernel as every
   * other path: idf over the EXACT phrase document frequency, tf = ptf.
   *
-  * Scale shape: the term IN-filter pushes into the postings scan (only
-  * the phrase's terms' blocks travel), matching runs segment-local
-  * (`Segments.perSegment` — the same document sharding and the same
-  * norms route as WAND, so doclens resolve beside the matches), and the
-  * top-k is a TakeOrdered merge. df resolution is one count over the
-  * persisted match set (released before returning).
+  * One path: the Spark job here and every serving open run `segTopK` per
+  * segment and hand the parts to `finish`. BM25 idf is positive, so
+  * ranking by idf·tfNorm is ranking by tfNorm except where the multiply
+  * rounds two tfNorms to one score; a segment therefore reports only its
+  * match count (the phrase df is their sum) and the matches within the
+  * rounding margin of its k-th best tfNorm. On the Spark path the term
+  * IN-filter pushes into the postings scan, each segment matches beside
+  * its own norms (`Segments.perSegment`, the route WAND takes), and the
+  * parts come back in one collect.
   */
 object Phrase {
 
-  /** Per-segment phrase occurrence counting over decoded positions. */
+  /** Products idf·x and idf·y of a positive idf round to one double only
+    * when x and y differ by under about 2^-52 relative; this widening
+    * covers that with room for its own rounding.
+    */
+  private final val Margin = 1.0 + java.lang.Math.scalb(1.0, -50)
+
+  /** Per-document phrase occurrence counting over decoded positions. */
   private[query] def countOccurrences(slotPositions: Array[Array[Int]]): Int = {
     // slotPositions(i) = ascending token indexes of the phrase's i-th slot
     val first = slotPositions(0)
@@ -44,61 +59,98 @@ object Phrase {
     count
   }
 
-  /** Segment-local matcher: decode the phrase terms' positions, intersect
-    * on docID from the rarest term, count consecutive-position occurrences.
+  /** The phrase kernel over one segment's blocks of the phrase terms:
+    * candidates are the rarest term's documents, a candidate's positions
+    * come from the block whose docID range holds it (a term's blocks
+    * partition its range, so that is the first block whose lastDoc reaches
+    * the doc), and a match's tfNorm is BM25's with tf = ptf.
     */
-  private def segMatches(
+  private[query] def segTopK(
       blocks: Array[PostingBlock],
-      distinctTerms: Seq[String],
-      slotsSeq: IndexedSeq[String]): scala.collection.mutable.ArrayBuffer[(Long, Int)] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Int)]
+      slots: IndexedSeq[String],
+      positionsOf: PostingBlock => Serving.DecodedPositions,
+      norms: DecodedNorms,
+      avgdl: Double,
+      k: Int): PhrasePart = {
+    val terms = slots.distinct
     val byTerm = blocks.groupBy(_.term)
-    if (distinctTerms.exists(t => !byTerm.contains(t))) return out
-    // per term: docId -> positions within this segment
-    val posByTerm: Map[String, java.util.HashMap[Long, Array[Int]]] =
-      byTerm.map { case (t, bs) =>
-        val m = new java.util.HashMap[Long, Array[Int]]()
-        bs.foreach { b =>
-          val (docs, _) = TermPostings.decodeBlock(b)
-          val ps = TermPostings.decodePositions(b)
-          var i = 0
-          while (i < docs.length) { m.put(docs(i), ps(i)); i += 1 }
-        }
-        t -> m
-      }
-    // candidates = docs holding every distinct term (iterate the
-    // rarest term's map, probe the others)
-    val rarest = distinctTerms.minBy(t => posByTerm(t).size)
-    posByTerm(rarest).forEach { (doc, _) =>
-      if (distinctTerms.forall(t => posByTerm(t).containsKey(doc))) {
-        val slotPs = slotsSeq.map(t => posByTerm(t).get(doc)).toArray
-        val c = countOccurrences(slotPs)
-        if (c > 0) out += ((doc, c))
-      }
+    if (terms.exists(t => !byTerm.contains(t))) return localTopK(Array.empty, Array.empty, k)
+    val termBlocks = terms.map(t => byTerm(t).sortBy(_.firstDoc))
+    val lastDocs = termBlocks.map(_.map(_.lastDoc))
+    val maps = termBlocks.map(_.map(positionsOf))
+    def positions(ti: Int, doc: Long): Array[Int] = {
+      val i = java.util.Arrays.binarySearch(lastDocs(ti), doc)
+      val b = if (i >= 0) i else -i - 1
+      if (b == maps(ti).length) null else maps(ti)(b).get(doc)
     }
-    out
+    val slotTerm = slots.map(terms.indexOf).toArray
+    val termPs = new Array[Array[Int]](terms.length)
+    val slotPs = new Array[Array[Int]](slots.length)
+    val docs = new scala.collection.mutable.ArrayBuilder.ofLong
+    val tfNorms = new scala.collection.mutable.ArrayBuilder.ofDouble
+    val rarest = terms.indices.minBy(ti => termBlocks(ti).iterator.map(_.n).sum)
+    maps(rarest).foreach(_.forEach { (doc, _) =>
+      var all = true
+      var ti = 0
+      while (all && ti < terms.length) {
+        termPs(ti) = positions(ti, doc); all = termPs(ti) != null; ti += 1
+      }
+      if (all) {
+        var s = 0
+        while (s < slots.length) { slotPs(s) = termPs(slotTerm(s)); s += 1 }
+        val ptf = countOccurrences(slotPs)
+        if (ptf > 0) {
+          docs += doc
+          tfNorms += BM25.tfNorm(ptf.toLong, norms.doclen(doc), avgdl)
+        }
+      }
+    })
+    localTopK(docs.result(), tfNorms.result(), k)
   }
 
-  /** The (docId, ptf, doclen) match plan: only the phrase terms' blocks
-    * travel (the IN-filter reaches the parquet scan), and each segment
-    * matches locally and resolves its matches' doclens from its own norms
-    * row — one decode per segment, a binary search per match, no join
-    * against the docs table. `topK` persists + scores it.
+  /** The candidate rule: a segment with more than k matches keeps those
+    * whose tfNorm, widened by `Margin`, reaches its k-th largest tfNorm.
+    * That is exact for the (idf·tfNorm desc, docId asc) order. Keeping
+    * only exact ties with the k-th is not: two different tfNorms can round
+    * to one score, and then the docID decides.
     */
-  private[graft] def matches(
-      idx: OpenIndex,
-      slotsSeq: IndexedSeq[String]): org.apache.spark.sql.Dataset[(Long, Int, Long)] = {
+  private[query] def localTopK(docs: Array[Long], tfNorms: Array[Double], k: Int): PhrasePart = {
+    require(k > 0, s"k must be positive, got $k")
+    if (docs.length <= k) return PhrasePart(docs.length, docs, tfNorms)
+    val sorted = tfNorms.clone()
+    java.util.Arrays.sort(sorted)
+    val kth = sorted(sorted.length - k)
+    val keep = tfNorms.indices.filter(i => tfNorms(i) * Margin >= kth)
+    PhrasePart(docs.length, keep.map(docs).toArray, keep.map(tfNorms).toArray)
+  }
+
+  /** The finisher every phrase caller shares: the exact phrase df is the
+    * sum of the parts' counts, idf is computed once, and the candidates
+    * merge by (idf·tfNorm desc, docId asc) — the order and the doubles of
+    * scoring every match.
+    */
+  private[query] def finish(parts: IterableOnce[PhrasePart], nDocs: Long, k: Int): Array[(Long, Double)] = {
+    val ps = parts.iterator.toArray
+    val df = ps.iterator.map(_.count).sum
+    if (df == 0) return Array.empty
+    val idf = BM25.idf(nDocs, df)
+    val heap = new TopKHeap(k)
+    ps.foreach(p => p.docs.indices.foreach(i => heap.offer(p.docs(i), idf * p.tfNorms(i))))
+    heap.result().sortBy(t => (-t._2, t._1))
+  }
+
+  /** The phrase plan: only the phrase terms' blocks travel (the IN-filter
+    * reaches the parquet scan), and each segment runs `segTopK` beside its
+    * own norms; a segment without a match emits no part.
+    */
+  private[graft] def plan(idx: OpenIndex, slots: IndexedSeq[String], avgdl: Double,
+      k: Int): Dataset[PhrasePart] = {
     val spark = idx.docs.sparkSession
     import spark.implicits._
-    val distinctTerms = slotsSeq.distinct
-    Segments.perSegment(idx, idx.postings.filter(col("term").isin(distinctTerms: _*))) {
-      (blocks, nm) =>
-        val ms = segMatches(blocks, distinctTerms, slotsSeq)
-        if (ms.isEmpty) Iterator.empty
-        else {
-          val docs = SegNorms.docsOf(nm)
-          ms.iterator.map { case (d, ptf) => (d, ptf, SegNorms.doclenAt(nm, docs, d).toLong) }
-        }
+    Segments.perSegment(idx, idx.postings.filter(col("term").isin(slots.distinct: _*))) {
+      (blocks, norms) =>
+        val p = segTopK(blocks, slots, Serving.decodePositionsOf, norms, avgdl, k)
+        if (p.count == 0) Iterator.empty else Iterator.single(p)
     }
   }
 
@@ -107,27 +159,10 @@ object Phrase {
     */
   def topK(spark: SparkSession, idx: OpenIndex, phrase: String, k: Int): DataFrame = {
     import spark.implicits._
-    val slots = Analyzer.tokenize(phrase) // ordered, duplicates preserved
+    val slots = Analyzer.tokenize(phrase).toIndexedSeq // ordered, duplicates preserved
     require(slots.nonEmpty, "empty phrase")
     val stats = idx.stats
-    def emptyResult = Seq.empty[(Long, Double)].toDF("doc_id", "score")
-    if (stats.nDocs == 0) return emptyResult
-    val avgdl = stats.avgdl
-
-    // the exact global phrase df is one count over the persisted match
-    // set; the scored top-k is then materialized and the set released
-    val persisted = matches(idx, slots.toIndexedSeq)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val dfPhrase = persisted.count()
-    if (dfPhrase == 0) { persisted.unpersist(blocking = false); return emptyResult }
-    val idf = BM25.idf(stats.nDocs, dfPhrase)
-    val scored = persisted
-      .map { case (d, ptf, dl) => (d, idf * BM25.tfNorm(ptf.toLong, dl, avgdl)) }
+    finish(plan(idx, slots, stats.avgdl, k).collect(), stats.nDocs, k).toSeq
       .toDF("doc_id", "score")
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
-    val rows = scored.collect()
-    persisted.unpersist(blocking = true)
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), scored.schema)
   }
 }

@@ -32,10 +32,7 @@ object Search {
       case (field, value) if value != null && value.nonEmpty =>
         lower(col(field)) === lit(value.toLowerCase(java.util.Locale.ROOT))
     }
-    val filtered = preds.foldLeft(docs)((d, p) => d.filter(p))
-    // Int.MaxValue = unbounded: skip the LIMIT node entirely (a huge
-    // GlobalLimit still coalesces to one partition — measured 20s vs 0.2s)
-    if (size == Int.MaxValue) filtered else filtered.limit(size)
+    limited(preds.foldLeft(docs)((d, p) => d.filter(p)), size)
   }
 
   /** `query_string "tok1* tok2*"` with AND semantics (web/app.py:142-151):
@@ -49,39 +46,21 @@ object Search {
     val prefixes = Analyzer.tokenize(query)
     if (prefixes.isEmpty) return None
     val toks = ga.tokenize(col(textCol))
-    val pred = prefixes
-      .map(p => exists(toks, t => t.startsWith(lit(p))))
-      .reduce(_ && _)
-    val filtered = docs.filter(pred)
-    Some(if (size == Int.MaxValue) filtered else filtered.limit(size))
+    val pred = prefixes.map(p => exists(toks, t => t.startsWith(lit(p)))).reduce(_ && _)
+    Some(limited(docs.filter(pred), size))
   }
 
   /** All-fields prefix autocomplete — the reference's `fields: ["*"]`
     * semantics (web/app.py:142-151): every query token must prefix-match
     * an analyzed token of ANY searched field. `fields` defaults to every
-    * StringType column of the input. One pass: per-row the field token
-    * streams concatenate into a single array the prefix predicates probe
-    * (codegen'd tokenize, no UDF; null fields contribute no tokens).
+    * StringType column of the input.
     */
   def prefixSearchAllFields(docs: DataFrame, query: String,
-      size: Int = AutocompleteSize, fields: Seq[String] = Seq.empty): Option[DataFrame] = {
-    if (query == null || query.trim.length < MinPrefixLen) return None
-    val prefixes = Analyzer.tokenize(query)
-    if (prefixes.isEmpty) return None
-    val cols =
-      if (fields.nonEmpty) fields
-      else docs.schema.fields.collect {
-        case f if f.dataType == org.apache.spark.sql.types.StringType => f.name
-      }.toSeq
-    if (cols.isEmpty) return None
-    val empty = lit(Array.empty[String])
-    val toks = flatten(array(cols.map(c => coalesce(ga.tokenize(col(c)), empty)): _*))
-    val pred = prefixes
-      .map(p => exists(toks, t => t.startsWith(lit(p))))
-      .reduce(_ && _)
-    val filtered = docs.filter(pred)
-    Some(if (size == Int.MaxValue) filtered else filtered.limit(size))
-  }
+      size: Int = AutocompleteSize, fields: Seq[String] = Seq.empty): Option[DataFrame] =
+    allFieldTokens(docs, query, fields).map { case (prefixes, toks) =>
+      val pred = prefixes.map(p => exists(toks, t => t.startsWith(lit(p)))).reduce(_ && _)
+      limited(docs.filter(pred), size)
+    }
 
   /** Byte-faithful `query_string` autocomplete (web/app.py:142-151): the
     * reference appends a single `*` to the raw query, so with
@@ -91,24 +70,39 @@ object Search {
     * all-prefixes variant; this one mirrors the reference's literal query.
     */
   def queryStringAutocomplete(docs: DataFrame, query: String,
-      size: Int = AutocompleteSize, fields: Seq[String] = Seq.empty): Option[DataFrame] = {
+      size: Int = AutocompleteSize, fields: Seq[String] = Seq.empty): Option[DataFrame] =
+    allFieldTokens(docs, query, fields).map { case (qToks, toks) =>
+      val exactPreds = qToks.init.map(t => array_contains(toks, t))
+      val lastPred = exists(toks, t => t.startsWith(lit(qToks.last)))
+      limited(docs.filter((exactPreds :+ lastPred).reduce(_ && _)), size)
+    }
+
+  /** The all-fields autocomplete preamble: the reference's ≥3-char guard,
+    * the analyzed query tokens, and per row one array of every searched
+    * field's tokens (`fields` defaults to every StringType column; codegen'd
+    * tokenize, no UDF; null fields contribute no tokens). None when the
+    * guard fails or nothing is searchable.
+    */
+  private def allFieldTokens(docs: DataFrame, query: String,
+      fields: Seq[String]): Option[(Array[String], Column)] = {
     if (query == null || query.trim.length < MinPrefixLen) return None
     val qToks = Analyzer.tokenize(query)
-    if (qToks.isEmpty) return None
     val cols =
       if (fields.nonEmpty) fields
       else docs.schema.fields.collect {
         case f if f.dataType == org.apache.spark.sql.types.StringType => f.name
       }.toSeq
-    if (cols.isEmpty) return None
+    if (qToks.isEmpty || cols.isEmpty) return None
     val empty = lit(Array.empty[String])
-    val toks = flatten(array(cols.map(c => coalesce(ga.tokenize(col(c)), empty)): _*))
-    val exactPreds = qToks.init.map(t => array_contains(toks, t))
-    val lastPred = exists(toks, t => t.startsWith(lit(qToks.last)))
-    val pred = (exactPreds :+ lastPred).reduce(_ && _)
-    val filtered = docs.filter(pred)
-    Some(if (size == Int.MaxValue) filtered else filtered.limit(size))
+    Some((qToks, flatten(array(cols.map(c => coalesce(ga.tokenize(col(c)), empty)): _*))))
   }
+
+  /** `size` rows at most; Int.MaxValue = unbounded skips the LIMIT node
+    * (a huge GlobalLimit still coalesces to one partition — measured 20s
+    * vs 0.2s).
+    */
+  private def limited(df: DataFrame, size: Int): DataFrame =
+    if (size == Int.MaxValue) df else df.limit(size)
 
   /** Prefix search through the index's term dictionary: a range scan
     * `term >= p && term < p + MaxChar` per token over the postings table
@@ -132,8 +126,7 @@ object Search {
     }
     // posting-list intersection (J2): iterative inner joins on docID
     val matched = perToken.reduce((a, b) => a.join(b, Seq("doc_id"), "inner"))
-    val ordered = matched.orderBy(col("doc_id"))
-    Some(if (size == Int.MaxValue) ordered else ordered.limit(size))
+    Some(limited(matched.orderBy(col("doc_id")), size))
   }
 
   /** Match-all browse with field sort (web/app.py:207-215). */

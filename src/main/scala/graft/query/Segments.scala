@@ -2,7 +2,7 @@ package graft.query
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 
-import graft.index.{OpenIndex, PostingBlock, SegNorms}
+import graft.index.{DecodedNorms, OpenIndex, PostingBlock, SegNorms}
 
 /** The one route from a segment's posting blocks to its norms, as a
   * Lucene segment scorer reads the norms stored beside its postings.
@@ -13,20 +13,20 @@ import graft.index.{OpenIndex, PostingBlock, SegNorms}
 private[graft] object Segments {
 
   /** Group `blocks` by segment and run `f` over each segment's blocks with
-    * its norms row. The norms arrive by broadcast when the open index holds
-    * `normsBroadcast` (no shuffle beyond the blocks), else by a cogroup on
-    * the segment. A segment with blocks but no norms fails in either
-    * branch: it has no doclens to score with.
+    * its decoded norms. The norms arrive by broadcast when the open index
+    * holds `normsBroadcast` (no shuffle beyond the blocks), else by a
+    * cogroup on the segment. A segment with blocks but no norms fails in
+    * either branch: it has no doclens to score with.
     */
   def perSegment[T: Encoder](idx: OpenIndex, blocks: Dataset[PostingBlock])(
-      f: (Array[PostingBlock], SegNorms) => Iterator[T]): Dataset[T] = {
+      f: (Array[PostingBlock], DecodedNorms) => Iterator[T]): Dataset[T] = {
     def run(seg: Int, bs: Iterator[PostingBlock], norms: => Array[SegNorms]): Iterator[T] =
       if (!bs.hasNext) Iterator.empty
       else {
         val ns = norms
         require(ns.nonEmpty, s"seg $seg has postings but no norms")
         require(ns.length == 1, s"seg $seg has ${ns.length} norms rows")
-        f(bs.toArray, ns(0))
+        f(bs.toArray, SegNorms.decode(ns(0)))
       }
     val bySeg = blocks.groupByKey(_.seg)(Encoders.scalaInt)
     idx.normsBroadcast match {

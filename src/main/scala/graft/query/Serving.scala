@@ -95,8 +95,7 @@ private[query] final class ClockCache[V <: AnyRef](
 private[query] final class ShardPayload(
     val blocks: Array[PostingBlock],
     val byTerm: java.util.HashMap[String, Array[PostingBlock]],
-    /** seg → (ascending docIds, doclens) */
-    val norms: java.util.HashMap[Integer, (Array[Long], Array[Int])],
+    val norms: java.util.HashMap[Integer, DecodedNorms],
     /** estimated decoded-postings heap (`Serving.decodedBytes`) */
     val decodedBytes: Long,
     /** compressed positions kept on-heap (`Serving.positionBytes`) */
@@ -107,9 +106,8 @@ private[query] final class ShardPayload(
 private[query] object ShardPayload {
   def apply(blocks: Array[PostingBlock], normRows: Array[SegNorms],
       docRows: Array[DocMeta]): ShardPayload = {
-    val norms = new java.util.HashMap[Integer, (Array[Long], Array[Int])]()
-    normRows.foreach(n => norms.put(n.seg,
-      (SegNorms.docsOf(n), Array.tabulate(n.n)(i => VByte.unpackIntAt(n.doclens, i)))))
+    val norms = new java.util.HashMap[Integer, DecodedNorms]()
+    normRows.foreach(n => norms.put(n.seg, SegNorms.decode(n)))
     // a segment scored without its norms has no doclens: a partial index
     // or export must fail the open, not the first query that touches it
     blocks.iterator.map(_.seg).distinct.foreach(seg =>
@@ -207,6 +205,23 @@ final class ServingIndex private[query] (
 
   private val decodeFn: PostingBlock => (Array[Long], Array[Long]) = cache.get(_)
 
+  /** The query terms' blocks grouped by segment (document shard), each
+    * group run through `f` with its segment's norms — the one grouping
+    * term and phrase queries share.
+    */
+  private def forEachSegment(terms: Iterable[String])(
+      f: (Array[PostingBlock], DecodedNorms) => Unit): Unit = {
+    val bySeg = new java.util.HashMap[Integer, java.util.ArrayList[PostingBlock]]()
+    terms.foreach { t =>
+      val bs = payload.byTerm.get(t)
+      if (bs != null) bs.foreach { b =>
+        bySeg.computeIfAbsent(b.seg, _ => new java.util.ArrayList[PostingBlock]()).add(b)
+      }
+    }
+    bySeg.forEach((seg, bs) =>
+      f(bs.toArray(new Array[PostingBlock](bs.size())), payload.norms.get(seg)))
+  }
+
   /** Exact BM25 top-k; rank-identical to `Wand.topK` (same kernel, same
     * tie-breaks, same fold order). Pure JVM — no Spark job.
     */
@@ -217,30 +232,13 @@ final class ServingIndex private[query] (
     val idfs: Map[String, Double] =
       present.map(t => t -> BM25.idf(stats.nDocs, termDf.get(t))).toMap
 
-    // group the query terms' blocks by segment (document shard)
-    val bySeg = new java.util.HashMap[Integer, java.util.ArrayList[PostingBlock]]()
-    present.foreach { t =>
-      val bs = payload.byTerm.get(t)
-      if (bs != null) bs.foreach { b =>
-        bySeg.computeIfAbsent(b.seg, _ => new java.util.ArrayList[PostingBlock]())
-          .add(b)
-      }
-    }
-
     // per-segment WAND over PRE-DECODED postings/norms (no per-query
     // decode allocations — the serving tier's RAM-for-CPU trade), then
     // the same (score desc, docId asc) k-merge the distributed path's
     // TakeOrderedAndProject performs
     val heap = new TopKHeap(k)
-    bySeg.forEach { (seg, blocks) =>
-      val arr = blocks.toArray(new Array[PostingBlock](blocks.size()))
-      val (nDocs, nLens) = payload.norms.get(seg)
-      def doclen(docId: Long): Long = {
-        val i = java.util.Arrays.binarySearch(nDocs, docId)
-        require(i >= 0, s"docId $docId missing from norms of seg $seg")
-        nLens(i).toLong
-      }
-      Wand.segTopKWith(arr, doclen, idfs, stats.avgdl, k, decodeFn)
+    forEachSegment(present) { (blocks, norms) =>
+      Wand.segTopKWith(blocks, norms.doclen, idfs, stats.avgdl, k, decodeFn)
         .foreach { case (d, s) => heap.offer(d, s) }
     }
     heap.result().sortBy(t => (-t._2, t._1))
@@ -252,78 +250,29 @@ final class ServingIndex private[query] (
     topK(query, k).toSeq.toDF("doc_id", "score")
   }
 
-  /** Unscored phrase matches on THIS shard: (docId, ptf, doclen) for
-    * every local document containing the phrase at consecutive positions
-    * (overlaps counted — Lucene slop-0). Scoring needs the GLOBAL phrase
-    * df, which only the router knows in a sharded layout (the
-    * dfs_query_then_fetch shape), so matching and scoring are separate.
-    * Positions decode on demand per query — phrase traffic is a small
-    * fraction of term traffic, the classic positional-payload trade.
+  /** This shard's phrase parts (`Phrase.segTopK`), one per segment
+    * holding a phrase term. Scoring needs the GLOBAL phrase df, the sum
+    * of every shard's counts, so the caller finishes (`Phrase.finish`).
+    * Positions come from the hot-phrase cache when the budget left room
+    * for one, else decode per query — the classic positional trade.
     */
-  private[query] def phraseMatches(phrase: String): Array[(Long, Int, Long)] = {
-    val slots = Analyzer.tokenize(phrase)
-    if (slots.isEmpty) return Array.empty
-    val distinctTerms = slots.distinct
-    if (distinctTerms.exists(t => !payload.byTerm.containsKey(t))) return Array.empty
-
-    // group the phrase terms' blocks by segment
-    val bySeg = new java.util.HashMap[Integer, java.util.ArrayList[PostingBlock]]()
-    distinctTerms.foreach { t =>
-      payload.byTerm.get(t).foreach { b =>
-        bySeg.computeIfAbsent(b.seg, _ => new java.util.ArrayList[PostingBlock]()).add(b)
-      }
+  private[query] def phraseParts(slots: IndexedSeq[String], k: Int): Seq[PhrasePart] = {
+    val terms = slots.distinct
+    if (terms.exists(t => !payload.byTerm.containsKey(t))) return Nil
+    val positionsOf: PostingBlock => Serving.DecodedPositions =
+      posCache.fold(Serving.decodePositionsOf _)(c => c.get)
+    val out = scala.collection.mutable.ArrayBuffer.empty[PhrasePart]
+    forEachSegment(terms) { (blocks, norms) =>
+      out += Phrase.segTopK(blocks, slots, positionsOf, norms, stats.avgdl, k)
     }
-    def decoded(b: PostingBlock): Serving.DecodedPositions = posCache match {
-      case Some(c) => c.get(b) // hot-phrase fast path (budget headroom)
-      case None => Serving.decodePositionsOf(b)
-    }
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, Long)]
-    bySeg.forEach { (seg, blocks) =>
-      val byTerm = blocks.toArray(new Array[PostingBlock](blocks.size())).groupBy(_.term)
-      if (!distinctTerms.exists(t => !byTerm.contains(t))) {
-        // per-block probe maps come straight from the cache — the per-query
-        // work is hash probes, never rebuilding a merged per-term map
-        // (blocks of a (term, seg) partition the docID range, so a doc
-        // lives in exactly the block whose [firstDoc, lastDoc] covers it)
-        val termBlocks: Map[String, Array[(PostingBlock, Serving.DecodedPositions)]] =
-          byTerm.map { case (t, bs) =>
-            t -> bs.sortBy(_.firstDoc).map(b => (b, decoded(b)))
-          }
-        def lookup(t: String, doc: Long): Array[Int] = {
-          val arr = termBlocks(t)
-          var i = 0
-          while (i < arr.length) {
-            val (b, m) = arr(i)
-            if (doc >= b.firstDoc && doc <= b.lastDoc) return m.get(doc)
-            i += 1
-          }
-          null
-        }
-        val (nDocs, nLens) = payload.norms.get(seg)
-        val rarest = distinctTerms.minBy(t => termBlocks(t).iterator.map(_._2.size).sum)
-        termBlocks(rarest).foreach { case (_, rm) =>
-          rm.forEach { (doc, _) =>
-            if (distinctTerms.forall(t => lookup(t, doc) != null)) {
-              val slotPs = slots.map(t => lookup(t, doc))
-              val c = Phrase.countOccurrences(slotPs)
-              if (c > 0) {
-                val i = java.util.Arrays.binarySearch(nDocs, doc)
-                require(i >= 0, s"docId $doc missing from norms of seg $seg")
-                out += ((doc, c, nLens(i).toLong))
-              }
-            }
-          }
-        }
-      }
-    }
-    out.toArray
+    out.toSeq
   }
 
   /** Exact phrase BM25 top-k on this (single-node) index — df is local =
     * global here. Rank-identical to `Phrase.topK` over the same store.
     */
   def phraseTopK(phrase: String, k: Int): Array[(Long, Double)] =
-    Serving.scorePhraseMatches(phraseMatches(phrase), stats, k)
+    Phrase.finish(phraseParts(Analyzer.tokenize(phrase).toIndexedSeq, k), stats.nDocs, k)
 
   // ---- hit materialization: the reference's `hits.hits[]._source + _score`
   // response shape, answered from the shard's own doc store (optional —
@@ -364,22 +313,6 @@ object Serving {
       cacheBudgetBytes: Long,
       bounded: Boolean,
       overBudget: Boolean)
-
-  /** Score gathered phrase matches with the GLOBAL df (= match count
-    * across every shard) through the same BM25 kernels as all paths.
-    */
-  private[query] def scorePhraseMatches(
-      matches: Array[(Long, Int, Long)],
-      stats: IndexStats,
-      k: Int): Array[(Long, Double)] = {
-    if (matches.isEmpty || stats.nDocs == 0) return Array.empty
-    val idf = BM25.idf(stats.nDocs, matches.length.toLong)
-    val heap = new TopKHeap(k)
-    matches.foreach { case (d, ptf, dl) =>
-      heap.offer(d, idf * BM25.tfNorm(ptf.toLong, dl, stats.avgdl))
-    }
-    heap.result().sortBy(t => (-t._2, t._1))
-  }
 
   /** Decoded heap footprint of one posting block: two long arrays of n
     * (docIDs + tfs) plus object headers — the number that actually
@@ -626,14 +559,14 @@ final class ServingCluster private[query] (val shards: IndexedSeq[ServingIndex])
     heap.result().sortBy(t => (-t._2, t._1))
   }
 
-  /** Phrase top-k across shards: gather unscored matches, resolve the
-    * GLOBAL phrase df at the router, then score — the
-    * dfs_query_then_fetch shape. Bit-identical to the single-node and
-    * distributed phrase paths (stats are global in every layout).
+  /** Phrase top-k across shards: the router analyzes the phrase once,
+    * gathers each shard's per-segment counts and local candidates, and
+    * finishes with the GLOBAL phrase df. Bit-identical to the single-node
+    * and distributed phrase paths (stats are global in every layout).
     */
   def phraseTopK(phrase: String, k: Int): Array[(Long, Double)] = {
-    val matches = shards.iterator.flatMap(_.phraseMatches(phrase)).toArray
-    Serving.scorePhraseMatches(matches, shards.head.stats, k)
+    val slots = Analyzer.tokenize(phrase).toIndexedSeq
+    Phrase.finish(shards.iterator.flatMap(_.phraseParts(slots, k)), stats.nDocs, k)
   }
 
   /** Fetch phase: the router asks the shard that holds each document —

@@ -62,10 +62,8 @@ object Wand {
       .filter(col("term").isin(terms: _*))
       .withColumn("positions", lit(null).cast("binary"))
       .as[PostingBlock]
-    Segments.perSegment(index, qBlocks) { (blocks, nm) =>
-      val normDocs = SegNorms.docsOf(nm)
-      segTopKWith(blocks, d => SegNorms.doclenAt(nm, normDocs, d).toLong, idfs, avgdl, k,
-        TermPostings.decodeBlock).iterator
+    Segments.perSegment(index, qBlocks) { (blocks, norms) =>
+      segTopKWith(blocks, norms.doclen, idfs, avgdl, k, TermPostings.decodeBlock).iterator
     }.toDF("doc_id", "score")
       .orderBy(col("score").desc, col("doc_id").asc).limit(k)
   }

@@ -14,7 +14,8 @@ import org.apache.spark.sql.functions._
 import graft.index.{IndexBuilder, IndexStore}
 
 /** The build shuffles documents, not postings, and writes each segment
-  * whole into one term-sorted postings file of its slice.
+  * whole into one term-sorted postings file of its slice — a file of its
+  * own when the slice has no more segments than shuffle partitions.
   */
 class BuildLayoutSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -50,6 +51,7 @@ class BuildLayoutSpec extends AnyFunSuite {
 
     val slices = store.committedSlices
     assert(slices.size == 2)
+    val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
     for (s <- slices) {
       val dir = Paths.get(store.slicePath("postings", s.sliceId))
       val files = Files.list(dir).iterator().asScala.map(_.toString)
@@ -69,6 +71,11 @@ class BuildLayoutSpec extends AnyFunSuite {
       assert(segs.size == segs.distinct.size,
         s"slice ${s.sliceId}: a segment spans two postings files: $segsPerFile")
       assert(segs.toSet == (s.segLo to s.segHi).toSet)
+      // a slice with no more segments than shuffle partitions inverts each
+      // segment in a task of its own
+      if (s.segHi - s.segLo + 1 <= shufflePartitions)
+        assert(segsPerFile.filter(_.nonEmpty).forall(_.size == 1),
+          s"slice ${s.sliceId}: one task inverted several segments: $segsPerFile")
     }
     docs.unpersist()
     store.dropAll()

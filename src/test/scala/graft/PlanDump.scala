@@ -70,15 +70,15 @@ object PlanDump {
       mhOut)
     mhCached.foreach(_.unpersist())
 
-    dump("Exact phrase matching (positional index, match plan)",
+    dump("Exact phrase top-k (positional index, per-segment parts)",
       "Only the phrase terms' blocks travel (term IN-filter pushed to the " +
-        "postings scan); adjacency matching is segment-local " +
-        "(flatMapGroups per seg), and each segment resolves its matches' " +
-        "doclens from its own norms row — no docs-table join. The public " +
-        "topK persists this, counts the global phrase df, scores and " +
-        "TakeOrdered-merges.",
-      graft.query.Phrase.matches(idx, graft.analysis.Analyzer
-        .tokenize("the web").toIndexedSeq).toDF("doc_id", "ptf", "doclen"))
+        "postings scan); each segment matches locally (flatMapGroups per " +
+        "seg) beside its own norms and emits one part: its match count and " +
+        "its local candidates by tfNorm — no docs-table join. The public " +
+        "topK collects the parts once, sums the counts into the phrase df " +
+        "and scores and merges on the driver.",
+      graft.query.Phrase.plan(idx, graft.analysis.Analyzer.tokenize("the web").toIndexedSeq,
+        idx.stats.avgdl, 10).toDF())
 
     val (ppOut, ppCached, _) = graft.ops.Dedup.sharedPassagePairsPlan(
       spark.read.parquet(s"$sf/documents.parquet"), "doc_id", "text",

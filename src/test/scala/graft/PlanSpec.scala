@@ -134,7 +134,7 @@ class PlanSpec extends AnyFunSuite {
     assert(!postingScans.exists(_.contains("positions#")),
       s"term queries must not scan the positional payload:\n$p")
     // the phrase path is the one consumer of positions — it must still read them
-    val pp = plan(graft.query.Phrase.matches(idx, IndexedSeq("spark", "dup")).toDF())
+    val pp = plan(graft.query.Phrase.plan(idx, IndexedSeq("spark", "dup"), idx.stats.avgdl, 5).toDF())
     assert(scanCols(pp).exists(_.contains("positions#")), pp)
   }
 
