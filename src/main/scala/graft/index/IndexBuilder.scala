@@ -99,8 +99,10 @@ object IndexBuilder {
     val segLoAll = (minId / segSize).toInt
     val segHiAll = (maxId / segSize).toInt
     val totalSegs = segHiAll - segLoAll + 1
-    val nSlices = math.min(cfg.slices, totalSegs)
-    val segsPerSlice = math.ceil(totalSegs.toDouble / nSlices).toInt
+    // ceil-sized slices, and only as many as the segments fill: 5 segments
+    // in up to 4 slices are 3 slices of [2, 2, 1], never a trailing empty one
+    val segsPerSlice = math.ceil(totalSegs.toDouble / math.min(cfg.slices, totalSegs)).toInt
+    val nSlices = math.ceil(totalSegs.toDouble / segsPerSlice).toInt
 
     // resume consistency: every already-committed slice's recorded segment
     // range must equal what THIS run's geometry assigns to its id — a
@@ -268,9 +270,7 @@ object IndexBuilder {
       segLo: Int,
       segHi: Int): SliceMeta = {
     import spark.implicits._
-    // a trailing slice past the corpus's last segment has segHi < segLo
-    val parts = math.max(1,
-      math.min(segHi - segLo + 1, spark.conf.get("spark.sql.shuffle.partitions").toInt))
+    val parts = math.min(segHi - segLo + 1, spark.conf.get("spark.sql.shuffle.partitions").toInt)
     val inverted = slice
       .repartitionById(parts,
         pmod(expr(s"doc_id DIV ${cfg.segSize}L") - segLo, lit(parts)).cast("int"))
@@ -284,11 +284,12 @@ object IndexBuilder {
     val dObs = Observation()
     try {
       // a local sort, no Exchange: each file stays term-sorted for
-      // row-group pruning of term lookups
+      // row-group pruning of term lookups. One file per task (no
+      // maxRecordsPerFile cut) keeps each segment in one file: `segLocal`
       inverted.where(col("block").isNotNull).select("block.*")
         .sortWithinPartitions(col("term"), col("seg"), col("blk"))
         .observe(pObs, sum("n").as("postings"), count(lit(1)).as("blocks"))
-        .write.mode("overwrite").parquet(postingsPath)
+        .write.mode("overwrite").option("maxRecordsPerFile", 0L).parquet(postingsPath)
       inverted.where(col("norms").isNotNull).select("norms.*")
         .write.mode("overwrite").parquet(store.slicePath("norms", sliceId))
       inverted.where(col("doc").isNotNull).select("doc.*")
@@ -307,7 +308,7 @@ object IndexBuilder {
     val nPostings = Option(pMetrics("postings")).map(_.asInstanceOf[Long]).getOrElse(0L)
     SliceMeta(sliceId, segLo, segHi, dObs.get("docs").asInstanceOf[Long], nPostings,
       pMetrics("blocks").asInstanceOf[Long], store.postingBytes(sliceId),
-      System.currentTimeMillis())
+      System.currentTimeMillis(), segLocal = true)
   }
 }
 

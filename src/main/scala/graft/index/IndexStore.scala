@@ -6,10 +6,16 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.datasources.FileScanRDD
 import org.apache.spark.sql.functions._
 
 /** One committed build slice: a contiguous docID-segment range with its
   * lineage + metrics (the north rule's per-partition checkpoint record).
+  * `segLocal` records that each of the slice's postings files holds whole
+  * segments (no segment's blocks span two files), which lets a Spark-path
+  * query score each segment inside the partition that scans it; a
+  * manifest entry without the field reads as false.
   */
 case class SliceMeta(
     sliceId: Int,
@@ -19,7 +25,8 @@ case class SliceMeta(
     postings: Long,
     blocks: Long,
     bytes: Long,
-    committedAtMs: Long)
+    committedAtMs: Long,
+    segLocal: Boolean = false)
 
 /** Parquet-backed index storage with a JSON manifest committed by atomic
   * rename. Layout:
@@ -135,8 +142,9 @@ final class IndexStore(val root: String) {
     * files and serving holds N× more block objects). Slices partition
     * docID segments, so any subset's postings, norms and docs are
     * disjoint: the merged slice's files are the union of theirs, copied
-    * as they are (each file keeps its sort order and its segments), and
-    * only the per-term `terms` partials re-aggregate.
+    * as they are (each file keeps its sort order and its segments, so the
+    * merged slice holds whole segments per file when every merged slice
+    * did), and only the per-term `terms` partials re-aggregate.
     * Blocks are never re-encoded, norms never recomputed, and the merged
     * counts are the sums of the slices' manifest counts. Commit is atomic
     * (manifest rename).
@@ -168,7 +176,7 @@ final class IndexStore(val root: String) {
     val now = System.currentTimeMillis()
     val meta = SliceMeta(newId, old.map(_.segLo).min, old.map(_.segHi).max,
       old.map(_.docs).sum, old.map(_.postings).sum, old.map(_.blocks).sum,
-      postingBytes(newId), now)
+      postingBytes(newId), now, segLocal = old.forall(_.segLocal))
     // supersede + dead-list in ONE atomic commit; files stay on disk for
     // in-flight readers until vacuum's grace window passes
     commitReplaceSlices(
@@ -411,6 +419,36 @@ case class OpenIndex(
       Some(spark.sparkContext.broadcast(norms.collect().map(n => n.seg -> n).toMap))
     else None
   }
+
+  /** Whether each segment's blocks sit in exactly one scan partition of
+    * `postings`, so `Segments.perSegment` can score a segment where it is
+    * read: every slice records whole segments per postings file
+    * (`SliceMeta.segLocal`), and the planned scan reads every file whole.
+    * How Spark splits files follows the session's settings
+    * (`spark.sql.files.*`) and its default parallelism, so the scan is
+    * planned again only when one of them changes.
+    */
+  def segmentLocalScan: Boolean = slices.forall(_.segLocal) && {
+    val spark = postings.sparkSession
+    val key = (spark.conf.getAll, spark.sparkContext.defaultParallelism)
+    val memo = wholeFileScan
+    if (memo != null && memo._1 == key) memo._2
+    else {
+      // a fresh plan: `postings`' own was planned under the settings of
+      // its first use
+      val scans = postings.select("*").queryExecution.executedPlan.collect {
+        case s: FileSourceScanExec => s.inputRDD
+      }
+      val whole = scans.nonEmpty && scans.forall {
+        case rdd: FileScanRDD =>
+          rdd.filePartitions.forall(_.files.forall(f => f.start == 0 && f.length == f.fileSize))
+        case _ => false
+      }
+      wholeFileScan = key -> whole
+      whole
+    }
+  }
+  @volatile private var wholeFileScan: ((Map[String, String], Int), Boolean) = null
 }
 
 /** Flat string→string JSON object (settings/mappings files, no deps). */
@@ -462,13 +500,15 @@ private[index] object ManifestJson {
   def render(slices: Seq[SliceMeta], props: Map[String, String] = Map.empty): String = {
     val items = slices.map { s =>
       s"""{"sliceId":${s.sliceId},"segLo":${s.segLo},"segHi":${s.segHi},"docs":${s.docs},""" +
-        s""""postings":${s.postings},"blocks":${s.blocks},"bytes":${s.bytes},"committedAtMs":${s.committedAtMs}}"""
+        s""""postings":${s.postings},"blocks":${s.blocks},"bytes":${s.bytes},"committedAtMs":${s.committedAtMs},""" +
+        s""""segLocal":${s.segLocal}}"""
     }
     val propsPart = if (props.isEmpty) "" else s""""props":${FlatJson.render(props)},"""
     s"""{"format":"graft-index-v1",$propsPart"slices":[${items.mkString(",")}]}"""
   }
 
   private val num = """"(\w+)"\s*:\s*(-?\d+)""".r
+  private val segLocal = """"segLocal"\s*:\s*true""".r
   def parse(json: String): (Seq[SliceMeta], Map[String, String]) = {
     // props object (flat string map) sits between "props":{ and its
     // matching } — scan string-aware so a '}' inside a value can't truncate
@@ -508,12 +548,12 @@ private[index] object ManifestJson {
         case '}' =>
           depth -= 1
           if (depth == 0) {
-            val fields = num.findAllMatchIn(body.substring(start, i + 1))
-              .map(m => m.group(1) -> m.group(2).toLong).toMap
+            val obj = body.substring(start, i + 1)
+            val fields = num.findAllMatchIn(obj).map(m => m.group(1) -> m.group(2).toLong).toMap
             objs += SliceMeta(
               fields("sliceId").toInt, fields("segLo").toInt, fields("segHi").toInt,
               fields("docs"), fields("postings"), fields("blocks"), fields("bytes"),
-              fields("committedAtMs"))
+              fields("committedAtMs"), segLocal.findFirstIn(obj).nonEmpty)
           }
         case _ =>
       }

@@ -29,7 +29,8 @@ private[graft] case class PhrasePart(count: Long, docs: Array[Long], tfNorms: Ar
   * rounding margin of its k-th best tfNorm. On the Spark path the term
   * IN-filter pushes into the postings scan, each segment matches beside
   * its own norms (`Segments.perSegment`, the route WAND takes), and the
-  * parts come back in one collect.
+  * parts come back in one collect: one job with no Exchange when each
+  * segment sits in one scan partition.
   */
 object Phrase {
 

@@ -10,12 +10,15 @@ import graft.index._
   * reference delegates to Lucene, reference web/app.py:104-120).
   *
   * Distribution model: postings are document-partitioned by segment, so
-  * each segment's WAND runs independently in an executor task
-  * (`Segments.perSegment`: the segment's blocks with its norms row),
-  * emits a local top-k, and the global answer is a tiny
-  * TakeOrderedAndProject merge — the standard document-sharded search
-  * architecture, which scales to arbitrarily many segments with no
-  * shuffle of posting payloads beyond the q query terms' blocks.
+  * each segment's WAND runs independently (`Segments.perSegment`: the
+  * segment's blocks with its norms), emits a local top-k, and the global
+  * answer is a tiny TakeOrderedAndProject merge — the standard
+  * document-sharded search architecture. When every postings file holds
+  * whole segments and the scan reads every file whole, a segment is scored
+  * inside the scan partition that read it: term-filtered scan →
+  * per-segment WAND → TakeOrderedAndProject, one job and no Exchange.
+  * Otherwise (split files, an old layout, or norms past the broadcast
+  * bound) the query terms' blocks are shuffled by segment first.
   *
   * Determinism: a document's score folds its per-term contributions in
   * ascending term order, so the double-precision sum is bit-identical to
@@ -56,7 +59,7 @@ object Wand {
     // index stores it inline per block — and it's ~Σtf VByte bytes,
     // comparable to the postings themselves. Replacing the column with a
     // null literal lets Catalyst prune `positions` out of the parquet
-    // ReadSchema entirely, so neither the scan nor the seg Exchange ever
+    // ReadSchema entirely, so neither the scan nor a seg Exchange ever
     // carries it (only Phrase reads positions).
     val qBlocks = index.postings
       .filter(col("term").isin(terms: _*))

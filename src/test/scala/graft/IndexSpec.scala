@@ -142,6 +142,38 @@ class IndexSpec extends AnyFunSuite {
     assert(store.open(spark).stats.nDocs == 1000)
   }
 
+  test("slices cover the segments: none lies past the last one, resume included") {
+    // 5 segments in up to 4 slices: ceil-sized slices of 2, 2 and 1
+    val fiveSegs = docs.filter(col("doc_id") < 5 * 128)
+    val cfg = IndexBuilder.Config(segSize = 128, blockSize = 16, slices = 4)
+    val store = freshStore()
+    intercept[RuntimeException] {
+      IndexBuilder.build(spark, fiveSegs, store, cfg, failAfterSlice = 2)
+    }
+    val report = IndexBuilder.build(spark, fiveSegs, store, cfg, fresh = false)
+    assert(report.slicesSkipped == 2 && report.slicesBuilt == 1)
+    val slices = store.committedSlices
+    assert(slices.forall(s => s.segLo <= s.segHi), slices)
+    assert(slices.map(s => (s.segLo, s.segHi)) == Seq((0, 1), (2, 3), (4, 4)))
+    assert(slices.forall(_.segLocal))
+    store.dropAll()
+  }
+
+  test("manifest: segLocal round-trips, and an entry without it reads false") {
+    val store = freshStore()
+    val local = SliceMeta(0, 0, 3, 10L, 100L, 4L, 1234L, 1L, segLocal = true)
+    val global = SliceMeta(1, 4, 7, 5L, 50L, 2L, 567L, 2L)
+    store.commitSlice(local)
+    store.commitSlice(global)
+    assert(store.committedSlices == Seq(local, global))
+    // a manifest written before the field existed
+    val mf = java.nio.file.Paths.get(store.root, "manifest.json")
+    Files.writeString(mf, Files.readString(mf).replaceAll(""","segLocal":(true|false)""", ""))
+    assert(!Files.readString(mf).contains("segLocal"))
+    assert(store.committedSlices == Seq(local.copy(segLocal = false), global))
+    store.dropAll()
+  }
+
   test("deterministic across parallelism: 2 vs 7 shuffle partitions") {
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.shuffle.partitions", "2")

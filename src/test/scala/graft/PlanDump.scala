@@ -31,10 +31,11 @@ object PlanDump {
     val idx = SparkEntry.indexFor(spark, sf)
 
     dump("BM25 top-k (block-max WAND)",
-      "One Exchange of only the query terms' posting blocks (term IN-filter " +
-        "pushed to the parquet scan), per-segment WAND in flatMapGroups, " +
-        "TakeOrderedAndProject merge. No joins, no second shuffle; term " +
-        "stats resolve driver-side.",
+      "No Exchange: the term IN-filter is pushed to the parquet scan, and " +
+        "each scan partition runs WAND over the whole segments it read " +
+        "(MapPartitions, norms broadcast), then the TakeOrderedAndProject " +
+        "merge. One job, no joins; term stats resolve driver-side. A store " +
+        "whose scan splits a segment shuffles the blocks by segment first.",
       graft.query.Wand.topK(spark, idx, "spark index dup", 10))
 
     dump("Hit materialization (scored top-k -> stored fields)",
@@ -71,10 +72,10 @@ object PlanDump {
     mhCached.foreach(_.unpersist())
 
     dump("Exact phrase top-k (positional index, per-segment parts)",
-      "Only the phrase terms' blocks travel (term IN-filter pushed to the " +
-        "postings scan); each segment matches locally (flatMapGroups per " +
-        "seg) beside its own norms and emits one part: its match count and " +
-        "its local candidates by tfNorm — no docs-table join. The public " +
+      "No Exchange: the term IN-filter is pushed to the postings scan, and " +
+        "each scan partition matches the whole segments it read " +
+        "(MapPartitions) beside their norms. A segment emits one part: its " +
+        "match count and its local candidates by tfNorm — no docs-table join. The public " +
         "topK collects the parts once, sums the counts into the phrase df " +
         "and scores and merges on the driver.",
       graft.query.Phrase.plan(idx, graft.analysis.Analyzer.tokenize("the web").toIndexedSeq,

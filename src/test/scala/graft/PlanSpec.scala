@@ -196,14 +196,26 @@ class PlanSpec extends AnyFunSuite {
     } finally (ngCached ++ ppCached).foreach(_.unpersist(blocking = false))
   }
 
-  test("wand topK issues no terms-table job (driver-side stats) and one blocks shuffle") {
+  test("wand topK: driver-side term stats, no Exchange on the segment-local path") {
     val idx = SparkEntry.indexFor(spark, sf)
     assert(idx.termsLocal.nonEmpty, "bounded vocab must resolve driver-side")
-    val df = graft.query.Wand.topK(spark, idx, "spark dup", 5)
-    val p = plan(df)
-    // document-sharded WAND: one exchange of the query terms' blocks, then
-    // the tiny TakeOrdered merge — no join, no second shuffle
-    assert("Exchange".r.findAllIn(p).size == 1, p)
+    assert(idx.segmentLocalScan, "a fresh build must read each segment in one scan partition")
+    // segment-local: each scan partition runs WAND over the segments it
+    // read, then the tiny TakeOrdered merge — no join, no shuffle
+    val p = plan(graft.query.Wand.topK(spark, idx, "spark dup", 5))
+    assert("Exchange".r.findAllIn(p).isEmpty, p)
     assert(p.contains("TakeOrderedAndProject"), p)
+    // slices without the whole-segment flag: the blocks shuffle by segment
+    // first, the one Exchange (the norms still broadcast)
+    val unflagged = idx.copy(slices = idx.slices.map(_.copy(segLocal = false)))
+    val pu = plan(graft.query.Wand.topK(spark, unflagged, "spark dup", 5))
+    assert("Exchange".r.findAllIn(pu).size == 1, pu)
+    // norms past the broadcast bound: the blocks and the norms each shuffle
+    // by segment into one cogroup
+    val sCogroup = spark.newSession()
+    sCogroup.conf.set("graft.query.broadcastNormsMaxSegs", "0")
+    val pc = plan(graft.query.Wand.topK(sCogroup, idx.store.open(sCogroup), "spark dup", 5))
+    assert("Exchange".r.findAllIn(pc).size == 2 && pc.contains("CoGroup"), pc)
+    assert(Seq(pu, pc).forall(_.contains("TakeOrderedAndProject")))
   }
 }

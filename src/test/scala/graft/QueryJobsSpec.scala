@@ -13,7 +13,8 @@ import graft.query.{Phrase, Wand}
 
 /** Spark jobs a warm Spark-path query runs: once an open index holds its
   * stats, term stats and norms, WAND and phrase each answer in one scan of
-  * their terms' blocks — a shuffle-map job and a result job at most.
+  * their terms' blocks, scoring each segment in the partition that read it
+  * — one result job and no shuffle-map job.
   */
 class QueryJobsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -32,7 +33,7 @@ class QueryJobsSpec extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
-  test("a warm phrase top-k and a warm WAND top-k run at most two jobs each") {
+  test("a warm phrase top-k and a warm WAND top-k run one job each") {
     import spark.implicits._
     val rnd = new scala.util.Random(5)
     val vocab = Array("red", "blue", "green", "fox", "dog", "run")
@@ -52,7 +53,7 @@ class QueryJobsSpec extends AnyFunSuite {
       query() // warm: stats, term stats and the norms broadcast
       val jobs = jobsOf(query())
       info(s"warm $name top-k: $jobs jobs")
-      assert(jobs <= 2, s"warm $name top-k ran $jobs jobs")
+      assert(jobs == 1, s"warm $name top-k ran $jobs jobs")
     }
     store.dropAll()
   }

@@ -1,0 +1,176 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+
+import graft.analysis.Analyzer
+import graft.index.{BM25, IndexBuilder, IndexStore, OpenIndex}
+import graft.query.{OracleScorer, Phrase, Wand}
+import graft.streaming.StreamIngest
+
+/** The segment-local Spark path and its guard: a Spark-path query scores
+  * each segment inside its scan partition only when every slice holds
+  * whole segments per postings file and the scan reads every file whole.
+  * A store that breaks either takes the shuffle path, and every path
+  * answers bit-equal to brute force.
+  */
+class SegmentLocalSpec extends AnyFunSuite {
+  private lazy val spark = TestSpark.spark
+  private val vocab = Array("red", "blue", "green", "fox", "dog", "run", "sky", "sea")
+  private val cfg = IndexBuilder.Config(segSize = 64, blockSize = 8, slices = 2, positions = true)
+
+  /** `n` seeded pages as (url, text). */
+  private def pages(seed: Int, n: Int): Seq[(String, String)] = {
+    val rnd = new scala.util.Random(seed)
+    (0 until n).map { i =>
+      s"doc://$seed/$i" ->
+        Seq.fill(8 + rnd.nextInt(40))(vocab(rnd.nextInt(vocab.length))).mkString(" ")
+    }
+  }
+
+  /** Pages numbered from docID 0, as the build reads them. */
+  private def withIds(s: SparkSession, ps: Seq[(String, String)]): DataFrame =
+    s.createDataFrame(ps.zipWithIndex.map { case ((u, t), i) => (i.toLong, u, t, "en") })
+      .toDF("doc_id", "url", "text", "lang")
+
+  private def rows(df: DataFrame): Seq[(Long, Double)] =
+    df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+
+  /** Phrase top-k by brute force: overlapping occurrences, idf over the
+    * exact phrase df, the same BM25 kernels.
+    */
+  private def brutePhrase(docs: Seq[(Long, String)], phrase: String, k: Int): Seq[(Long, Double)] = {
+    val slots = Analyzer.tokenize(phrase)
+    val toks = docs.map { case (id, t) => id -> Analyzer.tokenize(t) }
+    val avgdl = toks.map(_._2.length.toLong).sum.toDouble / docs.size
+    val matches = toks.map { case (id, t) =>
+      (id, t.sliding(slots.length).count(_.sameElements(slots)), t.length.toLong)
+    }.filter(_._2 > 0)
+    if (matches.isEmpty) return Seq.empty
+    val idf = BM25.idf(docs.size.toLong, matches.size.toLong)
+    matches.map { case (id, ptf, dl) => (id, idf * BM25.tfNorm(ptf.toLong, dl, avgdl)) }
+      .sortBy { case (id, sc) => (-sc, id) }
+      .take(k)
+  }
+
+  /** WAND equals `OracleScorer` and phrase equals brute force over `docs`. */
+  private def assertExact(s: SparkSession, idx: OpenIndex, docs: Seq[(Long, String)]): Unit = {
+    val docsDf = spark.createDataFrame(docs).toDF("doc_id", "text")
+    for (q <- Seq("red fox", "sky sea run dog", "green green"); k <- Seq(1, 10))
+      assert(rows(Wand.topK(s, idx, q, k)) == rows(OracleScorer.topK(spark, docsDf, q, k)),
+        s"wand '$q' k=$k")
+    for (p <- Seq("red fox", "blue blue", "sky sea run"))
+      assert(rows(Phrase.topK(s, idx, p, 10)) == brutePhrase(docs, p, 10), s"phrase '$p'")
+  }
+
+  /** Exchanges in the WAND plan and in the phrase plan of `idx`. */
+  private def exchanges(s: SparkSession, idx: OpenIndex): (Int, Int) = {
+    def count(df: DataFrame) = "Exchange".r.findAllIn(df.queryExecution.executedPlan.toString).size
+    (count(Wand.topK(s, idx, "red fox", 10)),
+      count(Phrase.plan(idx, IndexedSeq("red", "fox"), idx.stats.avgdl, 10).toDF()))
+  }
+
+  /** The most scan partitions of `idx.postings` that read one segment. */
+  private def maxPartitionsPerSeg(idx: OpenIndex): Int =
+    idx.postings.select("seg").rdd
+      .mapPartitionsWithIndex((p, it) => it.map(r => (r.getInt(0), p)))
+      .distinct().collect().groupBy(_._1).values.map(_.length).max
+
+  test("split postings files take the shuffle path and stay exact") {
+    val ps = pages(1, 600)
+    val docs = ps.zipWithIndex.map { case ((_, t), i) => i.toLong -> t }
+    val store = new IndexStore(Files.createTempDirectory("graft-split-").toString)
+    // row groups of 16 blocks, so a byte-range split of a file can cut a
+    // segment's blocks apart
+    val small = spark.newSession()
+    small.conf.set("parquet.block.row.count.limit", "16")
+    IndexBuilder.build(small, withIds(small, ps), store, cfg)
+    val s = spark.newSession()
+    s.conf.set("spark.sql.files.maxPartitionBytes", "4096")
+    s.conf.set("spark.sql.files.openCostInBytes", "1")
+    val idx = store.open(s)
+    assert(idx.slices.forall(_.segLocal) && idx.normsBroadcast.isDefined)
+    assert(maxPartitionsPerSeg(idx) > 1, "the split scan must spread a segment over partitions")
+    assert(!idx.segmentLocalScan)
+    assert(exchanges(s, idx) == (1, 1))
+    assertExact(s, idx, docs)
+    // the default split settings read the same files whole
+    val whole = store.open(spark)
+    assert(whole.segmentLocalScan && exchanges(spark, whole) == (0, 0))
+    assertExact(spark, whole, docs)
+    store.dropAll()
+  }
+
+  test("a slice in the old global-sort layout takes the shuffle path and stays exact") {
+    val ps = pages(2, 600)
+    val docs = ps.zipWithIndex.map { case ((_, t), i) => i.toLong -> t }
+    val store = new IndexStore(Files.createTempDirectory("graft-oldlayout-").toString)
+    IndexBuilder.build(spark, withIds(spark, ps), store, cfg)
+    // rewrite slice 0 as builds wrote it before postings files held whole
+    // segments: range-partitioned by term, so a segment spans both files
+    val meta = store.committedSlices.head
+    val dir = Paths.get(store.slicePath("postings", meta.sliceId))
+    val tmp = Paths.get(s"$dir.rewrite")
+    spark.read.parquet(dir.toString)
+      .repartitionByRange(2, col("term"))
+      .sortWithinPartitions("term", "seg", "blk")
+      .write.parquet(tmp.toString)
+    Files.walk(dir).iterator().asScala.toSeq.reverse.foreach(Files.delete)
+    Files.move(tmp, dir)
+    store.commitSlice(meta.copy(segLocal = false))
+    val segsPerFile = Files.list(dir).iterator().asScala.map(_.toString)
+      .filter(_.endsWith(".parquet")).toSeq
+      .map(f => spark.read.parquet(f).select("seg").distinct().collect().map(_.getInt(0)).toSet)
+    assert(segsPerFile.size == 2 && (segsPerFile(0) intersect segsPerFile(1)).nonEmpty,
+      s"no segment spans two files: $segsPerFile")
+
+    // one scan partition per file (each file costs a whole partition), so
+    // the files are read whole and only the cleared flag can refuse
+    val s = spark.newSession()
+    s.conf.set("spark.sql.files.openCostInBytes", s.conf.get("spark.sql.files.maxPartitionBytes"))
+    val idx = store.open(s)
+    assert(!idx.slices.head.segLocal && idx.slices.tail.forall(_.segLocal))
+    assert(maxPartitionsPerSeg(idx) > 1, "the old layout must spread a segment over partitions")
+    assert(!idx.segmentLocalScan)
+    assert(idx.copy(slices = idx.slices.map(_.copy(segLocal = true))).segmentLocalScan)
+    assert(exchanges(s, idx) == (1, 1))
+    assertExact(s, idx, docs)
+    // a merge with the unflagged slice is unflagged too
+    assert(!store.compact(spark).segLocal)
+    val merged = store.open(spark)
+    assert(!merged.segmentLocalScan && exchanges(spark, merged) == (1, 1))
+    assertExact(spark, merged, docs)
+    store.dropAll()
+  }
+
+  test("merged slices keep the whole-segment flag: the reopened store stays local") {
+    val store = new IndexStore(Files.createTempDirectory("graft-mergeflag-").toString)
+    val batches = Seq(300, 120, 120).zipWithIndex.map { case (n, b) => pages(10 + b, n) }
+    for ((ps, b) <- batches.zipWithIndex) {
+      val df = spark.createDataFrame(ps.map { case (u, t) => (u, t, "en") }).toDF("url", "text", "lang")
+      // the bootstrap builds 2 slices, each batch appends one, and the
+      // second append merges past 3 slices
+      assert(StreamIngest.processIndexBatch(spark, df, b.toLong, store, cfg,
+        maxSlices = 3, vacuumGraceMs = Long.MaxValue))
+      store.vacuum(0L)
+    }
+    val slices = store.committedSlices
+    assert(slices.map(_.sliceId).max > 3, s"no merged slice: $slices")
+    assert(slices.forall(_.segLocal), s"a slice lost the flag: $slices")
+    assert(store.deadSlices.isEmpty)
+
+    val idx = store.open(spark)
+    assert(idx.segmentLocalScan && exchanges(spark, idx) == (0, 0))
+    val text = batches.flatten.toMap
+    val docs = idx.docs.select("doc_id", "url").collect()
+      .map(r => r.getLong(0) -> text(r.getString(1))).toSeq
+    assert(docs.size == batches.map(_.size).sum)
+    assertExact(spark, idx, docs)
+    store.dropAll()
+  }
+}
