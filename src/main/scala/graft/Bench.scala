@@ -9,6 +9,26 @@ import org.apache.spark.sql.functions._
 import graft.index.{IndexBuilder, IndexStore}
 import graft.query.Wand
 
+/** The local session every main (Bench, BenchExtra, Verify) runs on: AQE
+  * on, UTC, UI off; the caller picks cores, shuffle partitions, name and
+  * log level.
+  */
+private[graft] object LocalSession {
+  def apply(cores: Int, shufflePartitions: String, appName: String,
+      logLevel: String): SparkSession = {
+    val s = SparkSession.builder()
+      .master(s"local[$cores]")
+      .appName(appName)
+      .config("spark.sql.shuffle.partitions", shufflePartitions)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    s.sparkContext.setLogLevel(logLevel)
+    s
+  }
+}
+
 /** Benchmark main. Emits exactly ONE JSON line:
   *   {"metric":"total","value":<sec>,"unit":"sec","queries":{...},"sf":...,
   *    "index_build":{...},"query_latency_ms":{...},"scaling":{...}}
@@ -20,8 +40,6 @@ import graft.query.Wand
   */
 object Bench {
 
-  private def session(cores: Int): SparkSession = session(cores, cores * 4)
-
   /** `parts`: build sessions keep 4× cores (smaller sort/agg state per
     * task, better overlap through the one wide shuffle); the QUERY
     * session runs 1× cores — at gate scale every query is fixed-overhead
@@ -29,19 +47,9 @@ object Bench {
     * suite halves, 6.9→3.7 s minhash, at 32 vs 128 partitions; build
     * throughput is band-equal either way).
     */
-  private def session(cores: Int, parts: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-bench-$cores")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", parts.toString))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  private def session(cores: Int, parts: Int): SparkSession =
+    LocalSession(cores, sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", parts.toString),
+      s"graft-bench-$cores", "ERROR")
 
   private def timed[T](f: => T): (T, Double) = {
     val t0 = System.nanoTime()
@@ -57,7 +65,7 @@ object Bench {
       sys.env.get("SPARK_GRAFT_BENCH_POSITIONS").contains("1"))
 
   private[graft] def buildThroughput(cores: Int, nDocs: Long, positional: Boolean): Double = {
-    val spark = session(cores)
+    val spark = session(cores, cores * 4)
     try {
       val docs = Corpus.pages(spark, nDocs)
         .withColumn("doc_id", regexp_extract(col("url"), "/p/(\\d+)$", 1).cast("long"))

@@ -2,8 +2,6 @@ package graft
 
 import java.util.Locale
 
-import org.apache.spark.sql.SparkSession
-
 /** Extra benchmarks for optimization work (guide §1) — NOT the driver
   * contract. `Bench.scala` is the frozen measurement harness; this main
   * reproduces its phase-1 query methodology (same session config, same
@@ -23,16 +21,9 @@ object BenchExtra {
     val only = args.headOption.map(_.split(",").toSet)
     val currentQuery = new java.util.concurrent.atomic.AtomicReference[String]("_warmup")
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-benchextra-$cpus")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", cpus.toString))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession(cpus,
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", cpus.toString),
+      s"graft-benchextra-$cpus", "ERROR")
 
     // optional per-job breakdown (GRAFT_EXTRA_JOBLOG=1): job wall time +
     // description, for attributing a query's seconds to its Spark jobs

@@ -1,24 +1,19 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
+import graft.ingest.Fs
 /** Correctness dump: each SparkEntry.queries result → parquet, plus
-  * oracle_sql.json, for the DuckDB compare (`tools/check.py`). Exits
-  * non-zero, naming them, when any query throws. */
+  * oracle_sql.json, for the DuckDB compare (`tools/check.py`). `outDir`
+  * may be any Hadoop path. Each query's jobs carry its name as their job
+  * description. Exits non-zero, naming them, when any query throws. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
+    val spark = LocalSession(cpus.toInt, cpus, "graft-verify", "WARN")
+    Fs.mkdirs(outDir)
     // a failing query must not hide the others' results: every query
     // runs, and the failures fail the process once everything is written
     val failed = SparkEntry.queries.flatMap { case (name, fn) =>
+      spark.sparkContext.setJobDescription(name)
       try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
         None
@@ -27,21 +22,9 @@ object Verify {
         Some(name)
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // FlatJson escapes quotes, backslashes and ALL control chars (<0x20):
+    // a tab or CR in the SQL would otherwise fail the checker's json.load
+    Fs.replace(s"$outDir/oracle_sql.json", graft.index.FlatJson.render(SparkEntry.oracleSql))
     spark.stop()
     if (failed.nonEmpty) {
       System.err.println(s"[verify] ${failed.size} queries failed: ${failed.mkString(", ")}")

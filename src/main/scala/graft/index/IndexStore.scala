@@ -1,14 +1,13 @@
 package graft.index
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.datasources.FileScanRDD
 import org.apache.spark.sql.functions._
+
+import graft.ingest.Fs
 
 /** One committed build slice: a contiguous docID-segment range with its
   * lineage + metrics (the north rule's per-partition checkpoint record).
@@ -29,7 +28,11 @@ case class SliceMeta(
     segLocal: Boolean = false)
 
 /** Parquet-backed index storage with a JSON manifest committed by atomic
-  * rename. Layout:
+  * rename. `root` is any Hadoop path (a plain path, `file:`, `hdfs://`,
+  * `s3a://`); every file of the store goes through the FS its parquet
+  * uses (`graft.ingest.Fs`). The commit primitive is `Fs.replace`: one
+  * rename(2) on the local FS, `FileContext.rename(OVERWRITE)` on HDFS
+  * (atomic), best-effort on object stores. Layout:
   * {{{
   *   <root>/manifest.json
   *   <root>/postings/slice=<id>/  (parquet)
@@ -43,13 +46,14 @@ case class SliceMeta(
   * slices are skipped on restart, in-flight slices are rebuilt.
   */
 final class IndexStore(val root: String) {
-  private val rootPath: Path = Paths.get(root)
-  private def manifestPath = rootPath.resolve("manifest.json")
+  private val manifestPath = s"$root/manifest.json"
 
-  def exists: Boolean = Files.exists(manifestPath)
+  def exists: Boolean = Fs.exists(manifestPath)
 
-  def committedSlices: Seq[SliceMeta] =
-    if (!exists) Seq.empty else ManifestJson.parse(Files.readString(manifestPath))._1
+  private def manifest: (Seq[SliceMeta], Map[String, String]) =
+    Fs.readIfExists(manifestPath).map(ManifestJson.parse).getOrElse((Nil, Map.empty))
+
+  def committedSlices: Seq[SliceMeta] = manifest._1
 
   /** Key-value facts that must commit ATOMICALLY with a slice (e.g. the
     * streaming replay guard's `stream.lastBatchId`) ride the manifest
@@ -57,17 +61,14 @@ final class IndexStore(val root: String) {
     * crash window can separate them (unlike the settings file, a second
     * rename).
     */
-  def manifestProps: Map[String, String] =
-    if (!exists) Map.empty else ManifestJson.parse(Files.readString(manifestPath))._2
+  def manifestProps: Map[String, String] = manifest._2
 
   /** Commit a slice: append to the manifest via write-tmp + atomic rename.
     * `props` merge into the manifest's props map in the SAME commit.
     */
   def commitSlice(meta: SliceMeta, props: Map[String, String] = Map.empty): Unit = {
     requireUnreservedKeys(props)
-    val (slices, oldProps) =
-      if (!exists) (Seq.empty[SliceMeta], Map.empty[String, String])
-      else ManifestJson.parse(Files.readString(manifestPath))
+    val (slices, oldProps) = manifest
     val updated = slices.filterNot(_.sliceId == meta.sliceId) :+ meta
     // committing an id REVIVES it: drop any dead-list entry for it in the
     // SAME rename. A fixed-id rebuild over a previously-merged store (the
@@ -109,18 +110,12 @@ final class IndexStore(val root: String) {
     */
   def setManifestProps(props: Map[String, String]): Unit = {
     requireUnreservedKeys(props)
-    val (slices, oldProps) =
-      if (!exists) (Seq.empty[SliceMeta], Map.empty[String, String])
-      else ManifestJson.parse(Files.readString(manifestPath))
+    val (slices, oldProps) = manifest
     writeManifest(slices, oldProps ++ props)
   }
 
-  private def writeManifest(slices: Seq[SliceMeta], props: Map[String, String]): Unit = {
-    Files.createDirectories(rootPath)
-    val tmp = rootPath.resolve(s"manifest.json.tmp")
-    Files.write(tmp, ManifestJson.render(slices, props).getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, manifestPath, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def writeManifest(slices: Seq[SliceMeta], props: Map[String, String]): Unit =
+    Fs.replace(manifestPath, ManifestJson.render(slices, props))
 
   /** Segment-merge compaction — the `_forcemerge` analogue (reference
     * opensearch_base_manager.py:379-387): all committed slices become one
@@ -191,30 +186,21 @@ final class IndexStore(val root: String) {
     * Spark's hidden files (`_SUCCESS`, `.crc`) are not data and stay.
     */
   private def unionFiles(table: String, from: Seq[Int], to: Int): Unit = {
-    val dst = Paths.get(slicePath(table, to))
-    deleteTree(dst)
-    Files.createDirectories(dst)
+    val dst = slicePath(table, to)
+    Fs.deleteRecursive(dst)
+    Fs.mkdirs(dst)
     for {
       id <- from
-      f <- scala.util.Using.resource(Files.list(Paths.get(slicePath(table, id))))(
-        _.iterator().asScala.toList)
-      name = f.getFileName.toString
+      name <- Fs.childNames(slicePath(table, id))
       if !name.startsWith("_") && !name.startsWith(".")
-    } Files.copy(f, dst.resolve(s"s$id-$name"))
+    } Fs.copy(s"${slicePath(table, id)}/$name", s"$dst/s$id-$name")
   }
 
   /** Real on-disk posting bytes of a slice — a zero here would let any
     * index slip past serving memory budgets.
     */
-  private[index] def postingBytes(sliceId: Int): Long = {
-    val p = Paths.get(slicePath("postings", sliceId))
-    if (!Files.exists(p)) 0L
-    else Files.walk(p).iterator().asScala.filter(Files.isRegularFile(_)).map(Files.size).sum
-  }
-
-  private def deleteTree(p: Path): Unit =
-    if (Files.exists(p))
-      Files.walk(p).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
+  private[index] def postingBytes(sliceId: Int): Long =
+    Fs.treeBytes(slicePath("postings", sliceId))
 
   private val DeadPrefix = "dead."
 
@@ -259,16 +245,12 @@ final class IndexStore(val root: String) {
     var bytes = 0L
     ripe.keys.foreach { id =>
       Seq("postings", "terms", "norms", "docs").foreach { t =>
-        val p = Paths.get(slicePath(t, id))
-        if (Files.exists(p)) {
-          val files = Files.walk(p).iterator().asScala.toSeq.reverse
-          bytes += files.filter(Files.isRegularFile(_)).map(Files.size).sum
-          files.foreach(Files.deleteIfExists(_))
-        }
+        bytes += Fs.treeBytes(slicePath(t, id))
+        Fs.deleteRecursive(slicePath(t, id))
       }
     }
     if (ripe.nonEmpty || revived.nonEmpty) {
-      val (slices, props) = ManifestJson.parse(Files.readString(manifestPath))
+      val (slices, props) = manifest
       writeManifest(slices,
         props -- (ripe.keys ++ revived).map(id => s"$DeadPrefix$id"))
     }
@@ -298,7 +280,7 @@ final class IndexStore(val root: String) {
     merged.toSeq
   }
 
-  def dropAll(): Unit = deleteTree(rootPath)
+  def dropAll(): Unit = Fs.deleteRecursive(root)
 
   def slicePath(table: String, sliceId: Int): String =
     s"$root/$table/slice=$sliceId"
@@ -332,18 +314,13 @@ final class IndexStore(val root: String) {
   // so drop-and-recreate can round-trip user settings through
   // `Cleanup.recreateSettings` without the caller re-supplying them. ----
 
-  private def kvPath(kind: String) = rootPath.resolve(s"$kind.json")
+  private def kvPath(kind: String) = s"$root/$kind.json"
 
-  private def writeKv(kind: String, m: Map[String, String]): Unit = {
-    Files.createDirectories(rootPath)
-    val tmp = rootPath.resolve(s"$kind.json.tmp")
-    Files.write(tmp, FlatJson.render(m).getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, kvPath(kind), StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def writeKv(kind: String, m: Map[String, String]): Unit =
+    Fs.replace(kvPath(kind), FlatJson.render(m))
 
   private def readKv(kind: String): Map[String, String] =
-    if (!Files.exists(kvPath(kind))) Map.empty
-    else FlatJson.parse(Files.readString(kvPath(kind)))
+    Fs.readIfExists(kvPath(kind)).map(FlatJson.parse).getOrElse(Map.empty)
 
   /** Engine-assigned identity settings, stamped at first write (the
     * reference's creation_date/uuid/provided_name class — exactly what
@@ -357,7 +334,7 @@ final class IndexStore(val root: String) {
       if (existing.isEmpty) Map(
         "creation_date" -> System.currentTimeMillis().toString,
         "uuid" -> java.util.UUID.randomUUID().toString,
-        "provided_name" -> rootPath.getFileName.toString)
+        "provided_name" -> new org.apache.hadoop.fs.Path(root).getName)
       else existing.view.filterKeys(immutableKey).toMap
     // merge semantics (the reference's PUT-settings): supplied keys update,
     // unmentioned user keys survive, immutable keys are never writable
@@ -387,35 +364,41 @@ case class OpenIndex(
     docs: DataFrame,
     slices: Seq[SliceMeta]) {
   /** Corpus stats of THIS snapshot, from its own pinned norms (never the
-    * store's manifest, which may have moved on since): one job over the
-    * norms, plus the term count.
+    * store's manifest, which may have moved on since), taken from the
+    * `termsLocal` and `normsBroadcast` fills; past their bounds, from jobs.
     */
-  lazy val stats: IndexStats = IndexStats.fromNorms(norms, terms.count())
+  lazy val stats: IndexStats = {
+    val nTerms = termsLocal.fold(terms.count())(_.size.toLong)
+    normsBroadcast.fold(IndexStats.fromNorms(norms, nTerms))(
+      bc => IndexStats.fromNorms(bc.value.valuesIterator, nTerms))
+  }
 
   /** Driver-side term→df lookup for the low-latency query path: resolves
-    * query-term stats without a per-query Spark job (one cached collect at
-    * first use). Bounded: past 2^20 terms (web-scale vocabularies don't
-    * fit driver memory) queries fall back to the filtered-collect path,
-    * which row-group stats keep cheap on the compacted terms table.
+    * query-term stats without a per-query Spark job (one take of at most
+    * 2^20 + 1 rows at first use, which is also the bound check). Bounded:
+    * past 2^20 terms (web-scale vocabularies don't fit driver memory)
+    * queries fall back to the filtered-collect path, which row-group stats
+    * keep cheap on the compacted terms table.
     */
-  lazy val termsLocal: Option[Map[String, Long]] =
-    if (terms.count() <= (1L << 20))
-      Some(terms.collect().map(t => t.term -> t.df).toMap)
-    else None
+  lazy val termsLocal: Option[Map[String, Long]] = {
+    val rows = terms.take((1 << 20) + 1)
+    if (rows.length <= (1 << 20)) Some(rows.map(t => t.term -> t.df).toMap) else None
+  }
 
   /** Norms broadcast for the low-latency query path: collected once per
     * open index when the segment count is modest (norms are ~5 bytes/doc;
     * 4096 segs of 64Ki docs ≈ 1.3 GB corpus-side but only the doclen
-    * payload travels). Past `graft.query.broadcastNormsMaxSegs` segments
-    * (default 4096) it is None and `Segments.perSegment` cogroups the
-    * norms by segment instead — at 10^12 docs the norms table is
-    * executor-side state, not driver-broadcastable.
+    * payload travels). The count checked is the slices' segment ranges,
+    * no job. Past `graft.query.broadcastNormsMaxSegs` segments (default
+    * 4096) it is None and `Segments.perSegment` cogroups the norms by
+    * segment instead — at 10^12 docs the norms table is executor-side
+    * state, not driver-broadcastable.
     */
   lazy val normsBroadcast: Option[org.apache.spark.broadcast.Broadcast[Map[Int, SegNorms]]] = {
     val spark = docs.sparkSession
     val maxSegs = spark.conf.getOption("graft.query.broadcastNormsMaxSegs")
       .map(_.toInt).getOrElse(4096)
-    if (norms.count() <= maxSegs)
+    if (slices.map(s => s.segHi - s.segLo + 1L).sum <= maxSegs)
       Some(spark.sparkContext.broadcast(norms.collect().map(n => n.seg -> n).toMap))
     else None
   }
@@ -451,8 +434,10 @@ case class OpenIndex(
   @volatile private var wholeFileScan: ((Map[String, String], Int), Boolean) = null
 }
 
-/** Flat string→string JSON object (settings/mappings files, no deps). */
-private[index] object FlatJson {
+/** Flat string→string JSON object (settings/mappings files and
+  * `Verify`'s oracle_sql.json, no deps).
+  */
+private[graft] object FlatJson {
   private def esc(s: String): String =
     s.flatMap {
       case '"' => "\\\""
@@ -565,26 +550,18 @@ private[index] object ManifestJson {
 
 /** Alias = atomic indirection pointer (reference switch_alias.py:306-329):
   * a tiny JSON manifest mapping alias → index root, switched by atomic
-  * rename so readers never observe a half-switch.
+  * rename so readers never observe a half-switch. `dir` is any Hadoop
+  * path; the switch is `IndexStore`'s commit primitive, `Fs.replace`
+  * (atomic on the local FS and HDFS, best-effort on object stores).
   */
 final class AliasCatalog(dir: String) {
-  private val dirPath = Paths.get(dir)
-  private def path(alias: String) = dirPath.resolve(s"$alias.alias.json")
+  private def path(alias: String) = s"$dir/$alias.alias.json"
 
-  def resolve(alias: String): Option[String] =
-    if (!Files.exists(path(alias))) None
-    else {
-      val s = Files.readString(path(alias))
-      val m = """"target"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(s)
-      m.map(_.group(1))
-    }
+  def resolve(alias: String): Option[String] = Fs.readIfExists(path(alias))
+    .flatMap(""""target"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(_)).map(_.group(1))
 
-  def set(alias: String, target: String): Unit = {
-    Files.createDirectories(dirPath)
-    val tmp = dirPath.resolve(s"$alias.alias.json.tmp")
-    Files.write(tmp, s"""{"alias":"$alias","target":"$target"}""".getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, path(alias), StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
+  def set(alias: String, target: String): Unit =
+    Fs.replace(path(alias), s"""{"alias":"$alias","target":"$target"}""")
 
-  def delete(alias: String): Unit = Files.deleteIfExists(path(alias))
+  def delete(alias: String): Unit = Fs.delete(path(alias))
 }

@@ -266,22 +266,19 @@ object FileIngest {
     * (main absent) is the counter's sole copy and must abort if corrupt.
     */
   private def readSeqFile(path: String, lenient: Boolean): Long =
-    if (!Fs.exists(path)) 0L
-    else
-      try Fs.readString(path).trim.toLong
-      catch {
-        case _: java.io.FileNotFoundException => 0L // raced delete
-        // NumberFormatException = unparseable bytes; ChecksumException =
-        // the local/checksum FS detected out-of-band modification — both
-        // are corruption of the authoritative counter
-        case e @ (_: NumberFormatException | _: org.apache.hadoop.fs.ChecksumException)
-            if !lenient =>
-          throw new IllegalStateException(
-            s"sequence counter $path is corrupt — refusing to reset to 0 " +
-              "(a reset would invert last-write-wins for every future write); " +
-              "restore it to the highest previously-issued value", e)
-        case _: NumberFormatException | _: org.apache.hadoop.fs.ChecksumException => 0L
-      }
+    try Fs.readIfExists(path).fold(0L)(_.trim.toLong) // absent or raced delete: 0
+    catch {
+      // NumberFormatException = unparseable bytes; ChecksumException =
+      // the local/checksum FS detected out-of-band modification — both
+      // are corruption of the authoritative counter
+      case e @ (_: NumberFormatException | _: org.apache.hadoop.fs.ChecksumException)
+          if !lenient =>
+        throw new IllegalStateException(
+          s"sequence counter $path is corrupt — refusing to reset to 0 " +
+            "(a reset would invert last-write-wins for every future write); " +
+            "restore it to the highest previously-issued value", e)
+      case _: NumberFormatException | _: org.apache.hadoop.fs.ChecksumException => 0L
+    }
 
   /** Compaction-time LWW: physically rewrite the target to one row per id
     * (keeping the seq column so later appends still resolve), preserving
@@ -549,18 +546,10 @@ object FileIngest {
       files.zipWithIndex.reverse.map { case (f, i) => f -> (seqBase + i) }.toMap
 
     // group by parse recipe: (kind, header). Header reads are driver-side
-    // metadata-only (first line), no Spark job. LOCAL-FS probe: on a
-    // remote FS (hdfs/s3a) it returns None and the file takes the serial
-    // per-file path — correct, just ungrouped (remote deployments should
-    // group by directory convention instead).
+    // metadata-only (first line, through the FS the data is read from), no
+    // Spark job; an unreadable header takes the serial per-file path
     def headerOf(p: String): Option[String] =
-      try {
-        val s = java.nio.file.Files.lines(java.nio.file.Paths.get(p))
-        try {
-          val first = s.findFirst()
-          if (first.isPresent) Some(first.get) else None
-        } finally s.close()
-      } catch { case _: Exception => None }
+      try Fs.firstLine(p) catch { case _: Exception => None }
 
     // at 1M files a serial first-line loop is driver-bound (each probe is
     // an open+read+close round-trip); a bounded pool overlaps the I/O —

@@ -1,5 +1,10 @@
 package graft.ingest
 
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, FileUtil, LocalFileSystem,
+  Options, Path, RawLocalFileSystem}
+
 /** Bounded driver-side retry with exponential backoff for transient sink
   * failures — the reference retries its bulk/ledger HTTP calls 3 times at
   * 1s/2s/4s before failing the unit (opensearch_base_manager.py:97-132).
@@ -54,48 +59,48 @@ object Fs {
     .map(_.sparkContext.hadoopConfiguration)
     .getOrElse(new org.apache.hadoop.conf.Configuration())
 
-  def exists(path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(conf).exists(p)
+  /** `f` over `path` and the FS it lives on. `raw` picks, on the local FS,
+    * the raw FS beneath the checksummed one: a write through it leaves no
+    * `.crc` sidecar, and a rename is one rename(2).
+    */
+  private def on[T](path: String, raw: Boolean = false)(f: (FileSystem, Path) => T): T = {
+    val p = new Path(path)
+    f(p.getFileSystem(conf) match {
+      case local: LocalFileSystem if raw => local.getRaw
+      case fs => fs
+    }, p)
   }
+
+  def exists(path: String): Boolean = on(path)(_.exists(_))
 
   /** Small sidecar writes/reads (e.g. a layout's stats.json) through the
     * same FS the data uses — java.nio would silently target the LOCAL fs
     * for an hdfs:///s3a:// layout and fail only after the heavy writes.
     */
-  def writeString(path: String, s: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val out = p.getFileSystem(conf).create(p, true)
-    try out.write(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+  def writeString(path: String, s: String): Unit = on(path) { (fs, p) =>
+    val out = fs.create(p, true)
+    try out.write(s.getBytes(UTF_8))
     finally out.close()
   }
 
-  def readString(path: String): String = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val in = p.getFileSystem(conf).open(p)
-    try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
+  def readString(path: String): String = on(path) { (fs, p) =>
+    val in = fs.open(p)
+    try new String(in.readAllBytes(), UTF_8)
     finally in.close()
   }
 
-  def mkdirs(path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(conf).mkdirs(p)
-    ()
-  }
+  /** `readString`, or None when the file does not exist. */
+  def readIfExists(path: String): Option[String] =
+    try Some(readString(path)) catch { case _: java.io.FileNotFoundException => None }
 
-  def delete(path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(conf).delete(p, false)
-  }
+  def mkdirs(path: String): Unit = on(path)(_.mkdirs(_))
 
-  def rename(src: String, dst: String): Boolean = {
-    val s = new org.apache.hadoop.fs.Path(src)
-    s.getFileSystem(conf).rename(s, new org.apache.hadoop.fs.Path(dst))
-  }
+  def delete(path: String): Boolean = on(path)(_.delete(_, false))
 
-  def modTimeMs(path: String): Option[Long] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    try Some(p.getFileSystem(conf).getFileStatus(p).getModificationTime)
+  def rename(src: String, dst: String): Boolean = on(src)(_.rename(_, new Path(dst)))
+
+  def modTimeMs(path: String): Option[Long] = on(path) { (fs, p) =>
+    try Some(fs.getFileStatus(p).getModificationTime)
     catch { case _: java.io.FileNotFoundException => None }
   }
 
@@ -111,7 +116,7 @@ object Fs {
     * caveat as every Hadoop lock file.
     */
   def createExclusive(path: String, content: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
     val fs = p.getFileSystem(conf)
     val scheme = Option(p.toUri.getScheme).getOrElse(fs.getUri.getScheme)
     if (scheme == null || scheme == "file") {
@@ -127,7 +132,7 @@ object Fs {
     } else
       try {
         val out = fs.create(p, false)
-        try out.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        try out.write(content.getBytes(UTF_8))
         finally out.close()
         true
       } catch {
@@ -135,10 +140,45 @@ object Fs {
       }
   }
 
+  /** Replace a small file's content by one atomic rename of `<path>.tmp`
+    * over it, so a reader sees the old content or the new, never a torn
+    * file. On the local FS the rename is rename(2); elsewhere it is
+    * `FileContext.rename(OVERWRITE)`, atomic on HDFS and best-effort on
+    * object stores (the same caveat as `createExclusive`). Never
+    * `FileSystem.rename(OVERWRITE)`: it deletes the target, then renames.
+    */
+  def replace(path: String, content: String): Unit = on(path, raw = true) { (fs, p) =>
+    val tmp = new Path(s"$path.tmp")
+    val out = fs.create(tmp, true)
+    try out.write(content.getBytes(UTF_8))
+    finally out.close()
+    fs match {
+      case _: RawLocalFileSystem =>
+        if (!fs.rename(tmp, p)) throw new java.io.IOException(s"rename $tmp -> $p failed")
+      case _ => FileContext.getFileContext(fs.getUri, conf)
+        .rename(fs.makeQualified(tmp), fs.makeQualified(p), Options.Rename.OVERWRITE)
+    }
+  }
+
+  /** Bytes of every file under `path`, hidden ones too (0 when missing). */
+  def treeBytes(path: String): Long = on(path, raw = true) { (fs, p) =>
+    if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
+  }
+
+  /** Copy one file; fails when `dst` exists. */
+  def copy(src: String, dst: String): Unit = on(src, raw = true) { (srcFs, s) =>
+    on(dst, raw = true)((dstFs, d) => FileUtil.copy(srcFs, s, dstFs, d, false, false, conf))
+  }
+
+  /** First line of a file (None when empty); non-UTF-8 bytes throw. */
+  def firstLine(path: String): Option[String] = on(path) { (fs, p) =>
+    val in = new java.io.BufferedReader(
+      new java.io.InputStreamReader(fs.open(p), UTF_8.newDecoder()))
+    try Option(in.readLine()) finally in.close()
+  }
+
   /** Immediate children's names of a directory (empty if missing). */
-  def childNames(dir: String): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(conf)
+  def childNames(dir: String): Seq[String] = on(dir) { (fs, p) =>
     if (!fs.exists(p)) Seq.empty
     else fs.listStatus(p).toSeq.map(_.getPath.getName)
   }
@@ -157,14 +197,14 @@ object Fs {
     * is NOT activity: there is nothing to delete.
     */
   def anyMtimeAtOrAfter(path: String, cutoffMs: Long): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
     val fs = p.getFileSystem(conf)
     // ONLY a not-found mid-walk maps to "activity" — that is precisely a
     // concurrent writer/cleaner mutating the tree. A missing ROOT is no
     // activity (nothing left to act on — the caller's delete is a no-op).
     // Other failures (permissions, FS outages) PROPAGATE: mapping them to
     // "live forever" would silently disable GC with no signal.
-    def walk(st: org.apache.hadoop.fs.FileStatus): Boolean =
+    def walk(st: FileStatus): Boolean =
       st.getModificationTime >= cutoffMs || (st.isDirectory && {
         val kids =
           try fs.listStatus(st.getPath)
@@ -175,10 +215,7 @@ object Fs {
     catch { case _: java.io.FileNotFoundException => false }
   }
 
-  def deleteRecursive(path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(conf).delete(p, true)
-  }
+  def deleteRecursive(path: String): Boolean = on(path)(_.delete(_, true))
 }
 
 /** Retry-safe parquet append: `mode("append")` + `Retry` can duplicate

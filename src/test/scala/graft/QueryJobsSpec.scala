@@ -14,7 +14,8 @@ import graft.query.{Phrase, Wand}
 /** Spark jobs a warm Spark-path query runs: once an open index holds its
   * stats, term stats and norms, WAND and phrase each answer in one scan of
   * their terms' blocks, scoring each segment in the partition that read it
-  * — one result job and no shuffle-map job.
+  * — one result job and no shuffle-map job. Filling those reads each table
+  * once.
   */
 class QueryJobsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -33,7 +34,8 @@ class QueryJobsSpec extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
-  test("a warm phrase top-k and a warm WAND top-k run one job each") {
+  /** A fresh two-slice positional store over 300 short documents. */
+  private def twoSliceStore(): IndexStore = {
     import spark.implicits._
     val rnd = new scala.util.Random(5)
     val vocab = Array("red", "blue", "green", "fox", "dog", "run")
@@ -46,6 +48,11 @@ class QueryJobsSpec extends AnyFunSuite {
     IndexBuilder.build(spark, df, store,
       IndexBuilder.Config(segSize = 64, blockSize = 16, slices = 2, positions = true))
     assert(store.committedSlices.size == 2)
+    store
+  }
+
+  test("a warm phrase top-k and a warm WAND top-k run one job each") {
+    val store = twoSliceStore()
     val idx = store.open(spark)
     for ((name, query) <- Seq[(String, () => Any)](
         "phrase" -> (() => Phrase.topK(spark, idx, "blue green", 10).collect()),
@@ -55,6 +62,21 @@ class QueryJobsSpec extends AnyFunSuite {
       info(s"warm $name top-k: $jobs jobs")
       assert(jobs == 1, s"warm $name top-k ran $jobs jobs")
     }
+    store.dropAll()
+  }
+
+  test("open, stats and the first WAND top-k read each table once") {
+    val store = twoSliceStore()
+    val jobs = jobsOf {
+      val idx = store.open(spark)
+      idx.stats
+      Wand.topK(spark, idx, "fox dog", 10).collect()
+    }
+    info(s"open + stats + first WAND top-k: $jobs jobs")
+    // a schema job per table at open, three for the terms fill (aggregate
+    // shuffle, cache, bounded take), the norms collect and the query; 16
+    // when stats counted the terms and norms in jobs of their own
+    assert(jobs <= 9, s"open + stats + first WAND top-k ran $jobs jobs")
     store.dropAll()
   }
 }
