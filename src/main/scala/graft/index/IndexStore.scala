@@ -364,44 +364,58 @@ case class OpenIndex(
     docs: DataFrame,
     slices: Seq[SliceMeta]) {
   /** Corpus stats of THIS snapshot, from its own pinned norms (never the
-    * store's manifest, which may have moved on since), taken from the
-    * `termsLocal` and `normsBroadcast` fills; past their bounds, from jobs.
+    * store's manifest, which may have moved on since): from the norms
+    * broadcast if a query has already filled it, else one job over the
+    * norms; plus the term count, shared with `termsLocal`.
     */
-  lazy val stats: IndexStats = {
-    val nTerms = termsLocal.fold(terms.count())(_.size.toLong)
-    normsBroadcast.fold(IndexStats.fromNorms(norms, nTerms))(
-      bc => IndexStats.fromNorms(bc.value.valuesIterator, nTerms))
-  }
+  lazy val stats: IndexStats =
+    if (normsCollected) IndexStats.fromNorms(normsBroadcast.get.value.valuesIterator, termCount)
+    else IndexStats.fromNorms(norms, termCount)
+
+  private lazy val termCount: Long = terms.count()
 
   /** Driver-side term→df lookup for the low-latency query path: resolves
-    * query-term stats without a per-query Spark job (one take of at most
-    * 2^20 + 1 rows at first use, which is also the bound check). Bounded:
-    * past 2^20 terms (web-scale vocabularies don't fit driver memory)
-    * queries fall back to the filtered-collect path, which row-group stats
-    * keep cheap on the compacted terms table.
+    * query-term stats without a per-query Spark job (one cached collect at
+    * first use). Bounded: past 2^20 terms (web-scale vocabularies don't
+    * fit driver memory) queries fall back to the filtered-collect path,
+    * which row-group stats keep cheap on the compacted terms table.
     */
-  lazy val termsLocal: Option[Map[String, Long]] = {
-    val rows = terms.take((1 << 20) + 1)
-    if (rows.length <= (1 << 20)) Some(rows.map(t => t.term -> t.df).toMap) else None
-  }
+  lazy val termsLocal: Option[Map[String, Long]] =
+    if (termCount <= (1L << 20))
+      Some(terms.collect().map(t => t.term -> t.df).toMap)
+    else None
 
   /** Norms broadcast for the low-latency query path: collected once per
     * open index when the segment count is modest (norms are ~5 bytes/doc;
     * 4096 segs of 64Ki docs ≈ 1.3 GB corpus-side but only the doclen
-    * payload travels). The count checked is the slices' segment ranges,
-    * no job. Past `graft.query.broadcastNormsMaxSegs` segments (default
-    * 4096) it is None and `Segments.perSegment` cogroups the norms by
-    * segment instead — at 10^12 docs the norms table is executor-side
-    * state, not driver-broadcastable.
+    * payload travels). The count checked is the number of segments the
+    * pinned slices' ranges cover, an upper bound on the norms rows and no
+    * job. Past `graft.query.broadcastNormsMaxSegs` segments (default 4096)
+    * it is None and `Segments.perSegment` cogroups the norms by segment
+    * instead — at 10^12 docs the norms table is executor-side state, not
+    * driver-broadcastable.
     */
   lazy val normsBroadcast: Option[org.apache.spark.broadcast.Broadcast[Map[Int, SegNorms]]] = {
     val spark = docs.sparkSession
     val maxSegs = spark.conf.getOption("graft.query.broadcastNormsMaxSegs")
       .map(_.toInt).getOrElse(4096)
-    if (slices.map(s => s.segHi - s.segLo + 1L).sum <= maxSegs)
-      Some(spark.sparkContext.broadcast(norms.collect().map(n => n.seg -> n).toMap))
-    else None
+    if (segsCovered <= maxSegs) {
+      val bc = spark.sparkContext.broadcast(norms.collect().map(n => n.seg -> n).toMap)
+      collected = true
+      Some(bc)
+    } else None
   }
+  /** Whether `normsBroadcast` has collected the norms to the driver. */
+  private[graft] def normsCollected: Boolean = collected
+  @volatile private var collected = false
+
+  // segments in the union of the slices' [segLo, segHi]: a merge of
+  // non-adjacent slices spans the slices between, so the ranges may overlap
+  private def segsCovered: Long =
+    slices.sortBy(_.segLo).foldLeft((0L, Long.MinValue)) { case ((n, end), s) =>
+      val lo = math.max(s.segLo.toLong, end + 1)
+      (n + math.max(0L, s.segHi - lo + 1), math.max(end, s.segHi.toLong))
+    }._1
 
   /** Whether each segment's blocks sit in exactly one scan partition of
     * `postings`, so `Segments.perSegment` can score a segment where it is

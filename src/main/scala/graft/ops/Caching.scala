@@ -26,8 +26,7 @@ object DropStats {
   * it, but a long-lived session running many ops (the driver's 41-query
   * bench JVM) must not accumulate block-manager state — so the op
   * materializes its (small) output, releases the persisted bases, and
-  * returns the result as a local relation, or, past 1 MiB on the driver,
-  * as a broadcast read by one task per core.
+  * returns the result as a local relation.
   *
   * Outputs above `MaterializeCapRows` (never at gate scale; conceivable at
   * web scale) fall back to returning the lazy plan with the bases still
@@ -87,15 +86,7 @@ private[ops] object CacheScope {
     }
     if (rows.length <= capRows) {
       cached.foreach(_.unpersist(blocking = true))
-      if (org.apache.spark.util.SizeEstimator.estimate(rows) <= (1L << 20))
-        spark.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      else {
-        // a local relation's rows ride in its scan tasks (q_dedup_simhash at
-        // sf0.1: one 5 MiB task); a broadcast ships them once per executor
-        val bc = spark.sparkContext.broadcast(rows)
-        spark.createDataFrame(
-          spark.sparkContext.parallelize(rows.indices).map(bc.value(_)), out.schema)
-      }
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
     } else out
   }
 }

@@ -9,13 +9,13 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.index.{IndexBuilder, IndexStore}
-import graft.query.{Phrase, Wand}
+import graft.query.{Phrase, Serving, Wand}
 
 /** Spark jobs a warm Spark-path query runs: once an open index holds its
   * stats, term stats and norms, WAND and phrase each answer in one scan of
   * their terms' blocks, scoring each segment in the partition that read it
-  * — one result job and no shuffle-map job. Filling those reads each table
-  * once.
+  * — one result job and no shuffle-map job. Filling those counts the term
+  * stats once, and an open that wants only the stats collects no norms.
   */
 class QueryJobsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -34,8 +34,10 @@ class QueryJobsSpec extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
-  /** A fresh two-slice positional store over 300 short documents. */
-  private def twoSliceStore(): IndexStore = {
+  /** A fresh positional store of `slices` slices over 300 short documents
+    * in five segments.
+    */
+  private def slicedStore(slices: Int = 2): IndexStore = {
     import spark.implicits._
     val rnd = new scala.util.Random(5)
     val vocab = Array("red", "blue", "green", "fox", "dog", "run")
@@ -46,13 +48,13 @@ class QueryJobsSpec extends AnyFunSuite {
       .withColumn("lang", lit("en"))
     val store = new IndexStore(Files.createTempDirectory("graft-jobs-").toString)
     IndexBuilder.build(spark, df, store,
-      IndexBuilder.Config(segSize = 64, blockSize = 16, slices = 2, positions = true))
-    assert(store.committedSlices.size == 2)
+      IndexBuilder.Config(segSize = 64, blockSize = 16, slices = slices, positions = true))
+    assert(store.committedSlices.size == slices)
     store
   }
 
   test("a warm phrase top-k and a warm WAND top-k run one job each") {
-    val store = twoSliceStore()
+    val store = slicedStore()
     val idx = store.open(spark)
     for ((name, query) <- Seq[(String, () => Any)](
         "phrase" -> (() => Phrase.topK(spark, idx, "blue green", 10).collect()),
@@ -65,18 +67,40 @@ class QueryJobsSpec extends AnyFunSuite {
     store.dropAll()
   }
 
-  test("open, stats and the first WAND top-k read each table once") {
-    val store = twoSliceStore()
+  test("open, stats and the first WAND top-k count the term stats once") {
+    val store = slicedStore()
     val jobs = jobsOf {
       val idx = store.open(spark)
       idx.stats
       Wand.topK(spark, idx, "fox dog", 10).collect()
     }
     info(s"open + stats + first WAND top-k: $jobs jobs")
-    // a schema job per table at open, three for the terms fill (aggregate
-    // shuffle, cache, bounded take), the norms collect and the query; 16
-    // when stats counted the terms and norms in jobs of their own
-    assert(jobs <= 9, s"open + stats + first WAND top-k ran $jobs jobs")
+    // a schema job per table at open, four for the one term count (the
+    // aggregate's shuffle and the cache), the stats fold over the norms,
+    // the terms collect, the norms collect and the query; 16 when the
+    // term-stats and norms fills each ran a count of their own
+    assert(jobs <= 12, s"open + stats + first WAND top-k ran $jobs jobs")
+    store.dropAll()
+  }
+
+  test("openShard takes its stats without collecting every segment's norms") {
+    val store = slicedStore()
+    val idx = store.open(spark)
+    val shard = Serving.openShard(idx, 1, 2, 2L << 30)
+    assert(!idx.normsCollected, "openShard collected the whole norms table to the driver")
+    Wand.topK(spark, idx, "fox dog", 10).collect()
+    assert(idx.normsCollected && shard.stats == idx.stats)
+    store.dropAll()
+  }
+
+  test("the norms broadcast bound counts a merged slice's segments once") {
+    val store = slicedStore(3) // segments [0, 1], [2, 3], [4]
+    store.mergeSlices(spark, Seq(0, 2)) // [0, 4] spans the slice left between
+    assert(store.committedSlices.map(s => s.segHi - s.segLo + 1).sum == 7)
+    val five = spark.newSession()
+    five.conf.set("graft.query.broadcastNormsMaxSegs", "5")
+    val idx = store.open(five)
+    assert(idx.normsBroadcast.map(_.value.size).contains(5))
     store.dropAll()
   }
 }
