@@ -494,10 +494,29 @@ object SparkEntry {
         octet_length(col("text").cast("binary")).as("n_bytes"))),
 
     // ---- Window: deterministic dense id assignment (§2.8 oracle form) ----
-    "q_docid_window" -> ((s, d) =>
-      tbl(s, d, "documents").select(col("doc_id"),
-        row_number().over(Window.orderBy(col("lang"), col("doc_id"))).as("dense_id")))
+    "q_docid_window" -> ((s, d) => denseIds(s, tbl(s, d, "documents")))
   )
+
+  /** `row_number() OVER (ORDER BY lang, doc_id)` without moving every row
+    * to one partition: rows number within ranges of (lang, doc_id DIV
+    * `DenseIdRange`), and each range starts after the rows of the ranges
+    * before it — one count job, as `DocIds.assign` offsets its buckets.
+    * Ranges sort as the window does, nulls first.
+    */
+  private def denseIds(s: SparkSession, docs: DataFrame): DataFrame = {
+    import s.implicits._
+    val ranged = docs.select(col("doc_id"), col("lang"), expr(s"doc_id DIV $DenseIdRange").as("range"))
+    val counts = ranged.groupBy("lang", "range").count().as[(Option[String], Option[Long], Long)]
+      .collect().sortBy(c => (c._1, c._2))
+    val starts = counts.zip(counts.scanLeft(0L)(_ + _._3))
+      .map { case ((lang, range, _), start) => (lang, range, start) }
+      .toSeq.toDF("s_lang", "s_range", "start")
+    ranged.join(broadcast(starts), col("lang") <=> col("s_lang") && col("range") <=> col("s_range"))
+      .select(col("doc_id"), (col("start") +
+        row_number().over(Window.partitionBy("lang", "range").orderBy("doc_id"))).cast("int").as("dense_id"))
+  }
+
+  private final val DenseIdRange = 4096
 
   def oracleSql: Map[String, String] = Map(
     "q_scan_project" ->

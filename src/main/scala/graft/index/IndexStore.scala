@@ -1,10 +1,9 @@
 package graft.index
 
 import scala.collection.mutable
+import scala.reflect.runtime.universe.TypeTag
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.execution.FileSourceScanExec
-import org.apache.spark.sql.execution.datasources.FileScanRDD
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ingest.Fs
@@ -290,21 +289,23 @@ final class IndexStore(val root: String) {
     // ONE manifest read pins every table to the same committed slice set
     val slices = committedSlices
     require(slices.nonEmpty, s"index at $root has no committed slices")
-    def readTable(table: String): DataFrame =
-      spark.read.parquet(slices.map(s => slicePath(table, s.sliceId)): _*)
-    val postings = readTable("postings").as[PostingBlock]
+    // each table has its row type's schema: no schema-inference job
+    def readTable[T <: Product : TypeTag](table: String): DataFrame =
+      spark.read.schema(Encoders.product[T].schema)
+        .parquet(slices.map(s => slicePath(table, s.sliceId)): _*)
+    val postings = readTable[PostingBlock]("postings").as[PostingBlock]
     // norms and term stats are tiny relative to postings (one row per seg /
     // per distinct term); cache them so per-query idf lookups and the
     // seg-cogroup probe side don't re-scan parquet on every search
-    val norms = readTable("norms").as[SegNorms].cache()
+    val norms = readTable[SegNorms]("norms").as[SegNorms].cache()
     // per-slice partial term stats merge to global df/cf (slices partition
     // docs, so per-term partials are additive)
-    val terms = readTable("terms")
+    val terms = readTable[TermStat]("terms")
       .groupBy("term")
       .agg(sum("df").as("df"), sum("cf").as("cf"))
       .as[TermStat]
       .cache()
-    OpenIndex(this, postings, norms, terms, readTable("docs"), slices)
+    OpenIndex(this, postings, norms, terms, readTable[DocMeta]("docs"), slices)
   }
 
   // ---- settings / mappings management surface (the reference's
@@ -356,6 +357,12 @@ final class IndexStore(val root: String) {
 
 }
 
+/** A snapshot of a store: its tables pinned to one manifest read, with
+  * the state its queries fill once and share — corpus and term stats, the
+  * norms broadcast, and the planned postings scan with each file's
+  * per-row-group term ranges (`postingsScan`), so a warm Spark-path query
+  * prunes row groups on the driver and runs one job without planning SQL.
+  */
 case class OpenIndex(
     store: IndexStore,
     postings: Dataset[PostingBlock],
@@ -417,35 +424,32 @@ case class OpenIndex(
       (n + math.max(0L, s.segHi - lo + 1), math.max(end, s.segHi.toLong))
     }._1
 
-  /** Whether each segment's blocks sit in exactly one scan partition of
-    * `postings`, so `Segments.perSegment` can score a segment where it is
-    * read: every slice records whole segments per postings file
-    * (`SliceMeta.segLocal`), and the planned scan reads every file whole.
-    * How Spark splits files follows the session's settings
-    * (`spark.sql.files.*`) and its default parallelism, so the scan is
-    * planned again only when one of them changes.
+  /** The planned postings scan of the segment-local query path
+    * (`Segments.perSegment`), positions pruned unless `positions`: the
+    * files of the pinned slices with their footers' per-row-group term
+    * ranges, read once per open index, and one parquet read function per
+    * variant. The read function follows the session's settings, so both
+    * variants are planned again only when a setting changes.
     */
-  def segmentLocalScan: Boolean = slices.forall(_.segLocal) && {
-    val spark = postings.sparkSession
-    val key = (spark.conf.getAll, spark.sparkContext.defaultParallelism)
-    val memo = wholeFileScan
-    if (memo != null && memo._1 == key) memo._2
-    else {
-      // a fresh plan: `postings`' own was planned under the settings of
-      // its first use
-      val scans = postings.select("*").queryExecution.executedPlan.collect {
-        case s: FileSourceScanExec => s.inputRDD
-      }
-      val whole = scans.nonEmpty && scans.forall {
-        case rdd: FileScanRDD =>
-          rdd.filePartitions.forall(_.files.forall(f => f.start == 0 && f.length == f.fileSize))
-        case _ => false
-      }
-      wholeFileScan = key -> whole
-      whole
+  private[graft] def postingsScan(positions: Boolean): PostingsScan = {
+    val key = postings.sparkSession.conf.getAll
+    val memo = planned
+    val scans = if (memo != null && memo.key == key) memo else {
+      val fresh = new PlannedScans(key)
+      planned = fresh
+      fresh
     }
+    if (positions) scans.positional else scans.terms
   }
-  @volatile private var wholeFileScan: ((Map[String, String], Int), Boolean) = null
+
+  private lazy val postingsFiles: IndexedSeq[PostingsFile] = PostingsScan.files(
+    postings.sparkSession, slices.map(s => store.slicePath("postings", s.sliceId)))
+
+  private final class PlannedScans(val key: Map[String, String]) {
+    lazy val terms = new PostingsScan(postings.sparkSession, postingsFiles, positions = false)
+    lazy val positional = new PostingsScan(postings.sparkSession, postingsFiles, positions = true)
+  }
+  @volatile private var planned: PlannedScans = null
 }
 
 /** Flat string→string JSON object (settings/mappings files and

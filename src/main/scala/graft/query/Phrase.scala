@@ -1,7 +1,6 @@
 package graft.query
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.analysis.Analyzer
 import graft.index._
@@ -26,11 +25,11 @@ private[graft] case class PhrasePart(count: Long, docs: Array[Long], tfNorms: Ar
   * ranking by idf·tfNorm is ranking by tfNorm except where the multiply
   * rounds two tfNorms to one score; a segment therefore reports only its
   * match count (the phrase df is their sum) and the matches within the
-  * rounding margin of its k-th best tfNorm. On the Spark path the term
-  * IN-filter pushes into the postings scan, each segment matches beside
-  * its own norms (`Segments.perSegment`, the route WAND takes), and the
-  * parts come back in one collect: one job with no Exchange when each
-  * segment sits in one scan partition.
+  * rounding margin of its k-th best tfNorm. On the Spark path each
+  * segment matches beside its own norms (`Segments.perSegment`, the route
+  * WAND takes) over the row groups that can hold the phrase terms, and
+  * the parts come back from one job with no Exchange when every postings
+  * file holds whole segments.
   */
 object Phrase {
 
@@ -137,22 +136,7 @@ object Phrase {
     val idf = BM25.idf(nDocs, df)
     val heap = new TopKHeap(k)
     ps.foreach(p => p.docs.indices.foreach(i => heap.offer(p.docs(i), idf * p.tfNorms(i))))
-    heap.result().sortBy(t => (-t._2, t._1))
-  }
-
-  /** The phrase plan: only the phrase terms' blocks travel (the IN-filter
-    * reaches the parquet scan), and each segment runs `segTopK` beside its
-    * own norms; a segment without a match emits no part.
-    */
-  private[graft] def plan(idx: OpenIndex, slots: IndexedSeq[String], avgdl: Double,
-      k: Int): Dataset[PhrasePart] = {
-    val spark = idx.docs.sparkSession
-    import spark.implicits._
-    Segments.perSegment(idx, idx.postings.filter(col("term").isin(slots.distinct: _*))) {
-      (blocks, norms) =>
-        val p = segTopK(blocks, slots, Serving.decodePositionsOf, norms, avgdl, k)
-        if (p.count == 0) Iterator.empty else Iterator.single(p)
-    }
+    heap.ranked()
   }
 
   /** Phrase top-k as (doc_id, score). Empty result when any phrase term
@@ -163,7 +147,12 @@ object Phrase {
     val slots = Analyzer.tokenize(phrase).toIndexedSeq // ordered, duplicates preserved
     require(slots.nonEmpty, "empty phrase")
     val stats = idx.stats
-    finish(plan(idx, slots, stats.avgdl, k).collect(), stats.nDocs, k).toSeq
-      .toDF("doc_id", "score")
+    val avgdl = stats.avgdl
+    // a segment without a match emits no part
+    val parts = Segments.perSegment(idx, slots.distinct, positions = true) { (blocks, norms) =>
+      val p = segTopK(blocks, slots, Serving.decodePositionsOf, norms, avgdl, k)
+      if (p.count == 0) Iterator.empty else Iterator.single(p)
+    }
+    finish(parts, stats.nDocs, k).toSeq.toDF("doc_id", "score")
   }
 }

@@ -161,8 +161,8 @@ private[query] final class Budget(
   * pre-decode, same bit-identical results. At web scale the corpus is
   * document-sharded across serving nodes exactly like the distributed
   * path's segments — each node opens the slice the build wrote for it,
-  * and a router merges per-node top-ks (the TakeOrdered merge, over RPC
-  * instead of a Spark stage).
+  * and a router merges per-node top-ks (the `TopKHeap` k-merge the Spark
+  * path runs on the driver, over RPC instead of a Spark job).
   */
 final class ServingIndex private[query] (
     payload: ShardPayload,
@@ -234,14 +234,14 @@ final class ServingIndex private[query] (
 
     // per-segment WAND over PRE-DECODED postings/norms (no per-query
     // decode allocations — the serving tier's RAM-for-CPU trade), then
-    // the same (score desc, docId asc) k-merge the distributed path's
-    // TakeOrderedAndProject performs
+    // the same (score desc, docId asc) k-merge the distributed path runs
+    // on the driver
     val heap = new TopKHeap(k)
     forEachSegment(present) { (blocks, norms) =>
       Wand.segTopKWith(blocks, norms.doclen, idfs, stats.avgdl, k, decodeFn)
         .foreach { case (d, s) => heap.offer(d, s) }
     }
-    heap.result().sortBy(t => (-t._2, t._1))
+    heap.ranked()
   }
 
   /** Top-k as a DataFrame (for the driver gate / hit materialization). */
@@ -487,8 +487,8 @@ object Serving {
     * holding the segments assigned to it (`seg mod nShards` — segments
     * are the unit of document sharding in every layout), all scoring
     * with the GLOBAL term stats, plus a router that k-merges per-shard
-    * top-ks with the same (score desc, docId asc) order the distributed
-    * TakeOrdered merge uses. Bit-identical to the single-node serving
+    * top-ks with the same (score desc, docId asc) `TopKHeap` merge the
+    * distributed path uses. Bit-identical to the single-node serving
     * index and the distributed WAND: segments are scored locally either
     * way — only WHERE they live changes. This is the web-scale
     * deployment shape in miniature (shards on separate nodes, the
@@ -556,7 +556,7 @@ final class ServingCluster private[query] (val shards: IndexedSeq[ServingIndex])
   def topK(query: String, k: Int): Array[(Long, Double)] = {
     val heap = new TopKHeap(k)
     shards.foreach(_.topK(query, k).foreach { case (d, s) => heap.offer(d, s) })
-    heap.result().sortBy(t => (-t._2, t._1))
+    heap.ranked()
   }
 
   /** Phrase top-k across shards: the router analyzes the phrase once,

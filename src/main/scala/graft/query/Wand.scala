@@ -1,7 +1,7 @@
 package graft.query
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.col
 import graft.analysis.Analyzer
 import graft.index._
 
@@ -11,14 +11,15 @@ import graft.index._
   *
   * Distribution model: postings are document-partitioned by segment, so
   * each segment's WAND runs independently (`Segments.perSegment`: the
-  * segment's blocks with its norms), emits a local top-k, and the global
-  * answer is a tiny TakeOrderedAndProject merge — the standard
-  * document-sharded search architecture. When every postings file holds
-  * whole segments and the scan reads every file whole, a segment is scored
-  * inside the scan partition that read it: term-filtered scan →
-  * per-segment WAND → TakeOrderedAndProject, one job and no Exchange.
-  * Otherwise (split files, an old layout, or norms past the broadcast
-  * bound) the query terms' blocks are shuffled by segment first.
+  * segment's blocks with its norms), emits a local top-k, and the driver
+  * k-merges the collected top-ks with the `TopKHeap` the serving router
+  * and `Phrase.finish` use — the standard document-sharded search
+  * architecture. When every postings file holds whole segments, the query
+  * runs on the open index's planned postings scan: the driver keeps the
+  * row groups whose term range can hold a query term, and one job scores
+  * each segment in the task that read its file, with no SQL plan and no
+  * Exchange. Otherwise (an old layout, or norms past the broadcast bound)
+  * the query terms' blocks are shuffled by segment first.
   *
   * Determinism: a document's score folds its per-term contributions in
   * ascending term order, so the double-precision sum is bit-identical to
@@ -55,20 +56,15 @@ object Wand {
     val avgdl = stats.avgdl
     val terms = present.keys.toSeq.sorted
 
-    // Term queries never read the positional payload, but a positional
-    // index stores it inline per block — and it's ~Σtf VByte bytes,
-    // comparable to the postings themselves. Replacing the column with a
-    // null literal lets Catalyst prune `positions` out of the parquet
-    // ReadSchema entirely, so neither the scan nor a seg Exchange ever
-    // carries it (only Phrase reads positions).
-    val qBlocks = index.postings
-      .filter(col("term").isin(terms: _*))
-      .withColumn("positions", lit(null).cast("binary"))
-      .as[PostingBlock]
-    Segments.perSegment(index, qBlocks) { (blocks, norms) =>
+    // term queries never read the positional payload, which a positional
+    // index stores inline per block (~Σtf VByte bytes, comparable to the
+    // postings themselves): only phrase queries read positions
+    val parts = Segments.perSegment(index, terms, positions = false) { (blocks, norms) =>
       segTopKWith(blocks, norms.doclen, idfs, avgdl, k, TermPostings.decodeBlock).iterator
-    }.toDF("doc_id", "score")
-      .orderBy(col("score").desc, col("doc_id").asc).limit(k)
+    }
+    val heap = new TopKHeap(k)
+    parts.foreach { case (d, s) => heap.offer(d, s) }
+    heap.ranked().toSeq.toDF("doc_id", "score")
   }
 
   /** Kernel form with pluggable doclen lookup + block decoder — the
@@ -239,6 +235,10 @@ private[graft] final class TopKHeap(k: Int) {
       docs(0) = docId; scores(0) = score; siftDown()
     }
   }
+
+  /** The kept hits by (score desc, docId asc): the driver-side k-merge of
+    * per-segment, per-shard and phrase top-ks. */
+  def ranked(): Array[(Long, Double)] = result().sortBy(t => (-t._2, t._1))
 
   def result(): Array[(Long, Double)] = {
     val out = new Array[(Long, Double)](size)

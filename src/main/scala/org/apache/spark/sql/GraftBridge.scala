@@ -25,4 +25,10 @@ object GraftBridge {
   def ofRows(s: SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(s.asInstanceOf[classic.SparkSession], plan)
+
+  /** The session's Hadoop configuration with its SQL settings laid over
+    * it, as a file scan reads with.
+    */
+  def newHadoopConf(s: SparkSession): org.apache.hadoop.conf.Configuration =
+    s.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf()
 }

@@ -18,7 +18,9 @@ object PlanDump {
     val sb = new StringBuilder
     sb ++= "# PLANS — physical-plan audit of the flagship queries\n\n"
     sb ++= "Generated by `Test/runMain graft.PlanDump` from the live code at\n"
-    sb ++= s"`$sf`. What to look for is noted per plan.\n"
+    sb ++= s"`$sf`. What to look for is noted per plan. BM25 WAND and phrase\n"
+    sb ++= "top-k build no SQL plan: each is one job over the open index's planned\n"
+    sb ++= "postings scan (`graft.query.Segments`).\n"
 
     def dump(title: String, note: String, df: org.apache.spark.sql.DataFrame): Unit = {
       df.collect() // finalize AQE so the printed plan is the executed one
@@ -29,14 +31,6 @@ object PlanDump {
     }
 
     val idx = SparkEntry.indexFor(spark, sf)
-
-    dump("BM25 top-k (block-max WAND)",
-      "No Exchange: the term IN-filter is pushed to the parquet scan, and " +
-        "each scan partition runs WAND over the whole segments it read " +
-        "(MapPartitions, norms broadcast), then the TakeOrderedAndProject " +
-        "merge. One job, no joins; term stats resolve driver-side. A store " +
-        "whose scan splits a segment shuffles the blocks by segment first.",
-      graft.query.Wand.topK(spark, idx, "spark index dup", 10))
 
     dump("Hit materialization (scored top-k -> stored fields)",
       "The tiny scored side is broadcast; the docs table is scanned once.",
@@ -70,16 +64,6 @@ object PlanDump {
         "this plan and unpersists the base at exit.",
       mhOut)
     mhCached.foreach(_.unpersist())
-
-    dump("Exact phrase top-k (positional index, per-segment parts)",
-      "No Exchange: the term IN-filter is pushed to the postings scan, and " +
-        "each scan partition matches the whole segments it read " +
-        "(MapPartitions) beside their norms. A segment emits one part: its " +
-        "match count and its local candidates by tfNorm — no docs-table join. The public " +
-        "topK collects the parts once, sums the counts into the phrase df " +
-        "and scores and merges on the driver.",
-      graft.query.Phrase.plan(idx, graft.analysis.Analyzer.tokenize("the web").toIndexedSeq,
-        idx.stats.avgdl, 10).toDF())
 
     val (ppOut, ppCached, _) = graft.ops.Dedup.sharedPassagePairsPlan(
       spark.read.parquet(s"$sf/documents.parquet"), "doc_id", "text",

@@ -123,19 +123,14 @@ class PlanSpec extends AnyFunSuite {
 
   test("wand topK prunes the positional payload out of the postings scan") {
     val idx = SparkEntry.indexFor(spark, sf) // built WITH positions
-    val df = graft.query.Wand.topK(spark, idx, "spark dup", 5)
-    val p = plan(df)
-    // ReadSchema strings truncate in toString — pin the FileScan output
-    // attribute lists instead (printed in full)
-    def scanCols(s: String): Seq[String] =
-      "FileScan parquet \\[[^\\]]*\\]".r.findAllIn(s).toSeq
-    val postingScans = scanCols(p).filter(_.contains("term#"))
-    assert(postingScans.nonEmpty, p)
-    assert(!postingScans.exists(_.contains("positions#")),
-      s"term queries must not scan the positional payload:\n$p")
+    // the term scan WAND runs reads every block column but positions
+    val termScan = idx.postingsScan(positions = false).rdd(Seq("spark", "dup")).readSchema
+    assert(termScan.fieldNames.toSeq ==
+      org.apache.spark.sql.Encoders.product[graft.index.PostingBlock].schema.fieldNames.toSeq
+        .filterNot(_ == "positions"), termScan)
     // the phrase path is the one consumer of positions — it must still read them
-    val pp = plan(graft.query.Phrase.plan(idx, IndexedSeq("spark", "dup"), idx.stats.avgdl, 5).toDF())
-    assert(scanCols(pp).exists(_.contains("positions#")), pp)
+    assert(idx.postingsScan(positions = true).rdd(Seq("spark", "dup"))
+      .readSchema.fieldNames.contains("positions"))
   }
 
   test("minhash LSH derives buckets AND drop metrics from one persisted band shuffle") {
@@ -199,23 +194,23 @@ class PlanSpec extends AnyFunSuite {
   test("wand topK: driver-side term stats, no Exchange on the segment-local path") {
     val idx = SparkEntry.indexFor(spark, sf)
     assert(idx.termsLocal.nonEmpty, "bounded vocab must resolve driver-side")
-    assert(idx.segmentLocalScan, "a fresh build must read each segment in one scan partition")
-    // segment-local: each scan partition runs WAND over the segments it
-    // read, then the tiny TakeOrdered merge — no join, no shuffle
-    val p = plan(graft.query.Wand.topK(spark, idx, "spark dup", 5))
-    assert("Exchange".r.findAllIn(p).isEmpty, p)
-    assert(p.contains("TakeOrderedAndProject"), p)
+    assert(idx.slices.forall(_.segLocal), "a fresh build must hold whole segments per file")
+    def shuffles(s: org.apache.spark.sql.SparkSession, i: graft.index.OpenIndex): Int = {
+      val q = () => graft.query.Wand.topK(s, i, "spark dup", 5).collect()
+      q()
+      TestSpark.shuffleStagesOf(q())
+    }
+    // segment-local: each task runs WAND over the segments of the file it
+    // read, and the driver merges — no join, no shuffle
+    assert(shuffles(spark, idx) == 0)
     // slices without the whole-segment flag: the blocks shuffle by segment
     // first, the one Exchange (the norms still broadcast)
     val unflagged = idx.copy(slices = idx.slices.map(_.copy(segLocal = false)))
-    val pu = plan(graft.query.Wand.topK(spark, unflagged, "spark dup", 5))
-    assert("Exchange".r.findAllIn(pu).size == 1, pu)
+    assert(shuffles(spark, unflagged) == 1)
     // norms past the broadcast bound: the blocks and the norms each shuffle
     // by segment into one cogroup
     val sCogroup = spark.newSession()
     sCogroup.conf.set("graft.query.broadcastNormsMaxSegs", "0")
-    val pc = plan(graft.query.Wand.topK(sCogroup, idx.store.open(sCogroup), "spark dup", 5))
-    assert("Exchange".r.findAllIn(pc).size == 2 && pc.contains("CoGroup"), pc)
-    assert(Seq(pu, pc).forall(_.contains("TakeOrderedAndProject")))
+    assert(shuffles(sCogroup, idx.store.open(sCogroup)) == 2)
   }
 }

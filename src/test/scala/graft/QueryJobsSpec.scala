@@ -1,11 +1,10 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.SparkListenerJobStart
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 
 import graft.index.{IndexBuilder, IndexStore}
@@ -13,26 +12,16 @@ import graft.query.{Phrase, Serving, Wand}
 
 /** Spark jobs a warm Spark-path query runs: once an open index holds its
   * stats, term stats and norms, WAND and phrase each answer in one scan of
-  * their terms' blocks, scoring each segment in the partition that read it
-  * — one result job and no shuffle-map job. Filling those counts the term
-  * stats once, and an open that wants only the stats collects no norms.
+  * their terms' row groups, scoring each segment in the partition that
+  * read it — one result job, no shuffle-map job and no SQL plan over the
+  * postings. Filling those counts the term stats once, and an open that
+  * wants only the stats collects no norms.
   */
 class QueryJobsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private def jobsOf(body: => Any): Int = {
-    val jobs = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    ListenerDrain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      ListenerDrain(spark.sparkContext)
-      jobs.get()
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
+  private def jobsOf(body: => Any): Int =
+    TestSpark.eventsOf(body).count(_.isInstanceOf[SparkListenerJobStart])
 
   /** A fresh positional store of `slices` slices over 300 short documents
     * in five segments.
@@ -67,6 +56,22 @@ class QueryJobsSpec extends AnyFunSuite {
     store.dropAll()
   }
 
+  test("a warm WAND and a warm phrase top-k plan no SQL scan of the postings") {
+    val store = slicedStore()
+    val idx = store.open(spark)
+    for ((name, query) <- Seq[(String, () => Any)](
+        "phrase" -> (() => Phrase.topK(spark, idx, "blue green", 10).collect()),
+        "wand" -> (() => Wand.topK(spark, idx, "fox dog", 10).collect()))) {
+      query()
+      val plans = TestSpark.eventsOf(query()).collect {
+        case e: SparkListenerSQLExecutionStart => e.physicalPlanDescription
+      }
+      assert(!plans.exists(_.contains("postings")),
+        s"warm $name top-k planned a postings scan:\n${plans.mkString("\n")}")
+    }
+    store.dropAll()
+  }
+
   test("open, stats and the first WAND top-k count the term stats once") {
     val store = slicedStore()
     val jobs = jobsOf {
@@ -75,11 +80,11 @@ class QueryJobsSpec extends AnyFunSuite {
       Wand.topK(spark, idx, "fox dog", 10).collect()
     }
     info(s"open + stats + first WAND top-k: $jobs jobs")
-    // a schema job per table at open, four for the one term count (the
-    // aggregate's shuffle and the cache), the stats fold over the norms,
-    // the terms collect, the norms collect and the query; 16 when the
-    // term-stats and norms fills each ran a count of their own
-    assert(jobs <= 12, s"open + stats + first WAND top-k ran $jobs jobs")
+    // four for the one term count (the aggregate's shuffle and the cache),
+    // the stats fold over the norms, the terms collect, the norms collect
+    // and the query; the open reads each table with its row type's schema,
+    // so it runs no schema-inference job (12 when it ran one per table)
+    assert(jobs <= 8, s"open + stats + first WAND top-k ran $jobs jobs")
     store.dropAll()
   }
 

@@ -5,19 +5,22 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.rdd.RDD
+import org.apache.spark.scheduler.SparkListenerTaskEnd
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.analysis.Analyzer
-import graft.index.{BM25, IndexBuilder, IndexStore, OpenIndex}
+import graft.index.{BM25, IndexBuilder, IndexStore, OpenIndex, PostingsScan}
 import graft.query.{OracleScorer, Phrase, Wand}
 import graft.streaming.StreamIngest
 
 /** The segment-local Spark path and its guard: a Spark-path query scores
-  * each segment inside its scan partition only when every slice holds
-  * whole segments per postings file and the scan reads every file whole.
-  * A store that breaks either takes the shuffle path, and every path
-  * answers bit-equal to brute force.
+  * each segment inside the task that reads its file only when every slice
+  * holds whole segments per postings file; the planned scan reads every
+  * file whole, whatever the session's split settings. A store that breaks
+  * the flag takes the shuffle path, and every path answers bit-equal to
+  * brute force.
   */
 class SegmentLocalSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -68,41 +71,89 @@ class SegmentLocalSpec extends AnyFunSuite {
       assert(rows(Phrase.topK(s, idx, p, 10)) == brutePhrase(docs, p, 10), s"phrase '$p'")
   }
 
-  /** Exchanges in the WAND plan and in the phrase plan of `idx`. */
-  private def exchanges(s: SparkSession, idx: OpenIndex): (Int, Int) = {
-    def count(df: DataFrame) = "Exchange".r.findAllIn(df.queryExecution.executedPlan.toString).size
-    (count(Wand.topK(s, idx, "red fox", 10)),
-      count(Phrase.plan(idx, IndexedSeq("red", "fox"), idx.stats.avgdl, 10).toDF()))
+  /** Shuffle-map stages of a warm WAND and a warm phrase top-k on `idx`. */
+  private def shuffles(s: SparkSession, idx: OpenIndex): (Int, Int) = {
+    def warm(q: => Any): Int = { q; TestSpark.shuffleStagesOf(q) }
+    (warm(Wand.topK(s, idx, "red fox", 10).collect()),
+      warm(Phrase.topK(s, idx, "red fox", 10).collect()))
   }
 
-  /** The most scan partitions of `idx.postings` that read one segment. */
-  private def maxPartitionsPerSeg(idx: OpenIndex): Int =
-    idx.postings.select("seg").rdd
-      .mapPartitionsWithIndex((p, it) => it.map(r => (r.getInt(0), p)))
+  /** The most partitions of `rows` that hold one segment; `seg` reads a
+    * row's segment.
+    */
+  private def maxPartitionsPerSeg[R](rows: RDD[R])(seg: R => Int): Int =
+    rows.mapPartitionsWithIndex((p, it) => it.map(r => (seg(r), p)))
       .distinct().collect().groupBy(_._1).values.map(_.length).max
 
-  test("split postings files take the shuffle path and stay exact") {
+  /** The same over the SQL scan of `idx.postings`. */
+  private def maxPartitionsPerSeg(idx: OpenIndex): Int =
+    maxPartitionsPerSeg(idx.postings.select("seg").rdd)(_.getInt(0))
+
+  /** A store of 600 seeded pages whose postings files hold row groups of
+    * 16 blocks, so a byte-range split of a file can cut a segment's blocks
+    * apart, with its pages by docID.
+    */
+  private def splitStore(): (IndexStore, Seq[(Long, String)]) = {
     val ps = pages(1, 600)
-    val docs = ps.zipWithIndex.map { case ((_, t), i) => i.toLong -> t }
     val store = new IndexStore(Files.createTempDirectory("graft-split-").toString)
-    // row groups of 16 blocks, so a byte-range split of a file can cut a
-    // segment's blocks apart
     val small = spark.newSession()
     small.conf.set("parquet.block.row.count.limit", "16")
     IndexBuilder.build(small, withIds(small, ps), store, cfg)
+    val files = PostingsScan.files(spark,
+      store.committedSlices.map(m => store.slicePath("postings", m.sliceId)))
+    assert(files.forall(_.rowGroups.size > 1), s"one row group per file: ${files.map(_.rowGroups.size)}")
+    (store, ps.zipWithIndex.map { case ((_, t), i) => i.toLong -> t })
+  }
+
+  /** A session under whose settings a SQL scan splits files apart. */
+  private def splittingSession(): SparkSession = {
     val s = spark.newSession()
     s.conf.set("spark.sql.files.maxPartitionBytes", "4096")
     s.conf.set("spark.sql.files.openCostInBytes", "1")
+    s
+  }
+
+  test("split postings files take the shuffle path and stay exact") {
+    val (store, docs) = splitStore()
+    // past the norms broadcast bound a query reads the SQL scan, whose
+    // partitions cut the files apart, and cogroups the blocks with the
+    // norms: each side shuffles by segment
+    val s = splittingSession()
+    s.conf.set("graft.query.broadcastNormsMaxSegs", "0")
+    val idx = store.open(s)
+    assert(idx.slices.forall(_.segLocal) && idx.normsBroadcast.isEmpty)
+    assert(maxPartitionsPerSeg(idx) > 1, "the split scan must spread a segment over partitions")
+    assert(shuffles(s, idx) == (2, 2))
+    assertExact(s, idx, docs)
+    store.dropAll()
+  }
+
+  test("several row groups per file: the planned scan reads each file whole and stays exact") {
+    val (store, docs) = splitStore()
+    val s = splittingSession()
     val idx = store.open(s)
     assert(idx.slices.forall(_.segLocal) && idx.normsBroadcast.isDefined)
     assert(maxPartitionsPerSeg(idx) > 1, "the split scan must spread a segment over partitions")
-    assert(!idx.segmentLocalScan)
-    assert(exchanges(s, idx) == (1, 1))
+    val terms = idx.termsLocal.get.keys
+    assert(maxPartitionsPerSeg(idx.postingsScan(positions = false).rdd(terms))(_.getInt(1)) == 1,
+      "the planned scan must read each segment in one partition")
+    assert(shuffles(s, idx) == (0, 0))
     assertExact(s, idx, docs)
-    // the default split settings read the same files whole
     val whole = store.open(spark)
-    assert(whole.segmentLocalScan && exchanges(spark, whole) == (0, 0))
+    assert(shuffles(spark, whole) == (0, 0))
     assertExact(spark, whole, docs)
+
+    // a one-term query reads only the row groups whose term range holds it
+    val records = new java.util.concurrent.atomic.AtomicLong()
+    Wand.topK(spark, whole, "sea", 10).collect()
+    TestSpark.eventsOf(Wand.topK(spark, whole, "sea", 10).collect()).foreach {
+      case e: SparkListenerTaskEnd => records.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
+      case _ =>
+    }
+    val blocks = whole.postings.count()
+    val seaBlocks = whole.postings.filter(col("term") === "sea").count()
+    info(s"one-term query read ${records.get} of $blocks blocks ($seaBlocks of its term)")
+    assert(records.get >= seaBlocks && records.get < blocks)
     store.dropAll()
   }
 
@@ -136,14 +187,12 @@ class SegmentLocalSpec extends AnyFunSuite {
     val idx = store.open(s)
     assert(!idx.slices.head.segLocal && idx.slices.tail.forall(_.segLocal))
     assert(maxPartitionsPerSeg(idx) > 1, "the old layout must spread a segment over partitions")
-    assert(!idx.segmentLocalScan)
-    assert(idx.copy(slices = idx.slices.map(_.copy(segLocal = true))).segmentLocalScan)
-    assert(exchanges(s, idx) == (1, 1))
+    assert(shuffles(s, idx) == (1, 1))
     assertExact(s, idx, docs)
     // a merge with the unflagged slice is unflagged too
     assert(!store.compact(spark).segLocal)
     val merged = store.open(spark)
-    assert(!merged.segmentLocalScan && exchanges(spark, merged) == (1, 1))
+    assert(!merged.slices.forall(_.segLocal) && shuffles(spark, merged) == (1, 1))
     assertExact(spark, merged, docs)
     store.dropAll()
   }
@@ -165,7 +214,7 @@ class SegmentLocalSpec extends AnyFunSuite {
     assert(store.deadSlices.isEmpty)
 
     val idx = store.open(spark)
-    assert(idx.segmentLocalScan && exchanges(spark, idx) == (0, 0))
+    assert(idx.slices.forall(_.segLocal) && shuffles(spark, idx) == (0, 0))
     val text = batches.flatten.toMap
     val docs = idx.docs.select("doc_id", "url").collect()
       .map(r => r.getLong(0) -> text(r.getString(1))).toSeq
