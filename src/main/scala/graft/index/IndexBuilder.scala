@@ -14,7 +14,7 @@ import org.apache.spark.storage.StorageLevel
   * a segment of its own. Plan shape (one slice):
   * {{{
   *   scan(docs)                        -- column pruning drops html etc.
-  *     -> repartitionById(seg mod P)   [the one wide shuffle: documents]
+  *     -> repartitionById(seg run)     [the one wide shuffle: documents]
   *     -> sortWithinPartitions(doc_id)
   *     -> SegmentInverter              -- tokenize each doc once; emit the
   *                                        segment's blocks, its norms row
@@ -254,12 +254,13 @@ object IndexBuilder {
     * row and doc rows in a single pass. The pass is persisted once and
     * written three ways; `terms` aggregates the written postings.
     *
-    * Segment `segLo + i` goes to partition `i mod P`, with P the smaller
-    * of the slice's segment count and `spark.sql.shuffle.partitions`: each
-    * segment gets a task of its own when the slice has no more segments
-    * than partitions, and a task inverts several segments in turn only
-    * past that. The partition count is explicit, so AQE does not coalesce
-    * segments back together.
+    * Segment `segLo + i` of the slice's S goes to partition `i·P/S`, with
+    * P the smaller of S and `spark.sql.shuffle.partitions`: each segment
+    * gets a task of its own when the slice has no more segments than
+    * partitions, and past that a task inverts a contiguous run of
+    * segments in turn, so its postings file and its norms file hold the
+    * same segment range. The partition count is explicit, so AQE does not
+    * coalesce segments back together.
     */
   private def buildSlice(
       spark: SparkSession,
@@ -270,10 +271,11 @@ object IndexBuilder {
       segLo: Int,
       segHi: Int): SliceMeta = {
     import spark.implicits._
-    val parts = math.min(segHi - segLo + 1, spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    val nSegs = segHi - segLo + 1
+    val parts = math.min(nSegs, spark.conf.get("spark.sql.shuffle.partitions").toInt)
     val inverted = slice
       .repartitionById(parts,
-        pmod(expr(s"doc_id DIV ${cfg.segSize}L") - segLo, lit(parts)).cast("int"))
+        expr(s"((doc_id DIV ${cfg.segSize}L) - $segLo) * $parts DIV $nSegs").cast("int"))
       .sortWithinPartitions(col("doc_id"))
       .as[SegmentInverter.Doc]
       .mapPartitions(docs => new SegmentInverter(docs, cfg))

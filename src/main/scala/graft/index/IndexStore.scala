@@ -295,8 +295,9 @@ final class IndexStore(val root: String) {
         .parquet(slices.map(s => slicePath(table, s.sliceId)): _*)
     val postings = readTable[PostingBlock]("postings").as[PostingBlock]
     // norms and term stats are tiny relative to postings (one row per seg /
-    // per distinct term); cache them so per-query idf lookups and the
-    // seg-cogroup probe side don't re-scan parquet on every search
+    // per distinct term); cache them so the stats fold, serving opens and
+    // per-query idf lookups don't re-scan parquet (queries read the norms
+    // files beside their segments' postings instead)
     val norms = readTable[SegNorms]("norms").as[SegNorms].cache()
     // per-slice partial term stats merge to global df/cf (slices partition
     // docs, so per-term partials are additive)
@@ -358,10 +359,12 @@ final class IndexStore(val root: String) {
 }
 
 /** A snapshot of a store: its tables pinned to one manifest read, with
-  * the state its queries fill once and share — corpus and term stats, the
-  * norms broadcast, and the planned postings scan with each file's
-  * per-row-group term ranges (`postingsScan`), so a warm Spark-path query
+  * the state its queries fill once and share — corpus and term stats, and
+  * the planned postings scan with each file's per-row-group term ranges and
+  * each unit's norms files (`postingsScan`), so a warm Spark-path query
   * prunes row groups on the driver and runs one job without planning SQL.
+  * A query task reads its segments' norms beside their postings; no path
+  * broadcasts the norms or collects them to the driver.
   */
 case class OpenIndex(
     store: IndexStore,
@@ -371,13 +374,10 @@ case class OpenIndex(
     docs: DataFrame,
     slices: Seq[SliceMeta]) {
   /** Corpus stats of THIS snapshot, from its own pinned norms (never the
-    * store's manifest, which may have moved on since): from the norms
-    * broadcast if a query has already filled it, else one job over the
-    * norms; plus the term count, shared with `termsLocal`.
+    * store's manifest, which may have moved on since): one fold over the
+    * cached norms, plus the term count, shared with `termsLocal`.
     */
-  lazy val stats: IndexStats =
-    if (normsCollected) IndexStats.fromNorms(normsBroadcast.get.value.valuesIterator, termCount)
-    else IndexStats.fromNorms(norms, termCount)
+  lazy val stats: IndexStats = IndexStats.fromNorms(norms, termCount)
 
   private lazy val termCount: Long = terms.count()
 
@@ -392,44 +392,13 @@ case class OpenIndex(
       Some(terms.collect().map(t => t.term -> t.df).toMap)
     else None
 
-  /** Norms broadcast for the low-latency query path: collected once per
-    * open index when the segment count is modest (norms are ~5 bytes/doc;
-    * 4096 segs of 64Ki docs ≈ 1.3 GB corpus-side but only the doclen
-    * payload travels). The count checked is the number of segments the
-    * pinned slices' ranges cover, an upper bound on the norms rows and no
-    * job. Past `graft.query.broadcastNormsMaxSegs` segments (default 4096)
-    * it is None and `Segments.perSegment` cogroups the norms by segment
-    * instead — at 10^12 docs the norms table is executor-side state, not
-    * driver-broadcastable.
-    */
-  lazy val normsBroadcast: Option[org.apache.spark.broadcast.Broadcast[Map[Int, SegNorms]]] = {
-    val spark = docs.sparkSession
-    val maxSegs = spark.conf.getOption("graft.query.broadcastNormsMaxSegs")
-      .map(_.toInt).getOrElse(4096)
-    if (segsCovered <= maxSegs) {
-      val bc = spark.sparkContext.broadcast(norms.collect().map(n => n.seg -> n).toMap)
-      collected = true
-      Some(bc)
-    } else None
-  }
-  /** Whether `normsBroadcast` has collected the norms to the driver. */
-  private[graft] def normsCollected: Boolean = collected
-  @volatile private var collected = false
-
-  // segments in the union of the slices' [segLo, segHi]: a merge of
-  // non-adjacent slices spans the slices between, so the ranges may overlap
-  private def segsCovered: Long =
-    slices.sortBy(_.segLo).foldLeft((0L, Long.MinValue)) { case ((n, end), s) =>
-      val lo = math.max(s.segLo.toLong, end + 1)
-      (n + math.max(0L, s.segHi - lo + 1), math.max(end, s.segHi.toLong))
-    }._1
-
-  /** The planned postings scan of the segment-local query path
+  /** The planned postings scan of the Spark query path
     * (`Segments.perSegment`), positions pruned unless `positions`: the
-    * files of the pinned slices with their footers' per-row-group term
-    * ranges, read once per open index, and one parquet read function per
-    * variant. The read function follows the session's settings, so both
-    * variants are planned again only when a setting changes.
+    * scan units of the pinned slices with their footers' per-row-group
+    * term ranges and paired norms files, read once per open index, and one
+    * pair of parquet read functions per variant. The read functions follow
+    * the session's settings, so both variants are planned again only when
+    * a setting changes.
     */
   private[graft] def postingsScan(positions: Boolean): PostingsScan = {
     val key = postings.sparkSession.conf.getAll
@@ -442,12 +411,12 @@ case class OpenIndex(
     if (positions) scans.positional else scans.terms
   }
 
-  private lazy val postingsFiles: IndexedSeq[PostingsFile] = PostingsScan.files(
-    postings.sparkSession, slices.map(s => store.slicePath("postings", s.sliceId)))
+  private lazy val scanUnits: IndexedSeq[ScanUnit] =
+    PostingsScan.units(postings.sparkSession, store, slices)
 
   private final class PlannedScans(val key: Map[String, String]) {
-    lazy val terms = new PostingsScan(postings.sparkSession, postingsFiles, positions = false)
-    lazy val positional = new PostingsScan(postings.sparkSession, postingsFiles, positions = true)
+    lazy val terms = new PostingsScan(postings.sparkSession, scanUnits, positions = false)
+    lazy val positional = new PostingsScan(postings.sparkSession, scanUnits, positions = true)
   }
   @volatile private var planned: PlannedScans = null
 }

@@ -2,8 +2,11 @@ package graft.index
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.column.statistics.IntStatistics
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.BlockMetaData
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{Encoders, GraftBridge, SparkSession}
@@ -21,19 +24,35 @@ private[graft] final case class TermRowGroup(start: Long, length: Long, min: UTF
   def mayHold(t: UTF8String): Boolean = min == null || (min.compareTo(t) <= 0 && max.compareTo(t) >= 0)
 }
 
-/** A postings file with its row groups in file order. */
-private[graft] final case class PostingsFile(path: Path, size: Long, modTime: Long, rowGroups: IndexedSeq[TermRowGroup])
-
-/** The postings scan of the segment-local query path, planned once: one
-  * parquet read function (so one Hadoop-conf broadcast) over the files of
-  * an open index, positions pruned unless `positions`. A query's scan
-  * keeps only the row groups whose footer term range can hold one of its
-  * terms, and puts every kept row group of a file into that file's one
-  * partition, so a file whose segments are whole is read by exactly one
-  * task. No SQL plan is built per query: `rdd` is a `FileScanRDD` over
-  * the query's partitions.
+/** A data file of a slice: its row groups in file order, and the `seg`
+  * range of its footer statistics (all ints when a row group has none,
+  * empty when the file has no rows).
   */
-private[graft] final class PostingsScan(spark: SparkSession, files: IndexedSeq[PostingsFile],
+private[graft] final case class SliceFile(path: Path, size: Long, modTime: Long,
+    rowGroups: IndexedSeq[TermRowGroup], segLo: Int, segHi: Int) {
+  def range(start: Long, length: Long): PartitionedFile = PartitionedFile(InternalRow.empty,
+    SparkPath.fromPath(path), start, length, Array.empty[String], modTime, size)
+}
+
+/** The files one query task reads: postings files that hold whole
+  * segments between them, and the norms files of those segments.
+  */
+private[graft] final case class ScanUnit(postings: IndexedSeq[SliceFile], norms: Array[PartitionedFile])
+
+/** A query's partitions, and the norms files each one reads beside its
+  * blocks (by partition index).
+  */
+private[graft] final case class SegmentScan(rdd: FileScanRDD, norms: Array[Array[PartitionedFile]])
+
+/** The postings scan of the Spark query path, planned once: one parquet
+  * read function for the postings (positions pruned unless `positions`)
+  * and one for the norms over the scan units of an open index. A query's
+  * scan keeps only the row groups whose footer term range can hold one of
+  * its terms, and puts every kept row group of a unit into that unit's one
+  * partition, so each segment is read by exactly one task, which reads the
+  * segment's norms itself. No SQL plan is built per query.
+  */
+private[graft] final class PostingsScan(spark: SparkSession, units: IndexedSeq[ScanUnit],
     positions: Boolean) {
 
   /** The columns read, in `PostingsScan.block`'s order. */
@@ -42,58 +61,81 @@ private[graft] final class PostingsScan(spark: SparkSession, files: IndexedSeq[P
     if (positions) all else StructType(all.filterNot(_.name == "positions"))
   }
 
-  private val read: PartitionedFile => Iterator[InternalRow] =
-    new ParquetFileFormat().buildReaderWithPartitionValues(spark,
-      Encoders.product[PostingBlock].schema, new StructType(), readSchema, Nil,
-      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), GraftBridge.newHadoopConf(spark))
+  private val read = PostingsScan.reader(spark, Encoders.product[PostingBlock].schema, readSchema)
+
+  /** Reads a norms file's rows, in `PostingsScan.norms`' order. */
+  val readNorms: PartitionedFile => Iterator[InternalRow] =
+    PostingsScan.reader(spark, Encoders.product[SegNorms].schema, Encoders.product[SegNorms].schema)
 
   /** The scan of the row groups that can hold `terms`: one partition per
-    * file with any, each run of adjacent kept row groups one byte range
-    * (a parquet reader reads the row groups whose midpoint its range
-    * holds).
+    * unit with any, each run of adjacent kept row groups of a file one
+    * byte range (a parquet reader reads the row groups whose midpoint its
+    * range holds).
     */
-  def rdd(terms: Iterable[String]): FileScanRDD = {
+  def plan(terms: Iterable[String]): SegmentScan = {
     val ts = terms.map(UTF8String.fromString).toArray
-    val parts = files.flatMap { f =>
-      val runs = scala.collection.mutable.ArrayBuffer.empty[PartitionedFile]
-      for (g <- f.rowGroups if ts.exists(g.mayHold)) {
-        if (runs.nonEmpty && runs.last.start + runs.last.length == g.start)
-          runs(runs.length - 1) = runs.last.copy(length = runs.last.length + g.length)
-        else runs += PartitionedFile(InternalRow.empty, SparkPath.fromPath(f.path), g.start,
-          g.length, Array.empty[String], f.modTime, f.size)
+    val parts = units.flatMap { u =>
+      val runs = u.postings.flatMap { f =>
+        f.rowGroups.filter(g => ts.exists(g.mayHold)).foldLeft(Vector.empty[PartitionedFile]) { (rs, g) =>
+          if (rs.nonEmpty && rs.last.start + rs.last.length == g.start)
+            rs.init :+ rs.last.copy(length = rs.last.length + g.length)
+          else rs :+ f.range(g.start, g.length)
+        }
       }
-      Option.when(runs.nonEmpty)(runs.toArray)
+      Option.when(runs.nonEmpty)((runs.toArray, u.norms))
     }
-    new FileScanRDD(spark, read,
-      parts.zipWithIndex.map { case (fs, i) => FilePartition(i, fs) }, readSchema)
+    SegmentScan(new FileScanRDD(spark, read,
+      parts.zipWithIndex.map { case ((fs, _), i) => FilePartition(i, fs) }, readSchema), parts.map(_._2).toArray)
   }
 }
 
 private[graft] object PostingsScan {
-  /** The data files of `dirs` and their footers' row groups, read on the
-    * driver. Spark's hidden files (`_SUCCESS`, `.crc`) are not data.
+  private def reader(spark: SparkSession, data: StructType, required: StructType) =
+    new ParquetFileFormat().buildReaderWithPartitionValues(spark, data, new StructType(),
+      required, Nil, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+      GraftBridge.newHadoopConf(spark))
+
+  /** The scan units of `slices`, from footers read on the driver: a unit
+    * per postings file of a slice that holds whole segments per file
+    * (`segLocal`), else one per slice, each with the slice's norms files
+    * whose `seg` range meets its postings files' range.
     */
-  def files(spark: SparkSession, dirs: Seq[String]): IndexedSeq[PostingsFile] = {
+  def units(spark: SparkSession, store: IndexStore, slices: Seq[SliceMeta]): IndexedSeq[ScanUnit] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    dirs.toIndexedSeq.flatMap { dir =>
-      val p = new Path(dir)
-      p.getFileSystem(conf).listStatus(p).toIndexedSeq
-        .filter(s => s.isFile && !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
-        .sortBy(_.getPath.getName)
-        .map { s =>
-          val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(s, conf))
-          val groups = try {
-            reader.getFooter.getBlocks.asScala.toIndexedSeq.map { b =>
-              val stats = b.getColumns.asScala.find(_.getPath.toDotString == "term")
-                .map(_.getStatistics).filter(st => st != null && !st.isEmpty && st.hasNonNullValue)
-              TermRowGroup(b.getStartingPos, b.getCompressedSize,
-                stats.map(st => UTF8String.fromBytes(st.getMinBytes)).orNull,
-                stats.map(st => UTF8String.fromBytes(st.getMaxBytes)).orNull)
-            }
-          } finally reader.close()
-          PostingsFile(s.getPath, s.getLen, s.getModificationTime, groups)
-        }
+    slices.toIndexedSeq.flatMap { s =>
+      val postings = files(conf, store.slicePath("postings", s.sliceId))
+      val norms = files(conf, store.slicePath("norms", s.sliceId))
+      (if (s.segLocal) postings.map(IndexedSeq(_)) else IndexedSeq(postings)).filter(_.nonEmpty).map { ps =>
+        val (lo, hi) = (ps.map(_.segLo).min, ps.map(_.segHi).max)
+        ScanUnit(ps, norms.filter(n => n.segLo <= hi && n.segHi >= lo).map(n => n.range(0L, n.size)).toArray)
+      }
     }
+  }
+
+  /** The data files of `dir` with their footers, read on the driver.
+    * Spark's hidden files (`_SUCCESS`, `.crc`) are not data.
+    */
+  def files(conf: Configuration, dir: String): IndexedSeq[SliceFile] = {
+    val p = new Path(dir)
+    p.getFileSystem(conf).listStatus(p).toIndexedSeq
+      .filter(s => s.isFile && !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
+      .sortBy(_.getPath.getName)
+      .map { s =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(s, conf))
+        val blocks = try reader.getFooter.getBlocks.asScala.toIndexedSeq finally reader.close()
+        def stats(b: BlockMetaData, column: String) = b.getColumns.asScala.find(_.getPath.toDotString == column)
+          .map(_.getStatistics).filter(st => st != null && !st.isEmpty && st.hasNonNullValue)
+        val segs = blocks.map(stats(_, "seg") match {
+          case Some(st: IntStatistics) => (st.getMin: Int, st.getMax: Int)
+          case _ => (Int.MinValue, Int.MaxValue)
+        })
+        SliceFile(s.getPath, s.getLen, s.getModificationTime, blocks.map { b =>
+          val term = stats(b, "term")
+          TermRowGroup(b.getStartingPos, b.getCompressedSize,
+            term.map(st => UTF8String.fromBytes(st.getMinBytes)).orNull,
+            term.map(st => UTF8String.fromBytes(st.getMaxBytes)).orNull)
+        }, segs.map(_._1).minOption.getOrElse(Int.MaxValue), segs.map(_._2).maxOption.getOrElse(Int.MinValue))
+      }
   }
 
   /** The block a scan row holds; `positions` is null when the scan pruned
@@ -103,4 +145,8 @@ private[graft] object PostingsScan {
     PostingBlock(r.getUTF8String(0).toString, r.getInt(1), r.getInt(2), r.getInt(3),
       r.getLong(4), r.getLong(5), r.getLong(6), r.getInt(7), r.getLong(8), r.getByte(9),
       r.getBinary(10), r.getBinary(11), if (!positions || r.isNullAt(12)) null else r.getBinary(12))
+
+  /** The norms row a `readNorms` row holds. */
+  def norms(r: InternalRow): SegNorms =
+    SegNorms(r.getInt(0), r.getInt(1), r.getLong(2), r.getBinary(3), r.getBinary(4))
 }

@@ -26,10 +26,10 @@ private[graft] case class PhrasePart(count: Long, docs: Array[Long], tfNorms: Ar
   * rounds two tfNorms to one score; a segment therefore reports only its
   * match count (the phrase df is their sum) and the matches within the
   * rounding margin of its k-th best tfNorm. On the Spark path each
-  * segment matches beside its own norms (`Segments.perSegment`, the route
-  * WAND takes) over the row groups that can hold the phrase terms, and
-  * the parts come back from one job with no Exchange when every postings
-  * file holds whole segments.
+  * segment matches beside its own norms, read in the task that read its
+  * blocks (`Segments.perSegment`, the route WAND takes), over the row
+  * groups that can hold the phrase terms, and the parts come back from one
+  * job with no Exchange.
   */
 object Phrase {
 

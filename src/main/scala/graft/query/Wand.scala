@@ -14,12 +14,11 @@ import graft.index._
   * segment's blocks with its norms), emits a local top-k, and the driver
   * k-merges the collected top-ks with the `TopKHeap` the serving router
   * and `Phrase.finish` use — the standard document-sharded search
-  * architecture. When every postings file holds whole segments, the query
-  * runs on the open index's planned postings scan: the driver keeps the
-  * row groups whose term range can hold a query term, and one job scores
-  * each segment in the task that read its file, with no SQL plan and no
-  * Exchange. Otherwise (an old layout, or norms past the broadcast bound)
-  * the query terms' blocks are shuffled by segment first.
+  * architecture. The query runs on the open index's planned postings
+  * scan: the driver keeps the row groups whose term range can hold a query
+  * term, and one job scores each segment in the task that read its blocks,
+  * with the norms that task reads beside them — no SQL plan, no Exchange
+  * and no norms on the driver.
   *
   * Determinism: a document's score folds its per-term contributions in
   * ascending term order, so the double-precision sum is bit-identical to

@@ -15,7 +15,8 @@ import graft.index.{IndexBuilder, IndexStore}
 
 /** The build shuffles documents, not postings, and writes each segment
   * whole into one term-sorted postings file of its slice — a file of its
-  * own when the slice has no more segments than shuffle partitions.
+  * own when the slice has no more segments than shuffle partitions, and a
+  * contiguous run of segments, the same as its norms file's, past that.
   */
 class BuildLayoutSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -78,6 +79,32 @@ class BuildLayoutSpec extends AnyFunSuite {
           s"slice ${s.sliceId}: one task inverted several segments: $segsPerFile")
     }
     docs.unpersist()
+    store.dropAll()
+  }
+
+  test("more segments than shuffle partitions: each task writes one contiguous segment run, " +
+    "the same in its postings file and its norms file") {
+    val few = spark.newSession()
+    few.conf.set("spark.sql.shuffle.partitions", "3")
+    val docs = Corpus.pages(few, 1000)
+      .withColumn("doc_id", regexp_extract(col("url"), "/p/(\\d+)$", 1).cast("long"))
+      .select("doc_id", "url", "text", "lang")
+    val store = new IndexStore(Files.createTempDirectory("graft-runs-").toString)
+    IndexBuilder.build(few, docs, store, IndexBuilder.Config(segSize = 64, blockSize = 16, slices = 2))
+    def segsPerFile(table: String, sliceId: Int): Set[Set[Int]] =
+      Files.list(Paths.get(store.slicePath(table, sliceId))).iterator().asScala.map(_.toString)
+        .filter(_.endsWith(".parquet")).toSeq
+        .map(f => few.read.parquet(f).select("seg").collect().map(_.getInt(0)).toSet)
+        .filter(_.nonEmpty).toSet
+    for (s <- store.committedSlices) {
+      assert(s.segHi - s.segLo + 1 > 3, s"slice ${s.sliceId} has no more segments than partitions")
+      val postings = segsPerFile("postings", s.sliceId)
+      assert(postings.size == 3 && postings.flatten == (s.segLo to s.segHi).toSet, s"$postings")
+      assert(postings.forall(r => r.max - r.min + 1 == r.size),
+        s"slice ${s.sliceId}: a postings file's segments are not one run: $postings")
+      assert(segsPerFile("norms", s.sliceId) == postings,
+        s"slice ${s.sliceId}: norms files hold other segment sets than postings files")
+    }
     store.dropAll()
   }
 }

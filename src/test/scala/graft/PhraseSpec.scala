@@ -1,12 +1,14 @@
 package graft
 
 import java.nio.file.Files
+
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.analysis.Analyzer
-import graft.index.{BM25, IndexBuilder, IndexStore, TermPostings}
-import graft.query.{Phrase, Segments}
+import graft.index.{BM25, IndexBuilder, IndexStore, PostingsScan, TermPostings}
+import graft.query.{Phrase, Wand}
 
 /** Phrase queries over the positional index: bit-exact against a
   * brute-force Scala oracle (tokenize + adjacency count + the same BM25
@@ -66,40 +68,40 @@ class PhraseSpec extends AnyFunSuite {
     }
   }
 
-  test("phrase topK is bit-exact vs brute force: overlaps, duplicate slots, misses") {
-    import spark.implicits._
+  private val Phrases = Seq("fox fox", "red blue red", "blue green", "dog run fox",
+    "fox fox fox", "nosuchword fox", "zzz qqq")
+
+  /** 300 seeded documents over six words, plus two with overlapping and
+    * repeated phrases.
+    */
+  private lazy val corpus: Seq[(Long, String)] = {
     val rnd = new scala.util.Random(7)
     val vocab = Array("red", "blue", "green", "fox", "dog", "run")
-    val corpus = (0L until 300L).map { i =>
+    (0L until 300L).map { i =>
       val body = (1 to 20 + rnd.nextInt(30)).map(_ => vocab(rnd.nextInt(vocab.length)))
       (i, body.mkString(" "))
     } ++ Seq(
       (300L, "fox fox fox fox"),         // overlapping "fox fox" x3
       (301L, "red blue red blue red"))   // "red blue red" overlap-free x2
-    val df = corpus.toDF("doc_id", "text")
+  }
+
+  private def corpusIn(s: SparkSession): DataFrame =
+    s.createDataFrame(corpus).toDF("doc_id", "text")
       .withColumn("url", concat(lit("doc://"), col("doc_id")))
       .withColumn("lang", lit("en"))
+
+  test("phrase topK is bit-exact vs brute force: overlaps, duplicate slots, misses") {
     val store = new IndexStore(Files.createTempDirectory("graft-phrase-").toString)
-    IndexBuilder.build(spark, df, store,
+    IndexBuilder.build(spark, corpusIn(spark), store,
       IndexBuilder.Config(segSize = 64, blockSize = 16, slices = 2, positions = true))
     val idx = store.open(spark)
-    // the same store opened where the norms cogroup by segment instead of
-    // broadcasting: the scale path must score identically
-    val sCogroup = spark.newSession()
-    sCogroup.conf.set("graft.query.broadcastNormsMaxSegs", "0")
-    val idxCogroup = store.open(sCogroup)
-    assert(idx.normsBroadcast.isDefined && idxCogroup.normsBroadcast.isEmpty)
-    for (phrase <- Seq("fox fox", "red blue red", "blue green", "dog run fox",
-        "fox fox fox", "nosuchword fox", "zzz qqq")) {
+    for (phrase <- Phrases) {
       val got = Phrase.topK(spark, idx, phrase, 10)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       val want = bruteTopK(corpus, phrase, 10)
       assert(got == want, s"phrase='$phrase'\ngot =$got\nwant=$want")
-      val scale = Phrase.topK(sCogroup, idxCogroup, phrase, 10)
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      assert(scale == got, s"cogroup path, phrase='$phrase'")
     }
-    // "blue green" matches in several segments on both paths
+    // "blue green" matches in several segments
     assert(bruteTopK(corpus, "blue green", 10).map(_._1 / 64).distinct.size > 1)
     // the overlap-counting contract, explicitly
     val ff = Phrase.topK(spark, idx, "fox fox", 10).collect()
@@ -153,11 +155,32 @@ class PhraseSpec extends AnyFunSuite {
     store.dropAll()
   }
 
-  /** A 2-segment positional index whose norms lack segment 0, opened in
-    * `session`; `perSegment` over its postings must name the segment.
-    */
-  private def assertMissingNormsNamed(session: org.apache.spark.sql.SparkSession,
-      broadcast: Boolean): Unit = {
+  test("more segments than partitions, several row groups per file: no shuffle, bit-exact") {
+    val small = TestSpark.smallRowGroupSession(16)
+    val store = new IndexStore(Files.createTempDirectory("graft-phrgeom-").toString)
+    IndexBuilder.build(small, corpusIn(small), store,
+      IndexBuilder.Config(segSize = 16, blockSize = 4, slices = 2, positions = true))
+    val partitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    assert(store.committedSlices.forall(m => m.segHi - m.segLo + 1 > partitions))
+    assert(store.committedSlices.flatMap(m => PostingsScan.files(
+      spark.sparkContext.hadoopConfiguration, store.slicePath("postings", m.sliceId)))
+      .forall(_.rowGroups.size > 1))
+    for (s <- Seq(spark, TestSpark.splittingSession())) {
+      val idx = store.open(s)
+      for (phrase <- Phrases) {
+        val norms = idx.postingsScan(positions = true).plan(Analyzer.tokenize(phrase).distinct).norms
+        assert(norms.forall(_.length == 1), s"norms files per partition: ${norms.map(_.length).toSeq}")
+        val run = () => Phrase.topK(s, idx, phrase, 10)
+          .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+        assert(run() == bruteTopK(corpus, phrase, 10), s"phrase='$phrase'")
+        val (jobs, stages) = TestSpark.jobsAndShuffleStagesOf(run())
+        assert(jobs <= 1 && stages == 0, s"phrase='$phrase': $jobs jobs, $stages shuffle stages")
+      }
+    }
+    store.dropAll()
+  }
+
+  test("a segment missing from its paired norms files fails with a named error") {
     import spark.implicits._
     val df = Seq((0L, "a b c"), (1L, "a b"), (4L, "a c"), (5L, "b")).toDF("doc_id", "text")
       .withColumn("url", concat(lit("doc://"), col("doc_id")))
@@ -165,25 +188,18 @@ class PhraseSpec extends AnyFunSuite {
     val store = new IndexStore(Files.createTempDirectory("graft-nonorms-").toString)
     IndexBuilder.build(spark, df, store,
       IndexBuilder.Config(segSize = 4, blockSize = 4, positions = true))
-    val full = store.open(session)
-    val idx = full.copy(norms = full.norms.filter(_.seg != 0))
-    assert(idx.normsBroadcast.isDefined == broadcast)
-    val e = intercept[Exception](
-      Segments.perSegment(idx, idx.postings)((_, n) => Iterator(n.seg)).collect())
-    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
-    assert(causes.exists(c => c.isInstanceOf[IllegalArgumentException] &&
-      c.getMessage.contains("seg 0 has postings but no norms")), e)
+    // rewrite the slice's norms on disk without segment 0
+    TestSpark.rewriteTable(store.slicePath("norms", 0))(_.filter(col("seg") =!= 0))
+    val idx = store.open(spark)
+    for ((name, query) <- Seq[(String, () => Any)](
+        "wand" -> (() => Wand.topK(spark, idx, "a", 10).collect()),
+        "phrase" -> (() => Phrase.topK(spark, idx, "a b", 10).collect()))) {
+      val e = intercept[Exception](query())
+      val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+      assert(causes.exists(c => c.isInstanceOf[IllegalArgumentException] &&
+        c.getMessage.contains("seg 0 has postings but no norms")), s"$name: $e")
+    }
     store.dropAll()
-  }
-
-  test("a segment missing from the broadcast norms fails with a named error") {
-    assertMissingNormsNamed(spark, broadcast = true)
-  }
-
-  test("a segment missing from the cogrouped norms fails with a named error") {
-    val sCogroup = spark.newSession()
-    sCogroup.conf.set("graft.query.broadcastNormsMaxSegs", "0") // force cogroup
-    assertMissingNormsNamed(sCogroup, broadcast = false)
   }
 
   test("non-positional index refuses phrase queries with a clear message") {

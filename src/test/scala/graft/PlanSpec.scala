@@ -124,12 +124,12 @@ class PlanSpec extends AnyFunSuite {
   test("wand topK prunes the positional payload out of the postings scan") {
     val idx = SparkEntry.indexFor(spark, sf) // built WITH positions
     // the term scan WAND runs reads every block column but positions
-    val termScan = idx.postingsScan(positions = false).rdd(Seq("spark", "dup")).readSchema
+    val termScan = idx.postingsScan(positions = false).plan(Seq("spark", "dup")).rdd.readSchema
     assert(termScan.fieldNames.toSeq ==
       org.apache.spark.sql.Encoders.product[graft.index.PostingBlock].schema.fieldNames.toSeq
         .filterNot(_ == "positions"), termScan)
     // the phrase path is the one consumer of positions — it must still read them
-    assert(idx.postingsScan(positions = true).rdd(Seq("spark", "dup"))
+    assert(idx.postingsScan(positions = true).plan(Seq("spark", "dup")).rdd
       .readSchema.fieldNames.contains("positions"))
   }
 
@@ -195,22 +195,24 @@ class PlanSpec extends AnyFunSuite {
     val idx = SparkEntry.indexFor(spark, sf)
     assert(idx.termsLocal.nonEmpty, "bounded vocab must resolve driver-side")
     assert(idx.slices.forall(_.segLocal), "a fresh build must hold whole segments per file")
-    def shuffles(s: org.apache.spark.sql.SparkSession, i: graft.index.OpenIndex): Int = {
-      val q = () => graft.query.Wand.topK(s, i, "spark dup", 5).collect()
-      q()
-      TestSpark.shuffleStagesOf(q())
+    val q = "spark dup"
+    val oracle = graft.query.OracleScorer.topK(spark, spark.read.parquet(s"$sf/documents.parquet"), q, 5)
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    // (jobs, shuffle-map stages) of a warm query, and its answer
+    def answer(s: org.apache.spark.sql.SparkSession, i: graft.index.OpenIndex) = {
+      val run = () => graft.query.Wand.topK(s, i, q, 5).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      val got = run()
+      (TestSpark.jobsAndShuffleStagesOf(run()), got)
     }
     // segment-local: each task runs WAND over the segments of the file it
-    // read, and the driver merges — no join, no shuffle
-    assert(shuffles(spark, idx) == 0)
-    // slices without the whole-segment flag: the blocks shuffle by segment
-    // first, the one Exchange (the norms still broadcast)
+    // read, with the norms it reads beside them, and the driver merges
+    assert(answer(spark, idx) == ((1, 0), oracle))
+    // slices without the whole-segment flag: each slice is one task, so
+    // its segments still meet their norms with no Exchange
     val unflagged = idx.copy(slices = idx.slices.map(_.copy(segLocal = false)))
-    assert(shuffles(spark, unflagged) == 1)
-    // norms past the broadcast bound: the blocks and the norms each shuffle
-    // by segment into one cogroup
-    val sCogroup = spark.newSession()
-    sCogroup.conf.set("graft.query.broadcastNormsMaxSegs", "0")
-    assert(shuffles(sCogroup, idx.store.open(sCogroup)) == 2)
+    assert(answer(spark, unflagged) == ((1, 0), oracle))
+    // a session whose settings split files apart takes the same route
+    val split = TestSpark.splittingSession()
+    assert(answer(split, idx.store.open(split)) == ((1, 0), oracle))
   }
 }

@@ -5,17 +5,18 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.scheduler.SparkListenerJobStart
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.index.{IndexBuilder, IndexStore}
-import graft.query.{Phrase, Serving, Wand}
+import graft.index.{IndexBuilder, IndexStore, OpenIndex}
+import graft.query.{OracleScorer, Phrase, Serving, Wand}
 
 /** Spark jobs a warm Spark-path query runs: once an open index holds its
-  * stats, term stats and norms, WAND and phrase each answer in one scan of
-  * their terms' row groups, scoring each segment in the partition that
-  * read it — one result job, no shuffle-map job and no SQL plan over the
-  * postings. Filling those counts the term stats once, and an open that
-  * wants only the stats collects no norms.
+  * stats and term stats, WAND and phrase each answer in one scan of their
+  * terms' row groups, scoring each segment in the partition that read it
+  * with the norms that partition reads — one result job, no shuffle-map
+  * job and no SQL plan over the postings. Filling those counts the term
+  * stats once and collects no norms.
   */
 class QueryJobsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -23,20 +24,24 @@ class QueryJobsSpec extends AnyFunSuite {
   private def jobsOf(body: => Any): Int =
     TestSpark.eventsOf(body).count(_.isInstanceOf[SparkListenerJobStart])
 
-  /** A fresh positional store of `slices` slices over 300 short documents
-    * in five segments.
-    */
-  private def slicedStore(slices: Int = 2): IndexStore = {
+  /** 300 short seeded documents. */
+  private lazy val corpus: DataFrame = {
     import spark.implicits._
     val rnd = new scala.util.Random(5)
     val vocab = Array("red", "blue", "green", "fox", "dog", "run")
-    val df = (0L until 300L).map { i =>
+    (0L until 300L).map { i =>
       (i, (1 to 10 + rnd.nextInt(30)).map(_ => vocab(rnd.nextInt(vocab.length))).mkString(" "))
     }.toDF("doc_id", "text")
       .withColumn("url", concat(lit("doc://"), col("doc_id")))
       .withColumn("lang", lit("en"))
+  }
+
+  /** A fresh positional store of `slices` slices over `corpus`, in five
+    * segments.
+    */
+  private def slicedStore(slices: Int = 2): IndexStore = {
     val store = new IndexStore(Files.createTempDirectory("graft-jobs-").toString)
-    IndexBuilder.build(spark, df, store,
+    IndexBuilder.build(spark, corpus, store,
       IndexBuilder.Config(segSize = 64, blockSize = 16, slices = slices, positions = true))
     assert(store.committedSlices.size == slices)
     store
@@ -48,7 +53,7 @@ class QueryJobsSpec extends AnyFunSuite {
     for ((name, query) <- Seq[(String, () => Any)](
         "phrase" -> (() => Phrase.topK(spark, idx, "blue green", 10).collect()),
         "wand" -> (() => Wand.topK(spark, idx, "fox dog", 10).collect()))) {
-      query() // warm: stats, term stats and the norms broadcast
+      query() // warm: stats and term stats
       val jobs = jobsOf(query())
       info(s"warm $name top-k: $jobs jobs")
       assert(jobs == 1, s"warm $name top-k ran $jobs jobs")
@@ -81,10 +86,11 @@ class QueryJobsSpec extends AnyFunSuite {
     }
     info(s"open + stats + first WAND top-k: $jobs jobs")
     // four for the one term count (the aggregate's shuffle and the cache),
-    // the stats fold over the norms, the terms collect, the norms collect
-    // and the query; the open reads each table with its row type's schema,
-    // so it runs no schema-inference job (12 when it ran one per table)
-    assert(jobs <= 8, s"open + stats + first WAND top-k ran $jobs jobs")
+    // the stats fold over the norms, the terms collect and the query; the
+    // open reads each table with its row type's schema, so it runs no
+    // schema-inference job (12 when it ran one per table), and no query
+    // collects the norms (8 when one did)
+    assert(jobs <= 7, s"open + stats + first WAND top-k ran $jobs jobs")
     store.dropAll()
   }
 
@@ -92,20 +98,26 @@ class QueryJobsSpec extends AnyFunSuite {
     val store = slicedStore()
     val idx = store.open(spark)
     val shard = Serving.openShard(idx, 1, 2, 2L << 30)
-    assert(!idx.normsCollected, "openShard collected the whole norms table to the driver")
     Wand.topK(spark, idx, "fox dog", 10).collect()
-    assert(idx.normsCollected && shard.stats == idx.stats)
+    assert(shard.stats == idx.stats)
     store.dropAll()
   }
 
-  test("the norms broadcast bound counts a merged slice's segments once") {
+  test("a non-adjacent merged slice answers WAND and phrase exactly") {
     val store = slicedStore(3) // segments [0, 1], [2, 3], [4]
+    def rows(df: DataFrame) = df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val wand = (i: OpenIndex) => rows(Wand.topK(spark, i, "fox dog", 10))
+    val phrase = (i: OpenIndex) => rows(Phrase.topK(spark, i, "blue green", 10))
+    val before = store.open(spark)
+    val (wand0, phrase0) = (wand(before), phrase(before))
     store.mergeSlices(spark, Seq(0, 2)) // [0, 4] spans the slice left between
     assert(store.committedSlices.map(s => s.segHi - s.segLo + 1).sum == 7)
-    val five = spark.newSession()
-    five.conf.set("graft.query.broadcastNormsMaxSegs", "5")
-    val idx = store.open(five)
-    assert(idx.normsBroadcast.map(_.value.size).contains(5))
+    val idx = store.open(spark)
+    val oracle = rows(OracleScorer.topK(spark, corpus, "fox dog", 10))
+    assert(wand0 == oracle && wand(idx) == oracle)
+    assert(phrase0.nonEmpty && phrase(idx) == phrase0)
+    assert(TestSpark.jobsAndShuffleStagesOf(wand(idx)) == (1, 0))
+    assert(TestSpark.jobsAndShuffleStagesOf(phrase(idx)) == (1, 0))
     store.dropAll()
   }
 }

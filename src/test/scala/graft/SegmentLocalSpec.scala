@@ -8,6 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.rdd.RDD
 import org.apache.spark.scheduler.SparkListenerTaskEnd
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.functions._
 
 import graft.analysis.Analyzer
@@ -15,12 +16,13 @@ import graft.index.{BM25, IndexBuilder, IndexStore, OpenIndex, PostingsScan}
 import graft.query.{OracleScorer, Phrase, Wand}
 import graft.streaming.StreamIngest
 
-/** The segment-local Spark path and its guard: a Spark-path query scores
-  * each segment inside the task that reads its file only when every slice
-  * holds whole segments per postings file; the planned scan reads every
-  * file whole, whatever the session's split settings. A store that breaks
-  * the flag takes the shuffle path, and every path answers bit-equal to
-  * brute force.
+/** The one Spark-path route and its partition unit: a Spark-path query
+  * scores each segment inside the task that reads its blocks, with the
+  * norms that task reads beside them. A partition is a postings file when
+  * its slice holds whole segments per file, and the whole slice when it
+  * does not; the planned scan reads every partition whole, whatever the
+  * session's split settings. No store shuffles, and every store answers
+  * bit-equal to brute force.
   */
 class SegmentLocalSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -73,7 +75,12 @@ class SegmentLocalSpec extends AnyFunSuite {
 
   /** Shuffle-map stages of a warm WAND and a warm phrase top-k on `idx`. */
   private def shuffles(s: SparkSession, idx: OpenIndex): (Int, Int) = {
-    def warm(q: => Any): Int = { q; TestSpark.shuffleStagesOf(q) }
+    def warm(q: => Any): Int = {
+      q
+      val (jobs, stages) = TestSpark.jobsAndShuffleStagesOf(q)
+      assert(jobs == 1, s"a warm query ran $jobs jobs")
+      stages
+    }
     (warm(Wand.topK(s, idx, "red fox", 10).collect()),
       warm(Phrase.topK(s, idx, "red fox", 10).collect()))
   }
@@ -96,46 +103,44 @@ class SegmentLocalSpec extends AnyFunSuite {
   private def splitStore(): (IndexStore, Seq[(Long, String)]) = {
     val ps = pages(1, 600)
     val store = new IndexStore(Files.createTempDirectory("graft-split-").toString)
-    val small = spark.newSession()
-    small.conf.set("parquet.block.row.count.limit", "16")
+    val small = TestSpark.smallRowGroupSession(16)
     IndexBuilder.build(small, withIds(small, ps), store, cfg)
-    val files = PostingsScan.files(spark,
-      store.committedSlices.map(m => store.slicePath("postings", m.sliceId)))
+    val files = store.committedSlices.flatMap(m => PostingsScan.files(
+      spark.sparkContext.hadoopConfiguration, store.slicePath("postings", m.sliceId)))
     assert(files.forall(_.rowGroups.size > 1), s"one row group per file: ${files.map(_.rowGroups.size)}")
     (store, ps.zipWithIndex.map { case ((_, t), i) => i.toLong -> t })
   }
 
-  /** A session under whose settings a SQL scan splits files apart. */
-  private def splittingSession(): SparkSession = {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.files.maxPartitionBytes", "4096")
-    s.conf.set("spark.sql.files.openCostInBytes", "1")
-    s
-  }
+  /** The planned scan of every term of `idx`. */
+  private def fullScan(idx: OpenIndex) =
+    idx.postingsScan(positions = false).plan(idx.termsLocal.get.keys)
 
-  test("split postings files take the shuffle path and stay exact") {
+  test("split settings do not change the route and stay exact") {
     val (store, docs) = splitStore()
-    // past the norms broadcast bound a query reads the SQL scan, whose
-    // partitions cut the files apart, and cogroups the blocks with the
-    // norms: each side shuffles by segment
-    val s = splittingSession()
-    s.conf.set("graft.query.broadcastNormsMaxSegs", "0")
+    // a SQL scan under these settings cuts the files apart; the planned
+    // scan makes the same partitions, with the same norms files, as under
+    // the default settings
+    val s = TestSpark.splittingSession()
     val idx = store.open(s)
-    assert(idx.slices.forall(_.segLocal) && idx.normsBroadcast.isEmpty)
     assert(maxPartitionsPerSeg(idx) > 1, "the split scan must spread a segment over partitions")
-    assert(shuffles(s, idx) == (2, 2))
+    def route(i: OpenIndex) = {
+      val scan = fullScan(i)
+      (scan.rdd.partitions.toSeq.map(_.asInstanceOf[FilePartition].files.toSeq
+        .map(f => (f.filePath, f.start, f.length))), scan.norms.toSeq.map(_.toSeq.map(_.filePath)))
+    }
+    assert(route(idx) == route(store.open(spark)))
+    assert(shuffles(s, idx) == (0, 0))
     assertExact(s, idx, docs)
     store.dropAll()
   }
 
   test("several row groups per file: the planned scan reads each file whole and stays exact") {
     val (store, docs) = splitStore()
-    val s = splittingSession()
+    val s = TestSpark.splittingSession()
     val idx = store.open(s)
-    assert(idx.slices.forall(_.segLocal) && idx.normsBroadcast.isDefined)
+    assert(idx.slices.forall(_.segLocal))
     assert(maxPartitionsPerSeg(idx) > 1, "the split scan must spread a segment over partitions")
-    val terms = idx.termsLocal.get.keys
-    assert(maxPartitionsPerSeg(idx.postingsScan(positions = false).rdd(terms))(_.getInt(1)) == 1,
+    assert(maxPartitionsPerSeg(fullScan(idx).rdd)(_.getInt(1)) == 1,
       "the planned scan must read each segment in one partition")
     assert(shuffles(s, idx) == (0, 0))
     assertExact(s, idx, docs)
@@ -157,7 +162,7 @@ class SegmentLocalSpec extends AnyFunSuite {
     store.dropAll()
   }
 
-  test("a slice in the old global-sort layout takes the shuffle path and stays exact") {
+  test("a slice in the old global-sort layout is one partition and stays exact") {
     val ps = pages(2, 600)
     val docs = ps.zipWithIndex.map { case ((_, t), i) => i.toLong -> t }
     val store = new IndexStore(Files.createTempDirectory("graft-oldlayout-").toString)
@@ -166,13 +171,8 @@ class SegmentLocalSpec extends AnyFunSuite {
     // segments: range-partitioned by term, so a segment spans both files
     val meta = store.committedSlices.head
     val dir = Paths.get(store.slicePath("postings", meta.sliceId))
-    val tmp = Paths.get(s"$dir.rewrite")
-    spark.read.parquet(dir.toString)
-      .repartitionByRange(2, col("term"))
-      .sortWithinPartitions("term", "seg", "blk")
-      .write.parquet(tmp.toString)
-    Files.walk(dir).iterator().asScala.toSeq.reverse.foreach(Files.delete)
-    Files.move(tmp, dir)
+    TestSpark.rewriteTable(dir.toString)(
+      _.repartitionByRange(2, col("term")).sortWithinPartitions("term", "seg", "blk"))
     store.commitSlice(meta.copy(segLocal = false))
     val segsPerFile = Files.list(dir).iterator().asScala.map(_.toString)
       .filter(_.endsWith(".parquet")).toSeq
@@ -180,21 +180,41 @@ class SegmentLocalSpec extends AnyFunSuite {
     assert(segsPerFile.size == 2 && (segsPerFile(0) intersect segsPerFile(1)).nonEmpty,
       s"no segment spans two files: $segsPerFile")
 
-    // one scan partition per file (each file costs a whole partition), so
-    // the files are read whole and only the cleared flag can refuse
+    // one SQL scan partition per file (each file costs a whole partition):
+    // a segment spans partitions, so only the cleared flag keeps the
+    // planned scan from reading the slice's files apart
     val s = spark.newSession()
     s.conf.set("spark.sql.files.openCostInBytes", s.conf.get("spark.sql.files.maxPartitionBytes"))
     val idx = store.open(s)
     assert(!idx.slices.head.segLocal && idx.slices.tail.forall(_.segLocal))
     assert(maxPartitionsPerSeg(idx) > 1, "the old layout must spread a segment over partitions")
-    assert(shuffles(s, idx) == (1, 1))
+    assertUnflaggedWhole(store, idx)
+    assert(shuffles(s, idx) == (0, 0))
     assertExact(s, idx, docs)
     // a merge with the unflagged slice is unflagged too
     assert(!store.compact(spark).segLocal)
     val merged = store.open(spark)
-    assert(!merged.slices.forall(_.segLocal) && shuffles(spark, merged) == (1, 1))
+    assert(!merged.slices.forall(_.segLocal))
+    assertUnflaggedWhole(store, merged)
+    assert(shuffles(spark, merged) == (0, 0))
     assertExact(spark, merged, docs)
     store.dropAll()
+  }
+
+  /** Every unflagged slice of `idx` is one partition of its planned scan,
+    * holding all of its postings files and no other.
+    */
+  private def assertUnflaggedWhole(store: IndexStore, idx: OpenIndex): Unit = {
+    val parts = fullScan(idx).rdd.partitions.toSeq
+      .map(_.asInstanceOf[FilePartition].files.map(_.toPath).toSet)
+    for (m <- idx.slices if !m.segLocal) {
+      val dir = s"slice=${m.sliceId}"
+      val files = Files.list(Paths.get(store.slicePath("postings", m.sliceId))).iterator().asScala
+        .map(_.getFileName.toString).filter(_.endsWith(".parquet")).toSet
+      val mine = parts.filter(_.exists(_.getParent.getName == dir))
+      assert(mine.size == 1 && mine.head.forall(_.getParent.getName == dir) &&
+        mine.head.map(_.getName) == files, s"slice ${m.sliceId} is not one partition: $parts")
+    }
   }
 
   test("merged slices keep the whole-segment flag: the reopened store stays local") {

@@ -1,10 +1,12 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.{ListenerDrain, SparkFirehoseListener}
-import org.apache.spark.scheduler.{SparkListenerEvent, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler.{SparkListenerEvent, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One shared local session for the whole test JVM. */
 object TestSpark {
@@ -36,8 +38,38 @@ object TestSpark {
     } finally sc.removeSparkListener(listener)
   }
 
-  /** Shuffle-map stages `body` ran: one per Exchange it executed. */
-  def shuffleStagesOf(body: => Any): Int = eventsOf(body).collect {
-    case t: SparkListenerTaskEnd if t.taskType == "ShuffleMapTask" => t.stageId
-  }.distinct.size
+  /** Replace the parquet table at local path `dir` with `f` of its rows,
+    * written beside it first.
+    */
+  def rewriteTable(dir: String)(f: DataFrame => DataFrame): Unit = {
+    val (d, tmp) = (Paths.get(dir), Paths.get(s"$dir.rewrite"))
+    f(spark.read.parquet(dir)).write.parquet(tmp.toString)
+    Files.walk(d).iterator().asScala.toSeq.reverse.foreach(Files.delete)
+    Files.move(tmp, d)
+  }
+
+  /** A session under whose settings a SQL scan splits files apart. */
+  def splittingSession(): SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.files.maxPartitionBytes", "4096")
+    s.conf.set("spark.sql.files.openCostInBytes", "1")
+    s
+  }
+
+  /** A session whose parquet writes cut a row group every `rows` rows. */
+  def smallRowGroupSession(rows: Int): SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("parquet.block.row.count.limit", rows.toString)
+    s
+  }
+
+  /** Jobs and shuffle-map stages `body` ran: one stage per Exchange it
+    * executed.
+    */
+  def jobsAndShuffleStagesOf(body: => Any): (Int, Int) = {
+    val events = eventsOf(body)
+    (events.count(_.isInstanceOf[SparkListenerJobStart]), events.collect {
+      case t: SparkListenerTaskEnd if t.taskType == "ShuffleMapTask" => t.stageId
+    }.distinct.size)
+  }
 }

@@ -1,9 +1,13 @@
 package graft
 
 import java.nio.file.Files
+
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.index.{IndexBuilder, IndexStore}
+import graft.analysis.Analyzer
+import graft.index.{IndexBuilder, IndexStore, PostingsScan}
 import graft.query.{OracleScorer, TopKHeap, Wand}
 
 /** Rank-identity: block-max WAND over the compressed index must return
@@ -252,19 +256,30 @@ class WandSpec extends AnyFunSuite {
     }
   }
 
-  test("broadcast-norms fast path and cogroup scale path are rank-identical") {
-    val store = index.store
-    val sCogroup = spark.newSession()
-    sCogroup.conf.set("graft.query.broadcastNormsMaxSegs", "0") // force cogroup
-    val idxCogroup = store.open(sCogroup)
-    assert(idxCogroup.normsBroadcast.isEmpty)
-    assert(index.normsBroadcast.isDefined) // default path broadcasts
-    for (q <- Seq("the web crawl", "docmark42", "the of and")) {
-      val fast = Wand.topK(spark, index, q, 50)
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      val scale = Wand.topK(sCogroup, idxCogroup, q, 50)
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      assert(fast == scale, s"path divergence for '$q'")
+  test("more segments than partitions, several row groups per file: no shuffle, exact") {
+    val small = TestSpark.smallRowGroupSession(64)
+    val store = new IndexStore(Files.createTempDirectory("graft-wand-geom-").toString)
+    IndexBuilder.build(small, small.createDataFrame(docs.collect().toSeq.asJava, docs.schema),
+      store, IndexBuilder.Config(segSize = 64, blockSize = 16, slices = 2))
+    val partitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    assert(store.committedSlices.forall(m => m.segHi - m.segLo + 1 > partitions))
+    assert(store.committedSlices.flatMap(m => PostingsScan.files(
+      spark.sparkContext.hadoopConfiguration, store.slicePath("postings", m.sliceId)))
+      .forall(_.rowGroups.size > 1))
+    val cases = for (q <- queries; k <- Seq(10, 100)) yield (q, k,
+      OracleScorer.topK(spark, docs, q, k).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq)
+    for (s <- Seq(spark, TestSpark.splittingSession())) {
+      val idx = store.open(s)
+      for ((q, k, oracle) <- cases) {
+        val norms = idx.postingsScan(positions = false).plan(Analyzer.tokenize(q).distinct).norms
+        assert(norms.forall(_.length == 1), s"norms files per partition: ${norms.map(_.length).toSeq}")
+        val run = () => Wand.topK(s, idx, q, k)
+          .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+        assert(run() == oracle, s"query='$q' k=$k")
+        val (jobs, stages) = TestSpark.jobsAndShuffleStagesOf(run())
+        assert(jobs <= 1 && stages == 0, s"query='$q' k=$k: $jobs jobs, $stages shuffle stages")
+      }
     }
+    store.dropAll()
   }
 }
