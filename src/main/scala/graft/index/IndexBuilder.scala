@@ -22,7 +22,6 @@ import org.apache.spark.storage.StorageLevel
   *     -> persist (MEMORY_AND_DISK)
   *          -> sortWithinPartitions(term, seg, blk) -> write postings
   *          -> write norms, write docs
-  *   terms(df, cf)  <- postings parquet (columnar agg of n/tfSum)
   * }}}
   * Only documents cross the shuffle, never postings, and a segment is
   * written whole by one task: a postings file is term-sorted (row-group
@@ -191,8 +190,9 @@ object IndexBuilder {
     * assume it). Soundness under drifting corpus stats comes from the
     * impact metadata — (maxTf, minDl) per block bounds scores under
     * whatever avgdl the query computes, so earlier slices never need
-    * rewriting. Term df/cf partials merge additively on read; query-time
-    * stats recompute from the docs table.
+    * rewriting. Term df/cf are sums over the postings, and corpus stats
+    * fold over the norms, so query-time stats cover the new slice as they
+    * read it.
     */
   def append(
       spark: SparkSession,
@@ -252,7 +252,7 @@ object IndexBuilder {
     * sorted by docID (the build's only document-sized shuffle), then one
     * `SegmentInverter` per partition emits every segment's blocks, norms
     * row and doc rows in a single pass. The pass is persisted once and
-    * written three ways; `terms` aggregates the written postings.
+    * written three ways.
     *
     * Segment `segLo + i` of the slice's S goes to partition `i·P/S`, with
     * P the smaller of S and `spark.sql.shuffle.partitions`: each segment
@@ -280,7 +280,6 @@ object IndexBuilder {
       .as[SegmentInverter.Doc]
       .mapPartitions(docs => new SegmentInverter(docs, cfg))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val postingsPath = store.slicePath("postings", sliceId)
     // Observations ride the writes: manifest counts with no extra pass
     val pObs = Observation()
     val dObs = Observation()
@@ -291,20 +290,13 @@ object IndexBuilder {
       inverted.where(col("block").isNotNull).select("block.*")
         .sortWithinPartitions(col("term"), col("seg"), col("blk"))
         .observe(pObs, sum("n").as("postings"), count(lit(1)).as("blocks"))
-        .write.mode("overwrite").option("maxRecordsPerFile", 0L).parquet(postingsPath)
+        .write.mode("overwrite").option("maxRecordsPerFile", 0L).parquet(store.slicePath("postings", sliceId))
       inverted.where(col("norms").isNotNull).select("norms.*")
         .write.mode("overwrite").parquet(store.slicePath("norms", sliceId))
       inverted.where(col("doc").isNotNull).select("doc.*")
         .observe(dObs, count(lit(1)).as("docs"))
         .write.mode("overwrite").parquet(store.slicePath("docs", sliceId))
     } finally inverted.unpersist()
-
-    // per-term partials from the written postings (columnar agg over
-    // n/tfSum — never re-tokenizes the corpus)
-    spark.read.parquet(postingsPath)
-      .groupBy("term")
-      .agg(sum("n").as("df"), sum("tfSum").as("cf"))
-      .write.mode("overwrite").parquet(store.slicePath("terms", sliceId))
 
     val pMetrics = pObs.get
     val nPostings = Option(pMetrics("postings")).map(_.asInstanceOf[Long]).getOrElse(0L)

@@ -4,7 +4,6 @@ import scala.collection.mutable
 import scala.reflect.runtime.universe.TypeTag
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.ingest.Fs
 
@@ -37,8 +36,9 @@ case class SliceMeta(
   *   <root>/postings/slice=<id>/  (parquet)
   *   <root>/docs/slice=<id>/      (parquet)
   *   <root>/norms/slice=<id>/     (parquet)
-  *   <root>/terms/slice=<id>/     (parquet; partial df/cf, merged on read)
   * }}}
+  * Term df/cf are sums over the postings (`TermStat.of`); a store written
+  * with a per-slice `terms/` table still opens, and no reader reads it.
   * Only slices listed in the manifest are visible to readers — a crashed
   * build leaves orphan files that the next run overwrites. This is the
   * resume ledger (reference bulkupdate.py:137-219 semantics): completed
@@ -127,8 +127,8 @@ final class IndexStore(val root: String) {
     * `vacuum(minAgeMs)` once in-flight readers have drained. A batch
     * caller that never vacuums keeps every superseded generation on disk.
     */
-  def compact(spark: SparkSession): SliceMeta =
-    mergeSlices(spark, committedSlices.map(_.sliceId))
+  def compact(): SliceMeta =
+    mergeSlices(committedSlices.map(_.sliceId))
 
   /** Merge a SUBSET of committed slices into one — the tiered-merge
     * primitive a continuously-indexed corpus needs (every micro-batch
@@ -138,10 +138,9 @@ final class IndexStore(val root: String) {
     * disjoint: the merged slice's files are the union of theirs, copied
     * as they are (each file keeps its sort order and its segments, so the
     * merged slice holds whole segments per file when every merged slice
-    * did), and only the per-term `terms` partials re-aggregate.
-    * Blocks are never re-encoded, norms never recomputed, and the merged
-    * counts are the sums of the slices' manifest counts. Commit is atomic
-    * (manifest rename).
+    * did). No Spark job runs: blocks are never re-encoded, norms never
+    * recomputed, and the merged counts are the sums of the slices'
+    * manifest counts. Commit is atomic (manifest rename).
     *
     * Superseded slice FILES are NOT deleted here: a concurrent reader —
     * a distributed-path `OpenIndex` whose lazy Datasets still point at the
@@ -152,7 +151,7 @@ final class IndexStore(val root: String) {
     * carried in the SAME manifest commit; `vacuum(minAgeMs)` reclaims
     * them once every snapshot older than the grace window has drained.
     */
-  def mergeSlices(spark: SparkSession, sliceIds: Seq[Int]): SliceMeta = {
+  def mergeSlices(sliceIds: Seq[Int]): SliceMeta = {
     val all = committedSlices
     require(all.nonEmpty, s"nothing to compact at $root")
     val idSet = sliceIds.toSet
@@ -162,10 +161,6 @@ final class IndexStore(val root: String) {
     val newId = all.map(_.sliceId).max + 1
 
     Seq("postings", "norms", "docs").foreach(unionFiles(_, old.map(_.sliceId), newId))
-    spark.read.parquet(old.map(s => slicePath("terms", s.sliceId)): _*)
-      .groupBy("term")
-      .agg(sum("df").as("df"), sum("cf").as("cf"))
-      .write.mode("overwrite").parquet(slicePath("terms", newId))
 
     val now = System.currentTimeMillis()
     val meta = SliceMeta(newId, old.map(_.segLo).min, old.map(_.segHi).max,
@@ -243,6 +238,8 @@ final class IndexStore(val root: String) {
     val ripe = dead.filter { case (id, at) => !live(id) && nowMs - at >= minAgeMs }
     var bytes = 0L
     ripe.keys.foreach { id =>
+      // "terms": the per-slice table of a store written before term stats
+      // came from the postings
       Seq("postings", "terms", "norms", "docs").foreach { t =>
         bytes += Fs.treeBytes(slicePath(t, id))
         Fs.deleteRecursive(slicePath(t, id))
@@ -265,16 +262,13 @@ final class IndexStore(val root: String) {
     * and with it files-per-term-lookup and serving block objects — stays
     * bounded.
     */
-  def maybeMerge(
-      spark: SparkSession,
-      maxSlices: Int = 16,
-      mergeFactor: Int = 8): Seq[SliceMeta] = {
+  def maybeMerge(maxSlices: Int = 16, mergeFactor: Int = 8): Seq[SliceMeta] = {
     require(maxSlices >= 1 && mergeFactor >= 2, "maxSlices >= 1, mergeFactor >= 2")
     val merged = scala.collection.mutable.ArrayBuffer.empty[SliceMeta]
     while (committedSlices.size > maxSlices) {
       val victims = committedSlices.sortBy(s => (s.bytes, s.sliceId))
         .take(math.min(mergeFactor, committedSlices.size - maxSlices + 1))
-      merged += mergeSlices(spark, victims.map(_.sliceId))
+      merged += mergeSlices(victims.map(_.sliceId))
     }
     merged.toSeq
   }
@@ -284,29 +278,28 @@ final class IndexStore(val root: String) {
   def slicePath(table: String, sliceId: Int): String =
     s"$root/$table/slice=$sliceId"
 
+  /** One table of `slices`, read with its row type's schema: no
+    * schema-inference job. Every reader of a slice set reads through it.
+    */
+  private[graft] def readTable[T <: Product : TypeTag](
+      spark: SparkSession, table: String, slices: Seq[SliceMeta]): Dataset[T] = {
+    val enc = Encoders.product[T]
+    spark.read.schema(enc.schema).parquet(slices.map(s => slicePath(table, s.sliceId)): _*)
+      .as[T](enc)
+  }
+
   def open(spark: SparkSession): OpenIndex = {
-    import spark.implicits._
     // ONE manifest read pins every table to the same committed slice set
     val slices = committedSlices
     require(slices.nonEmpty, s"index at $root has no committed slices")
-    // each table has its row type's schema: no schema-inference job
-    def readTable[T <: Product : TypeTag](table: String): DataFrame =
-      spark.read.schema(Encoders.product[T].schema)
-        .parquet(slices.map(s => slicePath(table, s.sliceId)): _*)
-    val postings = readTable[PostingBlock]("postings").as[PostingBlock]
+    val postings = readTable[PostingBlock](spark, "postings", slices)
     // norms and term stats are tiny relative to postings (one row per seg /
     // per distinct term); cache them so the stats fold, serving opens and
     // per-query idf lookups don't re-scan parquet (queries read the norms
     // files beside their segments' postings instead)
-    val norms = readTable[SegNorms]("norms").as[SegNorms].cache()
-    // per-slice partial term stats merge to global df/cf (slices partition
-    // docs, so per-term partials are additive)
-    val terms = readTable[TermStat]("terms")
-      .groupBy("term")
-      .agg(sum("df").as("df"), sum("cf").as("cf"))
-      .as[TermStat]
-      .cache()
-    OpenIndex(this, postings, norms, terms, readTable[DocMeta]("docs"), slices)
+    val norms = readTable[SegNorms](spark, "norms", slices).cache()
+    OpenIndex(this, postings, norms, TermStat.of(postings).cache(),
+      readTable[DocMeta](spark, "docs", slices).toDF(), slices)
   }
 
   // ---- settings / mappings management surface (the reference's
@@ -384,8 +377,8 @@ case class OpenIndex(
   /** Driver-side term→df lookup for the low-latency query path: resolves
     * query-term stats without a per-query Spark job (one cached collect at
     * first use). Bounded: past 2^20 terms (web-scale vocabularies don't
-    * fit driver memory) queries fall back to the filtered-collect path,
-    * which row-group stats keep cheap on the compacted terms table.
+    * fit driver memory) queries fall back to a filtered collect over the
+    * cached term stats.
     */
   lazy val termsLocal: Option[Map[String, Long]] =
     if (termCount <= (1L << 20))

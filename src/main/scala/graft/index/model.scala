@@ -71,6 +71,37 @@ final class DecodedNorms(val seg: Int, docs: Array[Long], lens: Array[Int]) {
 
 case class TermStat(term: String, df: Long, cf: Long)
 
+/** Term stats are a function of the postings, as Lucene's docFreq and
+  * totalTermFreq sit in each segment's term dictionary beside them: a
+  * term's blocks partition its documents, so df = Σ n and cf = Σ tfSum.
+  * No table stores them.
+  */
+object TermStat {
+  /** Every term's stats, derived in one aggregate: the scan reads only
+    * `term`, `n` and `tfSum`.
+    */
+  def of(postings: org.apache.spark.sql.Dataset[PostingBlock])
+      : org.apache.spark.sql.Dataset[TermStat] = {
+    import org.apache.spark.sql.functions.sum
+    postings.groupBy("term").agg(sum("n").as("df"), sum("tfSum").as("cf"))
+      .as[TermStat](org.apache.spark.sql.Encoders.product[TermStat])
+  }
+
+  /** Add (`sign` 1) or subtract (`sign` -1) `blocks`' df into `df`, and
+    * return it. A term whose df reaches 0 is removed, not kept at 0:
+    * serving looks query terms up with `containsKey`. A missing key's
+    * `get` unboxes to 0L, the additive identity.
+    */
+  def addDf(df: java.util.HashMap[String, Long], blocks: Array[PostingBlock],
+      sign: Int = 1): java.util.HashMap[String, Long] = {
+    blocks.foreach { b =>
+      val left = df.get(b.term) + sign * b.n.toLong
+      if (left <= 0L) df.remove(b.term) else df.put(b.term, left)
+    }
+    df
+  }
+}
+
 case class IndexStats(nDocs: Long, avgdl: Double, nTerms: Long, totalTokens: Long)
 
 object IndexStats {

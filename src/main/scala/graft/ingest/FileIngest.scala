@@ -407,21 +407,7 @@ object FileIngest {
       ledgerPath: String,
       dlqPath: String,
       resume: Boolean = false): IngestSummary = {
-    import spark.implicits._
-
-    recoverCompact(targetPath)
-    // reclaim orphaned append stages past the grace window — a failed
-    // staged append reports its unit failed (resume re-does it), so aged
-    // stages are pure garbage
-    Seq(targetPath, ledgerPath, dlqPath).foreach(StagedAppend.vacuumStages(_))
-    val done: Set[String] =
-      if (resume && Fs.exists(ledgerPath))
-        spark.read.parquet(ledgerPath).select("file").as[String].collect().toSet
-      else Set.empty
-
-    val reports = scala.collection.mutable.ArrayBuffer.empty[FileReport]
-    var processed = 0L
-    var failed = 0L
+    val done = prepare(spark, targetPath, ledgerPath, dlqPath, resume)
     // one write-sequence value per file, reserved up-front (caller order)
     val seqBase = reserveSeqRange(targetPath, files.size)
     // a path repeated WITHIN one call ingests once; later occurrences are
@@ -429,48 +415,72 @@ object FileIngest {
     // is never what the caller meant, and the batched path reads each
     // distinct path once — this keeps the two paths report-identical)
     val seen = scala.collection.mutable.Set.empty[String]
-
-    files.zipWithIndex.foreach { case (f, fi) =>
-      if (done.contains(f) || !seen.add(f)) {
-        reports += FileReport(f, 0L, 0L, "skipped")
-      } else {
-        try {
-          val (good, failedRecs, cacheHandle) = parseFileWithFailures(spark, f)
-          val coerced = Coerce.documents(good)
-          val deduped =
-            if (coerced.columns.contains("id"))
-              Upsert.lastWriteWins(
-                withRowOrder(coerced, "__ord"),
-                "id", Seq("__ord")).drop("__ord")
-            else coerced
-          val n = deduped.count()
-          val stamped = deduped.withColumn(SeqCol, lit(seqBase + fi))
-          StagedAppend(stamped, targetPath, "target")
-          // quarantine the failed RECORDS (content + error metadata,
-          // 230 KB-chunked), not a count row — a user debugging a bad
-          // batch needs the documents back (file_processor.py:263-413)
-          val bad = failedRecs.count()
-          if (bad > 0) Dlq.writeRecords(failedRecs, dlqPath)
-          cacheHandle.foreach(_.unpersist(blocking = false))
-          // staged, not a plain append: concurrent drivers share the
-          // ledger table, and two plain append jobs to one directory
-          // clobber each other's _temporary task output
-          StagedAppend(Seq(f).toDF("file"), ledgerPath, "ledger")
-          processed += n
-          failed += bad
-          reports += FileReport(f, n + bad, bad,
-            if (bad == 0) "success" else "partial")
-        } catch {
-          case e: Exception =>
-            reports += FileReport(f, 0L, 0L, s"failed: ${e.getMessage}")
-        }
-      }
+    val reports = files.zipWithIndex.map { case (f, fi) =>
+      if (done.contains(f) || !seen.add(f)) FileReport(f, 0L, 0L, "skipped")
+      else ingestOne(spark, f, seqBase + fi, targetPath, ledgerPath, dlqPath)
     }
+    summarize(spark, reports, targetPath)
+  }
 
-    // count verification (reference bulkupdate.py:92-135): target table
-    // must contain at least the rows processed in this run
-    IngestSummary(reports.toSeq, processed + failed, processed, failed,
-      verified = targetCount(spark, targetPath) >= processed)
+  /** What every ingest run does first: finish a crashed compaction of the
+    * target, reclaim orphaned append stages past the grace window (a
+    * failed staged append reports its unit failed and resume re-does it,
+    * so aged stages are pure garbage), and read the resume ledger. Returns
+    * the ledgered files — none unless `resume`.
+    */
+  private def prepare(spark: SparkSession, targetPath: String, ledgerPath: String,
+      dlqPath: String, resume: Boolean): Set[String] = {
+    import spark.implicits._
+    recoverCompact(targetPath)
+    Seq(targetPath, ledgerPath, dlqPath).foreach(StagedAppend.vacuumStages(_))
+    if (resume && Fs.exists(ledgerPath))
+      spark.read.parquet(ledgerPath).select("file").as[String].collect().toSet
+    else Set.empty
+  }
+
+  /** Ingest one file on its own: parse, coerce, last-write-wins on `id`,
+    * stamp write-sequence `seq`, stage into the target, quarantine its
+    * failed records, then ledger it. A failure reports the file failed.
+    */
+  private def ingestOne(spark: SparkSession, f: String, seq: Long, targetPath: String,
+      ledgerPath: String, dlqPath: String): FileReport = {
+    import spark.implicits._
+    try {
+      val (good, failedRecs, cacheHandle) = parseFileWithFailures(spark, f)
+      val coerced = Coerce.documents(good)
+      val deduped =
+        if (coerced.columns.contains("id"))
+          Upsert.lastWriteWins(withRowOrder(coerced, "__ord"), "id", Seq("__ord"))
+            .drop("__ord")
+        else coerced
+      val n = deduped.count()
+      StagedAppend(deduped.withColumn(SeqCol, lit(seq)), targetPath, "target")
+      // quarantine the failed RECORDS (content + error metadata,
+      // 230 KB-chunked), not a count row — a user debugging a bad
+      // batch needs the documents back (file_processor.py:263-413)
+      val bad = failedRecs.count()
+      if (bad > 0) Dlq.writeRecords(failedRecs, dlqPath)
+      cacheHandle.foreach(_.unpersist(blocking = false))
+      // staged, not a plain append: concurrent drivers share the
+      // ledger table, and two plain append jobs to one directory
+      // clobber each other's _temporary task output
+      StagedAppend(Seq(f).toDF("file"), ledgerPath, "ledger")
+      FileReport(f, n + bad, bad, if (bad == 0) "success" else "partial")
+    } catch {
+      case e: Exception => FileReport(f, 0L, 0L, s"failed: ${e.getMessage}")
+    }
+  }
+
+  /** The run's summary from its file reports. Count verification
+    * (reference bulkupdate.py:92-135): the target table must contain at
+    * least the rows processed in this run.
+    */
+  private def summarize(spark: SparkSession, reports: Seq[FileReport],
+      targetPath: String): IngestSummary = {
+    val total = reports.iterator.map(_.totalRows).sum
+    val failed = reports.iterator.map(_.failedRows).sum
+    IngestSummary(reports, total, total - failed, failed,
+      verified = targetCount(spark, targetPath) >= total - failed)
   }
 
   /** Target row count for verification; a target that was never created
@@ -522,18 +532,10 @@ object FileIngest {
       ledgerPath: String,
       dlqPath: String,
       resume: Boolean = false): IngestSummary = {
-    import org.apache.spark.sql.types.{StringType, StructType}
+    import org.apache.spark.sql.types.StringType
     import spark.implicits._
 
-    recoverCompact(targetPath)
-    // reclaim orphaned append stages past the grace window — a failed
-    // staged append reports its unit failed (resume re-does it), so aged
-    // stages are pure garbage
-    Seq(targetPath, ledgerPath, dlqPath).foreach(StagedAppend.vacuumStages(_))
-    val done: Set[String] =
-      if (resume && Fs.exists(ledgerPath))
-        spark.read.parquet(ledgerPath).select("file").as[String].collect().toSet
-      else Set.empty
+    val done = prepare(spark, targetPath, ledgerPath, dlqPath, resume)
     // within-call duplicate paths ingest once (same rule as the serial
     // loop); the final report maps later occurrences to "skipped"
     val (skipped, pending) = files.distinct.partition(done.contains)
@@ -569,8 +571,6 @@ object FileIngest {
 
     val reports = scala.collection.mutable.LinkedHashMap.empty[String, FileReport]
     skipped.foreach(f => reports(f) = FileReport(f, 0L, 0L, "skipped"))
-    var processed = 0L
-    var failed = 0L
 
     // ledger rows land as each unit (file / group) COMPLETES — a crash
     // mid-run then re-does at most the in-flight unit under resume, the
@@ -580,29 +580,9 @@ object FileIngest {
     def ledgerWrite(fs: Seq[String]): Unit =
       if (fs.nonEmpty) StagedAppend(fs.toDF("file"), ledgerPath, "ledger")
 
-    // serial fallback shares the single-file path verbatim
+    // serial fallback: the single-file path itself
     def serialOne(f: String): Unit =
-      try {
-        val (good, failedRecs, cacheHandle) = parseFileWithFailures(spark, f)
-        val coerced = Coerce.documents(good)
-        val deduped =
-          if (coerced.columns.contains("id"))
-            Upsert.lastWriteWins(withRowOrder(coerced, "__ord"), "id", Seq("__ord"))
-              .drop("__ord")
-          else coerced
-        val n = deduped.count()
-        val stamped = deduped.withColumn(SeqCol, lit(seqOf(f)))
-        StagedAppend(stamped, targetPath, "target")
-        val bad = failedRecs.count()
-        if (bad > 0) Dlq.writeRecords(failedRecs, dlqPath)
-        cacheHandle.foreach(_.unpersist(blocking = false))
-        ledgerWrite(Seq(f))
-        processed += n
-        failed += bad
-        reports(f) = FileReport(f, n + bad, bad, if (bad == 0) "success" else "partial")
-      } catch {
-        case e: Exception => reports(f) = FileReport(f, 0L, 0L, s"failed: ${e.getMessage}")
-      }
+      reports(f) = ingestOne(spark, f, seqOf(f), targetPath, ledgerPath, dlqPath)
 
     def processGroup(paths: Seq[String], kind: String, parse: () => DataFrame): Unit = {
       // phase A — read-only (parse, cache, per-file counts). A failure
@@ -693,8 +673,6 @@ object FileIngest {
                 val norm = fileUriToPath(new java.io.File(p).toURI.toString)
                 val (_, bad) = perFile.getOrElse(norm, (0L, 0L))
                 val n = writtenPerFile.getOrElse(norm, 0L)
-                processed += n
-                failed += bad
                 reports(p) = FileReport(p, n + bad, bad, if (bad == 0) "success" else "partial")
               }
               ledgerWrite(paths)
@@ -738,7 +716,6 @@ object FileIngest {
       if (emitted.add(f)) reports.getOrElse(f, FileReport(f, 0L, 0L, "skipped"))
       else FileReport(f, 0L, 0L, "skipped")
     }
-    IngestSummary(ordered, processed + failed, processed, failed,
-      verified = targetCount(spark, targetPath) >= processed)
+    summarize(spark, ordered, targetPath)
   }
 }

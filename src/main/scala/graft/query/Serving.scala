@@ -150,7 +150,8 @@ private[query] final class Budget(
   * engine serves the way the reference's OpenSearch does: each shard
   * server holds its slice of the postings in memory and answers locally.
   * `ServingIndex` is that shard server in miniature — it loads one
-  * store's compressed postings/norms/terms (one Spark collect at open)
+  * store's compressed postings and norms (one Spark collect each at open;
+  * term df is the blocks' Σ n)
   * and then answers top-k queries in pure JVM time through the SAME
   * `Wand.segTopKWith` kernel the distributed path runs, so results are
   * bit-identical to both the distributed WAND and the brute-force oracle.
@@ -167,7 +168,7 @@ private[query] final class Budget(
 final class ServingIndex private[query] (
     payload: ShardPayload,
     cache: BlockCache,
-    termDf: java.util.HashMap[String, Long],
+    private[graft] val termDf: java.util.HashMap[String, Long],
     val stats: IndexStats,
     /** Decoded-positions cache for hot phrase traffic, sized to the
       * HEADROOM the open budget left after the pre-decoded postings and
@@ -365,9 +366,9 @@ object Serving {
 
   def open(idx: OpenIndex, maxBytes: Long, withDocs: Boolean = false): ServingIndex = {
     val normRows = idx.norms.collect()
-    val df = collectDf(idx)
-    assemble(ShardPayload(idx.postings.collect(), normRows,
-      if (withDocs) collectDocs(idx) else null),
+    val blocks = idx.postings.collect()
+    val df = TermStat.addDf(new java.util.HashMap[String, Long](), blocks)
+    assemble(ShardPayload(blocks, normRows, if (withDocs) collectDocs(idx) else null),
       df, IndexStats.fromNorms(normRows, df.size), maxBytes)
   }
 
@@ -443,7 +444,7 @@ object Serving {
 
   /** Open ONE shard of a document-sharded cluster, materializing ONLY that
     * shard's blocks and norms (`seg mod nShards == shardId`, pushed into
-    * the scan as a filter) plus the small global term stats — what a real
+    * the scan as a filter) plus the global term df — what a real
     * shard server does at open: its node's heap holds 1/nShards of the
     * postings, never the whole index. `openSharded` is this in miniature
     * with all shards in one JVM (it collects everything once because the
@@ -456,8 +457,12 @@ object Serving {
       s"shardId $shardId out of range for $nShards shards")
     import org.apache.spark.sql.functions.{col, lit, pmod}
     val mine = pmod(col("seg"), lit(nShards)) === shardId
+    // its blocks hold only its shard's df: the global df comes from the
+    // open index's term stats
+    val df = new java.util.HashMap[String, Long]()
+    idx.terms.collect().foreach(t => df.put(t.term, t.df))
     assemble(ShardPayload(idx.postings.filter(mine).collect(), idx.norms.filter(mine).collect(),
-      null), collectDf(idx), idx.stats, maxBytes)
+      null), df, idx.stats, maxBytes)
   }
 
   /** Assemble a router over shards opened individually (e.g. via
@@ -467,12 +472,6 @@ object Serving {
     */
   def clusterOf(shards: IndexedSeq[ServingIndex]): ServingCluster =
     new ServingCluster(shards)
-
-  private def collectDf(idx: OpenIndex): java.util.HashMap[String, Long] = {
-    val df = new java.util.HashMap[String, Long]()
-    idx.terms.collect().foreach(t => df.put(t.term, t.df))
-    df
-  }
 
   private def collectDocs(idx: OpenIndex): Array[DocMeta] = {
     import org.apache.spark.sql.functions.col
@@ -498,7 +497,8 @@ object Serving {
       withDocs: Boolean = false): ServingCluster = {
     require(nShards >= 1, "need at least one shard")
     def shardOf(seg: Int) = math.floorMod(seg, nShards)
-    val blocks = idx.postings.collect().groupBy(b => shardOf(b.seg))
+    val allBlocks = idx.postings.collect()
+    val blocks = allBlocks.groupBy(b => shardOf(b.seg))
     val normRows = idx.norms.collect()
     // a document's _source lives on the shard that owns its segment;
     // segments are contiguous docID ranges, so a document's segment is
@@ -512,7 +512,7 @@ object Serving {
       }
     }
     val norms = normRows.groupBy(n => shardOf(n.seg))
-    val df = collectDf(idx)
+    val df = TermStat.addDf(new java.util.HashMap[String, Long](), allBlocks)
     val stats = IndexStats.fromNorms(normRows, df.size)
     clusterOf((0 until nShards).map { s =>
       assemble(ShardPayload(blocks.getOrElse(s, Array.empty), norms.getOrElse(s, Array.empty),

@@ -3,7 +3,7 @@ package graft.query
 import scala.reflect.ClassTag
 import scala.reflect.runtime.universe.TypeTag
 
-import org.apache.spark.sql.{Encoders, SparkSession}
+import org.apache.spark.sql.{Encoders, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.index._
@@ -21,7 +21,8 @@ import graft.index._
   * {{{
   *   <out>/postings/shard=<s>/   (this shard's posting blocks)
   *   <out>/norms/shard=<s>/      (this shard's segment norms)
-  *   <out>/terms/                (GLOBAL df — BM25 idf needs corpus-wide stats)
+  *   <out>/terms/                (GLOBAL df/cf from the postings — BM25 idf
+  *                                needs corpus-wide stats)
   *   <out>/stats.json            (global N/avgdl + shard count)
   * }}}
   */
@@ -38,28 +39,27 @@ object ServingLayout {
     // (openExportedShard would then score with mismatched corpus stats)
     val slices = store.committedSlices
     require(slices.nonEmpty, s"nothing committed at ${store.root}")
-    def readSub(table: String) =
-      spark.read.parquet(slices.map(s => store.slicePath(table, s.sliceId)): _*)
+    def read[T <: Product : TypeTag](table: String) = store.readTable[T](spark, table, slices)
     val shardCol = pmod(col("seg"), lit(nShards)).as("shard")
-    readSub("postings").withColumn("shard", shardCol)
+    val postings = read[PostingBlock]("postings")
+    postings.withColumn("shard", shardCol)
       .write.partitionBy("shard").mode("overwrite").parquet(s"$outDir/postings")
-    val norms = readSub("norms")
+    val norms = read[SegNorms]("norms")
     norms.withColumn("shard", shardCol)
       .write.partitionBy("shard").mode("overwrite").parquet(s"$outDir/norms")
-    // global term stats: merged df/cf (small — one row per distinct term)
-    val terms = readSub("terms").groupBy("term")
-      .agg(sum("df").as("df"), sum("cf").as("cf"))
-    terms.write.mode("overwrite").parquet(s"$outDir/terms")
+    // global term stats (small — one row per distinct term), counted as
+    // they are written
+    val tObs = Observation()
+    TermStat.of(postings).observe(tObs, count(lit(1)).as("terms"))
+      .write.mode("overwrite").parquet(s"$outDir/terms")
     // fetch-phase doc store, sharded WITH the postings that score it:
     // a document's _source lives on the shard that owns its segment
     val segSize = store.settings.getOrElse("build.segSize",
       throw new IllegalStateException(s"no build.segSize recorded at ${store.root}")).toLong
-    readSub("docs")
-      .select(col("doc_id"), col("url"), col("doclen").cast("int").as("doclen"), col("lang"))
+    read[DocMeta]("docs")
       .withColumn("shard", pmod(expr(s"doc_id DIV ${segSize}L").cast("int"), lit(nShards)))
       .write.partitionBy("shard").mode("overwrite").parquet(s"$outDir/docs")
-    val st = IndexStats.fromNorms(norms.as[SegNorms](Encoders.product[SegNorms]),
-      spark.read.parquet(s"$outDir/terms").count())
+    val st = IndexStats.fromNorms(norms, tObs.get("terms").asInstanceOf[Long])
     // through the Hadoop FS layer, like the parquet it sits beside — the
     // export must work wherever the data tables live
     graft.ingest.Fs.writeString(s"$outDir/stats.json",
@@ -194,8 +194,8 @@ object ServingLayout {
   * partition docID segments exactly as the document shards of
   * `Serving.openSharded` do, so the k-merge is the same bit-identical
   * router the sharded gates pin. A refresh (a) reads + decodes ONLY the
-  * delta slices, (b) re-derives the global df/stats from cached
-  * per-slice partials by cloning last tick's df map and applying the
+  * delta slices, (b) re-derives the global df/stats from the slices'
+  * blocks and norms by cloning last tick's df map and applying the
   * delta, and (c) re-stamps every cached sub-index with the new globals
   * — a wrapper object per slice, sharing the decoded-block cache, the
   * norms, and the doc store underneath. Per-tick cost is
@@ -217,13 +217,14 @@ final class ServingNode(
     * manifest keeps listing the same `meta` — the FULL SliceMeta, not the
     * id: a fixed-id rebuild (which the dead-list revive legitimizes)
     * recommits an existing id with NEW content, and keying on the id
-    * alone would silently serve the stale payload forever. `terms` are
-    * the slice's partial df rows, applied to and retired from the global
-    * df as the slice comes and goes; `stats` are its norms' doc and token
-    * counts, merged into the global stats the same way.
+    * alone would silently serve the stale payload forever. The payload's
+    * blocks carry the slice's df partial (Σ n per term), applied to and
+    * retired from the global df as the slice comes and goes; `stats` are
+    * its norms' doc and token counts, merged into the global stats the
+    * same way.
     */
   private final class Slice(val meta: SliceMeta, val payload: ShardPayload,
-      val terms: Array[TermStat], val stats: IndexStats)
+      val stats: IndexStats)
 
   private var slices = Map.empty[Int, Slice]
 
@@ -248,16 +249,15 @@ final class ServingNode(
 
   private def read(meta: SliceMeta): Slice = {
     def rows[T <: Product : TypeTag](table: String): Array[T] =
-      ServingLayout.readRows[T](spark, store.slicePath(table, meta.sliceId))
+      store.readTable[T](spark, table, Seq(meta)).collect()
     val norms = rows[SegNorms]("norms")
     new Slice(meta, ShardPayload(rows[PostingBlock]("postings"), norms,
-      if (withDocs) rows[DocMeta]("docs") else null), rows[TermStat]("terms"),
-      IndexStats.fromNorms(norms, 0L))
+      if (withDocs) rows[DocMeta]("docs") else null), IndexStats.fromNorms(norms, 0L))
   }
 
   private def load(): (Seq[SliceMeta], ServingCluster) = {
     // ONE manifest snapshot drives every read below — blocks, norms,
-    // terms, stats, and docs all come from the same committed slice set,
+    // df, stats, and docs all come from the same committed slice set,
     // so a concurrent append/merge can never mix old blocks with new
     // corpus stats (which would break score identity)
     val metas = store.committedSlices
@@ -275,20 +275,14 @@ final class ServingNode(
     val next = (kept.map(m => slices(m.sliceId)) ++ loaded).sortBy(_.meta.sliceId).toIndexedSeq
     val retired = slices.values.filterNot(s => kept.contains(s.meta))
 
-    // global df: clone + delta. Subtract retired partials FIRST (a merge
-    // both drops and adds the same terms), removing exact-zero entries —
-    // topK gates query terms on containsKey, so a dead term must
-    // disappear, not linger at df=0. java.util.HashMap unboxes a missing
-    // get to 0L in Scala, which is exactly the additive identity the adds
-    // need.
+    // global df: clone + delta. Subtract retired slices' blocks FIRST (a
+    // merge both drops and adds the same terms); a term whose df reaches
+    // 0 disappears, as topK gates query terms on containsKey
     val df =
       if (globalDf == null) new java.util.HashMap[String, Long]()
       else new java.util.HashMap[String, Long](globalDf)
-    retired.foreach(_.terms.foreach { t =>
-      val left = df.get(t.term) - t.df
-      if (left <= 0L) df.remove(t.term) else df.put(t.term, left)
-    })
-    loaded.foreach(_.terms.foreach(t => df.put(t.term, df.get(t.term) + t.df)))
+    retired.foreach(s => TermStat.addDf(df, s.payload.blocks, -1))
+    loaded.foreach(s => TermStat.addDf(df, s.payload.blocks))
 
     // corpus stats: the slices' own norms stats add up, as slices
     // partition the documents

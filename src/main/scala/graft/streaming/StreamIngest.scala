@@ -214,7 +214,7 @@ object StreamIngest {
           manifestProps = guard,
           earlyProps = Map("stream.bootstrapBatchId" -> batchId.toString))
       }
-      if (maxSlices != Int.MaxValue) store.maybeMerge(spark, maxSlices)
+      if (maxSlices != Int.MaxValue) store.maybeMerge(maxSlices)
       // reclaim superseded slice files whose grace window has drained —
       // readers still inside the window keep intact files
       store.vacuum(vacuumGraceMs)

@@ -107,4 +107,22 @@ class BuildLayoutSpec extends AnyFunSuite {
     }
     store.dropAll()
   }
+
+  test("a build, an append and a merge write no terms table: term stats come from the postings") {
+    val docs = Corpus.pages(spark, 600)
+      .withColumn("doc_id", regexp_extract(col("url"), "/p/(\\d+)$", 1).cast("long"))
+      .select("doc_id", "url", "text", "lang")
+    val store = new IndexStore(Files.createTempDirectory("graft-noterms-").toString)
+    val terms = Paths.get(store.root, "terms")
+    IndexBuilder.build(spark, docs.filter(col("doc_id") < 400), store,
+      IndexBuilder.Config(segSize = 128, blockSize = 16, slices = 2))
+    assert(!Files.exists(terms), "the build wrote a terms table")
+    IndexBuilder.append(spark,
+      docs.filter(col("doc_id") >= IndexBuilder.nextAppendDocId(store)), store)
+    assert(!Files.exists(terms), "the append wrote a terms table")
+    store.mergeSlices(store.committedSlices.map(_.sliceId))
+    assert(store.committedSlices.size == 1)
+    assert(!Files.exists(terms), "the merge wrote a terms table")
+    store.dropAll()
+  }
 }

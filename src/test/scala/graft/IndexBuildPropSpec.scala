@@ -169,7 +169,7 @@ class IndexBuildPropSpec extends AnyFunSuite {
               bs.size.toLong)), s"$ctx: slice ${s.sliceId} counts")
         }
 
-        val merged = store.compact(spark)
+        val merged = store.compact()
         assert(store.committedSlices == Seq(merged), ctx)
         assert((merged.docs, merged.postings, merged.blocks) ==
           ((c.docs.size.toLong, refBlocks.map(_.n.toLong).sum, refBlocks.size.toLong)), ctx)

@@ -38,24 +38,66 @@ class IndexSpec extends AnyFunSuite {
     assert(decoded == brute)
   }
 
-  test("term stats df/cf match brute force; corpus stats correct") {
+  /** Every term's (df, cf) over `docs`, by tokenizing them. */
+  private def bruteTermStats(docs: org.apache.spark.sql.DataFrame): Set[(String, Long, Long)] = {
     import spark.implicits._
-    val store = freshStore()
-    IndexBuilder.build(spark, docs, store, IndexBuilder.Config(segSize = 256, blockSize = 32, slices = 2))
-    val idx = store.open(spark)
-    val gotTerms = idx.terms.collect().map(t => (t.term, t.df, t.cf)).toSet
-    val brute = docs.select(col("doc_id"), explode(ga.tokenize(col("text"))).as("term"))
+    docs.select(col("doc_id"), explode(ga.tokenize(col("text"))).as("term"))
       .groupBy("term", "doc_id").count()
       .groupBy("term").agg(count(lit(1)).as("df"), sum("count").as("cf"))
       .as[(String, Long, Long)].collect().toSet
-    assert(gotTerms == brute)
+  }
 
-    val st = idx.stats
+  test("term stats df/cf match brute force; corpus stats correct") {
+    val cfg = IndexBuilder.Config(segSize = 256, blockSize = 32, slices = 2)
+    val built = freshStore()
+    IndexBuilder.build(spark, docs, built, cfg)
+    // the same documents as a build, an append and a compaction
+    val merged = freshStore()
+    IndexBuilder.build(spark, docs.filter(col("doc_id") < 512), merged, cfg)
+    IndexBuilder.append(spark, docs.filter(col("doc_id") >= 512), merged)
+    merged.compact()
+    assert(merged.committedSlices.size == 1)
+    val brute = bruteTermStats(docs)
     val expN = docs.count()
     val expTok = docs.select(sum(ga.token_count(col("text")))).head().getLong(0)
-    assert(st.nDocs == expN)
-    assert(st.totalTokens == expTok)
-    assert(math.abs(st.avgdl - expTok.toDouble / expN) < 1e-12)
+    for (store <- Seq(built, merged)) {
+      val idx = store.open(spark)
+      assert(idx.terms.collect().map(t => (t.term, t.df, t.cf)).toSet == brute)
+      val st = idx.stats
+      assert(st.nDocs == expN)
+      assert(st.totalTokens == expTok)
+      assert(st.nTerms == brute.size)
+      assert(math.abs(st.avgdl - expTok.toDouble / expN) < 1e-12)
+      store.dropAll()
+    }
+  }
+
+  test("a legacy per-slice terms table is never read, and compaction plus vacuum removes it") {
+    import spark.implicits._
+    import graft.query.{OracleScorer, Serving, Wand}
+    val store = freshStore()
+    IndexBuilder.build(spark, docs, store, IndexBuilder.Config(segSize = 256, blockSize = 32, slices = 2))
+    // a stale table in the layout stores had when each slice kept its term
+    // partials: wrong df/cf for real terms, and a term no document holds
+    val legacy = java.nio.file.Paths.get(store.slicePath("terms", 0))
+    Seq(TermStat("the", 1L, 1L), TermStat("docmark42", 500L, 900L), TermStat("zzstale", 7L, 7L))
+      .toDS().write.parquet(legacy.toString)
+    val idx = store.open(spark)
+    val brute = bruteTermStats(docs)
+    assert(idx.terms.collect().map(t => (t.term, t.df, t.cf)).toSet == brute)
+    assert(idx.stats.nTerms == brute.size)
+    val serving = Serving.open(idx, maxBytes = 2L << 30)
+    for (q <- Seq("the web crawl", "docmark42", "zzstale"); k <- Seq(10, 100)) {
+      val oracle = OracleScorer.topK(spark, docs, q, k)
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      assert(Wand.topK(spark, idx, q, k).collect()
+        .map(r => (r.getLong(0), r.getDouble(1))).toSeq == oracle, s"Wand '$q' k=$k")
+      assert(serving.topK(q, k).toSeq == oracle, s"Serving '$q' k=$k")
+    }
+    store.compact()
+    assert(store.vacuum(0L)._1 == 2)
+    assert(!java.nio.file.Files.exists(legacy), s"$legacy survived compaction and vacuum")
+    store.dropAll()
   }
 
   test("blocks respect size, sorted docIDs, block-max is a true max") {

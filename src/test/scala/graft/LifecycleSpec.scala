@@ -23,7 +23,7 @@ class LifecycleSpec extends AnyFunSuite {
       .map(b => (b.term, b.seg, b.blk, b.docDeltas.toSeq, b.tfs.toSeq)).toSet
     val before = dump()
 
-    val meta = store.compact(spark)
+    val meta = store.compact()
     assert(store.committedSlices.size == 1)
     assert(store.committedSlices.head.sliceId == meta.sliceId)
     assert(dump() == before)

@@ -47,6 +47,18 @@ class QueryJobsSpec extends AnyFunSuite {
     store
   }
 
+  test("a two-slice build runs a pinned number of jobs, and a merge runs none") {
+    val store = new IndexStore(Files.createTempDirectory("graft-jobs-").toString)
+    val build = jobsOf(IndexBuilder.build(spark, corpus, store,
+      IndexBuilder.Config(segSize = 64, blockSize = 16, slices = 2, positions = true)))
+    info(s"two-slice build: $build jobs")
+    // measured; no slice re-reads the postings it wrote
+    assert(build == 12, s"two-slice build ran $build jobs")
+    val merge = jobsOf(store.mergeSlices(store.committedSlices.map(_.sliceId)))
+    assert(merge == 0, s"mergeSlices ran $merge jobs")
+    store.dropAll()
+  }
+
   test("a warm phrase top-k and a warm WAND top-k run one job each") {
     val store = slicedStore()
     val idx = store.open(spark)
@@ -110,7 +122,7 @@ class QueryJobsSpec extends AnyFunSuite {
     val phrase = (i: OpenIndex) => rows(Phrase.topK(spark, i, "blue green", 10))
     val before = store.open(spark)
     val (wand0, phrase0) = (wand(before), phrase(before))
-    store.mergeSlices(spark, Seq(0, 2)) // [0, 4] spans the slice left between
+    store.mergeSlices(Seq(0, 2)) // [0, 4] spans the slice left between
     assert(store.committedSlices.map(s => s.segHi - s.segLo + 1).sum == 7)
     val idx = store.open(spark)
     val oracle = rows(OracleScorer.topK(spark, corpus, "fox dog", 10))

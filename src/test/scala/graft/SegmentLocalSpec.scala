@@ -192,7 +192,7 @@ class SegmentLocalSpec extends AnyFunSuite {
     assert(shuffles(s, idx) == (0, 0))
     assertExact(s, idx, docs)
     // a merge with the unflagged slice is unflagged too
-    assert(!store.compact(spark).segLocal)
+    assert(!store.compact().segLocal)
     val merged = store.open(spark)
     assert(!merged.slices.forall(_.segLocal))
     assertUnflaggedWhole(store, merged)

@@ -391,10 +391,37 @@ class StreamingSpec extends AnyFunSuite {
     // reopen — the superseded slices drop, the merged one loads — and the
     // refreshed node serves identically
     val before3 = node.current.topK("the web crawl", 10).toSeq
-    store.compact(spark)
+    store.compact()
     assert(node.refresh())
     assert(node.lastLoadedSlices == 1 && node.lastDroppedSlices == 3)
     assert(node.current.topK("the web crawl", 10).toSeq == before3)
+  }
+
+  test("ServingNode: through tiered merges, the node's df is the store's term stats") {
+    import graft.index.{IndexBuilder, IndexStore}
+    import graft.query.ServingNode
+    val base = Files.createTempDirectory("graft-node-df-").toString
+    val store = new IndexStore(s"$base/idx")
+    val cfg = IndexBuilder.Config(segSize = 16, blockSize = 8)
+    val corpus = Corpus.pages(spark, 160).toDF().cache()
+    val urlNum = regexp_extract(col("url"), "/p/(\\d+)$", 1).cast("long")
+    def wave(w: Int) = corpus.filter(urlNum >= w * 20 && urlNum < (w + 1) * 20)
+    StreamIngest.processIndexBatch(spark, wave(0), 0L, store, cfg, maxSlices = 3)
+    val node = new ServingNode(spark, store, maxBytes = 2L << 30)
+    var merged = 0
+    for (w <- 1 until 8) {
+      assert(StreamIngest.processIndexBatch(spark, wave(w), w.toLong, store, cfg, maxSlices = 3))
+      assert(node.refresh())
+      if (node.lastDroppedSlices > 0) merged += 1
+      val expected = store.open(spark).terms.collect().map(t => t.term -> t.df).toMap
+      for (shard <- node.current.shards) {
+        val got = scala.jdk.CollectionConverters.MapHasAsScala(shard.termDf).asScala.toMap
+        assert(got == expected, s"node df diverged from the store's term stats after wave $w")
+      }
+      assert(node.current.stats.nTerms == expected.size)
+    }
+    assert(merged > 0, "no tiered merge ran")
+    corpus.unpersist()
   }
 
   test("ServingNode: bounded budget serves bit-identically; fits→bounded transition; bounded refresh reuses the shared cache") {
@@ -492,7 +519,7 @@ class StreamingSpec extends AnyFunSuite {
     val preIdx = store.open(spark)
 
     // merge lands from another thread (the streaming loop's maybeMerge)
-    val t = new Thread(() => { store.compact(spark); () })
+    val t = new Thread(() => { store.compact(); () })
     t.start(); t.join()
     assert(store.committedSlices.size == 1)
     // superseded files are dead-listed in the SAME manifest commit, never
@@ -581,7 +608,7 @@ class StreamingSpec extends AnyFunSuite {
     // forcemerge to one slice: block count lands exactly on the
     // single-build band, ranking and serving results unchanged
     val servedBefore = Serving.open(spark, store, 64L << 20).topK("the web crawl", 10).toSeq
-    store.compact(spark)
+    store.compact()
     assert(store.committedSlices.size == 1)
     assert(store.committedSlices.head.blocks == refBlocks,
       s"compacted blocks ${store.committedSlices.head.blocks} != single-build $refBlocks")

@@ -39,7 +39,7 @@ class UriRootSpec extends AnyFunSuite {
     store.setSettings(Map("index.refresh_interval" -> "1s"))
     assert(store.settings("provided_name") == dir.getFileName.toString)
 
-    val merged = store.compact(spark)
+    val merged = store.compact()
     // the union copies data files only, not the slices' sidecars
     assert(merged.bytes > 0 && merged.bytes <= bytes.sum)
     val (reclaimed, freed) = store.vacuum(0L)
