@@ -9,9 +9,9 @@ import org.apache.spark.sql.functions._
 import graft.index.{IndexBuilder, IndexStore}
 import graft.query.Wand
 
-/** The local session every main (Bench, BenchExtra, Verify) runs on: AQE
-  * on, UTC, UI off; the caller picks cores, shuffle partitions, name and
-  * log level.
+/** The local session every main (Bench, BenchExtra, Verify, SmokeMain)
+  * runs on: AQE on, UTC, UI off; the caller picks cores, shuffle
+  * partitions, name and log level.
   */
 private[graft] object LocalSession {
   def apply(cores: Int, shufflePartitions: String, appName: String,

@@ -48,9 +48,9 @@ object SparkEntry {
     Search.relevance(spark, idx, "spark index dup", k = 10)
   }
 
-  // ---- shared single-node serving tier per (JVM, sfDir) ----
-  private val servingCache = TrieMap.empty[String, graft.query.ServingIndex]
-  private[graft] def servingFor(s: SparkSession, dir: String): graft.query.ServingIndex =
+  // ---- shared one-shard serving router per (JVM, sfDir) ----
+  private val servingCache = TrieMap.empty[String, graft.query.ServingCluster]
+  private[graft] def servingFor(s: SparkSession, dir: String): graft.query.ServingCluster =
     servingCache.getOrElseUpdate(dir,
       graft.query.Serving.open(indexFor(s, dir), maxBytes = 2L << 30, withDocs = true))
 
@@ -216,7 +216,7 @@ object SparkEntry {
     "q_bm25_head_top100" -> ((s, d) => bm25(s, d, "the data web", 100)),
     "q_bm25_rare_top10" -> ((s, d) => bm25(s, d, "dup", 10)),
 
-    // single-node serving tier: same segTopKWith kernel, no Spark job per
+    // one-shard serving router: same segTopKWith kernel, no Spark job per
     // query — must be bit-identical to the distributed WAND gate above
     "q_bm25_serving_top10" -> ((s, d) =>
       servingFor(s, d).topKDF(s, "spark index dup", 10)
@@ -236,8 +236,8 @@ object SparkEntry {
       graft.query.Phrase.topK(s, indexFor(s, d), "table hash", 10)
         .select(col("doc_id"), round(col("score"), 4).as("score"))),
 
-    // the same phrase answered by the serving shard server (positions
-    // decoded on demand, global-df scoring) — must be bit-identical
+    // the same phrase answered by the serving router (positions decoded
+    // on demand, global-df scoring) — must be bit-identical
     "q_bm25_phrase_serving_top10" -> ((s, d) => {
       import s.implicits._
       servingFor(s, d).phraseTopK("table hash", 10)

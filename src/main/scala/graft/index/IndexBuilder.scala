@@ -286,7 +286,8 @@ object IndexBuilder {
     try {
       // a local sort, no Exchange: each file stays term-sorted for
       // row-group pruning of term lookups. One file per task (no
-      // maxRecordsPerFile cut) keeps each segment in one file: `segLocal`
+      // maxRecordsPerFile cut) keeps each segment in one file, so each
+      // file is a scan unit of its own (`PostingsScan.units`)
       inverted.where(col("block").isNotNull).select("block.*")
         .sortWithinPartitions(col("term"), col("seg"), col("blk"))
         .observe(pObs, sum("n").as("postings"), count(lit(1)).as("blocks"))
@@ -302,7 +303,7 @@ object IndexBuilder {
     val nPostings = Option(pMetrics("postings")).map(_.asInstanceOf[Long]).getOrElse(0L)
     SliceMeta(sliceId, segLo, segHi, dObs.get("docs").asInstanceOf[Long], nPostings,
       pMetrics("blocks").asInstanceOf[Long], store.postingBytes(sliceId),
-      System.currentTimeMillis(), segLocal = true)
+      System.currentTimeMillis())
   }
 }
 

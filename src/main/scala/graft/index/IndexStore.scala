@@ -9,10 +9,6 @@ import graft.ingest.Fs
 
 /** One committed build slice: a contiguous docID-segment range with its
   * lineage + metrics (the north rule's per-partition checkpoint record).
-  * `segLocal` records that each of the slice's postings files holds whole
-  * segments (no segment's blocks span two files), which lets a Spark-path
-  * query score each segment inside the partition that scans it; a
-  * manifest entry without the field reads as false.
   */
 case class SliceMeta(
     sliceId: Int,
@@ -22,8 +18,7 @@ case class SliceMeta(
     postings: Long,
     blocks: Long,
     bytes: Long,
-    committedAtMs: Long,
-    segLocal: Boolean = false)
+    committedAtMs: Long)
 
 /** Parquet-backed index storage with a JSON manifest committed by atomic
   * rename. `root` is any Hadoop path (a plain path, `file:`, `hdfs://`,
@@ -39,6 +34,8 @@ case class SliceMeta(
   * }}}
   * Term df/cf are sums over the postings (`TermStat.of`); a store written
   * with a per-slice `terms/` table still opens, and no reader reads it.
+  * Which postings files share a segment is read from their footers
+  * (`PostingsScan.units`); a manifest entry records no file layout.
   * Only slices listed in the manifest are visible to readers — a crashed
   * build leaves orphan files that the next run overwrites. This is the
   * resume ledger (reference bulkupdate.py:137-219 semantics): completed
@@ -137,8 +134,8 @@ final class IndexStore(val root: String) {
     * docID segments, so any subset's postings, norms and docs are
     * disjoint: the merged slice's files are the union of theirs, copied
     * as they are (each file keeps its sort order and its segments, so the
-    * merged slice holds whole segments per file when every merged slice
-    * did). No Spark job runs: blocks are never re-encoded, norms never
+    * files that share a segment, and with them the scan units, stay as
+    * they were). No Spark job runs: blocks are never re-encoded, norms never
     * recomputed, and the merged counts are the sums of the slices'
     * manifest counts. Commit is atomic (manifest rename).
     *
@@ -165,7 +162,7 @@ final class IndexStore(val root: String) {
     val now = System.currentTimeMillis()
     val meta = SliceMeta(newId, old.map(_.segLo).min, old.map(_.segHi).max,
       old.map(_.docs).sum, old.map(_.postings).sum, old.map(_.blocks).sum,
-      postingBytes(newId), now, segLocal = old.forall(_.segLocal))
+      postingBytes(newId), now)
     // supersede + dead-list in ONE atomic commit; files stay on disk for
     // in-flight readers until vacuum's grace window passes
     commitReplaceSlices(
@@ -465,15 +462,15 @@ private[index] object ManifestJson {
   def render(slices: Seq[SliceMeta], props: Map[String, String] = Map.empty): String = {
     val items = slices.map { s =>
       s"""{"sliceId":${s.sliceId},"segLo":${s.segLo},"segHi":${s.segHi},"docs":${s.docs},""" +
-        s""""postings":${s.postings},"blocks":${s.blocks},"bytes":${s.bytes},"committedAtMs":${s.committedAtMs},""" +
-        s""""segLocal":${s.segLocal}}"""
+        s""""postings":${s.postings},"blocks":${s.blocks},"bytes":${s.bytes},"committedAtMs":${s.committedAtMs}}"""
     }
     val propsPart = if (props.isEmpty) "" else s""""props":${FlatJson.render(props)},"""
     s"""{"format":"graft-index-v1",$propsPart"slices":[${items.mkString(",")}]}"""
   }
 
+  // numeric fields only: a boolean a store once wrote per slice (a
+  // whole-segments-per-file flag) is skipped
   private val num = """"(\w+)"\s*:\s*(-?\d+)""".r
-  private val segLocal = """"segLocal"\s*:\s*true""".r
   def parse(json: String): (Seq[SliceMeta], Map[String, String]) = {
     // props object (flat string map) sits between "props":{ and its
     // matching } — scan string-aware so a '}' inside a value can't truncate
@@ -518,7 +515,7 @@ private[index] object ManifestJson {
             objs += SliceMeta(
               fields("sliceId").toInt, fields("segLo").toInt, fields("segHi").toInt,
               fields("docs"), fields("postings"), fields("blocks"), fields("bytes"),
-              fields("committedAtMs"), segLocal.findFirstIn(obj).nonEmpty)
+              fields("committedAtMs"))
           }
         case _ =>
       }

@@ -95,22 +95,33 @@ private[graft] object PostingsScan {
       required, Nil, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
       GraftBridge.newHadoopConf(spark))
 
-  /** The scan units of `slices`, from footers read on the driver: a unit
-    * per postings file of a slice that holds whole segments per file
-    * (`segLocal`), else one per slice, each with the slice's norms files
-    * whose `seg` range meets its postings files' range.
+  /** The scan units of `slices`, from footers read on the driver: the
+    * non-empty postings files of a slice, grouped so that files whose
+    * `seg` ranges overlap share a unit, each unit with the slice's norms
+    * files whose `seg` range meets its own. A fresh build's slice is a unit
+    * per file, and a slice whose files each span its segments is one unit;
+    * either way every segment is read by one task.
     */
   def units(spark: SparkSession, store: IndexStore, slices: Seq[SliceMeta]): IndexedSeq[ScanUnit] = {
     val conf = spark.sparkContext.hadoopConfiguration
     slices.toIndexedSeq.flatMap { s =>
-      val postings = files(conf, store.slicePath("postings", s.sliceId))
       val norms = files(conf, store.slicePath("norms", s.sliceId))
-      (if (s.segLocal) postings.map(IndexedSeq(_)) else IndexedSeq(postings)).filter(_.nonEmpty).map { ps =>
-        val (lo, hi) = (ps.map(_.segLo).min, ps.map(_.segHi).max)
+      overlapping(files(conf, store.slicePath("postings", s.sliceId)).filter(_.rowGroups.nonEmpty)).map { ps =>
+        val (lo, hi) = (ps.head.segLo, ps.map(_.segHi).max)
         ScanUnit(ps, norms.filter(n => n.segLo <= hi && n.segHi >= lo).map(n => n.range(0L, n.size)).toArray)
       }
     }
   }
+
+  /** `fs` sorted by `segLo` and cut where a file starts past every `seg`
+    * range before it: each group holds the files whose ranges chain into
+    * one.
+    */
+  private def overlapping(fs: IndexedSeq[SliceFile]): IndexedSeq[IndexedSeq[SliceFile]] =
+    fs.sortBy(_.segLo).foldLeft(Vector.empty[(Vector[SliceFile], Int)]) {
+      case (gs :+ ((g, hi)), f) if f.segLo <= hi => gs :+ ((g :+ f, math.max(hi, f.segHi)))
+      case (gs, f) => gs :+ ((Vector(f), f.segHi))
+    }.map(_._1)
 
   /** The data files of `dir` with their footers, read on the driver.
     * Spark's hidden files (`_SUCCESS`, `.crc`) are not data.

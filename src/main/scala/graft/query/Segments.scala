@@ -19,10 +19,10 @@ import graft.index.{DecodedNorms, OpenIndex, PostingBlock, PostingsScan, SegNorm
   *
   * Distribution model: the query runs on the open index's planned postings
   * scan (`OpenIndex.postingsScan`). The driver keeps only the row groups
-  * whose footer term range can hold a query term; a partition is a
-  * postings file when its slice holds whole segments per file
-  * (`SliceMeta.segLocal`) and the whole slice otherwise, so every segment
-  * is read by one task. Each partition carries the norms files whose
+  * whose footer term range can hold a query term; a partition is a scan
+  * unit (`PostingsScan.units`), the postings files of a slice whose
+  * footer `seg` ranges overlap, so every segment is read by one task.
+  * Each partition carries the norms files whose
   * footer `seg` range meets its postings files' range, and one job scores
   * each segment in the task that read it, with the norms that task reads
   * beside it — as each OpenSearch shard scores the Lucene segments it

@@ -143,27 +143,23 @@ private[query] final class Budget(
     caches.collectFirst { case c: ClockDecodeCache => c }
 }
 
-/** In-memory single-node serving tier over a built index.
+/** One serving shard: the segments a `ServingCluster` routes a query to.
   *
   * Spark is the BUILD engine; serving interactive queries through Spark
   * jobs pays ~100 ms of scheduling per search. A real deployment of this
   * engine serves the way the reference's OpenSearch does: each shard
-  * server holds its slice of the postings in memory and answers locally.
-  * `ServingIndex` is that shard server in miniature — it loads one
-  * store's compressed postings and norms (one Spark collect each at open;
-  * term df is the blocks' Σ n)
-  * and then answers top-k queries in pure JVM time through the SAME
-  * `Wand.segTopKWith` kernel the distributed path runs, so results are
-  * bit-identical to both the distributed WAND and the brute-force oracle.
+  * server holds its part of the postings in memory and answers locally,
+  * and a coordinating router parses each query once and merges the
+  * shards' hits. A shard holds compressed postings and norms and scores
+  * them through the SAME `Wand.segTopKWith` kernel the distributed path
+  * runs, with the GLOBAL term stats, so results are bit-identical to both
+  * the distributed WAND and the brute-force oracle. Phrase queries need
+  * the global phrase df, so only the router answers them.
   *
   * Scale contract: `maxBytes` budgets the DECODED postings footprint. A
-  * slice that fits is fully pre-decoded (allocation-free queries); a
-  * larger slice serves through a bounded decoded-block cache — partial
-  * pre-decode, same bit-identical results. At web scale the corpus is
-  * document-sharded across serving nodes exactly like the distributed
-  * path's segments — each node opens the slice the build wrote for it,
-  * and a router merges per-node top-ks (the `TopKHeap` k-merge the Spark
-  * path runs on the driver, over RPC instead of a Spark job).
+  * shard that fits is fully pre-decoded (allocation-free queries); a
+  * larger one serves through a bounded decoded-block cache — partial
+  * pre-decode, same bit-identical results.
   */
 final class ServingIndex private[query] (
     payload: ShardPayload,
@@ -223,33 +219,22 @@ final class ServingIndex private[query] (
       f(bs.toArray(new Array[PostingBlock](bs.size())), payload.norms.get(seg)))
   }
 
-  /** Exact BM25 top-k; rank-identical to `Wand.topK` (same kernel, same
-    * tie-breaks, same fold order). Pure JVM — no Spark job.
+  /** Exact BM25 top-k of this shard's documents, scored with the global
+    * stats — what a per-node shard (`ServingLayout.openExportedShard`)
+    * answers. Pure JVM — no Spark job.
     */
-  def topK(query: String, k: Int): Array[(Long, Double)] = {
-    val qTerms = Analyzer.tokenize(query).distinct.sorted
-    val present = qTerms.filter(termDf.containsKey)
-    if (present.isEmpty || stats.nDocs == 0) return Array.empty
-    val idfs: Map[String, Double] =
-      present.map(t => t -> BM25.idf(stats.nDocs, termDf.get(t))).toMap
+  def topK(query: String, k: Int): Array[(Long, Double)] = Serving.termTopK(IndexedSeq(this), query, k)
 
-    // per-segment WAND over PRE-DECODED postings/norms (no per-query
-    // decode allocations — the serving tier's RAM-for-CPU trade), then
-    // the same (score desc, docId asc) k-merge the distributed path runs
-    // on the driver
-    val heap = new TopKHeap(k)
-    forEachSegment(present) { (blocks, norms) =>
+  /** Runs per-segment WAND over the PRE-DECODED postings and norms of the
+    * analyzed query `terms` (no per-query decode allocations — the serving
+    * tier's RAM-for-CPU trade) and offers each segment's top-k to `heap`.
+    */
+  private[query] def offerTopK(terms: Array[String], idfs: Map[String, Double], k: Int,
+      heap: TopKHeap): Unit =
+    forEachSegment(terms) { (blocks, norms) =>
       Wand.segTopKWith(blocks, norms.doclen, idfs, stats.avgdl, k, decodeFn)
         .foreach { case (d, s) => heap.offer(d, s) }
     }
-    heap.ranked()
-  }
-
-  /** Top-k as a DataFrame (for the driver gate / hit materialization). */
-  def topKDF(spark: SparkSession, query: String, k: Int): DataFrame = {
-    import spark.implicits._
-    topK(query, k).toSeq.toDF("doc_id", "score")
-  }
 
   /** This shard's phrase parts (`Phrase.segTopK`), one per segment
     * holding a phrase term. Scoring needs the GLOBAL phrase df, the sum
@@ -269,35 +254,16 @@ final class ServingIndex private[query] (
     out.toSeq
   }
 
-  /** Exact phrase BM25 top-k on this (single-node) index — df is local =
-    * global here. Rank-identical to `Phrase.topK` over the same store.
-    */
-  def phraseTopK(phrase: String, k: Int): Array[(Long, Double)] =
-    Phrase.finish(phraseParts(Analyzer.tokenize(phrase).toIndexedSeq, k), stats.nDocs, k)
-
-  // ---- hit materialization: the reference's `hits.hits[]._source + _score`
-  // response shape, answered from the shard's own doc store (optional —
-  // id-only responses don't need it; at scale it is the shard's slice) ----
+  // the fetch phase's doc store: null when opened without docs
   private[query] def hasDocs: Boolean = payload.docs != null
   private[query] def docOf(id: Long): DocMeta =
     if (payload.docs == null) null else payload.docs.get(id)
-
-  /** Scored hits with stored fields (requires `withDocs` at open). */
-  def topKHits(query: String, k: Int): Array[Serving.Hit] = {
-    require(payload.docs != null, "serving index opened without docs; use withDocs = true")
-    topK(query, k).map { case (id, score) =>
-      val d = payload.docs.get(id)
-      require(d != null, s"docId $id missing from the serving doc store")
-      Serving.Hit(id, d.url, d.lang, d.doclen, score)
-    }
-  }
-
-  def topKHitsDF(spark: SparkSession, query: String, k: Int): DataFrame = {
-    import spark.implicits._
-    topKHits(query, k).toSeq.toDF()
-  }
 }
 
+/** The in-memory serving opens and the one budget policy they share.
+  * Every open of a whole index returns a `ServingCluster`; `open` is its
+  * one-shard form and `openSharded` spreads segments over `nShards`.
+  */
 object Serving {
 
   /** The `hits.hits[]._source + _score` response row. */
@@ -352,25 +318,15 @@ object Serving {
     s
   }
 
-  /** Load a committed index into serving memory. One Spark collect per
-    * table. The budget governs the DECODED postings footprint (estimated
-    * from posting counts, which every manifest — compacted or not —
-    * preserves): a slice that fits is fully pre-decoded (allocation-free
-    * queries, the mt-throughput mode); a larger slice serves through the
-    * bounded decoded-block cache instead of refusing. The compressed
-    * blocks themselves must fit the heap either way — a corpus beyond
-    * that belongs on more serving shards.
+  /** Load a committed index into serving memory: `openSharded` with one
+    * shard. The budget governs the DECODED postings footprint (`budget`):
+    * an index that fits is fully pre-decoded (allocation-free queries, the
+    * mt-throughput mode), a larger one serves through the bounded
+    * decoded-block cache instead of refusing. The compressed blocks must
+    * fit the heap either way — a corpus beyond that belongs on more shards.
     */
-  def open(spark: SparkSession, store: IndexStore, maxBytes: Long): ServingIndex =
-    open(store.open(spark), maxBytes)
-
-  def open(idx: OpenIndex, maxBytes: Long, withDocs: Boolean = false): ServingIndex = {
-    val normRows = idx.norms.collect()
-    val blocks = idx.postings.collect()
-    val df = TermStat.addDf(new java.util.HashMap[String, Long](), blocks)
-    assemble(ShardPayload(blocks, normRows, if (withDocs) collectDocs(idx) else null),
-      df, IndexStats.fromNorms(normRows, df.size), maxBytes)
-  }
+  def open(idx: OpenIndex, maxBytes: Long, withDocs: Boolean = false): ServingCluster =
+    openSharded(idx, 1, maxBytes, withDocs)
 
   /** The one budget policy of every open. When the payloads' decoded
     * postings plus their retained compressed positions fit `maxBytes`,
@@ -442,36 +398,30 @@ object Serving {
       stats: IndexStats, maxBytes: Long): ServingIndex =
     shards(budget(IndexedSeq(p), maxBytes), df, stats).head
 
-  /** Open ONE shard of a document-sharded cluster, materializing ONLY that
-    * shard's blocks and norms (`seg mod nShards == shardId`, pushed into
-    * the scan as a filter) plus the global term df — what a real
-    * shard server does at open: its node's heap holds 1/nShards of the
-    * postings, never the whole index. `openSharded` is this in miniature
-    * with all shards in one JVM (it collects everything once because the
-    * router and shards share the process); this entry point is the
-    * per-node deployment form. Bit-identical: segments score locally with
-    * global stats in every layout.
+  /** A router over shards that partition every segment of one snapshot
+    * (each seg on exactly one shard) and share its global stats — true by
+    * construction for every open here.
     */
-  def openShard(idx: OpenIndex, shardId: Int, nShards: Int, maxBytes: Long): ServingIndex = {
-    require(nShards >= 1 && shardId >= 0 && shardId < nShards,
-      s"shardId $shardId out of range for $nShards shards")
-    import org.apache.spark.sql.functions.{col, lit, pmod}
-    val mine = pmod(col("seg"), lit(nShards)) === shardId
-    // its blocks hold only its shard's df: the global df comes from the
-    // open index's term stats
-    val df = new java.util.HashMap[String, Long]()
-    idx.terms.collect().foreach(t => df.put(t.term, t.df))
-    assemble(ShardPayload(idx.postings.filter(mine).collect(), idx.norms.filter(mine).collect(),
-      null), df, idx.stats, maxBytes)
-  }
-
-  /** Assemble a router over shards opened individually (e.g. via
-    * `openShard` or `ServingLayout.openExportedShard`). The shards must
-    * partition the segments (each seg on exactly one shard) and share the
-    * global stats — both true by construction for the open paths here.
-    */
-  def clusterOf(shards: IndexedSeq[ServingIndex]): ServingCluster =
+  private[query] def clusterOf(shards: IndexedSeq[ServingIndex]): ServingCluster =
     new ServingCluster(shards)
+
+  /** Term top-k over `shards`, which share one global df map and stats:
+    * the query is tokenized and its idfs computed once, every shard offers
+    * its segments' top-ks to one heap, and the heap ranks them by (score
+    * desc, docId asc). Documents live on exactly one shard, and the heap's
+    * kept set does not depend on offer order, so the result is the same
+    * however the segments are spread over shards.
+    */
+  private[query] def termTopK(shards: IndexedSeq[ServingIndex], query: String,
+      k: Int): Array[(Long, Double)] = {
+    val (df, stats) = (shards.head.termDf, shards.head.stats)
+    val present = Analyzer.tokenize(query).distinct.sorted.filter(df.containsKey)
+    if (present.isEmpty || stats.nDocs == 0) return Array.empty
+    val idfs = present.map(t => t -> BM25.idf(stats.nDocs, df.get(t))).toMap
+    val heap = new TopKHeap(k)
+    shards.foreach(_.offerTopK(present, idfs, k, heap))
+    heap.ranked()
+  }
 
   private def collectDocs(idx: OpenIndex): Array[DocMeta] = {
     import org.apache.spark.sql.functions.col
@@ -487,9 +437,9 @@ object Serving {
     * are the unit of document sharding in every layout), all scoring
     * with the GLOBAL term stats, plus a router that k-merges per-shard
     * top-ks with the same (score desc, docId asc) `TopKHeap` merge the
-    * distributed path uses. Bit-identical to the single-node serving
-    * index and the distributed WAND: segments are scored locally either
-    * way — only WHERE they live changes. This is the web-scale
+    * distributed path uses. Bit-identical to the one-shard open and the
+    * distributed WAND: segments are scored locally either way — only
+    * WHERE they live changes. This is the web-scale
     * deployment shape in miniature (shards on separate nodes, the
     * router merging over RPC); `maxBytesPerShard` is each node's budget.
     */
@@ -521,10 +471,13 @@ object Serving {
   }
 }
 
-/** Router over document-sharded `ServingIndex` shards: fans the query
-  * out, k-merges the shard top-ks. Shard top-ks are disjoint (documents
-  * live on exactly one shard), so the merge is the same TopKHeap the
-  * single-node path uses per segment.
+/** The one query surface of the serving tier, as OpenSearch's
+  * coordinating node serves `/{index}/_search`: a router over the
+  * document-sharded `ServingIndex` shards of one snapshot that analyzes
+  * each query once, fans it out and merges the shards' hits by (score
+  * desc, docId asc). Every open of a whole index returns one
+  * (`Serving.open`, `openSharded`, `ServingLayout.openExportedCluster`,
+  * `ServingNode.current`).
   */
 final class ServingCluster private[query] (val shards: IndexedSeq[ServingIndex]) {
 
@@ -553,10 +506,15 @@ final class ServingCluster private[query] (val shards: IndexedSeq[ServingIndex])
     */
   def stats: IndexStats = shards.head.stats
 
-  def topK(query: String, k: Int): Array[(Long, Double)] = {
-    val heap = new TopKHeap(k)
-    shards.foreach(_.topK(query, k).foreach { case (d, s) => heap.offer(d, s) })
-    heap.ranked()
+  /** Exact BM25 top-k; rank-identical to `Wand.topK` (same kernel, same
+    * tie-breaks, same fold order). Pure JVM — no Spark job.
+    */
+  def topK(query: String, k: Int): Array[(Long, Double)] = Serving.termTopK(shards, query, k)
+
+  /** Top-k as a DataFrame (for the driver gate / hit materialization). */
+  def topKDF(spark: SparkSession, query: String, k: Int): DataFrame = {
+    import spark.implicits._
+    topK(query, k).toSeq.toDF("doc_id", "score")
   }
 
   /** Phrase top-k across shards: the router analyzes the phrase once,
@@ -582,5 +540,10 @@ final class ServingCluster private[query] (val shards: IndexedSeq[ServingIndex])
       require(d != null, s"docId $id missing from the doc store")
       Serving.Hit(id, d.url, d.lang, d.doclen, score)
     }
+  }
+
+  def topKHitsDF(spark: SparkSession, query: String, k: Int): DataFrame = {
+    import spark.implicits._
+    topKHits(query, k).toSeq.toDF()
   }
 }

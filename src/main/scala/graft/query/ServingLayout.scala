@@ -25,6 +25,9 @@ import graft.index._
   *                                needs corpus-wide stats)
   *   <out>/stats.json            (global N/avgdl + shard count)
   * }}}
+  * `openExportedShard` is the per-node open, one `ServingIndex` that
+  * answers term top-k over its own documents; `openExportedCluster` is
+  * the router over every shard, which also answers phrases and hits.
   */
 object ServingLayout {
 

@@ -197,22 +197,29 @@ class IndexSpec extends AnyFunSuite {
     val slices = store.committedSlices
     assert(slices.forall(s => s.segLo <= s.segHi), slices)
     assert(slices.map(s => (s.segLo, s.segHi)) == Seq((0, 1), (2, 3), (4, 4)))
-    assert(slices.forall(_.segLocal))
+    // each segment was written by its own task, so each postings file is
+    // a scan unit of its own
+    val units = PostingsScan.units(spark, store, slices)
+    assert(units.size == 5 && units.forall(_.postings.size == 1), units)
     store.dropAll()
   }
 
-  test("manifest: segLocal round-trips, and an entry without it reads false") {
+  test("manifest: entries round-trip, and an entry that carries segLocal still parses") {
     val store = freshStore()
-    val local = SliceMeta(0, 0, 3, 10L, 100L, 4L, 1234L, 1L, segLocal = true)
-    val global = SliceMeta(1, 4, 7, 5L, 50L, 2L, 567L, 2L)
-    store.commitSlice(local)
-    store.commitSlice(global)
-    assert(store.committedSlices == Seq(local, global))
-    // a manifest written before the field existed
+    val a = SliceMeta(0, 0, 3, 10L, 100L, 4L, 1234L, 1L)
+    val b = SliceMeta(1, 4, 7, 5L, 50L, 2L, 567L, 2L)
+    store.commitSlice(a)
+    store.commitSlice(b)
+    assert(store.committedSlices == Seq(a, b))
+    // a manifest written when each entry carried a whole-segments flag,
+    // last or in the middle of the entry
     val mf = java.nio.file.Paths.get(store.root, "manifest.json")
-    Files.writeString(mf, Files.readString(mf).replaceAll(""","segLocal":(true|false)""", ""))
-    assert(!Files.readString(mf).contains("segLocal"))
-    assert(store.committedSlices == Seq(local.copy(segLocal = false), global))
+    val flagged = Files.readString(mf)
+      .replace(""""committedAtMs":1}""", """"committedAtMs":1,"segLocal":true}""")
+      .replace(""""bytes":567,""", """"bytes":567,"segLocal":false,""")
+    assert(flagged.contains(""""segLocal":true""") && flagged.contains(""""segLocal":false"""), flagged)
+    Files.writeString(mf, flagged)
+    assert(store.committedSlices == Seq(a, b))
     store.dropAll()
   }
 

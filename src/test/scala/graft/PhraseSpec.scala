@@ -110,6 +110,32 @@ class PhraseSpec extends AnyFunSuite {
     store.dropAll()
   }
 
+  test("a positional ServingNode routes phrases over its slices like the Spark path, through a tiered merge") {
+    val store = new IndexStore(Files.createTempDirectory("graft-phrnode-").toString)
+    // 8 segments in 3 slices, then a fourth slice appended
+    IndexBuilder.build(spark, corpusIn(spark).filter(col("doc_id") < 256), store,
+      IndexBuilder.Config(segSize = 32, blockSize = 16, slices = 3, positions = true))
+    val node = new graft.query.ServingNode(spark, store, maxBytes = 2L << 30)
+    def check(slices: Int): Unit = {
+      assert(store.committedSlices.size == slices && node.current.shards.size == slices)
+      val idx = store.open(spark)
+      for (phrase <- Phrases) {
+        val dist = Phrase.topK(spark, idx, phrase, 10)
+          .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+        assert(node.current.phraseTopK(phrase, 10).toSeq == dist, s"$slices slices '$phrase'")
+      }
+    }
+    check(3)
+    IndexBuilder.append(spark, corpusIn(spark).filter(col("doc_id") >= 256), store)
+    assert(node.refresh())
+    check(4)
+    // the two smallest slices merge into one
+    assert(store.maybeMerge(maxSlices = 3, mergeFactor = 2).size == 1)
+    assert(node.refresh())
+    check(3)
+    store.dropAll()
+  }
+
   test("serving and sharded phrase paths are bit-identical to the distributed path") {
     import spark.implicits._
     val rnd = new scala.util.Random(11)
@@ -129,14 +155,15 @@ class PhraseSpec extends AnyFunSuite {
     // tight budget: bounded decode cache, NO decoded-positions cache —
     // phrase queries decode per query and must stay bit-identical
     val tight = graft.query.Serving.open(idx, maxBytes = 1L)
-    assert(tight.bounded)
+    val tightShard = tight.shards.head
+    assert(tightShard.bounded)
     // open report surfaces honest budget accounting: under a budget the
     // unevictable compressed positions alone exceed, overBudget flags that
     // heap sizing must use retainedPositionBytes + cacheBudgetBytes
-    assert(tight.openReport.overBudget)
-    assert(tight.openReport.retainedPositionBytes == tight.retainedPositionBytes)
-    assert(tight.openReport.retainedPositionBytes + tight.openReport.cacheBudgetBytes > 1L)
-    val roomy = serving.openReport
+    assert(tightShard.openReport.overBudget)
+    assert(tightShard.openReport.retainedPositionBytes == tightShard.retainedPositionBytes)
+    assert(tightShard.openReport.retainedPositionBytes + tightShard.openReport.cacheBudgetBytes > 1L)
+    val roomy = serving.shards.head.openReport
     assert(!roomy.overBudget && !roomy.bounded)
     assert(roomy.estDecodedBytes + roomy.retainedPositionBytes <= roomy.maxBytes)
     // exported deployment layout: per-directory shard opens must carry

@@ -194,7 +194,8 @@ class PlanSpec extends AnyFunSuite {
   test("wand topK: driver-side term stats, no Exchange on the segment-local path") {
     val idx = SparkEntry.indexFor(spark, sf)
     assert(idx.termsLocal.nonEmpty, "bounded vocab must resolve driver-side")
-    assert(idx.slices.forall(_.segLocal), "a fresh build must hold whole segments per file")
+    assert(graft.index.PostingsScan.units(spark, idx.store, idx.slices).forall(_.postings.size == 1),
+      "each postings file of a fresh build must be a scan unit of its own")
     val q = "spark dup"
     val oracle = graft.query.OracleScorer.topK(spark, spark.read.parquet(s"$sf/documents.parquet"), q, 5)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
@@ -207,10 +208,6 @@ class PlanSpec extends AnyFunSuite {
     // segment-local: each task runs WAND over the segments of the file it
     // read, with the norms it reads beside them, and the driver merges
     assert(answer(spark, idx) == ((1, 0), oracle))
-    // slices without the whole-segment flag: each slice is one task, so
-    // its segments still meet their norms with no Exchange
-    val unflagged = idx.copy(slices = idx.slices.map(_.copy(segLocal = false)))
-    assert(answer(spark, unflagged) == ((1, 0), oracle))
     // a session whose settings split files apart takes the same route
     val split = TestSpark.splittingSession()
     assert(answer(split, idx.store.open(split)) == ((1, 0), oracle))

@@ -9,7 +9,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.index.{IndexBuilder, IndexStore, OpenIndex}
-import graft.query.{OracleScorer, Phrase, Serving, Wand}
+import graft.query.{OracleScorer, Phrase, Wand}
 
 /** Spark jobs a warm Spark-path query runs: once an open index holds its
   * stats and term stats, WAND and phrase each answer in one scan of their
@@ -103,15 +103,6 @@ class QueryJobsSpec extends AnyFunSuite {
     // schema-inference job (12 when it ran one per table), and no query
     // collects the norms (8 when one did)
     assert(jobs <= 7, s"open + stats + first WAND top-k ran $jobs jobs")
-    store.dropAll()
-  }
-
-  test("openShard takes its stats without collecting every segment's norms") {
-    val store = slicedStore()
-    val idx = store.open(spark)
-    val shard = Serving.openShard(idx, 1, 2, 2L << 30)
-    Wand.topK(spark, idx, "fox dog", 10).collect()
-    assert(shard.stats == idx.stats)
     store.dropAll()
   }
 

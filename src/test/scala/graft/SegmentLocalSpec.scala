@@ -18,11 +18,11 @@ import graft.streaming.StreamIngest
 
 /** The one Spark-path route and its partition unit: a Spark-path query
   * scores each segment inside the task that reads its blocks, with the
-  * norms that task reads beside them. A partition is a postings file when
-  * its slice holds whole segments per file, and the whole slice when it
-  * does not; the planned scan reads every partition whole, whatever the
-  * session's split settings. No store shuffles, and every store answers
-  * bit-equal to brute force.
+  * norms that task reads beside them. A partition is a scan unit, the
+  * postings files of a slice whose footer `seg` ranges overlap; the
+  * planned scan reads every partition whole, whatever the session's split
+  * settings. No store shuffles, and every store answers bit-equal to brute
+  * force.
   */
 class SegmentLocalSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -111,6 +111,15 @@ class SegmentLocalSpec extends AnyFunSuite {
     (store, ps.zipWithIndex.map { case ((_, t), i) => i.toLong -> t })
   }
 
+  /** The scan units of `idx`, as postings file names per unit. */
+  private def units(idx: OpenIndex): Seq[Seq[String]] =
+    PostingsScan.units(spark, idx.store, idx.slices).map(_.postings.map(_.path.getName))
+
+  /** The parquet file names of `slice`'s postings. */
+  private def postingsFiles(store: IndexStore, slice: Int): Seq[String] =
+    Files.list(Paths.get(store.slicePath("postings", slice))).iterator().asScala
+      .map(_.getFileName.toString).filter(_.endsWith(".parquet")).toSeq.sorted
+
   /** The planned scan of every term of `idx`. */
   private def fullScan(idx: OpenIndex) =
     idx.postingsScan(positions = false).plan(idx.termsLocal.get.keys)
@@ -138,7 +147,7 @@ class SegmentLocalSpec extends AnyFunSuite {
     val (store, docs) = splitStore()
     val s = TestSpark.splittingSession()
     val idx = store.open(s)
-    assert(idx.slices.forall(_.segLocal))
+    assert(units(idx).forall(_.size == 1), "a fresh build's files must each be a unit")
     assert(maxPartitionsPerSeg(idx) > 1, "the split scan must spread a segment over partitions")
     assert(maxPartitionsPerSeg(fullScan(idx).rdd)(_.getInt(1)) == 1,
       "the planned scan must read each segment in one partition")
@@ -173,7 +182,6 @@ class SegmentLocalSpec extends AnyFunSuite {
     val dir = Paths.get(store.slicePath("postings", meta.sliceId))
     TestSpark.rewriteTable(dir.toString)(
       _.repartitionByRange(2, col("term")).sortWithinPartitions("term", "seg", "blk"))
-    store.commitSlice(meta.copy(segLocal = false))
     val segsPerFile = Files.list(dir).iterator().asScala.map(_.toString)
       .filter(_.endsWith(".parquet")).toSeq
       .map(f => spark.read.parquet(f).select("seg").distinct().collect().map(_.getInt(0)).toSet)
@@ -181,43 +189,73 @@ class SegmentLocalSpec extends AnyFunSuite {
       s"no segment spans two files: $segsPerFile")
 
     // one SQL scan partition per file (each file costs a whole partition):
-    // a segment spans partitions, so only the cleared flag keeps the
-    // planned scan from reading the slice's files apart
+    // a segment spans partitions, so only the files' overlapping `seg`
+    // ranges keep the planned scan from reading the slice's files apart
     val s = spark.newSession()
     s.conf.set("spark.sql.files.openCostInBytes", s.conf.get("spark.sql.files.maxPartitionBytes"))
     val idx = store.open(s)
-    assert(!idx.slices.head.segLocal && idx.slices.tail.forall(_.segLocal))
+    val rest = idx.slices.tail.flatMap(m => postingsFiles(store, m.sliceId))
+    assert(units(idx).toSet == (rest.map(Seq(_)) :+ postingsFiles(store, meta.sliceId)).toSet)
     assert(maxPartitionsPerSeg(idx) > 1, "the old layout must spread a segment over partitions")
-    assertUnflaggedWhole(store, idx)
+    assertOnePartition(idx, postingsFiles(store, meta.sliceId))
     assert(shuffles(s, idx) == (0, 0))
     assertExact(s, idx, docs)
-    // a merge with the unflagged slice is unflagged too
-    assert(!store.compact().segLocal)
+    // the merged slice keeps the old slice's files in one unit, and gets a
+    // unit per file of the fresh slice: more partitions than two slices
+    // that are each one unit
+    val mergedId = store.compact().sliceId
     val merged = store.open(spark)
-    assert(!merged.slices.forall(_.segLocal))
-    assertUnflaggedWhole(store, merged)
+    val old = postingsFiles(store, mergedId).filter(_.startsWith(s"s${meta.sliceId}-"))
+    assert(old.size == 2)
+    assert(units(merged).toSet ==
+      (postingsFiles(store, mergedId).diff(old).map(Seq(_)) :+ old).toSet)
+    assert(fullScan(merged).rdd.partitions.length == 1 + rest.size && rest.size > 1)
+    assertOnePartition(merged, old)
     assert(shuffles(spark, merged) == (0, 0))
     assertExact(spark, merged, docs)
     store.dropAll()
   }
 
-  /** Every unflagged slice of `idx` is one partition of its planned scan,
-    * holding all of its postings files and no other.
-    */
-  private def assertUnflaggedWhole(store: IndexStore, idx: OpenIndex): Unit = {
-    val parts = fullScan(idx).rdd.partitions.toSeq
-      .map(_.asInstanceOf[FilePartition].files.map(_.toPath).toSet)
-    for (m <- idx.slices if !m.segLocal) {
-      val dir = s"slice=${m.sliceId}"
-      val files = Files.list(Paths.get(store.slicePath("postings", m.sliceId))).iterator().asScala
-        .map(_.getFileName.toString).filter(_.endsWith(".parquet")).toSet
-      val mine = parts.filter(_.exists(_.getParent.getName == dir))
-      assert(mine.size == 1 && mine.head.forall(_.getParent.getName == dir) &&
-        mine.head.map(_.getName) == files, s"slice ${m.sliceId} is not one partition: $parts")
-    }
+  test("postings files that share a segment are one scan unit, whatever the manifest says") {
+    val ps = pages(3, 600)
+    val docs = ps.zipWithIndex.map { case ((_, t), i) => i.toLong -> t }
+    val store = new IndexStore(Files.createTempDirectory("graft-overlap-").toString)
+    IndexBuilder.build(spark, withIds(spark, ps), store, cfg)
+    // rewrite slice 0 so that its first segment's blocks lie in two files,
+    // split by term, and each other segment has a file of its own; the
+    // manifest stays as the build wrote it
+    val meta = store.committedSlices.head
+    TestSpark.rewriteTable(store.slicePath("postings", meta.sliceId))(_.repartitionById(
+      meta.segHi - meta.segLo + 2,
+      when(col("seg") === meta.segLo, when(col("term") < "n", 0).otherwise(1))
+        .otherwise(col("seg") - meta.segLo + 1))
+      .sortWithinPartitions("term", "seg", "blk"))
+    val files = postingsFiles(store, meta.sliceId)
+    val segsPerFile = files.map(f => spark.read.parquet(s"${store.slicePath("postings", meta.sliceId)}/$f")
+      .select("seg").distinct().collect().map(_.getInt(0)).toSet)
+    assert(segsPerFile.take(2) == Seq(Set(meta.segLo), Set(meta.segLo)), segsPerFile)
+    assert(segsPerFile.drop(2) == (meta.segLo + 1 to meta.segHi).map(Set(_)), segsPerFile)
+
+    val idx = store.open(spark)
+    val rest = idx.slices.tail.flatMap(m => postingsFiles(store, m.sliceId))
+    assert(units(idx).toSet == (files.take(2) +: (files.drop(2) ++ rest).map(Seq(_))).toSet)
+    assertOnePartition(idx, files.take(2))
+    assert(shuffles(spark, idx) == (0, 0))
+    assertExact(spark, idx, docs)
+    store.dropAll()
   }
 
-  test("merged slices keep the whole-segment flag: the reopened store stays local") {
+  /** The planned scan of `idx` reads the postings files named `files` in
+    * one partition, and no other file there.
+    */
+  private def assertOnePartition(idx: OpenIndex, files: Seq[String]): Unit = {
+    val parts = fullScan(idx).rdd.partitions.toSeq
+      .map(_.asInstanceOf[FilePartition].files.map(_.toPath.getName).toSet)
+    assert(parts.count(_.exists(files.contains)) == 1 && parts.contains(files.toSet),
+      s"$files are not one partition: $parts")
+  }
+
+  test("merged slices keep a scan unit per file: the reopened store stays local") {
     val store = new IndexStore(Files.createTempDirectory("graft-mergeflag-").toString)
     val batches = Seq(300, 120, 120).zipWithIndex.map { case (n, b) => pages(10 + b, n) }
     for ((ps, b) <- batches.zipWithIndex) {
@@ -230,11 +268,11 @@ class SegmentLocalSpec extends AnyFunSuite {
     }
     val slices = store.committedSlices
     assert(slices.map(_.sliceId).max > 3, s"no merged slice: $slices")
-    assert(slices.forall(_.segLocal), s"a slice lost the flag: $slices")
     assert(store.deadSlices.isEmpty)
 
     val idx = store.open(spark)
-    assert(idx.slices.forall(_.segLocal) && shuffles(spark, idx) == (0, 0))
+    assert(units(idx).forall(_.size == 1), s"a file lost its own unit: ${units(idx)}")
+    assert(shuffles(spark, idx) == (0, 0))
     val text = batches.flatten.toMap
     val docs = idx.docs.select("doc_id", "url").collect()
       .map(r => r.getLong(0) -> text(r.getString(1))).toSeq

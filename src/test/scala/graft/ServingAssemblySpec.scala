@@ -65,7 +65,7 @@ class ServingAssemblySpec extends AnyFunSuite {
     val out = Files.createTempDirectory("graft-budget-export-").toString
     ServingLayout.exportShards(spark, store, out, 3)
 
-    val roomy = Serving.open(idx, maxBytes = 2L << 30).openReport
+    val roomy = Serving.open(idx, maxBytes = 2L << 30).shards.head.openReport
     assert(!roomy.bounded && roomy.retainedPositionBytes > 0)
     val noHeadroom = roomy.estDecodedBytes + roomy.retainedPositionBytes
     for (b <- Seq(2L << 30, noHeadroom, 1024L)) {
@@ -73,8 +73,8 @@ class ServingAssemblySpec extends AnyFunSuite {
       val node = new ServingNode(spark, store, maxBytes = b).current
       assert(node.shards.size == 2)
       node.shards.foreach { s =>
-        assert(s.openReport == flat.openReport, s"budget $b")
-        assert(s.bounded == flat.bounded, s"budget $b")
+        assert(s.openReport == flat.shards.head.openReport, s"budget $b")
+        assert(s.bounded == flat.shards.head.bounded, s"budget $b")
       }
       assert(node.loadedBytes == flat.loadedBytes, s"budget $b")
 
@@ -86,7 +86,8 @@ class ServingAssemblySpec extends AnyFunSuite {
         assert(sharded(s).loadedBytes == exported(s).loadedBytes, s"budget $b shard $s")
       }
     }
-    assert(Serving.open(idx, maxBytes = noHeadroom).openReport.cacheBudgetBytes == roomy.estDecodedBytes)
-    assert(Serving.open(idx, maxBytes = 1024L).bounded)
+    assert(Serving.open(idx, maxBytes = noHeadroom).shards.head.openReport.cacheBudgetBytes ==
+      roomy.estDecodedBytes)
+    assert(Serving.open(idx, maxBytes = 1024L).shards.head.bounded)
   }
 }

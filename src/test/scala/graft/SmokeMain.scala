@@ -1,18 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Manual smoke harness: drives the driver contract exactly as the round
   * driver does — SparkEntry.entry(spark) must return rows > 0.
   */
 object SmokeMain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(4, "4", "graft-smoke", "WARN")
     val df = SparkEntry.entry(spark)
     val rows = df.collect()
     println(s"[smoke] entry rows=${rows.length}")

@@ -80,18 +80,15 @@ class StatsSpec extends AnyFunSuite {
     def docScans(roots: Seq[String]) = roots.filter(_.contains("/docs/"))
     val (st, statsJobs, statsRoots) = observe(store.open(spark).stats)
     val (flat, openJobs, openRoots) = observe(Serving.open(store.open(spark), budget))
-    val idx = store.open(spark)
-    val (shard, _, shardRoots) = observe(Serving.openShard(idx, 1, 2, budget))
-    val (cluster, _, clusterRoots) = observe(Serving.openSharded(idx, 3, budget))
+    val (cluster, _, clusterRoots) = observe(Serving.openSharded(store.open(spark), 3, budget))
     info(s"jobs: store.open + stats = $statsJobs, store.open + Serving.open = $openJobs")
     for ((name, roots) <- Seq("store.open.stats" -> statsRoots, "Serving.open" -> openRoots,
-        "openShard" -> shardRoots, "openSharded" -> clusterRoots)) {
+        "openSharded" -> clusterRoots)) {
       assert(roots.nonEmpty, s"$name: no scan observed")
       assert(docScans(roots).isEmpty, s"$name scans docs: ${docScans(roots)}")
     }
     assert(st == expect)
     assert(flat.stats == expect)
-    assert(shard.stats == expect)
     assert(cluster.stats == expect)
     store.dropAll()
   }

@@ -607,7 +607,7 @@ class StreamingSpec extends AnyFunSuite {
 
     // forcemerge to one slice: block count lands exactly on the
     // single-build band, ranking and serving results unchanged
-    val servedBefore = Serving.open(spark, store, 64L << 20).topK("the web crawl", 10).toSeq
+    val servedBefore = Serving.open(store.open(spark), 64L << 20).topK("the web crawl", 10).toSeq
     store.compact()
     assert(store.committedSlices.size == 1)
     assert(store.committedSlices.head.blocks == refBlocks,
@@ -618,7 +618,7 @@ class StreamingSpec extends AnyFunSuite {
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       assert(ranked(idxC, q, 10) == oracle, s"post-compaction rank diverged for '$q'")
     }
-    assert(Serving.open(spark, store, 64L << 20).topK("the web crawl", 10).toSeq == servedBefore)
+    assert(Serving.open(store.open(spark), 64L << 20).topK("the web crawl", 10).toSeq == servedBefore)
     docsWithIds.unpersist(); corpus.unpersist()
   }
 }

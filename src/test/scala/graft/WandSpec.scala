@@ -144,16 +144,6 @@ class WandSpec extends AnyFunSuite {
     val full = Serving.open(index, maxBytes = 2L << 30)
     val nShards = 3
 
-    // openShard: each shard materializes ONLY its own blocks (the
-    // per-node deployment open) — the 3 shards partition the postings
-    val shards = (0 until nShards).map(s => Serving.openShard(index, s, nShards, 2L << 30))
-    assert(shards.map(_.loadedBytes).sum >= full.loadedBytes * 9 / 10)
-    assert(shards.exists(_.loadedBytes < full.loadedBytes),
-      "a shard open must not hold the whole index")
-    val cluster = Serving.clusterOf(shards.toIndexedSeq)
-    for (q <- queries; k <- Seq(10, 100))
-      assert(cluster.topK(q, k).toSeq == full.topK(q, k).toSeq, s"openShard q='$q' k=$k")
-
     // exported layout: shard servers read exactly their own directory
     val out = Files.createTempDirectory("graft-serving-export-").toString
     ServingLayout.exportShards(spark, index.store, out, nShards)
@@ -162,8 +152,22 @@ class WandSpec extends AnyFunSuite {
     for (s <- 0 until nShards)
       assert(new java.io.File(s"$out/postings/shard=$s").isDirectory)
     val exported = ServingLayout.openExportedCluster(spark, out, 2L << 30, withDocs = true)
+    // each shard materializes ONLY its own blocks (the per-node
+    // deployment open) — the 3 shards partition the postings
+    val shards = exported.shards
+    assert(shards.size == nShards)
+    assert(shards.map(_.loadedBytes).sum >= full.loadedBytes * 9 / 10)
+    assert(shards.forall(_.loadedBytes < full.loadedBytes),
+      "a shard open must not hold the whole index")
     for (q <- queries; k <- Seq(10, 100))
       assert(exported.topK(q, k).toSeq == full.topK(q, k).toSeq, s"export q='$q' k=$k")
+    // a per-node open answers its own documents' top-k with the global
+    // stats: the per-node hits, merged, are the router's
+    val nodes = (0 until nShards).map(s => ServingLayout.openExportedShard(spark, out, s, 2L << 30))
+    for (q <- queries; k <- Seq(10, 100)) {
+      val merged = nodes.flatMap(_.topK(q, k)).sortBy { case (d, sc) => (-sc, d) }.take(k)
+      assert(merged == full.topK(q, k).toSeq, s"per-node q='$q' k=$k")
+    }
     // fetch phase from the PER-SHARD doc stores (the deployment form):
     // same hits as the single-node open-with-docs
     val withDocsFull = Serving.open(index, maxBytes = 2L << 30, withDocs = true)
@@ -173,11 +177,11 @@ class WandSpec extends AnyFunSuite {
 
   test("bounded decoded-block cache: over-budget slice serves bit-identically") {
     val full = graft.query.Serving.open(index, maxBytes = 2L << 30)
-    assert(!full.bounded)
+    assert(!full.shards.head.bounded)
     // budget below the decoded footprint → LRU mode, partial pre-decode;
     // sized to hold only a fraction of the slice so eviction actually runs
     val lru = graft.query.Serving.open(index, maxBytes = full.loadedBytes / 4)
-    assert(lru.bounded)
+    assert(lru.shards.head.bounded)
     for (q <- queries; k <- Seq(10, 100)) {
       assert(lru.topK(q, k).toSeq == full.topK(q, k).toSeq, s"query='$q' k=$k")
     }
@@ -187,7 +191,7 @@ class WandSpec extends AnyFunSuite {
     // repeated queries hit the cache, so the bounded mode must stay within
     // a small factor of full pre-decode — not fall back to per-query decode
     val warmQ = queries.head
-    def best(s: graft.query.ServingIndex): Double =
+    def best(s: graft.query.ServingCluster): Double =
       (1 to 5).map { _ =>
         val t0 = System.nanoTime()
         var i = 0
