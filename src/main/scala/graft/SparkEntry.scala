@@ -238,20 +238,16 @@ object SparkEntry {
 
     // the same phrase answered by the serving router (positions decoded
     // on demand, global-df scoring) — must be bit-identical
-    "q_bm25_phrase_serving_top10" -> ((s, d) => {
-      import s.implicits._
-      servingFor(s, d).phraseTopK("table hash", 10)
-        .toSeq.toDF("doc_id", "score")
-        .select(col("doc_id"), round(col("score"), 4).as("score"))
-    }),
+    "q_bm25_phrase_serving_top10" -> ((s, d) =>
+      graft.query.TopKFrame(s, servingFor(s, d).phraseTopK("table hash", 10))
+        .select(col("doc_id"), round(col("score"), 4).as("score"))),
 
     // document-sharded serving cluster (3 shard servers + router k-merge,
     // global term stats) — must be bit-identical to every other layout
     "q_bm25_sharded_top10" -> ((s, d) => {
-      import s.implicits._
       val cluster = graft.query.Serving.openSharded(
         indexFor(s, d), nShards = 3, maxBytesPerShard = 2L << 30)
-      cluster.topK("spark index dup", 10).toSeq.toDF("doc_id", "score")
+      cluster.topKDF(s, "spark index dup", 10)
         .select(col("doc_id"), round(col("score"), 4).as("score"))
     }),
 
@@ -260,7 +256,6 @@ object SparkEntry {
     // ONLY its own directory, and the router must still merge to the
     // exact distributed/serving ranking
     "q_bm25_export_shard_top10" -> ((s, d) => {
-      import s.implicits._
       val idx = indexFor(s, d)
       val out = exportCache.getOrElseUpdate(d, {
         val dir = Files.createTempDirectory("graft-export-").toString
@@ -268,7 +263,7 @@ object SparkEntry {
         dir
       })
       val cluster = graft.query.ServingLayout.openExportedCluster(s, out, 2L << 30)
-      cluster.topK("spark index dup", 10).toSeq.toDF("doc_id", "score")
+      cluster.topKDF(s, "spark index dup", 10)
         .select(col("doc_id"), round(col("score"), 4).as("score"))
     }),
 

@@ -292,8 +292,8 @@ final class IndexStore(val root: String) {
     val postings = readTable[PostingBlock](spark, "postings", slices)
     // norms and term stats are tiny relative to postings (one row per seg /
     // per distinct term); cache them so the stats fold, serving opens and
-    // per-query idf lookups don't re-scan parquet (queries read the norms
-    // files beside their segments' postings instead)
+    // per-query idf lookups don't re-scan parquet (queries hold their
+    // segments' norms in their resident scan units instead)
     val norms = readTable[SegNorms](spark, "norms", slices).cache()
     OpenIndex(this, postings, norms, TermStat.of(postings).cache(),
       readTable[DocMeta](spark, "docs", slices).toDF(), slices)
@@ -350,11 +350,12 @@ final class IndexStore(val root: String) {
 
 /** A snapshot of a store: its tables pinned to one manifest read, with
   * the state its queries fill once and share — corpus and term stats, and
-  * the planned postings scan with each file's per-row-group term ranges and
-  * each unit's norms files (`postingsScan`), so a warm Spark-path query
-  * prunes row groups on the driver and runs one job without planning SQL.
-  * A query task reads its segments' norms beside their postings; no path
-  * broadcasts the norms or collects them to the driver.
+  * the resident scan units of the Spark query path (`postingsScan`): each
+  * unit's encoded blocks and decoded norms, held in executor memory by the
+  * first query that reads the unit, so a warm Spark-path query drops units
+  * on the driver and runs one job that reads no file. No path broadcasts
+  * the norms or collects them to the driver. A snapshot never changes, so
+  * nothing it holds is invalidated; its resident units go with it.
   */
 case class OpenIndex(
     store: IndexStore,
@@ -382,33 +383,21 @@ case class OpenIndex(
       Some(terms.collect().map(t => t.term -> t.df).toMap)
     else None
 
-  /** The planned postings scan of the Spark query path
+  /** The resident postings of the Spark query path
     * (`Segments.perSegment`), positions pruned unless `positions`: the
-    * scan units of the pinned slices with their footers' per-row-group
-    * term ranges and paired norms files, read once per open index, and one
-    * pair of parquet read functions per variant. The read functions follow
-    * the session's settings, so both variants are planned again only when
-    * a setting changes.
+    * scan units of the pinned slices, from footers read once per open
+    * index, as one persisted RDD per variant, named after the store root
+    * and the variant.
     */
-  private[graft] def postingsScan(positions: Boolean): PostingsScan = {
-    val key = postings.sparkSession.conf.getAll
-    val memo = planned
-    val scans = if (memo != null && memo.key == key) memo else {
-      val fresh = new PlannedScans(key)
-      planned = fresh
-      fresh
-    }
-    if (positions) scans.positional else scans.terms
-  }
+  private[graft] def postingsScan(positions: Boolean): PostingsScan =
+    if (positions) positionalScan else termScan
 
   private lazy val scanUnits: IndexedSeq[ScanUnit] =
     PostingsScan.units(postings.sparkSession, store, slices)
-
-  private final class PlannedScans(val key: Map[String, String]) {
-    lazy val terms = new PostingsScan(postings.sparkSession, scanUnits, positions = false)
-    lazy val positional = new PostingsScan(postings.sparkSession, scanUnits, positions = true)
-  }
-  @volatile private var planned: PlannedScans = null
+  private lazy val termScan =
+    new PostingsScan(postings.sparkSession, s"${store.root} postings (terms)", scanUnits, positions = false)
+  private lazy val positionalScan =
+    new PostingsScan(postings.sparkSession, s"${store.root} postings (positional)", scanUnits, positions = true)
 }
 
 /** Flat string→string JSON object (settings/mappings files and

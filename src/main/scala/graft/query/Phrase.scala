@@ -26,10 +26,9 @@ private[graft] case class PhrasePart(count: Long, docs: Array[Long], tfNorms: Ar
   * rounds two tfNorms to one score; a segment therefore reports only its
   * match count (the phrase df is their sum) and the matches within the
   * rounding margin of its k-th best tfNorm. On the Spark path each
-  * segment matches beside its own norms, read in the task that read its
-  * blocks (`Segments.perSegment`, the route WAND takes), over the row
-  * groups that can hold the phrase terms, and the parts come back from one
-  * job with no Exchange.
+  * segment matches beside its own norms, held in the resident scan unit
+  * that holds its blocks with positions (`Segments.perSegment`, the route
+  * WAND takes), and the parts come back from one job with no Exchange.
   */
 object Phrase {
 
@@ -143,7 +142,6 @@ object Phrase {
     * is absent from the index or the phrase never occurs.
     */
   def topK(spark: SparkSession, idx: OpenIndex, phrase: String, k: Int): DataFrame = {
-    import spark.implicits._
     val slots = Analyzer.tokenize(phrase).toIndexedSeq // ordered, duplicates preserved
     require(slots.nonEmpty, "empty phrase")
     val stats = idx.stats
@@ -153,6 +151,6 @@ object Phrase {
       val p = segTopK(blocks, slots, Serving.decodePositionsOf, norms, avgdl, k)
       if (p.count == 0) Iterator.empty else Iterator.single(p)
     }
-    finish(parts, stats.nDocs, k).toSeq.toDF("doc_id", "score")
+    TopKFrame(spark, finish(parts, stats.nDocs, k))
   }
 }

@@ -4,11 +4,8 @@ import scala.collection.mutable
 import scala.reflect.ClassTag
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.execution.datasources.PartitionedFile
-import org.apache.spark.unsafe.types.UTF8String
 
-import graft.index.{DecodedNorms, OpenIndex, PostingBlock, PostingsScan, SegNorms}
+import graft.index.{DecodedNorms, OpenIndex, PostingBlock, ResidentUnit}
 
 /** The one route from a segment's posting blocks to its norms, as a
   * Lucene segment scorer reads the norms stored beside its postings.
@@ -17,17 +14,17 @@ import graft.index.{DecodedNorms, OpenIndex, PostingBlock, PostingsScan, SegNorm
   * norms, run in an executor task; the caller merges the collected
   * per-segment parts on the driver.
   *
-  * Distribution model: the query runs on the open index's planned postings
-  * scan (`OpenIndex.postingsScan`). The driver keeps only the row groups
-  * whose footer term range can hold a query term; a partition is a scan
-  * unit (`PostingsScan.units`), the postings files of a slice whose
-  * footer `seg` ranges overlap, so every segment is read by one task.
-  * Each partition carries the norms files whose
-  * footer `seg` range meets its postings files' range, and one job scores
-  * each segment in the task that read it, with the norms that task reads
-  * beside it — as each OpenSearch shard scores the Lucene segments it
-  * stores. No path broadcasts the norms or collects them to the driver,
-  * and no SQL plan is built per query.
+  * Distribution model: the query runs on the open index's resident scan
+  * units (`OpenIndex.postingsScan`), a persisted RDD with one partition per
+  * unit (`PostingsScan.units`): the postings files of a slice whose footer
+  * `seg` ranges overlap, so every segment is held by one partition. Each
+  * partition's element holds the unit's encoded blocks by term and its
+  * segments' norms, decoded once when a query first reads the unit. The
+  * driver drops the units whose footer term ranges hold no query term, and
+  * one job scores each segment of the rest in the task that holds it — as
+  * each OpenSearch shard scores the Lucene segments it has mapped. A warm
+  * query reads no file; no path broadcasts the norms or collects them to
+  * the driver, and no SQL plan is built per query.
   */
 private[graft] object Segments {
 
@@ -39,48 +36,31 @@ private[graft] object Segments {
   def perSegment[T: ClassTag](idx: OpenIndex, terms: Seq[String], positions: Boolean)(
       f: (Array[PostingBlock], DecodedNorms) => Iterator[T]): Array[T] = {
     val scan = idx.postingsScan(positions)
-    val planned = scan.plan(terms)
-    if (planned.rdd.partitions.isEmpty) Array.empty[T]
-    else planned.rdd.sparkContext.runJob(planned.rdd,
-      new SegmentKernel(terms.toSet, positions, planned.norms, scan.readNorms, f)).flatten
-  }
-
-  private[query] def run[T](seg: Int, bs: Array[PostingBlock], ns: collection.Seq[SegNorms],
-      f: (Array[PostingBlock], DecodedNorms) => Iterator[T]): Iterator[T] = {
-    require(ns.nonEmpty, s"seg $seg has postings but no norms")
-    require(ns.length == 1, s"seg $seg has ${ns.length} norms rows")
-    f(bs, SegNorms.decode(ns.head))
+    val kept = scan.partitionsOf(terms)
+    if (kept.isEmpty) Array.empty[T]
+    else scan.resident.sparkContext.runJob(scan.resident, new UnitKernel(terms.toArray, f), kept).flatten
   }
 }
 
-/** A planned scan's task: the rows of the query's terms, grouped by
-  * segment, then the norms rows of those segments from the partition's
-  * norms files, and each segment through `f`. A partition with no block of
-  * the terms opens no norms file. A named class rather than a lambda, so
-  * submitting the job parses no closure.
+/** A query's task over one resident unit: the unit's blocks of the query's
+  * terms, grouped by segment, and each segment through `f` with its
+  * decoded norms. A named class rather than a lambda, so submitting the job
+  * parses no closure.
   */
-private final class SegmentKernel[T: ClassTag](
-    terms: Set[String],
-    positions: Boolean,
-    normsFiles: Array[Array[PartitionedFile]],
-    readNorms: PartitionedFile => Iterator[InternalRow],
+private final class UnitKernel[T: ClassTag](
+    terms: Array[String],
     f: (Array[PostingBlock], DecodedNorms) => Iterator[T])
-  extends ((TaskContext, Iterator[InternalRow]) => Array[T]) with Serializable {
+  extends ((TaskContext, Iterator[ResidentUnit]) => Array[T]) with Serializable {
 
-  @transient private lazy val wanted: Set[UTF8String] = terms.map(UTF8String.fromString)
-
-  def apply(ctx: TaskContext, rows: Iterator[InternalRow]): Array[T] = {
-    val bySeg = mutable.HashMap.empty[Int, mutable.ArrayBuffer[PostingBlock]]
-    rows.foreach { r =>
-      if (wanted(r.getUTF8String(0)))
-        bySeg.getOrElseUpdate(r.getInt(1), mutable.ArrayBuffer.empty) += PostingsScan.block(r, positions)
-    }
-    if (bySeg.isEmpty) return Array.empty[T]
-    val norms = mutable.HashMap.empty[Int, mutable.ArrayBuffer[SegNorms]]
-    for (file <- normsFiles(ctx.partitionId()); r <- readNorms(file) if bySeg.contains(r.getInt(0)))
-      norms.getOrElseUpdate(r.getInt(0), mutable.ArrayBuffer.empty) += PostingsScan.norms(r)
+  def apply(ctx: TaskContext, units: Iterator[ResidentUnit]): Array[T] = units.flatMap { u =>
+    val bySeg = mutable.HashMap.empty[Int, mutable.ArrayBuilder[PostingBlock]]
+    for (t <- terms; bs <- u.blocks.get(t); b <- bs)
+      bySeg.getOrElseUpdate(b.seg, mutable.ArrayBuilder.make[PostingBlock]) += b
     bySeg.iterator.flatMap { case (seg, bs) =>
-      Segments.run(seg, bs.toArray, norms.getOrElse(seg, Nil), f)
-    }.toArray
-  }
+      val ns = u.norms.getOrElse(seg, Array.empty[DecodedNorms])
+      require(ns.nonEmpty, s"seg $seg has postings but no norms")
+      require(ns.length == 1, s"seg $seg has ${ns.length} norms rows")
+      f(bs.result(), ns.head)
+    }
+  }.toArray
 }

@@ -512,10 +512,8 @@ final class ServingCluster private[query] (val shards: IndexedSeq[ServingIndex])
   def topK(query: String, k: Int): Array[(Long, Double)] = Serving.termTopK(shards, query, k)
 
   /** Top-k as a DataFrame (for the driver gate / hit materialization). */
-  def topKDF(spark: SparkSession, query: String, k: Int): DataFrame = {
-    import spark.implicits._
-    topK(query, k).toSeq.toDF("doc_id", "score")
-  }
+  def topKDF(spark: SparkSession, query: String, k: Int): DataFrame =
+    TopKFrame(spark, topK(query, k))
 
   /** Phrase top-k across shards: the router analyzes the phrase once,
     * gathers each shard's per-segment counts and local candidates, and

@@ -1,7 +1,8 @@
 package graft.query
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 import graft.analysis.Analyzer
 import graft.index._
 
@@ -14,11 +15,11 @@ import graft.index._
   * segment's blocks with its norms), emits a local top-k, and the driver
   * k-merges the collected top-ks with the `TopKHeap` the serving router
   * and `Phrase.finish` use — the standard document-sharded search
-  * architecture. The query runs on the open index's planned postings
-  * scan: the driver keeps the row groups whose term range can hold a query
-  * term, and one job scores each segment in the task that read its blocks,
-  * with the norms that task reads beside them — no SQL plan, no Exchange
-  * and no norms on the driver.
+  * architecture. The query runs on the open index's resident scan units:
+  * the driver drops the units whose footer term ranges hold no query term,
+  * and one job scores each segment in the task that holds its blocks, with
+  * the decoded norms held beside them — no SQL plan, no Exchange, no norms
+  * on the driver and, once the units are resident, no file read.
   *
   * Determinism: a document's score folds its per-term contributions in
   * ascending term order, so the double-precision sum is bit-identical to
@@ -32,7 +33,6 @@ object Wand {
 
   /** Exact top-k (docId, score) for an analyzed free-text query. */
   def topK(spark: SparkSession, index: OpenIndex, query: String, k: Int): DataFrame = {
-    import spark.implicits._
     val qTerms = Analyzer.tokenize(query).distinct.sorted
     val stats = index.stats
     // term stats from the driver-side map when the vocabulary is bounded
@@ -46,10 +46,7 @@ object Wand {
           .map(t => t.term -> t.df)
           .toMap
     }
-    if (present.isEmpty || stats.nDocs == 0) {
-      return spark.createDataFrame(Seq.empty[(Long, Double)])
-        .toDF("doc_id", "score")
-    }
+    if (present.isEmpty || stats.nDocs == 0) return TopKFrame(spark, Array.empty)
     val idfs: Map[String, Double] =
       present.map { case (t, df) => t -> BM25.idf(stats.nDocs, df) }
     val avgdl = stats.avgdl
@@ -63,7 +60,7 @@ object Wand {
     }
     val heap = new TopKHeap(k)
     parts.foreach { case (d, s) => heap.offer(d, s) }
-    heap.ranked().toSeq.toDF("doc_id", "score")
+    TopKFrame(spark, heap.ranked())
   }
 
   /** Kernel form with pluggable doclen lookup + block decoder — the
@@ -187,6 +184,18 @@ object Wand {
     }
     heap.result()
   }
+}
+
+/** The one `(doc_id, score)` frame every top-k answer is returned as, over
+  * one schema, built from driver-side rows with no encoder.
+  */
+private[graft] object TopKFrame {
+  val schema: StructType = StructType(Seq(
+    StructField("doc_id", LongType, nullable = false),
+    StructField("score", DoubleType, nullable = false)))
+
+  def apply(spark: SparkSession, hits: Array[(Long, Double)]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(hits.map { case (d, s) => Row(d, s) }: _*), schema)
 }
 
 /** Bounded min-heap keeping the k best (score desc, docId asc) hits. */

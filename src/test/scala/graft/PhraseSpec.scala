@@ -194,9 +194,10 @@ class PhraseSpec extends AnyFunSuite {
       .forall(_.rowGroups.size > 1))
     for (s <- Seq(spark, TestSpark.splittingSession())) {
       val idx = store.open(s)
+      val units = TestSpark.residentSegs(idx, positions = true)
+      assert(units.forall { case (segs, norms) => norms == segs.map(_ -> 1).toMap },
+        s"a unit holds other norms than its segments': ${units.toSeq}")
       for (phrase <- Phrases) {
-        val norms = idx.postingsScan(positions = true).plan(Analyzer.tokenize(phrase).distinct).norms
-        assert(norms.forall(_.length == 1), s"norms files per partition: ${norms.map(_.length).toSeq}")
         val run = () => Phrase.topK(s, idx, phrase, 10)
           .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
         assert(run() == bruteTopK(corpus, phrase, 10), s"phrase='$phrase'")

@@ -123,14 +123,18 @@ class PlanSpec extends AnyFunSuite {
 
   test("wand topK prunes the positional payload out of the postings scan") {
     val idx = SparkEntry.indexFor(spark, sf) // built WITH positions
-    // the term scan WAND runs reads every block column but positions
-    val termScan = idx.postingsScan(positions = false).plan(Seq("spark", "dup")).rdd.readSchema
-    assert(termScan.fieldNames.toSeq ==
+    // the term units WAND reads hold every block column but positions
+    val termScan = idx.postingsScan(positions = false)
+    assert(termScan.readSchema.fieldNames.toSeq ==
       org.apache.spark.sql.Encoders.product[graft.index.PostingBlock].schema.fieldNames.toSeq
-        .filterNot(_ == "positions"), termScan)
-    // the phrase path is the one consumer of positions — it must still read them
-    assert(idx.postingsScan(positions = true).plan(Seq("spark", "dup")).rdd
-      .readSchema.fieldNames.contains("positions"))
+        .filterNot(_ == "positions"), termScan.readSchema)
+    def withPositions(s: graft.index.PostingsScan) =
+      s.resident.map(_.blocks.valuesIterator.flatten.count(_.positions != null).toLong).sum()
+    assert(withPositions(termScan) == 0)
+    // the phrase path is the one consumer of positions — its units hold them
+    val positional = idx.postingsScan(positions = true)
+    assert(positional.readSchema.fieldNames.contains("positions"))
+    assert(withPositions(positional) == idx.postings.count())
   }
 
   test("minhash LSH derives buckets AND drop metrics from one persisted band shuffle") {
@@ -205,8 +209,8 @@ class PlanSpec extends AnyFunSuite {
       val got = run()
       (TestSpark.jobsAndShuffleStagesOf(run()), got)
     }
-    // segment-local: each task runs WAND over the segments of the file it
-    // read, with the norms it reads beside them, and the driver merges
+    // segment-local: each task runs WAND over the segments of the unit it
+    // holds, with the norms it holds beside them, and the driver merges
     assert(answer(spark, idx) == ((1, 0), oracle))
     // a session whose settings split files apart takes the same route
     val split = TestSpark.splittingSession()

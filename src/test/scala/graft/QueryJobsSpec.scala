@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.scheduler.SparkListenerJobStart
+import org.apache.spark.scheduler.{SparkListenerEvent, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -12,11 +12,12 @@ import graft.index.{IndexBuilder, IndexStore, OpenIndex}
 import graft.query.{OracleScorer, Phrase, Wand}
 
 /** Spark jobs a warm Spark-path query runs: once an open index holds its
-  * stats and term stats, WAND and phrase each answer in one scan of their
-  * terms' row groups, scoring each segment in the partition that read it
-  * with the norms that partition reads — one result job, no shuffle-map
-  * job and no SQL plan over the postings. Filling those counts the term
-  * stats once and collects no norms.
+  * stats, term stats and resident scan units, WAND and phrase each answer
+  * in one job over the units that can hold their terms, scoring each
+  * segment in the partition that holds it with the norms that partition
+  * holds — one result job that reads no file, no shuffle-map job and no
+  * SQL plan over the postings. Filling those counts the term stats once
+  * and collects no norms.
   */
 class QueryJobsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -65,11 +66,38 @@ class QueryJobsSpec extends AnyFunSuite {
     for ((name, query) <- Seq[(String, () => Any)](
         "phrase" -> (() => Phrase.topK(spark, idx, "blue green", 10).collect()),
         "wand" -> (() => Wand.topK(spark, idx, "fox dog", 10).collect()))) {
-      query() // warm: stats and term stats
-      val jobs = jobsOf(query())
-      info(s"warm $name top-k: $jobs jobs")
+      query() // warm: stats, term stats and the resident units
+      var events = Seq.empty[SparkListenerEvent]
+      val fsBytes = TestSpark.fsBytesReadOf { events = TestSpark.eventsOf(query()) }
+      val jobs = events.count(_.isInstanceOf[SparkListenerJobStart])
+      val tasks = events.count(_.isInstanceOf[SparkListenerTaskEnd])
+      val (records, bytes) = TestSpark.inputOf(events)
+      info(s"warm $name top-k: $jobs jobs, $tasks tasks reading $records resident units " +
+        s"of $bytes B, $fsBytes B from files")
       assert(jobs == 1, s"warm $name top-k ran $jobs jobs")
+      // each task reads its unit's one resident element, and no file
+      assert(records == tasks && fsBytes == 0, s"warm $name top-k read $records records, $fsBytes file bytes")
     }
+    store.dropAll()
+  }
+
+  test("resident scan units report their bytes, each variant once a query reads it") {
+    val store = slicedStore()
+    val idx = store.open(spark)
+    def memSize(positions: Boolean): Long = {
+      val rdd = idx.postingsScan(positions).resident
+      assert(rdd.name == s"${store.root} postings (${if (positions) "positional" else "terms"})")
+      TestSpark.memSizeOf(rdd.id)
+    }
+    Wand.topK(spark, idx, "fox dog", 10).collect()
+    val terms = memSize(positions = false)
+    assert(terms > 0, "a WAND query left no resident unit")
+    assert(memSize(positions = true) == 0, "the positional units filled before a phrase query")
+    Phrase.topK(spark, idx, "blue green", 10).collect()
+    val positional = memSize(positions = true)
+    info(s"resident bytes: $terms (terms), $positional (positional)")
+    val storage = spark.sparkContext.getExecutorMemoryStatus.values.map(_._1).sum
+    assert(terms + positional <= storage, s"resident $terms + $positional B above $storage B of storage")
     store.dropAll()
   }
 

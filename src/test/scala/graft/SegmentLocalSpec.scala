@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.rdd.RDD
-import org.apache.spark.scheduler.SparkListenerTaskEnd
+import org.apache.spark.scheduler.SparkListenerJobStart
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.functions._
@@ -17,12 +17,12 @@ import graft.query.{OracleScorer, Phrase, Wand}
 import graft.streaming.StreamIngest
 
 /** The one Spark-path route and its partition unit: a Spark-path query
-  * scores each segment inside the task that reads its blocks, with the
-  * norms that task reads beside them. A partition is a scan unit, the
-  * postings files of a slice whose footer `seg` ranges overlap; the
-  * planned scan reads every partition whole, whatever the session's split
-  * settings. No store shuffles, and every store answers bit-equal to brute
-  * force.
+  * scores each segment inside the task that holds its resident blocks,
+  * with the norms that task holds beside them. A partition is a scan unit,
+  * the postings files of a slice whose footer `seg` ranges overlap; a unit
+  * fills by reading its files whole, whatever the session's split
+  * settings, and a warm query reads no file. No store shuffles, and every
+  * store answers bit-equal to brute force.
   */
 class SegmentLocalSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -113,30 +113,38 @@ class SegmentLocalSpec extends AnyFunSuite {
 
   /** The scan units of `idx`, as postings file names per unit. */
   private def units(idx: OpenIndex): Seq[Seq[String]] =
-    PostingsScan.units(spark, idx.store, idx.slices).map(_.postings.map(_.path.getName))
+    scan(idx).units.map(_.postings.map(_.path.getName))
 
   /** The parquet file names of `slice`'s postings. */
   private def postingsFiles(store: IndexStore, slice: Int): Seq[String] =
     Files.list(Paths.get(store.slicePath("postings", slice))).iterator().asScala
       .map(_.getFileName.toString).filter(_.endsWith(".parquet")).toSeq.sorted
 
-  /** The planned scan of every term of `idx`. */
-  private def fullScan(idx: OpenIndex) =
-    idx.postingsScan(positions = false).plan(idx.termsLocal.get.keys)
+  /** The resident postings WAND reads on `idx`. */
+  private def scan(idx: OpenIndex) = idx.postingsScan(positions = false)
+
+  /** The files each resident partition of `idx` reads when it fills, as
+    * (name, start, length).
+    */
+  private def partitionFiles(idx: OpenIndex): Seq[Seq[(String, Long, Long)]] =
+    scan(idx).resident.dependencies.head.rdd.partitions.toSeq
+      .map(_.asInstanceOf[FilePartition].files.toSeq.map(f => (f.toPath.getName, f.start, f.length)))
+
+  /** The blocks of `idx`'s resident units, in their partitions. */
+  private def residentBlocks(idx: OpenIndex) = scan(idx).resident.flatMap(_.blocks.valuesIterator.flatten)
+
+  /** Input records the tasks of `body` read. */
+  private def recordsOf(body: => Any): Long = TestSpark.inputOf(TestSpark.eventsOf(body))._1
 
   test("split settings do not change the route and stay exact") {
     val (store, docs) = splitStore()
-    // a SQL scan under these settings cuts the files apart; the planned
-    // scan makes the same partitions, with the same norms files, as under
+    // a SQL scan under these settings cuts the files apart; the resident
+    // units fill from the same files, with the same norms files, as under
     // the default settings
     val s = TestSpark.splittingSession()
     val idx = store.open(s)
     assert(maxPartitionsPerSeg(idx) > 1, "the split scan must spread a segment over partitions")
-    def route(i: OpenIndex) = {
-      val scan = fullScan(i)
-      (scan.rdd.partitions.toSeq.map(_.asInstanceOf[FilePartition].files.toSeq
-        .map(f => (f.filePath, f.start, f.length))), scan.norms.toSeq.map(_.toSeq.map(_.filePath)))
-    }
+    def route(i: OpenIndex) = (partitionFiles(i), scan(i).units.map(_.norms.toSeq.map(_.filePath)))
     assert(route(idx) == route(store.open(spark)))
     assert(shuffles(s, idx) == (0, 0))
     assertExact(s, idx, docs)
@@ -148,26 +156,30 @@ class SegmentLocalSpec extends AnyFunSuite {
     val s = TestSpark.splittingSession()
     val idx = store.open(s)
     assert(units(idx).forall(_.size == 1), "a fresh build's files must each be a unit")
+    assert(partitionFiles(idx) == scan(idx).units.map(_.postings.map(f => (f.path.getName, 0L, f.size))),
+      "a unit must fill from its files whole")
     assert(maxPartitionsPerSeg(idx) > 1, "the split scan must spread a segment over partitions")
-    assert(maxPartitionsPerSeg(fullScan(idx).rdd)(_.getInt(1)) == 1,
-      "the planned scan must read each segment in one partition")
+    assert(maxPartitionsPerSeg(residentBlocks(idx))(_.seg) == 1,
+      "the resident units must hold each segment in one partition")
     assert(shuffles(s, idx) == (0, 0))
     assertExact(s, idx, docs)
     val whole = store.open(spark)
     assert(shuffles(spark, whole) == (0, 0))
     assertExact(spark, whole, docs)
 
-    // a one-term query reads only the row groups whose term range holds it
-    val records = new java.util.concurrent.atomic.AtomicLong()
-    Wand.topK(spark, whole, "sea", 10).collect()
-    TestSpark.eventsOf(Wand.topK(spark, whole, "sea", 10).collect()).foreach {
-      case e: SparkListenerTaskEnd => records.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
-      case _ =>
-    }
-    val blocks = whole.postings.count()
-    val seaBlocks = whole.postings.filter(col("term") === "sea").count()
-    info(s"one-term query read ${records.get} of $blocks blocks ($seaBlocks of its term)")
-    assert(records.get >= seaBlocks && records.get < blocks)
+    // a one-term query's first run reads each block of the units whose
+    // footer term ranges can hold the term once, whatever row group holds
+    // it; a warm run reads each unit's resident element and no file
+    val fresh = store.open(spark)
+    fresh.stats; fresh.termsLocal
+    val touched = scan(fresh).partitionsOf(Seq("sea")).map(scan(fresh).units)
+    val touchedBlocks = spark.read.parquet(touched.flatMap(_.postings.map(_.path.toString)): _*).count()
+    val fill = recordsOf(Wand.topK(spark, fresh, "sea", 10).collect())
+    info(s"one-term query filled ${touched.size} units with $fill blocks")
+    assert(touched.nonEmpty && fill == touchedBlocks)
+    var warm = 0L
+    assert(TestSpark.fsBytesReadOf { warm = recordsOf(Wand.topK(spark, fresh, "sea", 10).collect()) } == 0)
+    assert(warm == touched.size, "a warm task must read its unit's one resident element")
     store.dropAll()
   }
 
@@ -190,7 +202,7 @@ class SegmentLocalSpec extends AnyFunSuite {
 
     // one SQL scan partition per file (each file costs a whole partition):
     // a segment spans partitions, so only the files' overlapping `seg`
-    // ranges keep the planned scan from reading the slice's files apart
+    // ranges keep the resident units from holding the slice's files apart
     val s = spark.newSession()
     s.conf.set("spark.sql.files.openCostInBytes", s.conf.get("spark.sql.files.maxPartitionBytes"))
     val idx = store.open(s)
@@ -209,7 +221,7 @@ class SegmentLocalSpec extends AnyFunSuite {
     assert(old.size == 2)
     assert(units(merged).toSet ==
       (postingsFiles(store, mergedId).diff(old).map(Seq(_)) :+ old).toSet)
-    assert(fullScan(merged).rdd.partitions.length == 1 + rest.size && rest.size > 1)
+    assert(scan(merged).resident.partitions.length == 1 + rest.size && rest.size > 1)
     assertOnePartition(merged, old)
     assert(shuffles(spark, merged) == (0, 0))
     assertExact(spark, merged, docs)
@@ -245,14 +257,39 @@ class SegmentLocalSpec extends AnyFunSuite {
     store.dropAll()
   }
 
-  /** The planned scan of `idx` reads the postings files named `files` in
+  /** The resident units of `idx` fill the postings files named `files` in
     * one partition, and no other file there.
     */
   private def assertOnePartition(idx: OpenIndex, files: Seq[String]): Unit = {
-    val parts = fullScan(idx).rdd.partitions.toSeq
-      .map(_.asInstanceOf[FilePartition].files.map(_.toPath.getName).toSet)
+    val parts = partitionFiles(idx).map(_.map(_._1).toSet)
     assert(parts.count(_.exists(files.contains)) == 1 && parts.contains(files.toSet),
       s"$files are not one partition: $parts")
+  }
+
+  test("an evicted scan unit is read again in one job, and answers stay exact") {
+    val ps = pages(4, 600)
+    val docs = ps.zipWithIndex.map { case ((_, t), i) => i.toLong -> t }
+    val store = new IndexStore(Files.createTempDirectory("graft-evict-").toString)
+    IndexBuilder.build(spark, withIds(spark, ps), store, cfg)
+    val idx = store.open(spark)
+    val docsDf = spark.createDataFrame(docs).toDF("doc_id", "text")
+    for ((name, positions, query, want) <- Seq(
+        ("wand", false, () => rows(Wand.topK(spark, idx, "red fox", 10)),
+          rows(OracleScorer.topK(spark, docsDf, "red fox", 10))),
+        ("phrase", true, () => rows(Phrase.topK(spark, idx, "red fox", 10)), brutePhrase(docs, "red fox", 10)))) {
+      assert(query() == want, s"$name fill")
+      val resident = idx.postingsScan(positions).resident
+      assert(TestSpark.memSizeOf(resident.id) > 0, s"$name left no resident unit")
+      org.apache.spark.Evict(spark.sparkContext, resident.id)
+      assert(TestSpark.memSizeOf(resident.id) == 0, s"$name units still resident")
+      var refill = Seq.empty[org.apache.spark.scheduler.SparkListenerEvent]
+      assert(TestSpark.fsBytesReadOf { refill = TestSpark.eventsOf(assert(query() == want, s"$name refill")) } > 0,
+        s"$name refill read no file")
+      assert(refill.count(_.isInstanceOf[SparkListenerJobStart]) == 1, s"$name refill ran more than one job")
+      assert(TestSpark.memSizeOf(resident.id) > 0, s"$name refill was not kept")
+      assert(TestSpark.fsBytesReadOf(assert(query() == want, s"$name warm")) == 0, s"$name warm query read a file")
+    }
+    store.dropAll()
   }
 
   test("merged slices keep a scan unit per file: the reopened store stays local") {

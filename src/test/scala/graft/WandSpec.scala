@@ -6,7 +6,6 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.analysis.Analyzer
 import graft.index.{IndexBuilder, IndexStore, PostingsScan}
 import graft.query.{OracleScorer, TopKHeap, Wand}
 
@@ -274,9 +273,10 @@ class WandSpec extends AnyFunSuite {
       OracleScorer.topK(spark, docs, q, k).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq)
     for (s <- Seq(spark, TestSpark.splittingSession())) {
       val idx = store.open(s)
+      val units = TestSpark.residentSegs(idx, positions = false)
+      assert(units.forall { case (segs, norms) => norms == segs.map(_ -> 1).toMap },
+        s"a unit holds other norms than its segments': ${units.toSeq}")
       for ((q, k, oracle) <- cases) {
-        val norms = idx.postingsScan(positions = false).plan(Analyzer.tokenize(q).distinct).norms
-        assert(norms.forall(_.length == 1), s"norms files per partition: ${norms.map(_.length).toSeq}")
         val run = () => Wand.topK(s, idx, q, k)
           .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
         assert(run() == oracle, s"query='$q' k=$k")
